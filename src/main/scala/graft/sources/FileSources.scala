@@ -5,8 +5,10 @@ import org.apache.spark.sql.types.StructType
 
 /** Batch file-format surface for the lake side of the engine. The
   * reference itself reads only Kafka (SURVEY.md §2.2 "Scans"), but a
-  * standalone library needs the standard lake formats; schemas are
-  * always explicit (the reference's own rule — no inference).
+  * standalone library needs the standard lake formats. The text
+  * formats, `csv` and `jsonLines`, take an explicit schema (the
+  * reference's own rule — no inference); the self-describing columnar
+  * formats, `parquet` and `orc`, take theirs from the file footers.
   */
 object FileSources {
 

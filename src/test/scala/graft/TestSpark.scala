@@ -18,4 +18,7 @@ object TestSpark {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+  /** Every table file under `sfDir`. */
+  val tableNames = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
 }
