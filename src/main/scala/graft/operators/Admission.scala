@@ -179,8 +179,8 @@ object Admission {
       if (!perceptual) withEmb
       else (0 until 4).foldLeft(withEmb)((df, c) =>
         df.withColumn(s"c$c", lit(null).cast("int")))
-    LsmSegments.initBase(spark, store(path, "admitted"))(p =>
-      emptyAdmitted.write.mode("overwrite").parquet(p))
+    LsmSegments.initBase(spark, store(path, "admitted"))(
+      AdmittedLog.writeSegment(emptyAdmitted, _))
     ContentHashIndex.write(empty, store(path, "exact"))
     MinHashIndex.write(empty, store(path, "neardup"), shingleN, numHashes, bands)
     if (perceptual)
@@ -359,7 +359,7 @@ object Admission {
       val admitted = decide(
         spark, path, shard, threshold, semanticThreshold,
         semanticMaxList, semanticShortlist, perceptualMaxBucket)
-      try admitted.write.mode("overwrite").parquet(p)
+      try AdmittedLog.writeSegment(admitted, p)
       finally Storage.unpersistLocalCheckpoint(admitted)
     })
     val admitted = spark.read.parquet(s"$admittedPath/deltas/$epoch")
@@ -400,13 +400,8 @@ object Admission {
 
   /** The admitted corpus: one consistent snapshot of the admitted
     * store (base ∪ committed deltas). */
-  def admittedAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) =
-      LsmSegments.liveSegments(spark, store(path, "admitted"))
-    deltaPaths.foldLeft(spark.read.parquet(basePath)) {
-      (acc, p) => acc.unionByName(spark.read.parquet(p))
-    }
-  }
+  def admittedAll(spark: SparkSession, path: String): DataFrame =
+    AdmittedLog.readAll(spark, store(path, "admitted"))
 
   /** The admitted corpus AS OF a committed epoch — the decision log's
     * prefix, served from retained generations ([[LsmSegments
@@ -416,13 +411,12 @@ object Admission {
     * audit law AdmissionSpec pins — so the loop's whole history is
     * reproducible from disk without replaying any ingest. */
   def admittedAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame =
-    LsmSegments.foldAsOf(
-      spark, store(path, "admitted"), epoch, spark.read.parquet(_))
+    AdmittedLog.readAsOf(spark, store(path, "admitted"), epoch)
 
   /** Committed epochs of the admitted store (== fully decided
     * epochs). */
   def committedEpochs(spark: SparkSession, path: String): Seq[Long] =
-    LsmSegments.committedEpochs(spark, store(path, "admitted"))
+    AdmittedLog.committedEpochs(spark, store(path, "admitted"))
 
   /** Maintenance: fold + retire every store. With the default
     * `retainGens = 0`, run in a window when the ingest stream is
@@ -437,26 +431,15 @@ object Admission {
     * by which point the stream checkpoint has committed the epoch and
     * it can never replay). */
   def compact(spark: SparkSession, path: String, retainGens: Int = 0): Unit = {
-    LsmSegments.compact(spark, store(path, "admitted"),
-      load = ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      write = (df, p) => df.write.mode("overwrite").parquet(p))
-    LsmSegments.gc(spark, store(path, "admitted"), retainGens)
-    ContentHashIndex.compact(spark, store(path, "exact"))
-    ContentHashIndex.gc(spark, store(path, "exact"), retainGens)
-    MinHashIndex.compact(spark, store(path, "neardup"))
-    MinHashIndex.gc(spark, store(path, "neardup"), retainGens)
-    if (hasPerceptual(spark, path)) {
-      HammingIndex.compact(spark, store(path, "perceptual"))
-      HammingIndex.gc(spark, store(path, "perceptual"), retainGens)
-    }
-    if (hasSemantic(spark, path)) {
-      if (hasSemanticPq(spark, path)) {
-        IvfPqIndex.compact(spark, store(path, "semantic"))
-        IvfPqIndex.gc(spark, store(path, "semantic"), retainGens)
-      } else {
-        IvfIndex.compact(spark, store(path, "semantic"))
-        IvfIndex.gc(spark, store(path, "semantic"), retainGens)
-      }
+    val stores = Seq(AdmittedLog -> "admitted", ContentHashIndex -> "exact",
+      MinHashIndex -> "neardup") ++
+      (if (hasPerceptual(spark, path)) Seq(HammingIndex -> "perceptual") else Nil) ++
+      (if (!hasSemantic(spark, path)) Nil
+       else if (hasSemanticPq(spark, path)) Seq(IvfPqIndex -> "semantic")
+       else Seq(IvfIndex -> "semantic"))
+    stores.foreach { case (index, which) =>
+      index.compact(spark, store(path, which))
+      index.gc(spark, store(path, which), retainGens)
     }
   }
 }

@@ -20,41 +20,18 @@ import org.apache.spark.sql.functions._
   * parquet exactly); [[probeNew]] answers the admission check for a
   * new shard touching only the hash collisions (broadcast semi-join —
   * o(index) shuffle work per probe). */
-object ContentHashIndex {
-
-  private def writeSegment(df: DataFrame, p: String): Unit =
-    df.write.mode("overwrite").parquet(p)
+object ContentHashIndex extends SegmentedIndex {
 
   /** (doc_id, text_hash) — one narrow pass, zero shuffle. */
   private[graft] def fingerprints(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), xxhash64(col("text")).as("text_hash"))
 
+  protected def encode(spark: SparkSession, path: String, documents: DataFrame): DataFrame =
+    fingerprints(documents)
+
   /** Hash `documents` (doc_id, text) and persist as base gen 0. */
   def write(documents: DataFrame, path: String): Unit =
-    LsmSegments.initBase(documents.sparkSession, path)(p =>
-      writeSegment(fingerprints(documents), p))
-
-  /** Idempotently hash + append one epoch of documents as a delta
-    * segment; false = epoch already committed (replay — no write). */
-  def appendEpoch(
-      spark: SparkSession, path: String, epoch: Long,
-      documents: DataFrame): Boolean =
-    LsmSegments.appendEpoch(spark, path, epoch)(p =>
-      writeSegment(fingerprints(documents), p))
-
-  /** One consistent snapshot of the hash segments. */
-  def readAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) = LsmSegments.liveSegments(spark, path)
-    deltaPaths.foldLeft(spark.read.parquet(basePath)) {
-      (acc, p) => acc.unionByName(spark.read.parquet(p))
-    }
-  }
-
-  /** [[readAll]] AS OF a committed delta epoch ([[LsmSegments
-    * .segmentsAsOf]]'s retained snapshot; −1 = the fresh base; epochs
-    * past the gc horizon fail loudly). */
-  def readAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame =
-    LsmSegments.foldAsOf(spark, path, epoch, spark.read.parquet(_))
+    initBase(documents.sparkSession, path)(fingerprints(documents))
 
   /** Exact duplicate groups over the indexed corpus — one shuffle on
     * the stored 8-byte keys; bit-identical to [[Dedup.exact]] over
@@ -99,19 +76,6 @@ object ContentHashIndex {
     newFp.join(broadcast(hits), Seq("text_hash"))
       .select(col("doc_id"), col("dup_of_doc_id"), col("n_indexed_copies"))
   }
-
-  /** Fold committed deltas into a new base generation (marker written
-    * last — interleaved readers stay consistent); data retired by
-    * [[gc]]. */
-  def compact(spark: SparkSession, path: String): Unit =
-    LsmSegments.compact(spark, path,
-      load = ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      write = writeSegment)
-
-  /** Retire superseded generations + folded delta data (epoch markers
-    * kept — the replay guard). */
-  def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit =
-    LsmSegments.gc(spark, path, retainGens)
 
   /** Semantic diff between two retained snapshots: every fingerprint
     * tuple that entered the index after `fromEpoch` and is visible at

@@ -39,10 +39,7 @@ import org.apache.spark.sql.functions._
   * [[servePairs]] over any base∪delta split is hash-identical to
   * [[Dedup.hammingChunkPairs]] over the union (pinned by spec + the
   * `mm_neardup_delta` oracle, which is the batch operator's own). */
-object HammingIndex {
-
-  private def writeSegment(df: DataFrame, p: String): Unit =
-    df.write.mode("overwrite").parquet(p)
+object HammingIndex extends SegmentedIndex {
 
   private def sigCols(df: DataFrame): DataFrame =
     df.select(col("doc_id"), col("c0"), col("c1"), col("c2"), col("c3"))
@@ -50,33 +47,12 @@ object HammingIndex {
   /** Persist `signatures` (doc_id, c0..c3 — 4×16-bit chunk ints from
     * ONE fixed signature function) as base generation 0. */
   def write(signatures: DataFrame, path: String): Unit =
-    LsmSegments.initBase(signatures.sparkSession, path)(p =>
-      writeSegment(sigCols(signatures), p))
+    initBase(signatures.sparkSession, path)(sigCols(signatures))
 
-  /** Idempotently append one epoch of signatures; false = epoch
-    * already committed (replay — no write). Same signature function
-    * as every other epoch, per the class contract. */
-  def appendEpoch(
-      spark: SparkSession, path: String, epoch: Long,
-      signatures: DataFrame): Boolean =
-    LsmSegments.appendEpoch(spark, path, epoch)(p =>
-      writeSegment(sigCols(signatures), p))
-
-  /** One consistent snapshot of the signature segments. */
-  def readAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) = LsmSegments.liveSegments(spark, path)
-    deltaPaths.foldLeft(spark.read.parquet(basePath)) {
-      (acc, p) => acc.unionByName(spark.read.parquet(p))
-    }
-  }
-
-  /** [[readAll]] AS OF a committed delta epoch — the signature rows a
-    * reader saw right after that epoch's commit ([[LsmSegments
-    * .segmentsAsOf]]'s snapshot; −1 = the fresh base). The horizon is
-    * whatever `gc(retainGens = n)` kept: older as-of points fail
-    * loudly rather than misreport history. */
-  def readAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame =
-    LsmSegments.foldAsOf(spark, path, epoch, spark.read.parquet(_))
+  /** An epoch of signatures, made with the same signature function as
+    * every other epoch (the class contract). */
+  protected def encode(spark: SparkSession, path: String, signatures: DataFrame): DataFrame =
+    sigCols(signatures)
 
   /** [[servePairs]] AS OF a committed delta epoch: the batch pair law
     * over the historical snapshot — "what did the dedup decision set
@@ -205,16 +181,4 @@ object HammingIndex {
       .distinct()
       .where(col("hamming") <= maxHamming)
   }
-
-  /** Fold committed deltas into a new base generation (marker written
-    * last); data retired by [[gc]]. */
-  def compact(spark: SparkSession, path: String): Unit =
-    LsmSegments.compact(spark, path,
-      load = ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      write = writeSegment)
-
-  /** Retire superseded generations + folded delta data (epoch markers
-    * kept — the replay guard). */
-  def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit =
-    LsmSegments.gc(spark, path, retainGens)
 }

@@ -35,37 +35,28 @@ import org.apache.spark.sql.functions._
   * reader interleaved anywhere in the compact sees exactly one
   * consistent copy of every vector (pinned by SimilaritySpec's
   * compaction-race test). */
-object IvfIndex {
+object IvfIndex extends SegmentedIndex {
 
-  private def loadSegment(spark: SparkSession, p: String): DataFrame =
+  /** The c_id partition column comes back type-inferred (int), so it
+    * is cast to the long the serving plan expects. */
+  override protected def loadSegment(spark: SparkSession, p: String): DataFrame =
     spark.read.parquet(p)
       .select(col("vec_id"), col("embedding"), col("c_id").cast("long").as("c_id"))
 
-  /** Resolve (basePath, deltaPaths) with back-compat for the pre-LSM
-    * on-disk layout: an index persisted before the generation-pointer
-    * refactor keeps its assignment under `<path>/assignments` with no
-    * `gens/` marker at all. Such an index is READ as if its assignment
-    * were base generation 0 with nothing folded (every committed delta
-    * epoch is live) — its data is intact and serving must not fail
-    * with "never initialized". Mutating maintenance ([[compact]] /
-    * [[gc]]) still requires the current layout: it must write `base/`
-    * generations, so on a legacy index it fails with LsmSegments'
-    * init error — rewrite the index (one [[write]]) to migrate. */
-  private def resolveSegments(
-      spark: SparkSession, path: String): (String, Seq[String]) = {
-    val legacy = new org.apache.hadoop.fs.Path(s"$path/assignments")
-    val gens = new org.apache.hadoop.fs.Path(s"$path/gens")
-    val f = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!f.exists(gens) && f.exists(legacy))
-      (s"$path/assignments",
-        LsmSegments.committedEpochs(spark, path).map(e => s"$path/deltas/$e"))
-    else LsmSegments.liveSegments(spark, path)
-  }
-
   /** c_id-partitioned with the empty-frame fallback, shared with
     * [[IvfPqIndex]] — see [[LsmSegments.writeCidPartitionedSegment]]. */
-  private def writeSegment(df: DataFrame, p: String): Unit =
+  override private[graft] def writeSegment(df: DataFrame, p: String): Unit =
     LsmSegments.writeCidPartitionedSegment(df, p)
+
+  /** The trained centroid table (c_id, c_vec), FIXED for the life of
+    * the index. */
+  def centroids(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(s"$path/centroids")
+
+  /** Assign an epoch of vectors (vec_id, embedding) against the stored
+    * centroids. */
+  protected def encode(spark: SparkSession, path: String, vectors: DataFrame): DataFrame =
+    Similarity.ivfAssign(vectors, centroids(spark, path))
 
   /** Build the assignment from `centroids` and persist both halves
     * (base generation 0, committed by its generation marker). */
@@ -74,77 +65,18 @@ object IvfIndex {
     // the assignment already encodes from the in-memory centroids, so
     // the centroids write and the base write are independent jobs —
     // overlap them (guide §2.6); marker after both settle
-    LsmSegments.initBaseWith(spark, path, Seq(
-      () => centroids.write.mode("overwrite").parquet(s"$path/centroids")))(p =>
-      writeSegment(Similarity.ivfAssign(embeddings, centroids), p))
+    initBase(spark, path, Seq(
+      () => centroids.write.mode("overwrite").parquet(s"$path/centroids")))(
+      Similarity.ivfAssign(embeddings, centroids))
   }
 
-  /** Load the current base generation + centroids (no deltas). The
-    * c_id partition column comes back type-inferred (int), so it is
-    * cast to the long the serving plan expects. */
-  def read(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val (basePath, _) = resolveSegments(spark, path)
-    (loadSegment(spark, basePath), spark.read.parquet(s"$path/centroids"))
-  }
-
-  /** Serve top-k from the persisted index: probe-list selection +
+  /** Serve top-k from base ∪ committed deltas: probe-list selection +
     * exact-cosine rank, corpus touched only in the probed partitions.
     * `queries` = (query_id, q: array<float>). */
-  def serve(
-      spark: SparkSession, path: String, queries: DataFrame,
-      k: Int = 5, nProbe: Int = 4): DataFrame = {
-    val (assigned, centroids) = read(spark, path)
-    Similarity.ivfServe(assigned, centroids, queries, k, nProbe)
-  }
-
-  /** Committed delta epochs, ascending. */
-  def committedEpochs(spark: SparkSession, path: String): Seq[Long] =
-    LsmSegments.committedEpochs(spark, path)
-
-  /** Idempotently append one epoch of `vectors` (vec_id, embedding) as
-    * a delta segment: assign against the trained centroids, write the
-    * segment (overwrite — replays clobber torn attempts), then the
-    * commit marker. Returns false if the epoch was already committed
-    * (the replay case — nothing is written). */
-  def appendEpoch(
-      spark: SparkSession, path: String, epoch: Long,
-      vectors: DataFrame): Boolean =
-    LsmSegments.appendEpoch(spark, path, epoch) { p =>
-      val centroids = spark.read.parquet(s"$path/centroids")
-      writeSegment(Similarity.ivfAssign(vectors, centroids), p)
-    }
-
-  /** Load ONE consistent snapshot of the index: the current base
-    * generation plus the committed deltas not yet folded into it.
-    * Folded epochs are excluded by the generation marker's fold point
-    * (their commit markers outlive their data ON PURPOSE — they are
-    * the streaming replay guard). */
-  def readAll(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val (basePath, deltaPaths) = resolveSegments(spark, path)
-    val all = deltaPaths.foldLeft(loadSegment(spark, basePath)) {
-      (acc, p) => acc.unionByName(loadSegment(spark, p))
-    }
-    (all, spark.read.parquet(s"$path/centroids"))
-  }
-
-  /** [[serve]] over base + committed deltas. */
   def serveAll(
       spark: SparkSession, path: String, queries: DataFrame,
-      k: Int = 5, nProbe: Int = 4): DataFrame = {
-    val (assigned, centroids) = readAll(spark, path)
-    Similarity.ivfServe(assigned, centroids, queries, k, nProbe)
-  }
-
-  /** TIME TRAVEL: the assignment + centroids AS OF a committed delta
-    * epoch ([[LsmSegments.segmentsAsOf]]; −1 = the fresh base) — the
-    * index exactly as it served right after that epoch's commit.
-    * Centroids are FIXED for the life of the index (the class
-    * contract), so only the assignment rows travel. The horizon is
-    * what `gc(retainGens = n)` kept; older epochs fail loudly. */
-  def readAsOf(
-      spark: SparkSession, path: String, epoch: Long): (DataFrame, DataFrame) =
-    (LsmSegments.foldAsOf(spark, path, epoch, loadSegment(spark, _)),
-      spark.read.parquet(s"$path/centroids"))
+      k: Int = 5, nProbe: Int = 4): DataFrame =
+    Similarity.ivfServe(readAll(spark, path), centroids(spark, path), queries, k, nProbe)
 
   /** [[serveAll]] AS OF a committed delta epoch: historical top-k —
     * "what would this query have retrieved when epoch N landed?", the
@@ -154,10 +86,9 @@ object IvfIndex {
     * probe/ranking as [[serveAll]], over the retained snapshot. */
   def serveAsOf(
       spark: SparkSession, path: String, epoch: Long, queries: DataFrame,
-      k: Int = 5, nProbe: Int = 4): DataFrame = {
-    val (assigned, centroids) = readAsOf(spark, path, epoch)
-    Similarity.ivfServe(assigned, centroids, queries, k, nProbe)
-  }
+      k: Int = 5, nProbe: Int = 4): DataFrame =
+    Similarity.ivfServe(
+      readAsOf(spark, path, epoch), centroids(spark, path), queries, k, nProbe)
 
   /** Semantic admission probe — SemDeDup at INGEST time, the
     * embedding analogue of [[MinHashIndex.probePairs]]: for a new
@@ -174,7 +105,7 @@ object IvfIndex {
     * the c_id-partitioned on-disk layout the broadcast join's c_id
     * filter reaches the parquet source as a partition filter, so
     * un-touched inverted lists are never read (the same pruning
-    * [[serve]] relies on, here keyed by the shard's clusters). The
+    * [[serveAll]] relies on, here keyed by the shard's clusters). The
     * corpus is never shuffled; within-shard pairs are a broadcast
     * self-join. The shard assignment is computed ONCE (eager
     * localCheckpoint — it feeds three plan branches) and the result
@@ -199,8 +130,7 @@ object IvfIndex {
   def probeSemantic(
       spark: SparkSession, path: String, newVectors: DataFrame,
       threshold: Double = 0.95, maxList: Int = 4096): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val shard = Similarity.ivfAssign(newVectors, centroids)
+    val shard = Similarity.ivfAssign(newVectors, centroids(spark, path))
       .localCheckpoint(eager = true)
     try probeSemanticPlan(spark, path, shard, threshold, maxList)
       .localCheckpoint(eager = true)
@@ -225,7 +155,7 @@ object IvfIndex {
     import graft.functions.VectorFunctions.cosine
     val touched = shard.select(col("c_id")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val (allSegs, _) = readAll(spark, path)
+    val allSegs = readAll(spark, path)
     // the skew cap's saturated-list set: indexed members per TOUCHED
     // list (one count over the pruned partitions, reading only the
     // partition column — metadata-cheap), resolved DRIVER-SIDE like
@@ -263,21 +193,4 @@ object IvfIndex {
       .where(col("cos") >= threshold)
     crossPairs.unionByName(withinPairs)
   }
-
-  /** Fold the committed deltas into a NEW base generation (the LSM
-    * compaction): writes `base/<gen+1>` from the merged snapshot, then
-    * commits the generation marker — readers interleaved between the
-    * two steps still resolve the OLD generation + deltas and count
-    * every vector exactly once. Old data is retired by [[gc]], not
-    * here, so lazy plans handed out before the compact stay valid. */
-  def compact(spark: SparkSession, path: String): Unit =
-    LsmSegments.compact(spark, path,
-      load = ps => ps.map(loadSegment(spark, _)).reduce(_.unionByName(_)),
-      write = writeSegment)
-
-  /** Retire superseded generations + folded delta data (epoch commit
-    * markers are kept — the replay guard). Call when no readers hold
-    * lazy plans over the pre-compact snapshot. */
-  def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit =
-    LsmSegments.gc(spark, path, retainGens)
 }

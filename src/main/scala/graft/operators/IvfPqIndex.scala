@@ -27,17 +27,17 @@ import org.apache.spark.sql.functions._
   * parquet exactly, so [[serveAll]] over any base/delta split is
   * hash-identical to [[Similarity.ivfPqKnn]] over the union with the
   * same trained state (pinned by spec + the `knn_ivfpq_delta` oracle). */
-object IvfPqIndex {
+object IvfPqIndex extends SegmentedIndex {
 
   /** Shared with [[IvfIndex]]: c_id-partitioned with the empty-frame
     * fallback (an empty micro-batch epoch must not poison the store —
     * see [[LsmSegments.writeCidPartitionedSegment]]). */
-  private def writeSegment(df: DataFrame, p: String): Unit =
+  override private[graft] def writeSegment(df: DataFrame, p: String): Unit =
     LsmSegments.writeCidPartitionedSegment(df, p)
 
   /** The c_id partition column comes back type-inferred (int); the
     * serving plan joins it against the probe LUTs' long. */
-  private def loadSegment(spark: SparkSession, p: String): DataFrame =
+  override protected def loadSegment(spark: SparkSession, p: String): DataFrame =
     spark.read.parquet(p).withColumn("c_id", col("c_id").cast("long"))
 
   private def readMeta(spark: SparkSession, path: String): (Int, Int) = {
@@ -74,12 +74,12 @@ object IvfPqIndex {
     // memory is bit-identical to the old encode-from-stored. The gen
     // marker still lands only after every job settles (initBaseWith).
     val denseCb = Similarity.denseCodebook(codebook)
-    LsmSegments.initBaseWith(spark, path, Seq(
+    initBase(spark, path, Seq(
       () => centroids.write.mode("overwrite").parquet(s"$path/centroids"),
       () => denseCb.write.mode("overwrite").parquet(s"$path/codebook"),
       () => Seq((subspaces, subDim)).toDF("subspaces", "sub_dim")
-        .write.mode("overwrite").parquet(s"$path/meta")))(p =>
-      writeSegment(encodeWith(vectors, centroids, denseCb, subspaces, subDim), p))
+        .write.mode("overwrite").parquet(s"$path/meta")))(
+      encodeWith(vectors, centroids, denseCb, subspaces, subDim))
   }
 
   /** Persist a FULLY TRAINED state — coarse centroids plus the
@@ -106,12 +106,12 @@ object IvfPqIndex {
     // deterministic projection, so the in-memory encode matches the
     // stored-state encode bit-for-bit; marker after all jobs settle
     val denseCb = Similarity.denseCodebookPerM(cbPerM)
-    LsmSegments.initBaseWith(spark, path, Seq(
+    initBase(spark, path, Seq(
       () => centroids.write.mode("overwrite").parquet(s"$path/centroids"),
       () => denseCb.write.mode("overwrite").parquet(s"$path/codebook"),
       () => Seq((subspaces, subDim)).toDF("subspaces", "sub_dim")
-        .write.mode("overwrite").parquet(s"$path/meta")))(p =>
-      writeSegment(encodeWith(vectors, centroids, denseCb, subspaces, subDim), p))
+        .write.mode("overwrite").parquet(s"$path/meta")))(
+      encodeWith(vectors, centroids, denseCb, subspaces, subDim))
   }
 
   /** Assign + residual-encode against the STORED trained state,
@@ -121,11 +121,11 @@ object IvfPqIndex {
     * [[write]] seed form) through [[Similarity.ivfPqEncodeCodes]].
     * Both yield the identical (vec_id, c_id, c0..c_{M−1}) segment
     * schema. */
-  private def encode(
-      spark: SparkSession, path: String, vectors: DataFrame,
-      subspaces: Int, subDim: Int): DataFrame =
+  protected def encode(spark: SparkSession, path: String, vectors: DataFrame): DataFrame = {
+    val (subspaces, subDim) = readMeta(spark, path)
     encodeWith(vectors, spark.read.parquet(s"$path/centroids"),
       spark.read.parquet(s"$path/codebook"), subspaces, subDim)
+  }
 
   /** The encode plan over explicit state relations — the stored ones
     * ([[encode]]) or, during init, the in-memory dense state the
@@ -140,25 +140,6 @@ object IvfPqIndex {
         Similarity.ivfPqSliceResiduals(residuals, subspaces, subDim),
         cb, subspaces)
     else Similarity.ivfPqEncodeCodes(residuals, cb, subspaces, subDim)
-  }
-
-  /** Idempotently assign + encode one epoch of vectors against the
-    * stored trained state; false = epoch already committed (replay —
-    * no write). */
-  def appendEpoch(
-      spark: SparkSession, path: String, epoch: Long,
-      vectors: DataFrame): Boolean =
-    LsmSegments.appendEpoch(spark, path, epoch) { p =>
-      val (subspaces, subDim) = readMeta(spark, path)
-      writeSegment(encode(spark, path, vectors, subspaces, subDim), p)
-    }
-
-  /** One consistent snapshot of the code segments. */
-  def readAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) = LsmSegments.liveSegments(spark, path)
-    deltaPaths.foldLeft(loadSegment(spark, basePath)) {
-      (acc, p) => acc.unionByName(loadSegment(spark, p))
-    }
   }
 
   /** Resolve one consistent snapshot PLUS the index's fixed trained
@@ -207,12 +188,6 @@ object IvfPqIndex {
     serveSnapshot(
       snapshot, centroids, codebook, subspaces, subDim, queries, k, nProbe, salts)
   }
-
-  /** [[readAll]] AS OF a committed delta epoch ([[LsmSegments
-    * .segmentsAsOf]]'s retained snapshot; −1 = the fresh base; epochs
-    * past the gc horizon fail loudly). */
-  def readAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame =
-    LsmSegments.foldAsOf(spark, path, epoch, loadSegment(spark, _))
 
   /** [[serveAll]] AS OF a committed delta epoch — historical ADC
     * top-k over the retained code snapshot; the trained state
@@ -364,17 +339,4 @@ object IvfPqIndex {
       .crossJoin(guard.where(col("vector_source_complete")))
       .drop("vector_source_complete")
   }
-
-  /** Fold committed deltas into a new base generation (marker written
-    * last — interleaved readers stay consistent); data retired by
-    * [[gc]], not here. */
-  def compact(spark: SparkSession, path: String): Unit =
-    LsmSegments.compact(spark, path,
-      load = ps => ps.map(loadSegment(spark, _)).reduce(_.unionByName(_)),
-      write = writeSegment)
-
-  /** Retire superseded generations + folded delta data (epoch commit
-    * markers kept — the replay guard). */
-  def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit =
-    LsmSegments.gc(spark, path, retainGens)
 }

@@ -2,8 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Marker-last LSM segment protocol shared by the persisted ANN index
-  * tiers ([[IvfIndex]], [[Sq8Index]], [[PqIndex]]): a generation-
+/** Marker-last LSM segment protocol shared, through
+  * [[SegmentedIndex]], by the ten persisted index tiers and the two
+  * admission decision logs ([[AdmittedLog]]): a generation-
   * numbered BASE segment plus epoch-numbered DELTA segments, where
   * every piece of data becomes visible only through a marker file
   * written AFTER the data it commits — so readers never observe a
@@ -241,15 +242,6 @@ private[graft] object LsmSegments {
     (s"$path/base/$gen", deltas)
   }
 
-  /** Fold the [[segmentsAsOf]] snapshot through a tier's own segment
-    * loader — the shared body of every tier's `readAsOf`. */
-  private[graft] def foldAsOf(
-      spark: SparkSession, path: String, epoch: Long,
-      load: String => DataFrame): DataFrame = {
-    val (basePath, deltaPaths) = segmentsAsOf(spark, path, epoch)
-    deltaPaths.foldLeft(load(basePath))((acc, p) => acc.unionByName(load(p)))
-  }
-
   /** Fold committed deltas into a NEW base generation: read the live
     * snapshot via `load`, `write` it to `base/<gen+1>`, then commit
     * the generation marker. The old generation and the folded delta
@@ -316,4 +308,85 @@ private[graft] object LsmSegments {
       .filter(n => parseGenMarker(n).exists { case (g, _) => !keptGens.contains(g) })
       .foreach(n => f.delete(new org.apache.hadoop.fs.Path(s"$path/gens/$n"), false))
   }
+}
+
+/** One durable index tier over the [[LsmSegments]] protocol: the parts
+  * a tier owns — how an epoch of input becomes segment rows, and how a
+  * segment is read and written — in one place, and the LSM operations
+  * every tier shares ([[appendEpoch]], [[readAll]], [[readAsOf]],
+  * [[compact]], [[gc]]) written once over them. A tier object extends
+  * this and keeps only its `write` (the base plus any trained-state
+  * siblings) and its serving and probe plans; the admission loops'
+  * decision logs are the identity-encoded instance ([[AdmittedLog]]).
+  *
+  * Every snapshot read unions the segments byName in (base, deltas by
+  * epoch) order, so a reader's plan is the same whichever operation
+  * resolved the segment list. */
+abstract class SegmentedIndex {
+
+  /** One epoch of input as segment rows, using the tier's FIXED
+    * trained state read from `path` (none for the stateless tiers). */
+  protected def encode(spark: SparkSession, path: String, input: DataFrame): DataFrame
+
+  /** One segment as the serving plans expect it. */
+  protected def loadSegment(spark: SparkSession, p: String): DataFrame =
+    spark.read.parquet(p)
+
+  /** Persist one segment (overwrite — a replay clobbers a torn attempt). */
+  private[graft] def writeSegment(df: DataFrame, p: String): Unit =
+    df.write.mode("overwrite").parquet(p)
+
+  /** Commit `segment` as base generation 0 ([[LsmSegments.initBaseWith]]:
+    * the siblings and the base write overlap, the marker lands last). */
+  protected def initBase(spark: SparkSession, path: String,
+      siblings: Seq[() => Unit] = Nil)(segment: => DataFrame): Unit =
+    LsmSegments.initBaseWith(spark, path, siblings)(writeSegment(segment, _))
+
+  private def union(spark: SparkSession, paths: Seq[String]): DataFrame =
+    paths.map(loadSegment(spark, _)).reduce(_ unionByName _)
+
+  /** Idempotently encode + append one epoch as a delta segment; false =
+    * epoch already committed (replay — nothing is read or written). */
+  def appendEpoch(
+      spark: SparkSession, path: String, epoch: Long, input: DataFrame): Boolean =
+    LsmSegments.appendEpoch(spark, path, epoch)(p =>
+      writeSegment(encode(spark, path, input), p))
+
+  /** Committed delta epochs, ascending. */
+  def committedEpochs(spark: SparkSession, path: String): Seq[Long] =
+    LsmSegments.committedEpochs(spark, path)
+
+  /** One consistent snapshot: the current base generation ∪ the
+    * committed deltas not yet folded into it. */
+  def readAll(spark: SparkSession, path: String): DataFrame = {
+    val (basePath, deltaPaths) = LsmSegments.liveSegments(spark, path)
+    union(spark, basePath +: deltaPaths)
+  }
+
+  /** [[readAll]] AS OF a committed delta epoch ([[LsmSegments
+    * .segmentsAsOf]]'s retained snapshot; −1 = the fresh base; epochs
+    * past the gc horizon fail loudly). */
+  def readAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame = {
+    val (basePath, deltaPaths) = LsmSegments.segmentsAsOf(spark, path, epoch)
+    union(spark, basePath +: deltaPaths)
+  }
+
+  /** Fold committed deltas into a new base generation (marker written
+    * last — interleaved readers stay consistent); data retired by
+    * [[gc]], so lazy plans handed out before the compact stay valid. */
+  def compact(spark: SparkSession, path: String): Unit =
+    LsmSegments.compact(spark, path, union(spark, _), writeSegment)
+
+  /** Retire superseded generations + folded delta data (epoch markers
+    * kept — the replay guard). */
+  def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit =
+    LsmSegments.gc(spark, path, retainGens)
+}
+
+/** The admission loops' write-ahead decision log ([[Admission]],
+  * [[RecordAdmission]]): the admitted rows themselves, one delta per
+  * decided epoch. */
+private[graft] object AdmittedLog extends SegmentedIndex {
+  protected def encode(spark: SparkSession, path: String, input: DataFrame): DataFrame =
+    input
 }

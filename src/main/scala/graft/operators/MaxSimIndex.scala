@@ -27,10 +27,7 @@ import org.apache.spark.sql.functions._
   * hash-identical to [[Similarity.maxSimKnn]] over the union (pinned
   * by spec + the `knn_maxsim_delta` oracle — the same nested-HOF
   * oracle as `knn_maxsim`). */
-object MaxSimIndex {
-
-  private def writeSegment(df: DataFrame, p: String): Unit =
-    df.write.mode("overwrite").parquet(p)
+object MaxSimIndex extends SegmentedIndex {
 
   private def readMeta(spark: SparkSession, path: String): Int =
     spark.read.parquet(s"$path/meta").head().getAs[Int]("tokens_per_doc")
@@ -45,29 +42,17 @@ object MaxSimIndex {
     // the base bags use the PASSED tokensPerDoc, not the stored meta
     // — the two init writes are independent jobs, overlapped (guide
     // §2.6); the gen marker lands after both settle
-    LsmSegments.initBaseWith(spark, path, Seq(
+    initBase(spark, path, Seq(
       () => Seq(tokensPerDoc).toDF("tokens_per_doc")
-        .write.mode("overwrite").parquet(s"$path/meta")))(p =>
-      writeSegment(Similarity.tokenBags(vectors, tokensPerDoc), p))
+        .write.mode("overwrite").parquet(s"$path/meta")))(
+      Similarity.tokenBags(vectors, tokensPerDoc))
   }
 
-  /** Idempotently bag + append one epoch of token vectors as a delta
-    * segment; false = epoch already committed (replay — no write).
-    * Every document's tokens must be fully contained in this epoch
-    * (see the class contract). */
-  def appendEpoch(
-      spark: SparkSession, path: String, epoch: Long,
-      vectors: DataFrame): Boolean =
-    LsmSegments.appendEpoch(spark, path, epoch)(p =>
-      writeSegment(Similarity.tokenBags(vectors, readMeta(spark, path)), p))
-
-  /** One consistent snapshot of the bag segments. */
-  def readAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) = LsmSegments.liveSegments(spark, path)
-    deltaPaths.foldLeft(spark.read.parquet(basePath)) {
-      (acc, p) => acc.unionByName(spark.read.parquet(p))
-    }
-  }
+  /** Bag an epoch of token vectors by the STORED tokensPerDoc; every
+    * document's tokens must be fully contained in the epoch (see the
+    * class contract). */
+  protected def encode(spark: SparkSession, path: String, vectors: DataFrame): DataFrame =
+    Similarity.tokenBags(vectors, readMeta(spark, path))
 
   /** Top-k by MaxSim over base ∪ committed deltas for `queries` =
     * (query_id, qtoks: array of token vectors — derive with
@@ -78,12 +63,6 @@ object MaxSimIndex {
       spark: SparkSession, path: String, queries: DataFrame,
       k: Int = 5, salts: Int = 32): DataFrame =
     serveSnapshot(readAll(spark, path), queries, k, salts)
-
-  /** [[readAll]] AS OF a committed delta epoch ([[LsmSegments
-    * .segmentsAsOf]]'s retained snapshot; −1 = the fresh base; epochs
-    * past the gc horizon fail loudly). */
-  def readAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame =
-    LsmSegments.foldAsOf(spark, path, epoch, spark.read.parquet(_))
 
   /** [[serveAll]] AS OF a committed delta epoch — historical MaxSim
     * top-k over the retained bag snapshot, same serving plan. */
@@ -101,17 +80,4 @@ object MaxSimIndex {
     Similarity.saltedTopK(
       Similarity.maxSimScore(snapshot, queries),
       score = "maxsim", ascending = false, k = k, salts = salts)
-
-  /** Fold committed deltas into a new base generation (marker written
-    * last — interleaved readers stay consistent); data retired by
-    * [[gc]]. */
-  def compact(spark: SparkSession, path: String): Unit =
-    LsmSegments.compact(spark, path,
-      load = ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      write = writeSegment)
-
-  /** Retire superseded generations + folded delta data (epoch markers
-    * kept — the replay guard). */
-  def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit =
-    LsmSegments.gc(spark, path, retainGens)
 }

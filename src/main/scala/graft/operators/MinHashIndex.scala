@@ -35,10 +35,7 @@ import org.apache.spark.sql.functions._
   * anchored on the same dedup contract as the batch operator
   * (`/root/reference` has no dedup; this is §2.3 extension surface).
   */
-object MinHashIndex {
-
-  private def writeSegment(df: DataFrame, p: String): Unit =
-    df.write.mode("overwrite").parquet(p)
+object MinHashIndex extends SegmentedIndex {
 
   private def readMeta(spark: SparkSession, path: String): (Int, Int, Int) = {
     val r = spark.read.parquet(s"$path/meta").head()
@@ -74,30 +71,17 @@ object MinHashIndex {
     // the base fingerprints use the PASSED parameters, not the stored
     // meta — the two init writes are independent jobs, overlapped
     // (guide §2.6); the gen marker lands after both settle
-    LsmSegments.initBaseWith(spark, path, Seq(
+    initBase(spark, path, Seq(
       () => Seq((shingleN, numHashes, bands))
         .toDF("shingle_n", "num_hashes", "bands")
-        .write.mode("overwrite").parquet(s"$path/meta")))(p =>
-      writeSegment(fingerprints(documents, shingleN, numHashes, bands), p))
+        .write.mode("overwrite").parquet(s"$path/meta")))(
+      fingerprints(documents, shingleN, numHashes, bands))
   }
 
-  /** Idempotently fingerprint + append one epoch of documents against
-    * the stored parameters; false = epoch already committed (replay —
-    * no write). */
-  def appendEpoch(
-      spark: SparkSession, path: String, epoch: Long,
-      documents: DataFrame): Boolean =
-    LsmSegments.appendEpoch(spark, path, epoch) { p =>
-      val (shingleN, numHashes, bands) = readMeta(spark, path)
-      writeSegment(fingerprints(documents, shingleN, numHashes, bands), p)
-    }
-
-  /** One consistent snapshot of the fingerprint segments. */
-  def readAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) = LsmSegments.liveSegments(spark, path)
-    deltaPaths.foldLeft(spark.read.parquet(basePath)) {
-      (acc, p) => acc.unionByName(spark.read.parquet(p))
-    }
+  /** Fingerprint an epoch of documents against the STORED parameters. */
+  protected def encode(spark: SparkSession, path: String, documents: DataFrame): DataFrame = {
+    val (shingleN, numHashes, bands) = readMeta(spark, path)
+    fingerprints(documents, shingleN, numHashes, bands)
   }
 
   /** (doc_id, band, band_hash) rows — the stored banding unpacked;
@@ -106,12 +90,6 @@ object MinHashIndex {
   private def banded(fp: DataFrame): DataFrame =
     fp.select(col("doc_id"), posexplode(col("band_hashes")))
       .toDF("doc_id", "band", "band_hash")
-
-  /** [[readAll]] AS OF a committed delta epoch ([[LsmSegments
-    * .segmentsAsOf]]'s retained snapshot; −1 = the fresh base; epochs
-    * past the gc horizon fail loudly). */
-  def readAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame =
-    LsmSegments.foldAsOf(spark, path, epoch, spark.read.parquet(_))
 
   /** [[servePairs]] AS OF a committed delta epoch — the verified
     * near-dup decision set exactly as it stood when that epoch
@@ -221,17 +199,4 @@ object MinHashIndex {
     Dedup.verifyJaccardSets(pairs, sets)
       .where(col("jaccard") >= threshold)
   }
-
-  /** Fold committed deltas into a new base generation (marker written
-    * last — interleaved readers stay consistent); data retired by
-    * [[gc]]. */
-  def compact(spark: SparkSession, path: String): Unit =
-    LsmSegments.compact(spark, path,
-      load = ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      write = writeSegment)
-
-  /** Retire superseded generations + folded delta data (epoch markers
-    * kept — the replay guard). */
-  def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit =
-    LsmSegments.gc(spark, path, retainGens)
 }

@@ -21,10 +21,7 @@ import org.apache.spark.sql.functions._
   * so [[serveAll]] over any base/delta split is hash-identical to
   * [[Similarity.pqKnn]] over the union with the same codebook (pinned
   * by spec + the `knn_pq_delta` oracle). */
-object PqIndex {
-
-  private def writeSegment(df: DataFrame, p: String): Unit =
-    df.write.mode("overwrite").parquet(p)
+object PqIndex extends SegmentedIndex {
 
   private def readMeta(spark: SparkSession, path: String): (Int, Int) = {
     val r = spark.read.parquet(s"$path/meta").head()
@@ -53,33 +50,17 @@ object PqIndex {
     // all three init jobs overlap (guide §2.6): the two small state
     // writes land in disjoint dirs and the base encode already runs
     // against the in-memory cb; the gen marker lands after all settle
-    LsmSegments.initBaseWith(spark, path, Seq(
+    initBase(spark, path, Seq(
       () => cb.write.mode("overwrite").parquet(s"$path/codebook"),
       () => Seq((subspaces, subDim)).toDF("subspaces", "sub_dim")
-        .write.mode("overwrite").parquet(s"$path/meta")))(p =>
-      writeSegment(
-        Similarity.pqEncodeCodes(vectors, cb, subspaces, subDim), p))
+        .write.mode("overwrite").parquet(s"$path/meta")))(
+      Similarity.pqEncodeCodes(vectors, cb, subspaces, subDim))
   }
 
-  /** Idempotently encode + append one epoch of vectors against the
-    * stored codebook; false = epoch already committed (replay — no
-    * write). */
-  def appendEpoch(
-      spark: SparkSession, path: String, epoch: Long,
-      vectors: DataFrame): Boolean =
-    LsmSegments.appendEpoch(spark, path, epoch) { p =>
-      val (subspaces, subDim) = readMeta(spark, path)
-      writeSegment(
-        Similarity.pqEncodeCodes(
-          vectors, readCodebook(spark, path), subspaces, subDim), p)
-    }
-
-  /** One consistent snapshot of the code segments. */
-  def readAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) = LsmSegments.liveSegments(spark, path)
-    deltaPaths.foldLeft(spark.read.parquet(basePath)) {
-      (acc, p) => acc.unionByName(spark.read.parquet(p))
-    }
+  /** Encode an epoch against the STORED codebook and grid. */
+  protected def encode(spark: SparkSession, path: String, vectors: DataFrame): DataFrame = {
+    val (subspaces, subDim) = readMeta(spark, path)
+    Similarity.pqEncodeCodes(vectors, readCodebook(spark, path), subspaces, subDim)
   }
 
   /** Top-k by ADC distance for `queries` = (query_id, q:
@@ -93,12 +74,6 @@ object PqIndex {
     val (snapshot, codebook, subspaces, subDim) = openAll(spark, path)
     serveSnapshot(snapshot, codebook, subspaces, subDim, queries, k, salts)
   }
-
-  /** [[readAll]] AS OF a committed delta epoch ([[LsmSegments
-    * .segmentsAsOf]]'s retained snapshot; −1 = the fresh base; epochs
-    * past the gc horizon fail loudly). */
-  def readAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame =
-    LsmSegments.foldAsOf(spark, path, epoch, spark.read.parquet(_))
 
   /** [[serveAll]] AS OF a committed delta epoch — historical top-k
     * over the retained code snapshot; the trained state (codebook,
@@ -130,17 +105,4 @@ object PqIndex {
       Similarity.pqAdcScore(snapshot, luts, subspaces),
       score = "adc_dist", ascending = true, k = k, salts = salts)
   }
-
-  /** Fold committed deltas into a new base generation (marker written
-    * last — interleaved readers stay consistent); data retired by
-    * [[gc]]. */
-  def compact(spark: SparkSession, path: String): Unit =
-    LsmSegments.compact(spark, path,
-      load = ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      write = writeSegment)
-
-  /** Retire superseded generations + folded delta data (epoch markers
-    * kept — the replay guard). */
-  def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit =
-    LsmSegments.gc(spark, path, retainGens)
 }

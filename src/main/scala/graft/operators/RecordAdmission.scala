@@ -64,8 +64,8 @@ object RecordAdmission {
 
   /** Initialize both stores empty. */
   def init(spark: SparkSession, path: String): Unit = {
-    LsmSegments.initBase(spark, store(path, "admitted"))(p =>
-      emptyRecords(spark).write.mode("overwrite").parquet(p))
+    LsmSegments.initBase(spark, store(path, "admitted"))(
+      AdmittedLog.writeSegment(emptyRecords(spark), _))
     RecordIndex.write(emptyRecords(spark), store(path, "register"))
   }
 
@@ -116,7 +116,7 @@ object RecordAdmission {
     LsmSegments.current(spark, admittedPath)
     LsmSegments.appendEpoch(spark, admittedPath, epoch) { p =>
       val admitted = decide(spark, path, shard, maxDist, maxPairsPerBlock)
-      try admitted.write.mode("overwrite").parquet(p)
+      try AdmittedLog.writeSegment(admitted, p)
       finally Storage.unpersistLocalCheckpoint(admitted)
     }
     val admitted = spark.read.parquet(s"$admittedPath/deltas/$epoch")
@@ -126,34 +126,26 @@ object RecordAdmission {
 
   /** The admitted register: one consistent snapshot (base ∪ committed
     * deltas) of the decision log. */
-  def admittedAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) =
-      LsmSegments.liveSegments(spark, store(path, "admitted"))
-    deltaPaths.foldLeft(spark.read.parquet(basePath)) {
-      (acc, p) => acc.unionByName(spark.read.parquet(p))
-    }
-  }
+  def admittedAll(spark: SparkSession, path: String): DataFrame =
+    AdmittedLog.readAll(spark, store(path, "admitted"))
 
   /** The admitted register AS OF a committed epoch — the decision
     * log's prefix ([[Admission.admittedAsOf]]'s audit law; run
     * maintenance with `retainGens ≥ 1` to keep pre-fold epochs
     * auditable). */
   def admittedAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame =
-    LsmSegments.foldAsOf(
-      spark, store(path, "admitted"), epoch, spark.read.parquet(_))
+    AdmittedLog.readAsOf(spark, store(path, "admitted"), epoch)
 
   /** Committed epochs of the admitted store (== fully decided
     * epochs). */
   def committedEpochs(spark: SparkSession, path: String): Seq[Long] =
-    LsmSegments.committedEpochs(spark, store(path, "admitted"))
+    AdmittedLog.committedEpochs(spark, store(path, "admitted"))
 
   /** Maintenance: fold + retire both stores ([[Admission.compact]]'s
     * retainGens contract — `retainGens = 1` is the in-loop policy). */
   def compact(spark: SparkSession, path: String, retainGens: Int = 0): Unit = {
-    LsmSegments.compact(spark, store(path, "admitted"),
-      load = ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      write = (df, p) => df.write.mode("overwrite").parquet(p))
-    LsmSegments.gc(spark, store(path, "admitted"), retainGens)
+    AdmittedLog.compact(spark, store(path, "admitted"))
+    AdmittedLog.gc(spark, store(path, "admitted"), retainGens)
     RecordIndex.compact(spark, store(path, "register"))
     RecordIndex.gc(spark, store(path, "register"), retainGens)
   }

@@ -22,9 +22,9 @@ import org.apache.spark.sql.functions._
   * `block` (never a per-block collect), Levenshtein evaluated
   * per streamed pair — Σ |shard_b|·|index_b| work, the blocking
   * contract's own bound. */
-object RecordIndex {
+object RecordIndex extends SegmentedIndex {
 
-  private def writeSegment(df: DataFrame, p: String): Unit = {
+  protected def encode(spark: SparkSession, path: String, df: DataFrame): DataFrame = {
     val req = Seq("id", "name", "block")
     require(req.forall(df.columns.contains),
       s"RecordIndex: segment needs (id, name, block), got ${df.columns.mkString(", ")}")
@@ -33,34 +33,12 @@ object RecordIndex {
     // register [[probeShardMulti]] screens on. One schema per index
     // (readAll unions segments byName and fails loudly on drift).
     val extras = df.columns.filterNot(req.contains).toSeq
-    df.select((req ++ extras).map(col): _*).write.mode("overwrite").parquet(p)
+    df.select((req ++ extras).map(col): _*)
   }
 
   /** Persist `records(id, name, block)` as base gen 0. */
   def write(records: DataFrame, path: String): Unit =
-    LsmSegments.initBase(records.sparkSession, path)(p =>
-      writeSegment(records, p))
-
-  /** Idempotently append one epoch of records as a delta segment;
-    * false = epoch already committed (replay — no write). */
-  def appendEpoch(
-      spark: SparkSession, path: String, epoch: Long,
-      records: DataFrame): Boolean =
-    LsmSegments.appendEpoch(spark, path, epoch)(p =>
-      writeSegment(records, p))
-
-  /** One consistent snapshot of the record segments. */
-  def readAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) = LsmSegments.liveSegments(spark, path)
-    deltaPaths.foldLeft(spark.read.parquet(basePath)) {
-      (acc, p) => acc.unionByName(spark.read.parquet(p))
-    }
-  }
-
-  /** [[readAll]] AS OF a committed delta epoch (−1 = the fresh base;
-    * epochs past the gc horizon fail loudly). */
-  def readAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame =
-    LsmSegments.foldAsOf(spark, path, epoch, spark.read.parquet(_))
+    initBase(records.sparkSession, path)(encode(records.sparkSession, path, records))
 
   /** The fuzzy admission check: for each record of a new shard
     * `(id, name, block)`, every INDEXED record in the same block
@@ -222,16 +200,4 @@ object RecordIndex {
         score.cast("int").as("score"))
       .where(col("score") >= minScore)
   }
-
-  /** Fold committed deltas into a new base generation (marker written
-    * last); data retired by [[gc]]. */
-  def compact(spark: SparkSession, path: String): Unit =
-    LsmSegments.compact(spark, path,
-      load = ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      write = writeSegment)
-
-  /** Retire superseded generations + folded delta data (epoch markers
-    * kept — the replay guard). */
-  def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit =
-    LsmSegments.gc(spark, path, retainGens)
 }

@@ -1245,7 +1245,7 @@ object Similarity {
   /** The SERVE half of IVF: probe-list selection + exact-cosine
     * ranking over an existing assignment table — no retraining, no
     * reassignment, which is how a production pipeline queries an index
-    * it built earlier ([[IvfIndex.serve]] binds this to one persisted
+    * it built earlier ([[IvfIndex.serveAll]] binds this to one persisted
     * on disk; when `assigned` is a partitioned parquet scan, the
     * broadcast probe join prunes to only the probed lists). */
   private[graft] def ivfServe(

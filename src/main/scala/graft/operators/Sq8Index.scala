@@ -18,33 +18,15 @@ import org.apache.spark.sql.functions._
   * deterministic fold as the in-memory path — so [[serveAll]] over
   * any base/delta split is hash-identical to [[Similarity.sq8Knn]]
   * over the union (pinned by spec + the `knn_sq8_delta` oracle). */
-object Sq8Index {
+object Sq8Index extends SegmentedIndex {
 
-  private def writeSegment(df: DataFrame, p: String): Unit =
-    df.write.mode("overwrite").parquet(p)
+  protected def encode(spark: SparkSession, path: String, vectors: DataFrame): DataFrame =
+    Similarity.sq8Quantize(vectors)
 
   /** Quantize `vectors` (vec_id, embedding) and persist as base
     * generation 0. */
   def write(vectors: DataFrame, path: String): Unit =
-    LsmSegments.initBase(vectors.sparkSession, path)(p =>
-      writeSegment(Similarity.sq8Quantize(vectors), p))
-
-  /** Idempotently quantize + append one epoch of vectors as a delta
-    * segment; false = epoch already committed (replay — no write). */
-  def appendEpoch(
-      spark: SparkSession, path: String, epoch: Long,
-      vectors: DataFrame): Boolean =
-    LsmSegments.appendEpoch(spark, path, epoch)(p =>
-      writeSegment(Similarity.sq8Quantize(vectors), p))
-
-  /** One consistent snapshot: current base generation ∪ committed
-    * unfolded deltas. */
-  def readAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) = LsmSegments.liveSegments(spark, path)
-    deltaPaths.foldLeft(spark.read.parquet(basePath)) {
-      (acc, p) => acc.unionByName(spark.read.parquet(p))
-    }
-  }
+    initBase(vectors.sparkSession, path)(Similarity.sq8Quantize(vectors))
 
   /** Top-k by de-quantized dot for `queries` = (query_id, qv:
     * array<float>), self-matches excluded — the [[Similarity.sq8Knn]]
@@ -54,12 +36,6 @@ object Sq8Index {
       spark: SparkSession, path: String, queries: DataFrame,
       k: Int = 5, salts: Int = 32): DataFrame =
     serveSnapshot(readAll(spark, path), queries, k, salts)
-
-  /** [[readAll]] AS OF a committed delta epoch ([[LsmSegments
-    * .segmentsAsOf]]'s retained snapshot; −1 = the fresh base; epochs
-    * past the gc horizon fail loudly). */
-  def readAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame =
-    LsmSegments.foldAsOf(spark, path, epoch, spark.read.parquet(_))
 
   /** [[serveAll]] AS OF a committed delta epoch — historical top-k
     * over the retained snapshot, same serving plan. */
@@ -78,17 +54,4 @@ object Sq8Index {
     Similarity.saltedTopK(
       Similarity.sq8Score(snapshot, queries),
       score = "dot_sq8", ascending = false, k = k, salts = salts)
-
-  /** Fold committed deltas into a new base generation (marker written
-    * last — interleaved readers stay consistent); data retired by
-    * [[gc]]. */
-  def compact(spark: SparkSession, path: String): Unit =
-    LsmSegments.compact(spark, path,
-      load = ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      write = writeSegment)
-
-  /** Retire superseded generations + folded delta data (epoch markers
-    * kept — the replay guard). */
-  def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit =
-    LsmSegments.gc(spark, path, retainGens)
 }

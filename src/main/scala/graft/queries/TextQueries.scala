@@ -114,7 +114,7 @@ object TextQueries {
     // the PERSISTED near-dup index under the LSM delta-segment
     // protocol: base fingerprints from two thirds of the corpus, the
     // rest appended as two committed delta epochs against the stored
-    // LSH parameters (StreamingOps.minhashIngestStream's foreachBatch
+    // LSH parameters (StreamingOps.ingestStream's foreachBatch
     // step, run inline), served as bucket→pair→exact-Jaccard over
     // base ∪ deltas — bit-identical to the batch minhashLsh over the
     // union, which is what the shared oracle asserts.

@@ -99,7 +99,7 @@ object VectorQueries {
 
     // ...and the PERSISTED form — the stack a deployment actually
     // runs: the dense signal served from a durable IVF index
-    // (IvfIndex.serve top-20, probed-list scan only — the corpus's
+    // (IvfIndex.serveAll top-20, probed-list scan only — the corpus's
     // floats are never re-scored in full), the lexical signal from
     // one in-row token-Jaccard pass, fused through the identical RRF
     // seam (Similarity.rrfFuse — the fusion contract is ranking-
@@ -123,7 +123,7 @@ object VectorQueries {
       val path = dir.toAbsolutePath.toString
       ivfIndexDirs.add(dir)
       graft.operators.IvfIndex.write(corpusEmb, seeds, path)
-      val dense = graft.operators.IvfIndex.serve(s, path,
+      val dense = graft.operators.IvfIndex.serveAll(s, path,
         corpusEmb.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("q")),
         k = 20, nProbe = 4)
@@ -171,7 +171,7 @@ object VectorQueries {
       val path = dir.toAbsolutePath.toString
       ivfIndexDirs.add(dir)
       graft.operators.IvfIndex.write(corpusEmb, seeds, path)
-      val dense = graft.operators.IvfIndex.serve(s, path,
+      val dense = graft.operators.IvfIndex.serveAll(s, path,
         corpusEmb.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("q")),
         k = 20, nProbe = 4)
@@ -530,7 +530,7 @@ object VectorQueries {
       val path = dir.toAbsolutePath.toString
       ivfIndexDirs.add(dir)
       graft.operators.IvfIndex.write(e, seeds, path)
-      graft.operators.IvfIndex.serve(s, path,
+      graft.operators.IvfIndex.serveAll(s, path,
         e.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("q")),
         k = 5, nProbe = 4)
@@ -539,7 +539,7 @@ object VectorQueries {
     // the LSM ingest path under the driver's gate: base segment from
     // two thirds of the corpus, the rest appended as two committed
     // epoch DELTA segments against the same trained centroids
-    // (StreamingOps.ivfIngestStream's foreachBatch step, run inline),
+    // (StreamingOps.ingestStream's foreachBatch step, run inline),
     // served through serveAll (base ∪ deltas, partition pruning per
     // segment). Assignment is a pure function of (vector, centroids),
     // so the result is bit-identical to the single-segment build —

@@ -546,13 +546,14 @@ object StreamingOps {
     * ([[graft.operators.IvfIndex]]). `foreachBatch` is the honest
     * composition here — per-query top-k ranking is state-free across
     * batches, so running the BATCH serving plan per micro-batch is
-    * semantically exact (pinned against `IvfIndex.serve` in
+    * semantically exact (pinned against `IvfIndex.serveAll` in
     * StreamingOpsSpec), where a streaming window/rank would be
-    * rejected by the planner in append mode. The index relations load
-    * once and are reused every batch: centroids broadcast, and the
-    * corpus is touched only in the probed c_id partitions — the
-    * partition-pruned scan that makes per-batch serving O(probed
-    * lists), not O(corpus), at 100 TB. */
+    * rejected by the planner in append mode. The base∪deltas snapshot
+    * and the centroids resolve once at stream start and are reused
+    * every batch (the LIFETIME BOUND below applies): centroids
+    * broadcast, and the corpus is touched only in the probed c_id
+    * partitions — the partition-pruned scan that makes per-batch
+    * serving O(probed lists), not O(corpus), at 100 TB. */
   def ivfServeStream(
       queries: DataFrame,
       indexPath: String,
@@ -566,7 +567,8 @@ object StreamingOps {
       trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
       sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = queries.sparkSession
-    val (assigned, centroids) = graft.operators.IvfIndex.read(spark, indexPath)
+    val assigned = graft.operators.IvfIndex.readAll(spark, indexPath)
+    val centroids = graft.operators.IvfIndex.centroids(spark, indexPath)
     serveStream(queries, options, queryName, trigger)(batch =>
       graft.operators.Similarity.ivfServe(assigned, centroids, batch, k, nProbe))(sink)
   }
@@ -772,25 +774,6 @@ object StreamingOps {
         spark, indexPath, batch, maxHamming, maxBucket))(sink)
   }
 
-  /** [[ivfIngestStream]]'s Hamming-signature sibling: each micro-batch
-    * of chunked signatures is committed as an idempotent delta segment
-    * of a [[graft.operators.HammingIndex]] (same fixed signature
-    * function for the life of the index — the caller's contract). Same
-    * lineage guard. */
-  def hammingIngestStream(
-      signatures: DataFrame,
-      indexPath: String,
-      options: Map[String, String] = Map.empty,
-      compactEvery: Int = 0,
-      retainGens: Int = 1)(
-      onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery =
-    lsmIngestStream("hammingIngestStream", signatures, indexPath, options,
-      graft.operators.HammingIndex.appendEpoch, compactEvery,
-      () => {
-        graft.operators.HammingIndex.compact(signatures.sparkSession, indexPath)
-        graft.operators.HammingIndex.gc(signatures.sparkSession, indexPath, retainGens = retainGens)
-      })(onBatch)
-
   /** The STRUCTURED-RECORD sibling of [[minhashProbeStream]] — fuzzy
     * master-data admission: each micro-batch of records (id, name,
     * block) is probed against a persisted
@@ -812,24 +795,6 @@ object StreamingOps {
       graft.operators.RecordIndex.probeShard(
         spark, indexPath, batch, maxDist))(sink)
   }
-
-  /** [[ivfIngestStream]]'s structured-record sibling: each micro-batch
-    * of (id, name, block) records is committed as an idempotent delta
-    * segment of a [[graft.operators.RecordIndex]]. Same lineage
-    * guard. */
-  def recordIngestStream(
-      records: DataFrame,
-      indexPath: String,
-      options: Map[String, String] = Map.empty,
-      compactEvery: Int = 0,
-      retainGens: Int = 1)(
-      onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery =
-    lsmIngestStream("recordIngestStream", records, indexPath, options,
-      graft.operators.RecordIndex.appendEpoch, compactEvery,
-      () => {
-        graft.operators.RecordIndex.compact(records.sparkSession, indexPath)
-        graft.operators.RecordIndex.gc(records.sparkSession, indexPath, retainGens = retainGens)
-      })(onBatch)
 
   /** The EMBEDDING sibling of [[minhashProbeStream]]: each micro-batch
     * of vectors (vec_id, embedding) is screened against a persisted
@@ -854,8 +819,8 @@ object StreamingOps {
         spark, indexPath, batch, threshold))(sink)
   }
 
-  /** Shared scaffolding of the four ANN serve streams: `foreachBatch`
-    * running a BATCH serving plan per micro-batch (the honest
+  /** Shared scaffolding of the eleven serve and probe streams:
+    * `foreachBatch` running a BATCH serving plan per micro-batch (the honest
     * composition — per-query top-k is state-free across batches, so
     * this is semantically exact where a streaming window/rank would
     * be rejected by the planner in append mode), with the writeStream
@@ -884,215 +849,6 @@ object StreamingOps {
     trigger.foreach(writer.trigger)
     writer.start()
   }
-
-  /** Streaming INGEST into a persisted IVF index: each micro-batch of
-    * (vec_id, embedding) rows is assigned against the index's FIXED
-    * trained centroids and committed as an idempotent delta segment
-    * ([[graft.operators.IvfIndex.appendEpoch]] — replayed epochs are
-    * skipped, torn segments overwritten), so
-    * [[graft.operators.IvfIndex.serveAll]] picks the new vectors up
-    * immediately with no retrain and exactly-once semantics. The
-    * ingest-time sibling of [[ivfServeStream]].
-    *
-    * Maintenance: with `compactEvery = 0` (default) deltas accrete
-    * until an offline [[graft.operators.IvfIndex.compact]]; a
-    * LONG-RUNNING ingest should pass `compactEvery = N` so the loop
-    * folds deltas into a new base generation whenever ≥ N unfolded
-    * epochs have committed — otherwise read cost grows linearly in
-    * epochs. In-loop gc retains ONE superseded generation
-    * (`retainGens = 1`), so any reader that resolved its snapshot
-    * since the previous compaction keeps reading consistently for a
-    * full further compaction cycle while the stream compacts under
-    * it (pinned in StreamingOpsSpec).
-    *
-    * Lineage pairing: the index's epoch markers are only meaningful
-    * relative to ONE streaming checkpoint lineage (epoch ids restart
-    * at 0 for a fresh/temporary checkpoint, so a new lineage against
-    * an already-ingested index would collide with old markers and
-    * SILENTLY skip its first batches). Resuming an index therefore
-    * requires the original `checkpointLocation`; starting without one
-    * against a non-empty index fails fast instead of dropping data. */
-  def ivfIngestStream(
-      vectors: DataFrame,
-      indexPath: String,
-      options: Map[String, String] = Map.empty,
-      compactEvery: Int = 0,
-      // generations a triggered in-loop gc retains; 1 (default) keeps
-      // one superseded snapshot alive for concurrent fixed-snapshot
-      // readers — a long-lived serve stream needs retainGens sized to
-      // its lifetime in compaction cycles (see the serve streams'
-      // LIFETIME BOUND note)
-      retainGens: Int = 1)(
-      onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery =
-    lsmIngestStream("ivfIngestStream", vectors, indexPath, options,
-      graft.operators.IvfIndex.appendEpoch, compactEvery,
-      () => {
-        graft.operators.IvfIndex.compact(vectors.sparkSession, indexPath)
-        graft.operators.IvfIndex.gc(vectors.sparkSession, indexPath, retainGens = retainGens)
-      })(onBatch)
-
-  /** [[ivfIngestStream]]'s SQ8-tier sibling: each micro-batch is
-    * quantized ([[graft.operators.Sq8Index.appendEpoch]] — a pure
-    * per-vector function, no trained state) and committed as an
-    * idempotent delta segment. Same lineage guard. */
-  def sq8IngestStream(
-      vectors: DataFrame,
-      indexPath: String,
-      options: Map[String, String] = Map.empty,
-      compactEvery: Int = 0,
-      // generations a triggered in-loop gc retains; 1 (default) keeps
-      // one superseded snapshot alive for concurrent fixed-snapshot
-      // readers — a long-lived serve stream needs retainGens sized to
-      // its lifetime in compaction cycles (see the serve streams'
-      // LIFETIME BOUND note)
-      retainGens: Int = 1)(
-      onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery =
-    lsmIngestStream("sq8IngestStream", vectors, indexPath, options,
-      graft.operators.Sq8Index.appendEpoch, compactEvery,
-      () => {
-        graft.operators.Sq8Index.compact(vectors.sparkSession, indexPath)
-        graft.operators.Sq8Index.gc(vectors.sparkSession, indexPath, retainGens = retainGens)
-      })(onBatch)
-
-  /** [[ivfIngestStream]]'s PQ-tier sibling: each micro-batch is
-    * encoded against the index's FIXED stored codebook
-    * ([[graft.operators.PqIndex.appendEpoch]]) and committed as an
-    * idempotent delta segment. Same lineage guard. */
-  def pqIngestStream(
-      vectors: DataFrame,
-      indexPath: String,
-      options: Map[String, String] = Map.empty,
-      compactEvery: Int = 0,
-      // generations a triggered in-loop gc retains; 1 (default) keeps
-      // one superseded snapshot alive for concurrent fixed-snapshot
-      // readers — a long-lived serve stream needs retainGens sized to
-      // its lifetime in compaction cycles (see the serve streams'
-      // LIFETIME BOUND note)
-      retainGens: Int = 1)(
-      onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery =
-    lsmIngestStream("pqIngestStream", vectors, indexPath, options,
-      graft.operators.PqIndex.appendEpoch, compactEvery,
-      () => {
-        graft.operators.PqIndex.compact(vectors.sparkSession, indexPath)
-        graft.operators.PqIndex.gc(vectors.sparkSession, indexPath, retainGens = retainGens)
-      })(onBatch)
-
-  /** [[ivfIngestStream]]'s IVF-PQ-tier sibling: each micro-batch is
-    * coarse-assigned and residual-encoded against the index's FIXED
-    * trained state ([[graft.operators.IvfPqIndex.appendEpoch]]) and
-    * committed as an idempotent delta segment. Same lineage guard. */
-  def ivfPqIngestStream(
-      vectors: DataFrame,
-      indexPath: String,
-      options: Map[String, String] = Map.empty,
-      compactEvery: Int = 0,
-      // generations a triggered in-loop gc retains; 1 (default) keeps
-      // one superseded snapshot alive for concurrent fixed-snapshot
-      // readers — a long-lived serve stream needs retainGens sized to
-      // its lifetime in compaction cycles (see the serve streams'
-      // LIFETIME BOUND note)
-      retainGens: Int = 1)(
-      onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery =
-    lsmIngestStream("ivfPqIngestStream", vectors, indexPath, options,
-      graft.operators.IvfPqIndex.appendEpoch, compactEvery,
-      () => {
-        graft.operators.IvfPqIndex.compact(vectors.sparkSession, indexPath)
-        graft.operators.IvfPqIndex.gc(vectors.sparkSession, indexPath, retainGens = retainGens)
-      })(onBatch)
-
-  /** [[ivfIngestStream]]'s late-interaction sibling: each micro-batch
-    * of token vectors is bagged per document against the index's FIXED
-    * tokensPerDoc grouping ([[graft.operators.MaxSimIndex.appendEpoch]])
-    * and committed as an idempotent delta segment. DOCUMENT-ATOMIC
-    * batches required (all tokens of a doc in one micro-batch — the
-    * [[graft.operators.MaxSimIndex]] class contract); same lineage
-    * guard. */
-  def maxSimIngestStream(
-      vectors: DataFrame,
-      indexPath: String,
-      options: Map[String, String] = Map.empty,
-      compactEvery: Int = 0,
-      retainGens: Int = 1)(
-      onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery =
-    lsmIngestStream("maxSimIngestStream", vectors, indexPath, options,
-      graft.operators.MaxSimIndex.appendEpoch, compactEvery,
-      () => {
-        graft.operators.MaxSimIndex.compact(vectors.sparkSession, indexPath)
-        graft.operators.MaxSimIndex.gc(vectors.sparkSession, indexPath, retainGens = retainGens)
-      })(onBatch)
-
-  /** [[ivfIngestStream]]'s binary-tier sibling: each micro-batch is
-    * sign-bit packed ([[graft.operators.BinaryIndex.appendEpoch]] — a
-    * pure per-vector function) and committed as an idempotent delta
-    * segment. Same lineage guard. */
-  def binaryIngestStream(
-      vectors: DataFrame,
-      indexPath: String,
-      options: Map[String, String] = Map.empty,
-      compactEvery: Int = 0,
-      // generations a triggered in-loop gc retains; 1 (default) keeps
-      // one superseded snapshot alive for concurrent fixed-snapshot
-      // readers — a long-lived serve stream needs retainGens sized to
-      // its lifetime in compaction cycles (see the serve streams'
-      // LIFETIME BOUND note)
-      retainGens: Int = 1)(
-      onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery =
-    lsmIngestStream("binaryIngestStream", vectors, indexPath, options,
-      graft.operators.BinaryIndex.appendEpoch, compactEvery,
-      () => {
-        graft.operators.BinaryIndex.compact(vectors.sparkSession, indexPath)
-        graft.operators.BinaryIndex.gc(vectors.sparkSession, indexPath, retainGens = retainGens)
-      })(onBatch)
-
-  /** [[ivfIngestStream]]'s dedup sibling: each micro-batch of
-    * documents (doc_id, text) is fingerprinted against the index's
-    * FIXED LSH parameters ([[graft.operators.MinHashIndex.appendEpoch]]
-    * — shingle set + band hashes, stored like PQ's codebook) and
-    * committed as an idempotent delta segment, so the near-dup index
-    * stays current as the corpus streams in. Same lineage guard. */
-  def minhashIngestStream(
-      documents: DataFrame,
-      indexPath: String,
-      options: Map[String, String] = Map.empty,
-      compactEvery: Int = 0,
-      // generations a triggered in-loop gc retains; 1 (default) keeps
-      // one superseded snapshot alive for concurrent fixed-snapshot
-      // readers — a long-lived serve stream needs retainGens sized to
-      // its lifetime in compaction cycles (see the serve streams'
-      // LIFETIME BOUND note)
-      retainGens: Int = 1)(
-      onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery =
-    lsmIngestStream("minhashIngestStream", documents, indexPath, options,
-      graft.operators.MinHashIndex.appendEpoch, compactEvery,
-      () => {
-        graft.operators.MinHashIndex.compact(documents.sparkSession, indexPath)
-        graft.operators.MinHashIndex.gc(documents.sparkSession, indexPath, retainGens = retainGens)
-      })(onBatch)
-
-  /** [[minhashIngestStream]]'s exact-dedup sibling: each micro-batch
-    * of documents is content-hashed
-    * ([[graft.operators.ContentHashIndex.appendEpoch]] — a pure
-    * per-row function) and committed as an idempotent delta segment,
-    * so "seen before?" stays answerable as the corpus streams in.
-    * Same lineage guard. */
-  def exactDedupIngestStream(
-      documents: DataFrame,
-      indexPath: String,
-      options: Map[String, String] = Map.empty,
-      compactEvery: Int = 0,
-      // generations a triggered in-loop gc retains; 1 (default) keeps
-      // one superseded snapshot alive for concurrent fixed-snapshot
-      // readers — a long-lived serve stream needs retainGens sized to
-      // its lifetime in compaction cycles (see the serve streams'
-      // LIFETIME BOUND note)
-      retainGens: Int = 1)(
-      onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery =
-    lsmIngestStream("exactDedupIngestStream", documents, indexPath, options,
-      graft.operators.ContentHashIndex.appendEpoch, compactEvery,
-      () => {
-        graft.operators.ContentHashIndex.compact(documents.sparkSession, indexPath)
-        graft.operators.ContentHashIndex.gc(documents.sparkSession, indexPath, retainGens = retainGens)
-      })(onBatch)
 
   /** The full ADMISSION LOOP as a durable stream — the production
     * composition of the dedup-index surface: each micro-batch of
@@ -1125,7 +881,7 @@ object StreamingOps {
       // > 0: fold every store whenever this many committed
       // epochs are unfolded in the admitted store — same in-loop
       // maintenance policy (and same safety argument) as
-      // lsmIngestStream's compactEvery
+      // ingestStream's compactEvery
       compactEvery: Int = 0,
       // generations the triggered gc retains per store; 1 (default)
       // keeps one superseded snapshot alive for concurrent readers
@@ -1201,47 +957,69 @@ object StreamingOps {
       .start()
   }
 
-  /** The shared ingest loop of the six persisted index tiers: one
-    * marker-guarded `appendEpoch` per micro-batch (replayed epochs
-    * skipped, torn segments overwritten — exactly-once), plus the
-    * lineage-pairing fail-fast, plus threshold-triggered maintenance:
-    * after a batch commits, if ≥ `compactEvery` > 0 committed epochs
-    * are unfolded, `maintain` runs (the tier's compact + a gc that
-    * RETAINS one superseded generation, so concurrent readers on the
-    * previous snapshot stay consistent through the swap). The
-    * maintenance runs inside the single ingest writer, between
-    * appends — exactly the window the [[graft.operators.LsmSegments]]
-    * single-writer contract carves out for it; a replayed epoch never
-    * triggers it (nothing new committed). Driver-side metadata only —
-    * the check is two directory listings per batch. */
-  private def lsmIngestStream(
-      name: String,
-      vectors: DataFrame,
+  /** Streaming INGEST into any persisted index tier — the exactly-once
+    * recipe of a replayable source plus an idempotent, marker-guarded
+    * sink: each micro-batch is encoded against the index's FIXED
+    * trained state and committed as one delta segment
+    * ([[graft.operators.SegmentedIndex.appendEpoch]] — replayed epochs
+    * are skipped, torn segments overwritten), so the tier's serving
+    * plans pick the new rows up immediately with no retrain.
+    * `onBatch` receives (epoch, whether this run committed it).
+    *
+    * Maintenance: with `compactEvery = 0` (default) deltas accrete
+    * until an offline `compact`; a LONG-RUNNING ingest should pass
+    * `compactEvery = N` so the loop folds deltas into a new base
+    * generation whenever ≥ N unfolded epochs have committed —
+    * otherwise read cost grows linearly in epochs. The in-loop gc
+    * retains `retainGens` superseded generations (1 by default), so
+    * any reader that resolved its snapshot since the previous
+    * compaction keeps reading consistently for a full further cycle
+    * while the stream compacts under it; a long-lived serve stream
+    * needs `retainGens` sized to its lifetime in compaction cycles
+    * (see the serve streams' LIFETIME BOUND note). The maintenance
+    * runs inside the single ingest writer, between appends — exactly
+    * the window the [[graft.operators.LsmSegments]] single-writer
+    * contract carves out for it; a replayed epoch never triggers it
+    * (nothing new committed). Driver-side metadata only — the check
+    * is two directory listings per batch.
+    *
+    * Lineage pairing: the index's epoch markers are only meaningful
+    * relative to ONE streaming checkpoint lineage (epoch ids restart
+    * at 0 for a fresh/temporary checkpoint, so a new lineage against
+    * an already-ingested index would collide with old markers and
+    * SILENTLY skip its first batches). Resuming an index therefore
+    * requires the original `checkpointLocation`; starting without one
+    * against a non-empty index fails fast instead of dropping data. */
+  def ingestStream(
+      index: graft.operators.SegmentedIndex,
+      input: DataFrame,
       indexPath: String,
-      options: Map[String, String],
-      appendEpoch: (SparkSession, String, Long, DataFrame) => Boolean,
+      options: Map[String, String] = Map.empty,
       compactEvery: Int = 0,
-      maintain: () => Unit = () => ())(
-      onBatch: (Long, Boolean) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vectors.sparkSession
-    val committed = graft.operators.LsmSegments.committedEpochs(spark, indexPath)
+      retainGens: Int = 1)(
+      onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery = {
+    val spark = input.sparkSession
+    val committed = index.committedEpochs(spark, indexPath)
     require(committed.isEmpty || options.contains("checkpointLocation"),
-      s"$name: index at $indexPath already holds committed ingest " +
+      s"ingestStream(${index.getClass.getSimpleName.stripSuffix("$")}): " +
+        s"index at $indexPath already holds committed ingest " +
         s"epochs ${committed.mkString("[", ",", "]")} from a previous stream; " +
         "a query without a durable checkpointLocation restarts epoch ids at 0 " +
         "and its first batches would collide with those markers and be " +
         "silently skipped. Pass the original checkpointLocation to resume " +
         "that lineage, or ingest into a fresh index (compact the old one).")
-    vectors.writeStream
+    input.writeStream
       .outputMode("append")
       .options(options)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        val appended = appendEpoch(spark, indexPath, epoch, batch.toDF())
+        val appended = index.appendEpoch(spark, indexPath, epoch, batch.toDF())
         if (appended && compactEvery > 0) {
           val (_, upto) = graft.operators.LsmSegments.current(spark, indexPath)
-          val unfolded = graft.operators.LsmSegments
-            .committedEpochs(spark, indexPath).count(_ > upto)
-          if (unfolded >= compactEvery) maintain()
+          val unfolded = index.committedEpochs(spark, indexPath).count(_ > upto)
+          if (unfolded >= compactEvery) {
+            index.compact(spark, indexPath)
+            index.gc(spark, indexPath, retainGens = retainGens)
+          }
         }
         onBatch(epoch, appended)
         ()
@@ -1568,7 +1346,7 @@ object StreamingOps {
   }
 
   /** Lineage pairing for every durable maintenance stream (the
-    * ivfIngestStream guard, shared): epoch ids are only meaningful
+    * [[ingestStream]] guard, shared): epoch ids are only meaningful
     * relative to ONE streaming checkpoint lineage. A fresh/absent
     * checkpointLocation restarts them at 0, so replayed ids would
     * match the old generation's commit markers and new batch content
@@ -1945,7 +1723,7 @@ object StreamingOps {
 
   /** One incremental maintenance step: ingest a micro-batch of chunked
     * Hamming signatures (doc_id, c0..c3 — computed with the stream's
-    * ONE fixed signature function, the [[hammingIngestStream]]
+    * ONE fixed signature function, the [[graft.operators.HammingIndex]]
     * contract), updating the capped near-dup clustering EXACTLY (law
     * pinned in StreamingOpsSpec; replayed on real signatures by the
     * `mm_clusters_capped_incremental` query). Re-delivered doc_ids are

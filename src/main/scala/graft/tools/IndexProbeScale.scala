@@ -104,7 +104,7 @@ object IndexProbeScale {
     Seq(s"$out/ch1x", s"$out/ch10x").foreach(p =>
       graft.operators.ContentHashIndex.readAll(spark, p).count())
     Seq(s"$out/ivf1x", s"$out/ivf10x").foreach(p =>
-      graft.operators.IvfIndex.readAll(spark, p)._1.count())
+      graft.operators.IvfIndex.readAll(spark, p).count())
     Seq(s"$out/ivfpq1x", s"$out/ivfpq10x").foreach(p =>
       graft.operators.IvfPqIndex.readAll(spark, p).count())
     shard1.count(); shard10.count(); queries1.count()

@@ -244,7 +244,7 @@ object PlanDigest {
       graft.operators.IvfIndex.write(vecs, ivfCents, ivfPath)
       val semShard = graft.operators.Similarity.ivfAssign(
           Seq((10L, Seq(1.0f, 0.1f))).toDF("vec_id", "embedding"),
-          spark.read.parquet(s"$ivfPath/centroids"))
+          graft.operators.IvfIndex.centroids(spark, ivfPath))
         .localCheckpoint(true)
       Seq(
         "builder: MinHashIndex.probePairsPlan (broadcast-semi-join index pruning)" ->

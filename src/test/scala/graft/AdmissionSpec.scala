@@ -251,7 +251,7 @@ class AdmissionSpec extends AnyFunSuite {
     assert(got == semWant, s"semantic admission diverged: $got")
     // the fourth store holds exactly the admitted embeddings
     val indexed = graft.operators.IvfIndex.readAll(spark, s"$path/semantic")
-      ._1.select("vec_id").as[Long].collect().toSet
+      .select("vec_id").as[Long].collect().toSet
     assert(indexed == semWant.values.flatten.toSet,
       s"semantic index out of sync: $indexed")
     // and the admitted store (the decision log) carries the embedding
@@ -333,7 +333,7 @@ class AdmissionSpec extends AnyFunSuite {
     assert(LsmSegments.committedEpochs(spark, s"$path/semantic") == Seq(0L, 1L),
       "replay did not complete the missing semantic append")
     val indexed = graft.operators.IvfIndex.readAll(spark, s"$path/semantic")
-      ._1.select("vec_id").as[Long].collect().toSet
+      .select("vec_id").as[Long].collect().toSet
     assert(indexed == semWant.values.flatten.toSet)
   }
 
@@ -520,7 +520,7 @@ class AdmissionSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet ==
       fWant.values.flatten.toSet)
     assert(graft.operators.IvfIndex.readAll(spark, s"$path/semantic")
-      ._1.select("vec_id").as[Long].collect().toSet ==
+      .select("vec_id").as[Long].collect().toSet ==
       fWant.values.flatten.toSet)
     val admCols = Admission.admittedAll(spark, path).columns.toSet
     assert(Set("embedding", "c0", "c1", "c2", "c3").subsetOf(admCols))

@@ -197,7 +197,7 @@ class DsirSpec extends AnyFunSuite {
   }
 
   test("durable DSIR fit refuses a fresh checkpoint lineage against non-empty state") {
-    // the ivfIngestStream guard, mirrored: a stream started WITHOUT a
+    // the StreamingOps.ingestStream guard, mirrored: a stream started WITHOUT a
     // durable checkpointLocation restarts epoch ids at 0, which match
     // the old generation's commit markers — new batches would be
     // silently never folded (or folded against mismatched batch

@@ -592,7 +592,7 @@ class SimilaritySpec extends AnyFunSuite {
       "base segment is not partitioned by c_id on disk")
     val queries = e.where($"vec_id" < 4)
       .select($"vec_id".as("query_id"), $"embedding".as("q"))
-    val got = graft.operators.IvfIndex.serve(spark, path, queries, k = 5, nProbe = 2)
+    val got = graft.operators.IvfIndex.serveAll(spark, path, queries, k = 5, nProbe = 2)
       .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3))
     val want = Similarity.ivfKnnWith(e, seeds, nQueries = 4, k = 5, nProbe = 2)
       .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3))
@@ -804,20 +804,20 @@ class SimilaritySpec extends AnyFunSuite {
         .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
     val want = served()
     // compact STEP 1 only: write the merged view to base/1, NO marker
-    val (assigned, _) = graft.operators.IvfIndex.readAll(spark, p)
+    val assigned = graft.operators.IvfIndex.readAll(spark, p)
     graft.sources.FileSources.writePartitionedParquet(
       assigned, s"$p/base/1", partitionCols = Seq("c_id"))
     assert(served() == want,
       "reader between compact's base-rewrite and marker swap diverged " +
         "(double count or torn base)")
     // vector multiset sanity: still exactly one copy of every vector
-    val n = graft.operators.IvfIndex.readAll(spark, p)._1
+    val n = graft.operators.IvfIndex.readAll(spark, p)
       .groupBy($"vec_id").count().where($"count" > 1).count()
     assert(n == 0, "a vector appears in more than one live segment")
     // STEP 2: the marker lands -> the new generation serves, deltas fold
     graft.operators.LsmSegments.writeGenMarker(spark, p, 1L, 0L)
     assert(served() == want, "generation swap changed serving results")
-    val n2 = graft.operators.IvfIndex.readAll(spark, p)._1
+    val n2 = graft.operators.IvfIndex.readAll(spark, p)
       .groupBy($"vec_id").count().where($"count" > 1).count()
     assert(n2 == 0, "post-swap snapshot double-counts a vector")
     graft.operators.IvfIndex.gc(spark, p)

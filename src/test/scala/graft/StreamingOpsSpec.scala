@@ -369,7 +369,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       // the restartability the default temp checkpoint cannot give
       assert(new java.io.File(s"$chk/commits").list().nonEmpty,
         "checkpointLocation option did not reach the streaming writer")
-      val want = graft.operators.IvfIndex.serve(
+      val want = graft.operators.IvfIndex.serveAll(
         spark, path,
         e.where(F.col("vec_id") < 6)
           .select(F.col("vec_id").as("query_id"), F.col("embedding").as("q")),
@@ -379,6 +379,41 @@ class StreamingOpsSpec extends AnyFunSuite {
         want.sortBy(r => (r._1, r._3)).toSeq && served.nonEmpty,
         s"streamed serve diverged: ${served.size} vs ${want.length} rows")
     } finally q.stop()
+  }
+
+  test("streaming IVF serve sees vectors committed as delta epochs") {
+    // the snapshot an IVF serve stream resolves is base ∪ committed
+    // deltas, like every other tier's serve stream: a delta epoch
+    // holding an exact copy of query 0 must surface as its top hit
+    implicit val sqlCtx = spark.sqlContext
+    import org.apache.spark.sql.{functions => F}
+    val e = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val seeds = e.where(F.col("vec_id") < 8)
+      .select(F.col("vec_id").as("c_id"), F.col("embedding").as("c_vec"))
+    val path = java.nio.file.Files.createTempDirectory("graft_ivf_delta_srv").toString
+    graft.operators.IvfIndex.write(e, seeds, path)
+    val twinId = 1000000L
+    graft.operators.IvfIndex.appendEpoch(spark, path, 0L,
+      e.where(F.col("vec_id") === 0).select(F.lit(twinId).as("vec_id"), F.col("embedding")))
+    val queries = e.where(F.col("vec_id") < 4)
+      .select(F.col("vec_id").as("query_id"), F.col("embedding").as("q"))
+    val mem = MemoryStream[(Long, Array[Float])]
+    val served = scala.collection.mutable.ArrayBuffer[(Long, Long, Int, Double)]()
+    val q = StreamingOps.ivfServeStream(
+      mem.toDF().toDF("query_id", "q"), path, k = 5, nProbe = 2) { out =>
+      served.synchronized { served ++= out.as[(Long, Long, Int, Double)].collect() }
+    }
+    try {
+      mem.addData(queries.as[(Long, Array[Float])].collect().toSeq: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = served.synchronized(served.sortBy(r => (r._1, r._3)).toSeq)
+    assert(got.exists(r => r._1 == 0L && r._2 == twinId),
+      s"the committed delta's twin of query 0 was not served: $got")
+    val want = graft.operators.IvfIndex.serveAll(spark, path, queries, k = 5, nProbe = 2)
+      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
+    assert(got == want, s"streamed serve diverged from serveAll: $got vs $want")
   }
 
   test("streaming fuzzy dedup saturates megabuckets like the batch skew cap") {
@@ -962,7 +997,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("streaming SQ8 ingest commits quantized delta segments, served immediately") {
-    // the SQ8 wrapper of the shared lsmIngestStream loop: two
+    // the SQ8 tier through the shared ingestStream loop: two
     // micro-batches of new vectors land as committed quantized delta
     // segments; serveAll equals the in-memory sq8Knn over everything
     implicit val sqlCtx = spark.sqlContext
@@ -976,7 +1011,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val (h1, h2) = rest.splitAt(rest.length / 2)
     val mem = MemoryStream[(Long, Seq[Float])]
     val applied = scala.collection.mutable.ArrayBuffer[(Long, Boolean)]()
-    val q = StreamingOps.sq8IngestStream(
+    val q = StreamingOps.ingestStream(graft.operators.Sq8Index,
       mem.toDF().toDF("vec_id", "embedding"), inc) { (ep, ok) =>
       applied.synchronized { applied += ((ep, ok)) }
     }
@@ -996,7 +1031,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       "streamed SQ8 ingest diverges from the in-memory operator")
     // a second lineage without the original checkpoint fails fast
     val err = intercept[IllegalArgumentException] {
-      StreamingOps.sq8IngestStream(
+      StreamingOps.ingestStream(graft.operators.Sq8Index,
         MemoryStream[(Long, Seq[Float])].toDF()
           .toDF("vec_id", "embedding"), inc)()
     }
@@ -1048,7 +1083,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("streaming MinHash ingest commits fingerprint delta segments, served immediately") {
-    // the dedup wrapper of the shared lsmIngestStream loop: two
+    // the dedup tier through the shared ingestStream loop: two
     // micro-batches of new documents land as committed fingerprint
     // delta segments against the stored LSH parameters; servePairs
     // equals the batch minhashLsh over everything
@@ -1062,7 +1097,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val (h1, h2) = rest.splitAt(rest.length / 2)
     val mem = MemoryStream[(Long, String)]
     val applied = scala.collection.mutable.ArrayBuffer[(Long, Boolean)]()
-    val q = StreamingOps.minhashIngestStream(
+    val q = StreamingOps.ingestStream(graft.operators.MinHashIndex,
       mem.toDF().toDF("doc_id", "text"), inc) { (ep, ok) =>
       applied.synchronized { applied += ((ep, ok)) }
     }
@@ -1109,7 +1144,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val (h1, h2) = rest.splitAt(rest.length / 2)
     val mem = MemoryStream[(Long, Seq[Float])]
     val applied = scala.collection.mutable.ArrayBuffer[(Long, Boolean)]()
-    val q = StreamingOps.ivfIngestStream(
+    val q = StreamingOps.ingestStream(graft.operators.IvfIndex,
       mem.toDF().toDF("vec_id", "embedding"), inc) { (ep, ok) =>
       applied.synchronized { applied += ((ep, ok)) }
     }
@@ -1130,7 +1165,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     // index must fail fast: its epoch ids would restart at 0, collide
     // with the committed markers, and silently skip data
     val ex = intercept[IllegalArgumentException] {
-      StreamingOps.ivfIngestStream(
+      StreamingOps.ingestStream(graft.operators.IvfIndex,
         mem.toDF().toDF("vec_id", "embedding"), inc)()
     }
     assert(ex.getMessage.contains("checkpointLocation"), ex.getMessage)
@@ -1448,7 +1483,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("streaming IVFADC ingest + serve equal the batch tier (delta segments against the stored trained state)") {
-    // ivfPqIngestStream: micro-batches are coarse-assigned and
+    // ingestStream(IvfPqIndex): micro-batches are coarse-assigned and
     // residual-encoded against the index's FIXED stored state and land
     // as committed delta segments — serveAll must equal an index built
     // from everything at once (codes are pure functions of the stored
@@ -1469,7 +1504,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val (h1, h2) = rest.splitAt(rest.length / 2)
     val mem = MemoryStream[(Long, Seq[Float])]
     val applied = scala.collection.mutable.ArrayBuffer[(Long, Boolean)]()
-    val q = StreamingOps.ivfPqIngestStream(
+    val q = StreamingOps.ingestStream(graft.operators.IvfPqIndex,
       mem.toDF().toDF("vec_id", "embedding"), inc) { (ep, ok) =>
       applied.synchronized { applied += ((ep, ok)) }
     }
@@ -1509,7 +1544,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("streaming MaxSim ingest + serve equal the batch tier (document-atomic bag segments)") {
-    // maxSimIngestStream: each micro-batch's token vectors are bagged
+    // ingestStream(MaxSimIndex): each micro-batch's token vectors are bagged
     // per document against the index's fixed tokensPerDoc grouping and
     // land as committed delta segments — document-atomic batches (all
     // tokens of a doc in one batch), so serveAll must equal an index
@@ -1529,7 +1564,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val h2 = e.where(docOf % 4 === 3).as[(Long, Seq[Float])].collect()
     val mem = MemoryStream[(Long, Seq[Float])]
     val applied = scala.collection.mutable.ArrayBuffer[(Long, Boolean)]()
-    val q = StreamingOps.maxSimIngestStream(
+    val q = StreamingOps.ingestStream(graft.operators.MaxSimIndex,
       mem.toDF().toDF("vec_id", "embedding"), inc) { (ep, ok) =>
       applied.synchronized { applied += ((ep, ok)) }
     }
@@ -1597,7 +1632,7 @@ class StreamingOpsSpec extends AnyFunSuite {
 
     val mem = MemoryStream[(Long, Seq[Float])]
     val chk = java.nio.file.Files.createTempDirectory("graft_sq8_ac_chk").toString
-    val q = StreamingOps.sq8IngestStream(
+    val q = StreamingOps.ingestStream(graft.operators.Sq8Index,
       mem.toDF().toDF("vec_id", "embedding"), path,
       options = Map("checkpointLocation" -> chk), compactEvery = 2)()
     try {
@@ -1706,7 +1741,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("hamming ingest + probe streams equal the batch tier (image signatures)") {
-    // hammingIngestStream: signature micro-batches land as committed
+    // ingestStream(HammingIndex): signature micro-batches land as committed
     // delta segments — servePairs must equal an index built from
     // everything at once. hammingProbeStream: each batch's pairs equal
     // the batch probePairs on that shard.
@@ -1723,7 +1758,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       .as[(Long, Int, Int, Int, Int)].collect().sortBy(_._1).toSeq
     val (h1, h2) = rest.splitAt(rest.length / 2)
     val mem = MemoryStream[(Long, Int, Int, Int, Int)]
-    val q = StreamingOps.hammingIngestStream(
+    val q = StreamingOps.ingestStream(graft.operators.HammingIndex,
       mem.toDF().toDF("doc_id", "c0", "c1", "c2", "c3"), inc)()
     try {
       mem.addData(h1: _*); q.processAllAvailable()
@@ -1802,7 +1837,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("record ingest + probe streams equal the batch ER tier") {
-    // recordIngestStream: record micro-batches land as committed delta
+    // ingestStream(RecordIndex): record micro-batches land as committed delta
     // segments — a probe against the streamed index must equal one
     // against an all-at-once register. recordProbeStream: each batch's
     // fuzzy matches equal the batch probeShard on that shard.
@@ -1819,7 +1854,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val rest = reg.filter(_._1 % 2 == 1)
     val (h1, h2) = rest.splitAt(rest.length / 2)
     val mem = MemoryStream[(Long, String, String)]
-    val q = StreamingOps.recordIngestStream(
+    val q = StreamingOps.ingestStream(graft.operators.RecordIndex,
       mem.toDF().toDF("id", "name", "block"), inc, compactEvery = 2)()
     try {
       mem.addData(h1: _*); q.processAllAvailable()
