@@ -356,24 +356,12 @@ object Dedup {
     * loop ends), so executor storage stays at one round's working set
     * instead of growing by one cached relation per round. Only the
     * returned label frame stays cached — localCheckpoint truncates
-    * lineage, so the result's blocks must outlive the call. */
-  /** Label-state row threshold under which the CC rounds run the
-    * broadcast plan (labels broadcast to the pre-partitioned edge
-    * relation — ZERO per-round exchanges) instead of the shuffle plan.
-    * 2M (long, long) labels build a ~32 MB hash relation — far under
-    * the broadcast cap; graphs past it take the shuffle path whose
-    * per-round traffic is O(V) label rows. Parameterise with
-    * `spark.graft.cc.broadcastLabelRows` (scale knob, not a local-mode
-    * constant: the REGIME is picked by the measured label count). */
-  private def ccBroadcastLabelRows(df: DataFrame): Long = {
-    val key = "spark.graft.cc.broadcastLabelRows"
-    df.sparkSession.conf.getOption(key).map { v =>
-      require(scala.util.Try(v.trim.toLong).isSuccess,
-        s"$key must be a long row count, got '$v'")
-      v.trim.toLong
-    }.getOrElse(2000000L)
-  }
-
+    * lineage, so the result's blocks must outlive the call.
+    *
+    * Round plan: [[Graph.broadcastStateRows]] picks it from the
+    * measured label count, and [[Graph.regimeEdges]] lays the edge
+    * relation out for it — the same threshold and prelude as the graph
+    * iteratives. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     // both directions in ONE pass (a unionAll of two projections
     // would re-run the upstream pair generation per branch) into a
@@ -391,21 +379,7 @@ object Dedup {
     // |V| picks the round plan: counting the checkpointed labels costs
     // what the old isEmpty check cost and buys the regime decision
     val nV = labels.count()
-    val smallGraph = nV <= ccBroadcastLabelRows(pairs)
-    // hash-partitioned and PERSISTED — InMemoryRelation keeps the
-    // layout (a checkpoint's LogicalRDD loses it under AQE), so every
-    // propagation round reads the edge relation with NO re-exchange.
-    // The partition key FOLLOWS the round plan: the broadcast plan
-    // aggregates on dst (its only clustering requirement — everything
-    // else is a broadcast join), the shuffle plan joins on src.
-    val edges = raw
-      .repartition(col(if (smallGraph) "dst" else "src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the partitioned relation, then release the raw
-    // cache — peak storage stays at ONE copy of the edge set instead
-    // of holding both for the whole round loop
-    edges.count()
-    raw.unpersist(blocking = false)
+    val (smallGraph, edges) = Graph.regimeEdges(raw, nV)
     var it = 0
     var converged = nV == 0L
     try {
@@ -481,7 +455,6 @@ object Dedup {
       // round's labels must be released too — a caller that catches
       // and retries with a larger budget must not strand blocks
       edges.unpersist(blocking = false)
-      raw.unpersist(blocking = false)
       if (!converged) Storage.unpersistLocalCheckpoint(labels)
     }
   }

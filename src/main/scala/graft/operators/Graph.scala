@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics beyond connected components (which
-  * lives in [[Dedup.connectedComponents]]): fixed-iteration PageRank
-  * over an edge list.
+  * lives in [[Dedup.connectedComponents]]): PageRank and personalized
+  * PageRank, triangle counts, HITS, link prediction, k-core, label
+  * propagation, bounded BFS/SSSP and harmonic closeness.
   *
   * Determinism: ranks are INTEGER-scaled (1e12 = rank 1.0) and every
   * step is integer arithmetic — `div` truncation and 64-bit sums are
@@ -15,40 +16,47 @@ import org.apache.spark.sql.functions._
   * is ×85, so the int64 budget holds to ~1e15 scaled mass ≈ 1M nodes;
   * beyond that, lower SCALE (rank resolution) by the same factor.
   *
-  * Scale shape per iteration: one join of the rank relation with the
-  * edge list on `src` (both shuffle-partitioned on the join key; the
-  * rank side is |V| rows, edges |E|) and one map-side-combinable sum
-  * on `dst` — the canonical Pregel-style superstep as two relational
-  * ops, nothing driver-side. Dangling nodes (outdeg 0) keep the base
-  * rank and simply stop propagating — their mass is dropped, the
-  * usual simplification for sink-heavy graphs.
+  * Round plans: each iterative picks its regime from the measured
+  * state size — see [[broadcastStateRows]].
   *
   * Storage protocol (same as [[Dedup.connectedComponents]]): the edge
-  * list — often an expensive join upstream — plus nodes/outdeg are
-  * localCheckpoint'ed ONCE, each round's ranks are checkpointed and
-  * the superseded round released immediately, and every base relation
+  * list — often an expensive join upstream — is cached ONCE, growing
+  * round state is checkpointed (or chained lazily where a round
+  * references it exactly once), superseded rounds are released as
+  * soon as their successor is materialized, and every base relation
   * is released before returning — the result frame is itself
   * materialized, so nothing dangles. Without this, Spark's
-  * no-plan-sharing rule re-evaluates the edge subplan ~4× per
-  * iteration (inbound join, outdeg, nodes twice).
+  * no-plan-sharing rule re-evaluates the edge subplan several times
+  * per iteration.
   */
 object Graph {
 
   private val SCALE = 1000000000000L // rank 1.0
   private val BASE = 150000000000L // (1 - d) · SCALE, d = 0.85
 
-  /** State-row threshold under which the iterative operators run
-    * their BROADCAST round plans (the O(|V|) rank/label/score state
-    * ships to the executors and each round is one stage over the
-    * pre-partitioned edge cache — zero per-round exchanges) instead
-    * of the shuffle plans (the 100 TB regime, where only the state
-    * moves but every round pays exchange latency). Same recipe and
-    * default as [[Dedup.connectedComponents]]: 2M (long, long)-class
-    * state rows build a ~32 MB hash relation, far under the broadcast
-    * cap. Parameterise with `spark.graft.graph.broadcastStateRows` —
-    * a scale knob, not a local-mode constant: the REGIME is picked by
-    * the measured state row count, and past the threshold the prior
-    * shuffle plans run verbatim. */
+  /** The one state-row threshold that picks the round regime of every
+    * graph iterative — the rank walks, HITS, labelPropagation, kCore
+    * and [[Dedup.connectedComponents]] — from the measured state size
+    * (|V|; |E| for kCore, a safe bound on its alive set).
+    *
+    *  - At or under it, rounds run BROADCAST plans: the O(|V|)
+    *    rank/label/score state ships to the executors and joins an
+    *    edge cache hash-partitioned on the round's AGGREGATION key, so
+    *    each round is one stage with zero exchanges.
+    *  - Over it, rounds run SHUFFLE plans (the 100 TB shape): the edge
+    *    cache is partitioned on the JOIN key and streams through a
+    *    shuffle_hash join against the state, so only the O(|V|) state
+    *    moves, at one exchange's latency per round.
+    *
+    * The rank walk, HITS and labelPropagation rounds are one body each
+    * with the regime as an argument ([[stateSide]], [[reattachSide]]);
+    * kCore, the HITS normalizer and connectedComponents keep two plans
+    * that compute the same relation. int64 sums and mins are
+    * order-free, so the trajectories agree bit-for-bit (pinned in
+    * GraphSpec). Default 2M (long, long)-class state rows: a ~32 MB
+    * hash relation, far under the broadcast cap. Set with
+    * `spark.graft.graph.broadcastStateRows`; a malformed value fails
+    * naming the key. */
   private[graft] def broadcastStateRows(df: DataFrame): Long = {
     val key = "spark.graft.graph.broadcastStateRows"
     df.sparkSession.conf.getOption(key).map { v =>
@@ -58,27 +66,72 @@ object Graph {
     }.getOrElse(2000000L)
   }
 
+  /** The state side of a round's edge join: broadcast, or the
+    * shuffle_hash build side the pre-partitioned edges stream into. */
+  private def stateSide(state: DataFrame, broadcastState: Boolean): DataFrame =
+    if (broadcastState) broadcast(state) else state.hint("shuffle_hash")
+
+  /** The re-attach side of a round's node_id left join: broadcast, or
+    * left to the planner. */
+  private def reattachSide(df: DataFrame, broadcastState: Boolean): DataFrame =
+    if (broadcastState) broadcast(df) else df
+
+  /** The layout prelude of the rank walks, labelPropagation and
+    * [[Dedup.connectedComponents]]: picks the regime from the measured
+    * `stateRows`, hash-partitions the raw (src, dst) cache on the key
+    * that regime's rounds cluster on (dst: broadcast rounds aggregate
+    * there; src: shuffle rounds join there), and PERSISTS it — not
+    * checkpointed: under AQE a `localCheckpoint`'s LogicalRDD reports
+    * unknown partitioning, so every round would re-shuffle |E| rows,
+    * while `InMemoryRelation` keeps the child plan's layout. Persist
+    * is safe here because the edge set is FIXED. The partitioned
+    * relation is materialized and `raw` released, so only ONE copy of
+    * the edge set stays resident. Returns (broadcastState, edges). */
+  private[graft] def regimeEdges(
+      raw: DataFrame, stateRows: Long): (Boolean, DataFrame) = {
+    val broadcastState = stateRows <= broadcastStateRows(raw)
+    val e = raw
+      .repartition(col(if (broadcastState) "dst" else "src"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    e.count()
+    raw.unpersist(blocking = false)
+    (broadcastState, e)
+  }
 
   /** `edges(src, dst)` is a directed multigraph — parallel edges act
     * as weight. Returns (node_id, pr) with pr scaled by 1e12.
-    *
-    * Two layout decisions keep the per-round cost to ONE moving
-    * relation:
-    *  - the edge list is hash-partitioned on `src` and PERSISTED (not
-    *    checkpointed: under AQE a `localCheckpoint`'s LogicalRDD
-    *    reports unknown partitioning — the adaptive plan's layout
-    *    isn't known when the checkpoint is cut — so every round would
-    *    re-shuffle |E| rows; `InMemoryRelation` keeps the child
-    *    plan's `outputPartitioning`, so the inbound join reuses the
-    *    edge layout and only the |V|-row contrib side shuffles.
-    *    Persist is safe exactly here because these relations are
-    *    FIXED — only the growing round state needs a checkpoint's
-    *    lineage truncation);
-    *  - node set and out-degree fold into ONE relation (`nodeInfo`,
-    *    outdeg 0 = dangling) that rides INSIDE the rank state, so the
-    *    old per-round rank⋈outdeg join disappears — contrib is a pure
-    *    projection of the previous round. */
-  def pageRank(edges: DataFrame, iters: Int): DataFrame = {
+    * Uniform teleport is personalized PageRank with every node a
+    * source (`is_src = 1`): `1·BASE = BASE`, `1·SCALE = SCALE`, and
+    * ranks never drop below BASE, so the walk's `pr > 0` filter keeps
+    * every row. */
+  def pageRank(edges: DataFrame, iters: Int): DataFrame =
+    rankWalk(edges, lit(1L), iters)
+
+  /** Personalized PageRank (random walk with restart): the teleport
+    * mass returns to the SOURCE set every step instead of spreading
+    * uniformly, so ranks measure proximity to the sources — the
+    * standard graph-feature / recommendation primitive. Integer-exact
+    * (1e12 = 1.0, damping ×85 div 100); the base term is
+    * `is_src · BASE`. pr₀ = SCALE on sources, 0 elsewhere;
+    * un-normalized per-source restart mass (deterministic,
+    * oracle-replayable — rescale externally if a probability vector
+    * is needed). */
+  def personalizedPageRank(
+      edges: DataFrame, sources: Seq[Long], iters: Int): DataFrame =
+    rankWalk(edges,
+      col("node_id").isInCollection(sources.toSet.toSeq.sorted).cast("long"),
+      iters)
+
+  /** The rank walk behind [[pageRank]] and
+    * [[personalizedPageRank]]; `isSrc` is the per-node source
+    * indicator (0 or 1) over `node_id`. Node set, out-degree and
+    * source indicator fold into ONE cached relation (`nodeInfo`,
+    * outdeg 0 = dangling) that rides INSIDE the rank state, so contrib
+    * is a pure projection of the previous round and no per-round
+    * rank⋈outdeg join exists. Dangling nodes keep the base rank and
+    * stop propagating — their mass is dropped, the usual
+    * simplification for sink-heavy graphs. */
+  private def rankWalk(edges: DataFrame, isSrc: Column, iters: Int): DataFrame = {
     // the upstream edge build — often an expensive join — is computed
     // exactly once into an unpartitioned raw cache; the regime (and
     // with it the round-plan partition key) is only known after |V|
@@ -92,31 +145,18 @@ object Graph {
         struct(col("dst").as("node_id"), lit(0L).as("o")))).as("x"))
       .groupBy(col("x.node_id").as("node_id"))
       .agg(sum(col("x.o")).as("outdeg"))
+      .withColumn("is_src", isSrc)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // one eager job warms BOTH caches (nodeInfo reads raw) AND
-    // measures |V| — nodeInfo is one row per node, so its count is
-    // the regime probe for free
-    val nV = nodeInfo.count()
-    val smallGraph = nV <= broadcastStateRows(edges)
-    // the partition key FOLLOWS the round plan (same recipe as
-    // Dedup.connectedComponents): the broadcast plan's only
-    // clustering requirement is the dst aggregation — everything
-    // else is a broadcast join; the shuffle plan streams the edge
-    // cache through the inbound join on src
-    val e = raw
-      .repartition(col(if (smallGraph) "dst" else "src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // materialize the partitioned relation, then release the raw
-    // cache — only ONE copy of the edge set stays resident
-    e.count()
-    raw.unpersist(blocking = false)
+    // measures |V| — nodeInfo is one row per node
+    val (broadcastState, e) = regimeEdges(raw, nodeInfo.count())
     // round 0 derives from the cached nodeInfo — only successor
     // rounds own a checkpoint (and are safe to release when
     // superseded)
-    var pr = nodeInfo.withColumn("pr", lit(SCALE))
+    var pr = nodeInfo.withColumn("pr", col("is_src") * lit(SCALE))
     var prOwned = false
     try {
-      if (smallGraph) {
+      if (broadcastState) {
         // the broadcast round references the previous state exactly
         // ONCE (contrib is a pure projection; nodeInfo/e are cached
         // relations), so the whole trajectory chains LAZILY into one
@@ -125,11 +165,11 @@ object Graph {
         // small |V|) disappear. Identical expressions per round, so
         // the trajectory stays bit-identical to the per-round-
         // checkpointed form the spec pins.
-        for (_ <- 1 to iters) pr = pageRankRoundBc(e, nodeInfo, pr)
+        for (_ <- 1 to iters) pr = pprRound(e, nodeInfo, pr, broadcastState)
         pr = pr.localCheckpoint(true)
         prOwned = true
       } else for (_ <- 1 to iters) {
-        val next = pageRankRound(e, nodeInfo, pr).localCheckpoint(true)
+        val next = pprRound(e, nodeInfo, pr, broadcastState).localCheckpoint(true)
         if (prOwned) Storage.unpersistLocalCheckpoint(pr)
         pr = next
         prOwned = true
@@ -146,150 +186,35 @@ object Graph {
     }
   }
 
-  /** Personalized PageRank (random walk with restart): the teleport
-    * mass returns to the SOURCE set every step instead of spreading
-    * uniformly, so ranks measure proximity to the sources — the
-    * standard graph-feature / recommendation primitive. Same
-    * integer-exact arithmetic and per-round plan as [[pageRank]]
-    * (1e12 = 1.0, damping ×85 div 100, one shuffle_hash join
-    * streaming the pre-partitioned edges + one combinable sum per
-    * round); the only deltas are the source-indicator column riding
-    * the rank state and the base term `is_src · BASE` replacing the
-    * uniform BASE. pr₀ = SCALE on sources, 0 elsewhere; un-normalized
-    * per-source restart mass (deterministic, oracle-replayable —
-    * rescale externally if a probability vector is needed). */
-  def personalizedPageRank(
-      edges: DataFrame, sources: Seq[Long], iters: Int): DataFrame = {
-    // same two-regime layout protocol as [[pageRank]]: raw cache →
-    // |V| probe via nodeInfo.count() → regime-keyed edge relation
-    val raw = edges.select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val srcSet = sources.toSet.toSeq.sorted
-    val nodeInfo = raw
-      .select(explode(array(
-        struct(col("src").as("node_id"), lit(1L).as("o")),
-        struct(col("dst").as("node_id"), lit(0L).as("o")))).as("x"))
-      .groupBy(col("x.node_id").as("node_id"))
-      .agg(sum(col("x.o")).as("outdeg"))
-      .withColumn("is_src",
-        col("node_id").isInCollection(srcSet).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nV = nodeInfo.count()
-    val smallGraph = nV <= broadcastStateRows(edges)
-    val e = raw
-      .repartition(col(if (smallGraph) "dst" else "src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    raw.unpersist(blocking = false)
-    var pr = nodeInfo.withColumn("pr", col("is_src") * lit(SCALE))
-    var prOwned = false
-    try {
-      if (smallGraph) {
-        // single-reference rounds chain lazily into one job — see
-        // [[pageRank]]'s broadcast-regime note
-        for (_ <- 1 to iters) pr = pprRoundBc(e, nodeInfo, pr)
-        pr = pr.localCheckpoint(true)
-        prOwned = true
-      } else for (_ <- 1 to iters) {
-        val next = pprRound(e, nodeInfo, pr).localCheckpoint(true)
-        if (prOwned) Storage.unpersistLocalCheckpoint(pr)
-        pr = next
-        prOwned = true
-      }
-      if (!prOwned) pr = pr.localCheckpoint(true)
-      pr.select(col("node_id"), col("pr"))
-    } finally {
-      e.unpersist(blocking = false)
-      nodeInfo.unpersist(blocking = false)
-    }
-  }
-
-  /** One PPR superstep — [[pageRankRound]] with the teleport mass
-    * restricted to the source set (base term is_src·BASE). */
+  /** ONE (personalized) PageRank superstep as two relational ops —
+    * factored out so the plan-shape spec can pin the exchange budget
+    * (the walk checkpoints or chains rounds, which hides the joins).
+    * contrib is a pure projection of the previous round (outdeg and
+    * is_src ride in the rank state; zero-rank nodes contribute
+    * nothing), the inbound join meets the regime-keyed edge cache, and
+    * the reattach left join lines up on node_id with the base term
+    * `is_src · BASE`.
+    *  - Shuffle regime: `e` arrives hash(src)-partitioned and streams
+    *    against the shuffled |V|-row contrib build side, so the only
+    *    moving data per round is O(|V|).
+    *  - Broadcast regime: contrib broadcasts into the hash(dst) cache,
+    *    the dst aggregation runs partial+final in place, and the
+    *    O(|V|) inbound sums broadcast back onto the streamed nodeInfo
+    *    cache — zero exchanges. Every row's value depends only on its
+    *    keys, never on partition boundaries, so the layout cannot
+    *    change any emitted value. */
   private[graft] def pprRound(
-      e: DataFrame, nodeInfo: DataFrame, pr: DataFrame): DataFrame = {
+      e: DataFrame, nodeInfo: DataFrame, pr: DataFrame,
+      broadcastState: Boolean): DataFrame = {
     val contrib = pr
       .where(col("outdeg") > 0 && col("pr") > 0)
       .select(col("node_id").as("u"), expr("pr div outdeg").as("c"))
     val inbound = e
-      .join(contrib.hint("shuffle_hash"), e("src") === contrib("u"))
+      .join(stateSide(contrib, broadcastState), e("src") === contrib("u"))
       .groupBy(col("dst").as("node_id"))
       .agg(sum(col("c")).as("s"))
     nodeInfo
-      .join(inbound, Seq("node_id"), "left")
-      .select(col("node_id"), col("outdeg"), col("is_src"),
-        (col("is_src") * lit(BASE) +
-          expr("85 * coalesce(s, 0L) div 100")).as("pr"))
-  }
-
-  /** ONE Pregel superstep as two relational ops — factored out so the
-    * plan-shape spec can pin the exchange budget (the public entry
-    * checkpoints each round, which hides the joins): contrib is a pure
-    * projection of the previous round (outdeg rides in the rank
-    * state), the inbound join streams the pre-partitioned edge list
-    * against the shuffled |V|-row contrib build side, and the
-    * reattach left join lines up on node_id. When `e` arrives
-    * hash-partitioned on src (pageRank checkpoints it that way), the
-    * edge relation is never re-exchanged — the only moving data per
-    * round is O(|V|). */
-  private[graft] def pageRankRound(
-      e: DataFrame, nodeInfo: DataFrame, pr: DataFrame): DataFrame = {
-    val contrib = pr
-      .where(col("outdeg") > 0)
-      .select(col("node_id").as("u"), expr("pr div outdeg").as("c"))
-    val inbound = e
-      .join(contrib.hint("shuffle_hash"), e("src") === contrib("u"))
-      .groupBy(col("dst").as("node_id"))
-      .agg(sum(col("c")).as("s"))
-    nodeInfo
-      .join(inbound, Seq("node_id"), "left")
-      .select(col("node_id"), col("outdeg"),
-        (lit(BASE) + expr("85 * coalesce(s, 0L) div 100")).as("pr"))
-  }
-
-  /** BROADCAST PageRank superstep (small-graph regime, guide §3.1 /
-    * §2 exchange elimination): identical expressions and arithmetic
-    * to [[pageRankRound]] — only the physical strategy changes, so
-    * the trajectory is bit-identical (int64 sums are order-free).
-    * The |V|-row contrib projection broadcasts into the
-    * hash(dst)-partitioned edge cache (the inbound join moves
-    * nothing), the dst aggregation runs partial+final IN PLACE on
-    * the cached layout, and the O(|V|) inbound sums broadcast back
-    * onto the streamed nodeInfo cache — ZERO shuffle exchanges per
-    * round. Layout independence: every row's value depends only on
-    * its keys (sum over in-neighbors, coalesce), never on partition
-    * boundaries, so the dst-vs-src edge layout cannot change any
-    * emitted value. */
-  private[graft] def pageRankRoundBc(
-      e: DataFrame, nodeInfo: DataFrame, pr: DataFrame): DataFrame = {
-    val contrib = pr
-      .where(col("outdeg") > 0)
-      .select(col("node_id").as("u"), expr("pr div outdeg").as("c"))
-    val inbound = e
-      .join(broadcast(contrib), e("src") === contrib("u"))
-      .groupBy(col("dst").as("node_id"))
-      .agg(sum(col("c")).as("s"))
-    nodeInfo
-      .join(broadcast(inbound), Seq("node_id"), "left")
-      .select(col("node_id"), col("outdeg"),
-        (lit(BASE) + expr("85 * coalesce(s, 0L) div 100")).as("pr"))
-  }
-
-  /** BROADCAST PPR superstep — [[pprRound]] with the same
-    * broadcast-plan swap as [[pageRankRoundBc]] (identical
-    * expressions; zero per-round exchanges on the hash(dst) edge
-    * cache). */
-  private[graft] def pprRoundBc(
-      e: DataFrame, nodeInfo: DataFrame, pr: DataFrame): DataFrame = {
-    val contrib = pr
-      .where(col("outdeg") > 0 && col("pr") > 0)
-      .select(col("node_id").as("u"), expr("pr div outdeg").as("c"))
-    val inbound = e
-      .join(broadcast(contrib), e("src") === contrib("u"))
-      .groupBy(col("dst").as("node_id"))
-      .agg(sum(col("c")).as("s"))
-    nodeInfo
-      .join(broadcast(inbound), Seq("node_id"), "left")
+      .join(reattachSide(inbound, broadcastState), Seq("node_id"), "left")
       .select(col("node_id"), col("outdeg"), col("is_src"),
         (col("is_src") * lit(BASE) +
           expr("85 * coalesce(s, 0L) div 100")).as("pr"))
@@ -452,14 +377,13 @@ object Graph {
     * Returns (node_id, hub, auth). The classic bipartite ranking —
     * here: customers as hubs, suppliers as authorities.
     *
-    * 100 TB shape: per half-step one shuffle_hash join STREAMING the
-    * edge cache that is pre-partitioned on that half-step's join key
-    * (authority joins on `src` → the hash(src) cache; hub joins on
-    * `dst` → the hash(dst) twin — each cache is consumed exactly
-    * where its layout is reused, so the O(|E|) edge list never
-    * re-exchanges; pinned in PlanShapeSpec) against the O(|V|) score
-    * build side + one combinable sum. The raw sums are materialized
-    * ONCE per half-step and both their consumers — the one-row
+    * Two edge caches, hash(src) and hash(dst). Broadcast regime:
+    * each half-step takes the cache keyed on its AGGREGATION side and
+    * whole iterations chain lazily. Shuffle regime: each half-step
+    * streams the cache keyed on its JOIN side (authority joins on
+    * `src`, hub on `dst`), so the O(|E|) edge list never re-exchanges
+    * (pinned in PlanShapeSpec), and the raw sums are materialized
+    * ONCE per half-step: both their consumers — the one-row
     * broadcast max-normalizer and the next half-step's join — read
     * the materialized relation, so the heavy join+agg is never
     * re-evaluated by the normalizer job. There is NO merged per-round
@@ -496,22 +420,15 @@ object Graph {
       .localCheckpoint(true)
     eDst.count()
     raw.unpersist(blocking = false)
-    // |V| regime probe on the materialized checkpoint (trivial job).
-    // SMALL regime: each half-step broadcasts the O(|V|) score state
-    // into the edge cache whose layout matches that half-step's
-    // AGGREGATION key (authority aggregates on dst → the hash(dst)
-    // cache; hub aggregates on src → the hash(src) twin — the
-    // OPPOSITE pairing of the shuffle regime, which keys each cache
-    // to its JOIN side) — zero per-half-step exchanges.
-    val nV = nodes.count()
-    val smallGraph = nV <= broadcastStateRows(edges)
+    // |V| regime probe on the materialized checkpoint (trivial job)
+    val broadcastState = nodes.count() <= broadcastStateRows(edges)
     var hubState = nodes.select(col("node_id"), lit(SCALE).as("hub"))
     var aNorm: DataFrame = null
     var hNorm: DataFrame = null
     var rawAPrev: DataFrame = null
     var rawHPrev: DataFrame = null
     try {
-      if (smallGraph) for (i <- 1 to iters) {
+      if (broadcastState) for (i <- 1 to iters) {
         // broadcast regime: the window-form normalizer references its
         // half-step exactly once, so the whole trajectory chains
         // LAZILY — the only checkpoints are the LAST iteration's two
@@ -519,12 +436,12 @@ object Graph {
         // merge, and for auth the last hub half-step). 2 jobs replace
         // 2·iters; same expressions, bit-identical trajectory (the
         // regime spec pins it).
-        aNorm = hitsMaxNormBc(hitsRawAuthBc(eDst, hubState), "ra", "auth")
+        aNorm = hitsMaxNormBc(hitsRawAuth(eDst, hubState, broadcastState), "ra", "auth")
         if (i == iters) {
           aNorm = aNorm.localCheckpoint(true)
           rawAPrev = aNorm
         }
-        hNorm = hitsMaxNormBc(hitsRawHubBc(eSrc, aNorm), "rh", "hub")
+        hNorm = hitsMaxNormBc(hitsRawHub(eSrc, aNorm, broadcastState), "rh", "hub")
         if (i == iters) {
           hNorm = hNorm.localCheckpoint(true)
           rawHPrev = hNorm
@@ -533,14 +450,14 @@ object Graph {
       } else for (_ <- 1 to iters) {
         // authority half-step: raw in-neighbor hub sums, materialized
         // once — the heavy O(|E|) join+agg job of this half-step
-        val rawA = hitsRawAuth(eSrc, hubState).localCheckpoint(true)
+        val rawA = hitsRawAuth(eSrc, hubState, broadcastState).localCheckpoint(true)
         // the previous round's raw relations fed this job (via the
         // lazy normalizers); safe to release only now
         if (rawAPrev != null) Storage.unpersistLocalCheckpoint(rawAPrev)
         if (rawHPrev != null) Storage.unpersistLocalCheckpoint(rawHPrev)
         aNorm = hitsMaxNorm(rawA, "ra", "auth")
         // hub half-step over the NEW authorities
-        val rawH = hitsRawHub(eDst, aNorm).localCheckpoint(true)
+        val rawH = hitsRawHub(eDst, aNorm, broadcastState).localCheckpoint(true)
         hNorm = hitsMaxNorm(rawH, "rh", "hub")
         hubState = hNorm
         rawAPrev = rawA
@@ -553,10 +470,8 @@ object Graph {
             .localCheckpoint(true)
         else
           nodes
-            .join(if (smallGraph) broadcast(hNorm) else hNorm,
-              Seq("node_id"), "left")
-            .join(if (smallGraph) broadcast(aNorm) else aNorm,
-              Seq("node_id"), "left")
+            .join(reattachSide(hNorm, broadcastState), Seq("node_id"), "left")
+            .join(reattachSide(aNorm, broadcastState), Seq("node_id"), "left")
             .select(col("node_id"),
               coalesce(col("hub"), lit(0L)).as("hub"),
               coalesce(col("auth"), lit(0L)).as("auth"))
@@ -572,47 +487,31 @@ object Graph {
   }
 
   /** Raw authority sums for one HITS half-step — factored out so the
-    * plan-shape spec and digest can pin the exchange budget: the
-    * hash(src)-partitioned edge cache streams into a shuffle_hash
-    * join on `src` (no edge re-exchange) against the O(|V|) hub
-    * state, then one map-side-combinable sum keyed on `dst`. */
-  private[graft] def hitsRawAuth(eSrc: DataFrame, state: DataFrame): DataFrame =
-    eSrc
-      .join(state.select(col("node_id").as("u"), col("hub"))
-        .hint("shuffle_hash"), col("src") === col("u"))
+    * plan-shape spec and digest can pin the exchange budget: the edge
+    * cache joins the O(|V|) hub state on `src`, then one
+    * map-side-combinable sum keyed on `dst`. Shuffle regime: `e` is
+    * the hash(src) cache, streamed into a shuffle_hash join with no
+    * edge re-exchange. Broadcast regime: `e` is the hash(dst) cache,
+    * whose layout satisfies the dst aggregation in place — zero
+    * exchanges. */
+  private[graft] def hitsRawAuth(
+      e: DataFrame, state: DataFrame, broadcastState: Boolean): DataFrame =
+    e
+      .join(stateSide(state.select(col("node_id").as("u"), col("hub")),
+        broadcastState), col("src") === col("u"))
       .groupBy(col("dst").as("node_id"))
       .agg(sum(col("hub")).as("ra"))
 
   /** Raw hub sums for one HITS half-step — the mirror of
-    * [[hitsRawAuth]]: the hash(dst)-partitioned edge cache streams
-    * into a shuffle_hash join on `dst` against the O(|V|) authority
-    * relation, then one combinable sum keyed on `src`. */
-  private[graft] def hitsRawHub(eDst: DataFrame, auth: DataFrame): DataFrame =
-    eDst
-      .join(auth.select(col("node_id").as("v"), col("auth"))
-        .hint("shuffle_hash"), col("dst") === col("v"))
-      .groupBy(col("src").as("node_id"))
-      .agg(sum(col("auth")).as("rh"))
-
-  /** BROADCAST authority half-step (small-graph regime): identical
-    * expressions to [[hitsRawAuth]] — the O(|V|) hub state broadcasts
-    * into the hash(DST)-partitioned edge cache, whose layout then
-    * satisfies the dst aggregation in place. Zero exchanges; int64
-    * sums are order-free, so the half-step is bit-identical. */
-  private[graft] def hitsRawAuthBc(eDst: DataFrame, state: DataFrame): DataFrame =
-    eDst
-      .join(broadcast(state.select(col("node_id").as("u"), col("hub"))),
-        col("src") === col("u"))
-      .groupBy(col("dst").as("node_id"))
-      .agg(sum(col("hub")).as("ra"))
-
-  /** BROADCAST hub half-step — the mirror of [[hitsRawAuthBc]] over
-    * the hash(SRC)-partitioned edge cache (src aggregation in
-    * place). */
-  private[graft] def hitsRawHubBc(eSrc: DataFrame, auth: DataFrame): DataFrame =
-    eSrc
-      .join(broadcast(auth.select(col("node_id").as("v"), col("auth"))),
-        col("dst") === col("v"))
+    * [[hitsRawAuth]]: the edge cache joins the O(|V|) authority
+    * relation on `dst`, then one combinable sum keyed on `src`
+    * (shuffle regime: the hash(dst) cache; broadcast regime: the
+    * hash(src) cache). */
+  private[graft] def hitsRawHub(
+      e: DataFrame, auth: DataFrame, broadcastState: Boolean): DataFrame =
+    e
+      .join(stateSide(auth.select(col("node_id").as("v"), col("auth")),
+        broadcastState), col("dst") === col("v"))
       .groupBy(col("src").as("node_id"))
       .agg(sum(col("auth")).as("rh"))
 
@@ -890,20 +789,17 @@ object Graph {
     * synchronous LPA can 2-cycle on bipartite structures; a
     * deterministic budget keeps the trajectory exactly replayable.
     *
-    * 100 TB shape: per round one shuffle_hash join streaming the
-    * pre-partitioned edge list against the O(|V|) label state, one
-    * combinable (dst, label) count, and one max_by reduce per node —
-    * all hash-keyed, nothing driver-side, no windows. The vote
+    * Per round: one join of the regime-keyed edge cache with the
+    * O(|V|) label state, one combinable (dst, label) count, and one
+    * max_by reduce per node — all hash-keyed, nothing collected, no
+    * windows (see [[labelPropRound]]). The vote
     * argmax rides an integer composite (cnt·10¹¹ − label) so the
     * reduce stays a single combinable max_by instead of a window
     * sort; label ids must stay below 10¹¹ (guarded — headroom for
     * the repo-wide 10¹⁰ synthetic-node-id offset convention). */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    // same two-regime layout protocol as [[pageRank]]: the upstream
-    // edge build lands once in an unpartitioned raw cache, |V| is
-    // probed off the label-state checkpoint, and the round relation's
-    // partition key follows the regime (broadcast plan aggregates
-    // votes on dst; shuffle plan joins on src)
+    // the upstream edge build lands once in an unpartitioned raw
+    // cache; |V| is probed off the label-state checkpoint
     val raw = edges.select(col("src"), col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the label state IS the node set (one row per node), so no
@@ -920,17 +816,10 @@ object Graph {
             lit(" outside [0, 1e11) — composite vote order would overflow"))))
           .as("community"))
       .localCheckpoint(true)
-    val nV = lbl.count()
-    val smallGraph = nV <= broadcastStateRows(edges)
-    val e = raw
-      .repartition(col(if (smallGraph) "dst" else "src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    raw.unpersist(blocking = false)
+    val (broadcastState, e) = regimeEdges(raw, lbl.count())
     try {
       for (_ <- 1 to rounds) {
-        val next = (if (smallGraph) labelPropRoundBc(e, lbl)
-          else labelPropRound(e, lbl)).localCheckpoint(true)
+        val next = labelPropRound(e, lbl, broadcastState).localCheckpoint(true)
         Storage.unpersistLocalCheckpoint(lbl)
         lbl = next
       }
@@ -1125,26 +1014,34 @@ object Graph {
   /** One synchronous LPA superstep, factored out so the plan-shape
     * spec can pin the exchange budget (the public entry checkpoints
     * each round, hiding the joins): vote stream = edges ⋈ labels on
-    * src (edge side pre-partitioned, streamed), vote count combines
-    * map-side, the argmax is one combinable max_by on the integer
-    * composite, and one left join re-attaches the votes onto the
-    * label state (which holds every node, voted or not). */
-  private[graft] def labelPropRound(e: DataFrame, lbl: DataFrame): DataFrame = {
+    * src, vote count combines map-side, the argmax is one combinable
+    * max_by on the integer composite, and one left join re-attaches
+    * the votes onto the label state (which holds every node, voted or
+    * not).
+    *  - Shuffle regime: the hash(src) edge cache streams against the
+    *    shuffled label state.
+    *  - Broadcast regime: the label state broadcasts into the
+    *    hash(dst) cache, the (dst, community) count AND the per-node
+    *    argmax both run in place on that layout, and the O(|V|) votes
+    *    broadcast back onto the state checkpoint — zero exchanges. The
+    *    argmax key is a total order, so the winning label is
+    *    layout-independent. */
+  private[graft] def labelPropRound(
+      e: DataFrame, lbl: DataFrame, broadcastState: Boolean): DataFrame = {
     val votes = e
-      .join(lbl.withColumnRenamed("node_id", "u").hint("shuffle_hash"),
+      .join(stateSide(lbl.withColumnRenamed("node_id", "u"), broadcastState),
         e("src") === col("u"))
       .groupBy(col("dst").as("node_id"), col("community").as("c"))
       .agg(count(lit(1)).as("cnt"))
       .groupBy(col("node_id"))
       .agg(max_by(col("c"), lpVoteOrder).as("voted"))
     lbl
-      .join(votes, Seq("node_id"), "left")
+      .join(reattachSide(votes, broadcastState), Seq("node_id"), "left")
       .select(col("node_id"),
         coalesce(col("voted"), col("community")).as("community"))
   }
 
-  /** The LPA vote argmax key, shared verbatim by both round plans so
-    * the regimes cannot drift: composite vote order cnt·10¹¹ − c
+  /** The LPA vote argmax key: composite vote order cnt·10¹¹ − c
     * needs cnt·10¹¹ ≤ int64 max; guarded like the label-id bound
     * (Spark with ANSI off would wrap silently to a wrong community
     * while the oracle's BIGINT errors — an asymmetric divergence
@@ -1156,27 +1053,4 @@ object Graph {
         lit("labelPropagation: vote count "), col("cnt").cast("string"),
         lit(" overflows the composite vote order (max 92233720 "),
         lit("weighted in-edges per label)"))))
-
-  /** BROADCAST LPA superstep (small-graph regime): identical
-    * expressions to [[labelPropRound]] — the O(|V|) label state
-    * broadcasts into the hash(dst)-partitioned edge cache, the
-    * (dst, community) vote count AND the per-node argmax both run in
-    * place on that layout (hash(dst) clusters every (dst, c) group),
-    * and the O(|V|) vote relation broadcasts back onto the streamed
-    * state checkpoint — zero per-round exchanges. The argmax key is
-    * the shared [[lpVoteOrder]] composite: a total order, so the
-    * winning label is layout-independent. */
-  private[graft] def labelPropRoundBc(e: DataFrame, lbl: DataFrame): DataFrame = {
-    val votes = e
-      .join(broadcast(lbl.withColumnRenamed("node_id", "u")),
-        e("src") === col("u"))
-      .groupBy(col("dst").as("node_id"), col("community").as("c"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("node_id"))
-      .agg(max_by(col("c"), lpVoteOrder).as("voted"))
-    lbl
-      .join(broadcast(votes), Seq("node_id"), "left")
-      .select(col("node_id"),
-        coalesce(col("voted"), col("community")).as("community"))
-  }
 }

@@ -535,12 +535,6 @@ object StreamingOps {
       .where(col("d") === 0)
       .drop("d")
 
-  /** The pretrain gate with FUZZY dedup: the stateless quality and
-    * language gates of [[pretrainGate]], then streaming MinHash-LSH
-    * instead of exact-hash dedup — near-duplicate crawl records within
-    * the horizon are flagged, not just byte-identical ones. Emits
-    * verdicts; compose with [[admittedFromVerdicts]] in `foreachBatch`
-    * to materialize the admitted corpus. */
   /** Online ANN serving: a micro-batch stream of query vectors
     * (query_id, q: array<float>) served against a durable IVF index
     * ([[graft.operators.IvfIndex]]). `foreachBatch` is the honest
@@ -1027,6 +1021,12 @@ object StreamingOps {
       .start()
   }
 
+  /** The pretrain gate with FUZZY dedup: the stateless quality and
+    * language gates of [[pretrainGate]], then streaming MinHash-LSH
+    * instead of exact-hash dedup — near-duplicate crawl records within
+    * the horizon are flagged, not just byte-identical ones. Emits
+    * verdicts; compose with [[admittedFromVerdicts]] in `foreachBatch`
+    * to materialize the admitted corpus. */
   def pretrainGateFuzzy(
       spark: SparkSession,
       docs: DataFrame,

@@ -149,8 +149,13 @@ object PlanDigest {
     val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst").localCheckpoint(true)
     val nodeInfo = Seq((1L, 1L), (2L, 1L), (3L, 0L)).toDF("node_id", "outdeg")
       .localCheckpoint(true)
-    val pr = nodeInfo.withColumn("pr",
-      org.apache.spark.sql.functions.lit(1000000000000L))
+    // pageRank: the rank walk with every node a source
+    val allSrc = nodeInfo
+      .withColumn("is_src", org.apache.spark.sql.functions.lit(1L))
+      .localCheckpoint(true)
+    val pr = allSrc.withColumn("pr",
+      org.apache.spark.sql.functions.col("is_src") *
+        org.apache.spark.sql.functions.lit(1000000000000L))
     val assigned = Seq((0L, 1L, Seq(1.0f, 0.0f))).toDF("c_id", "vec_id", "embedding")
       .localCheckpoint(true)
     val cents = Seq((0L, Seq(1.0f, 0.0f))).toDF("c_id", "c_vec").localCheckpoint(true)
@@ -175,14 +180,14 @@ object PlanDigest {
     val builders = Seq(
       "builder: Graph.trianglePlan (closure join + intersect)" ->
         (() => graft.operators.Graph.trianglePlan(adj)),
-      "builder: Graph.pageRankRound (one iteration)" ->
-        (() => graft.operators.Graph.pageRankRound(e, nodeInfo, pr)),
+      "builder: Graph.pprRound, every node a source (one pageRank iteration)" ->
+        (() => graft.operators.Graph.pprRound(e, allSrc, pr, broadcastState = false)),
       "builder: Graph.pprRound (source-restricted teleport iteration)" ->
-        (() => graft.operators.Graph.pprRound(e, pprState, ppr)),
+        (() => graft.operators.Graph.pprRound(e, pprState, ppr, broadcastState = false)),
       "builder: Graph.kCoreRound (one peel round)" ->
         (() => graft.operators.Graph.kCoreRound(symEdges, 2)),
       "builder: Graph.labelPropRound (one vote round)" ->
-        (() => graft.operators.Graph.labelPropRound(e, lbl)),
+        (() => graft.operators.Graph.labelPropRound(e, lbl, broadcastState = false)),
       "builder: Graph.ssspRound (frontier relax + min fold + outer merge)" ->
         (() => graft.operators.Graph.ssspRound(
           Seq((1L, 2L, 1L)).toDF("src", "dst", "w")
@@ -192,7 +197,26 @@ object PlanDigest {
             .localCheckpoint(true))),
       "builder: Graph.hitsRawAuth + hitsMaxNorm (one half-step)" ->
         (() => graft.operators.Graph.hitsMaxNorm(
-          graft.operators.Graph.hitsRawAuth(e, hitsState), "ra", "auth")),
+          graft.operators.Graph.hitsRawAuth(e, hitsState, broadcastState = false),
+          "ra", "auth")),
+      // the broadcast regime of each round (Graph.broadcastStateRows):
+      // same builders, state joins broadcast over the regime-keyed cache
+      "builder: Graph.pprRound, every node a source, broadcast regime" ->
+        (() => graft.operators.Graph.pprRound(e, allSrc, pr, broadcastState = true)),
+      "builder: Graph.pprRound, broadcast regime" ->
+        (() => graft.operators.Graph.pprRound(e, pprState, ppr, broadcastState = true)),
+      "builder: Graph.labelPropRound, broadcast regime" ->
+        (() => graft.operators.Graph.labelPropRound(e, lbl, broadcastState = true)),
+      "builder: Graph.hitsRawAuth + hitsMaxNormBc, broadcast regime (authority half-step)" ->
+        (() => graft.operators.Graph.hitsMaxNormBc(
+          graft.operators.Graph.hitsRawAuth(e, hitsState, broadcastState = true),
+          "ra", "auth")),
+      "builder: Graph.hitsRawHub + hitsMaxNormBc, broadcast regime (hub half-step)" ->
+        (() => graft.operators.Graph.hitsMaxNormBc(
+          graft.operators.Graph.hitsRawHub(e, hitsState, broadcastState = true),
+          "rh", "hub")),
+      "builder: Graph.kCoreRoundBc (broadcast peel round)" ->
+        (() => graft.operators.Graph.kCoreRoundBc(symEdges, 2)),
       "builder: Graph.linkPredScorePlan (edge stream + intersect + in-row reduce)" ->
         (() => graft.operators.Graph.linkPredScorePlan(packedAdj)),
       "builder: Similarity.ivfServe (probe + rank)" ->

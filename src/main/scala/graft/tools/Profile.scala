@@ -257,6 +257,7 @@ object Profile {
             struct(col("dst").as("node_id"), lit(0L).as("o")))).as("x"))
           .groupBy(col("x.node_id").as("node_id"))
           .agg(sum(col("x.o")).as("outdeg"))
+          .withColumn("is_src", lit(1L))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         time(s"edge+nodeInfo count #$i")(nodeInfo.count())
         val e = raw.repartition(col("dst"))
@@ -265,7 +266,7 @@ object Profile {
         var pr = nodeInfo.withColumn("pr", lit(1000000000000L))
         for (r <- 1 to 3)
           pr = time(s"round $r #$i")(
-            graft.operators.Graph.pageRankRoundBc(e, nodeInfo, pr)
+            graft.operators.Graph.pprRound(e, nodeInfo, pr, broadcastState = true)
               .localCheckpoint(true))
         time(s"consume #$i")(noop(pr.select(col("node_id"), col("pr"))))
         raw.unpersist(false); nodeInfo.unpersist(false); e.unpersist(false)

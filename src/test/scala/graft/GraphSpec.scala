@@ -28,16 +28,33 @@ class GraphSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("pagerank releases every superseded checkpoint; only the result stays") {
-    // base relations (edges/nodes/outdeg) and superseded rounds must
-    // unpersist — same storage-flatness contract as connectedComponents
+  test("graph iteratives leave only their result cached, in both regimes") {
+    // base relations (raw and regime-keyed edge caches, node info) and
+    // superseded rounds must unpersist in either round regime — the
+    // storage-flatness contract of connectedComponents
     val edges = (1L to 100L).map(i => (i, i % 10)).toDF("src", "dst")
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val pr = Graph.pageRank(edges, iters = 3)
-    pr.count()
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before + 1,
-      s"leaked checkpoint blocks: $before persistent RDDs before, $after after")
+    val und = edges.where($"src" =!= $"dst")
+      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
+    val pairs = edges.select($"src".as("a_id"), $"dst".as("b_id"))
+    val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (() => Graph.pageRank(edges, iters = 3)),
+      "personalizedPageRank" ->
+        (() => Graph.personalizedPageRank(edges, Seq(1L, 2L), iters = 3)),
+      "hits" -> (() => Graph.hits(edges, iters = 3)),
+      "labelPropagation" -> (() => Graph.labelPropagation(edges, rounds = 3)),
+      "kCore" -> (() => Graph.kCore(und, k = 2, rounds = 4)),
+      "connectedComponents" -> (() => graft.operators.Dedup.connectedComponents(pairs)))
+    for (regime <- Seq("broadcast", "shuffle"); (name, run) <- ops) {
+      if (regime == "shuffle")
+        spark.conf.set("spark.graft.graph.broadcastStateRows", "0")
+      try {
+        val before = spark.sparkContext.getPersistentRDDs.size
+        run().count()
+        val after = spark.sparkContext.getPersistentRDDs.size
+        assert(after <= before + 1, s"$name ($regime regime) leaked " +
+          s"checkpoint blocks: $before persistent RDDs before, $after after")
+      } finally spark.conf.unset("spark.graft.graph.broadcastStateRows")
+    }
   }
 
   test("SortedIntersect is bit-parity with array_intersect on sorted inputs") {
@@ -415,11 +432,15 @@ class GraphSpec extends AnyFunSuite {
     // the iterative operators pick their round plan from the measured
     // |V| (spark.graft.graph.broadcastStateRows): below it, rounds are
     // broadcast joins over regime-keyed edge caches; above it, the
-    // prior shuffle plans. Same expressions, different physical
+    // prior shuffle plans. Same relations, different physical
     // strategy — the trajectories must agree bit-for-bit. A random
     // multigraph (parallel edges, asymmetric reach, several
     // components) exercises vote weights, dangling nodes and peel
-    // cascades in both regimes.
+    // cascades in both regimes. connectedComponents shares the
+    // threshold; its pair graph (many small random components) adds an
+    // 80-node chain whose minimum sits at one end: min-label steps
+    // alone would need 80 rounds, past the 20-round budget, so the
+    // result exists only if the pointer jumps ran.
     val rnd = new scala.util.Random(7)
     val edges = (1 to 800)
       .map(_ => (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
@@ -430,6 +451,12 @@ class GraphSpec extends AnyFunSuite {
       .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
       .distinct()
       .localCheckpoint(true)
+    val chain = (1000L until 1080L).toList
+    val pairs = ((1 to 100)
+      .map(_ => (rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+      .filter { case (a, b) => a != b } ++ chain.zip(chain.tail))
+      .toDF("a_id", "b_id")
+      .localCheckpoint(true)
     def runAll() = Seq(
       Graph.pageRank(edges, iters = 3).as[(Long, Long)].collect().toSet,
       Graph.personalizedPageRank(edges, Seq(1L, 2L), iters = 3)
@@ -438,9 +465,11 @@ class GraphSpec extends AnyFunSuite {
         .as[(Long, Long, Long)].collect().toSet,
       Graph.labelPropagation(edges, rounds = 3)
         .as[(Long, Long)].collect().toSet,
-      Graph.kCore(und, k = 3, rounds = 6).as[(Long, Long)].collect().toSet)
+      Graph.kCore(und, k = 3, rounds = 6).as[(Long, Long)].collect().toSet,
+      graft.operators.Dedup.connectedComponents(pairs)
+        .as[(Long, Long)].collect().toSet)
     val names = Seq("pageRank", "personalizedPageRank", "hits",
-      "labelPropagation", "kCore")
+      "labelPropagation", "kCore", "connectedComponents")
     val bc = runAll() // 60 nodes — far under the default threshold
     spark.conf.set("spark.graft.graph.broadcastStateRows", "0")
     val sh =
@@ -450,6 +479,9 @@ class GraphSpec extends AnyFunSuite {
       assert(b.nonEmpty, s"$nm produced no rows — vacuous comparison")
       assert(b == s, s"$nm regimes diverged")
     }
+    // the chain settled on its minimum
+    assert(bc.last.collect { case (d: Long, c: Long) if d >= 1000L => c } ==
+      Set(1000L))
   }
 
   test("broadcastStateRows rejects malformed conf values loudly") {

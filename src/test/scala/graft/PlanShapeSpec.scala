@@ -429,11 +429,13 @@ class PlanShapeSpec extends AnyFunSuite {
         struct(col("dst").as("node_id"), lit(0L).as("o")))).as("x"))
       .groupBy(col("x.node_id").as("node_id"))
       .agg(sum(col("x.o")).as("outdeg"))
+      .withColumn("is_src", lit(1L)) // pageRank: every node a source
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       nodeInfo.count()
       val pr = nodeInfo.withColumn("pr", lit(1000000000000L))
-      val qe = graft.operators.Graph.pageRankRound(e, nodeInfo, pr).queryExecution
+      val qe = graft.operators.Graph.pprRound(e, nodeInfo, pr, broadcastState = false)
+        .queryExecution
       qe.toRdd.count()
       // AQE's toString appends the pre-execution plan after the final
       // one — only the final section is the shape that actually ran
@@ -550,7 +552,8 @@ class PlanShapeSpec extends AnyFunSuite {
         .distinct()
         .select(col("node_id"), col("node_id").as("community"))
         .localCheckpoint(true)
-      val qe = graft.operators.Graph.labelPropRound(e, lbl).queryExecution
+      val qe = graft.operators.Graph.labelPropRound(e, lbl, broadcastState = false)
+        .queryExecution
       qe.toRdd.count()
       val plNodes = walkPlan(qe.executedPlan)
       def isEdgeScan(pl: org.apache.spark.sql.execution.SparkPlan): Boolean =
@@ -702,12 +705,13 @@ class PlanShapeSpec extends AnyFunSuite {
           s"$label: edge cache re-exchanged below the half-step join — " +
             s"wrong cache keyed:\n${exchangedEdges.mkString("\n")}")
       }
-      val rawA = graft.operators.Graph.hitsRawAuth(eSrc, state)
+      val rawA = graft.operators.Graph.hitsRawAuth(eSrc, state, broadcastState = false)
       assertNoEdgeReExchange(rawA, "authority step")
       val aNorm = graft.operators.Graph
         .hitsMaxNorm(rawA.localCheckpoint(true), "ra", "auth")
       assertNoEdgeReExchange(
-        graft.operators.Graph.hitsRawHub(eDst, aNorm), "hub step")
+        graft.operators.Graph.hitsRawHub(eDst, aNorm, broadcastState = false),
+        "hub step")
     } finally { eSrc.unpersist(); eDst.unpersist() }
   }
 
@@ -745,18 +749,19 @@ class PlanShapeSpec extends AnyFunSuite {
         .agg(sum(col("x.o")).as("outdeg"))
         .persist(lvl)
       nodeInfo.count()
-      val pr = nodeInfo.withColumn("pr", lit(1000000000000L))
+      val allSrc = nodeInfo.withColumn("is_src", lit(1L)) // pageRank
+      val pr = allSrc.withColumn("pr", lit(1000000000000L))
       assertNoShuffle(
-        graft.operators.Graph.pageRankRoundBc(eDst, nodeInfo, pr),
-        "pageRankRoundBc")
+        graft.operators.Graph.pprRound(eDst, allSrc, pr, broadcastState = true),
+        "pprRound, every node a source")
       val pprState = nodeInfo
         .withColumn("is_src", (col("node_id") < 5L).cast("long"))
         .withColumn("pr", col("is_src") * lit(1000000000000L))
       assertNoShuffle(
-        graft.operators.Graph.pprRoundBc(
+        graft.operators.Graph.pprRound(
           eDst, nodeInfo.withColumn("is_src", (col("node_id") < 5L).cast("long")),
-          pprState),
-        "pprRoundBc")
+          pprState, broadcastState = true),
+        "pprRound")
       nodeInfo.unpersist()
       // labelPropagation round over the hash(dst) cache
       val lbl = eDst.select(col("src").as("node_id"))
@@ -765,15 +770,18 @@ class PlanShapeSpec extends AnyFunSuite {
         .select(col("node_id"), col("node_id").as("community"))
         .localCheckpoint(true)
       assertNoShuffle(
-        graft.operators.Graph.labelPropRoundBc(eDst, lbl), "labelPropRoundBc")
+        graft.operators.Graph.labelPropRound(eDst, lbl, broadcastState = true),
+        "labelPropRound")
       // HITS half-steps: authority aggregates on dst → hash(dst)
       // cache; hub aggregates on src → hash(src) cache
       val state = lbl.select(col("node_id"), lit(1000000000000L).as("hub"))
       assertNoShuffle(
-        graft.operators.Graph.hitsRawAuthBc(eDst, state), "hitsRawAuthBc")
+        graft.operators.Graph.hitsRawAuth(eDst, state, broadcastState = true),
+        "hitsRawAuth")
       val auth = lbl.select(col("node_id"), lit(1000000000000L).as("auth"))
       assertNoShuffle(
-        graft.operators.Graph.hitsRawHubBc(eSrc, auth), "hitsRawHubBc")
+        graft.operators.Graph.hitsRawHub(eSrc, auth, broadcastState = true),
+        "hitsRawHub")
       // kCore peel round over a symmetric hash(src)-partitioned state:
       // the degree agg runs in place, the alive set broadcasts back
       val sym = edges
