@@ -30,8 +30,9 @@ class CatalogJobsSpec extends AnyFunSuite {
     "knn_sq8_compact" -> 16)
 
   /** The queries that write, append to, compact or probe a durable
-    * index tier, so a change to the shared segment code that adds a
-    * schema read or a segment write shows up here. */
+    * index tier, the admission loops included, so a change to the
+    * shared segment code or to the queries' index lifecycle that adds
+    * a schema read or a segment write shows up here. */
   private val indexPinned = Seq(
     "knn_ivf_persisted" -> 15,
     "knn_ivf_delta" -> 27,
@@ -49,7 +50,26 @@ class CatalogJobsSpec extends AnyFunSuite {
     "dedup_simhash_delta" -> 11,
     "dedup_simhash_asof" -> 15,
     "er_probe" -> 13,
-    "mm_neardup_delta" -> 11)
+    "mm_neardup_delta" -> 11,
+    "er_probe_rescored" -> 16,
+    "er_probe_multi" -> 13,
+    "er_probe_eval" -> 16,
+    "er_admission_loop" -> 66,
+    "dedup_admission_loop" -> 111,
+    "dedup_admission_semantic" -> 206,
+    "dedup_admission_multimodal" -> 163,
+    "dedup_admission_video" -> 163,
+    "dedup_index_stats" -> 13,
+    "knn_hybrid_rrf_persisted" -> 31,
+    "knn_eval_hybrid_persisted" -> 38,
+    "knn_ivfpq_trained_delta" -> 81,
+    "dedup_semantic_probe" -> 27,
+    "dedup_semantic_probe_pq" -> 64,
+    "mm_neardup_probe" -> 13,
+    "mm_audio_neardup" -> 15,
+    "mm_video_neardup" -> 15,
+    "mm_hot_buckets" -> 5,
+    "mm_neardup_clusters_durable" -> 48)
 
   /** The graph and clustering queries: each graph iterative (and the
     * connected components behind the two clustering queries) measures
@@ -67,6 +87,13 @@ class CatalogJobsSpec extends AnyFunSuite {
     "dedup_clusters" -> 21,
     "mm_neardup_clusters" -> 41)
 
+  /** Queries whose count varies by one between runs of the same code:
+    * the extra job is an AQE query-stage job that some runs launch and
+    * others do not (dedup_admission_semantic ran 206 or 207 jobs in
+    * repeated runs within one JVM). Their pin is the lower count, and
+    * one more also passes. */
+  private val racy = Set("dedup_admission_semantic")
+
   /** "name: pinned n, got m" for every query whose count moved. */
   private def moved(pins: Seq[(String, Int)]): Seq[String] = {
     // counted from the same state whatever suites ran before: no cached
@@ -81,7 +108,8 @@ class CatalogJobsSpec extends AnyFunSuite {
         SparkEntry.queries(name)(spark, TestSpark.sfDir)
           .write.format("noop").mode("overwrite").save()
       }
-      if (got != want) Some(s"$name: pinned $want, got $got") else None
+      if (got == want || (racy(name) && got == want + 1)) None
+      else Some(s"$name: pinned $want, got $got")
     }
   }
 
