@@ -57,4 +57,31 @@ private[graft] object Storage {
         pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
       }
     }
+
+  /** A fresh temp dir named `prefix*` for a throwaway index, deleted at
+    * JVM exit: a DataFrame served from an index reads its dir lazily,
+    * so the dir cannot go sooner, and one dir per call keeps concurrent
+    * runs (verify and bench, two scale factors) off each other's
+    * segments. */
+  def tempIndexDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    TempIndexDirs.dirs.add(dir)
+    dir.toAbsolutePath.toString
+  }
+
+  // the one registry of those dirs, and its one shutdown hook,
+  // created on first use
+  private object TempIndexDirs {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+    sys.addShutdownHook {
+      import java.nio.file.Files
+      import scala.jdk.CollectionConverters._
+      dirs.asScala.filter(Files.exists(_)).foreach { dir =>
+        scala.util.Using(Files.walk(dir)) { st =>
+          st.iterator.asScala.toSeq
+            .sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
+        }
+      }
+    }
+  }
 }

@@ -29,21 +29,6 @@ object CoreQueries {
   private def dsumHi(c: Column): Column = sum(c).cast("double") // for already-decimal exprs
   private def dec(c: Column): Column = c.cast(DecimalType(12, 2))
 
-  // temp dirs behind the durable er_probe index, deleted at JVM exit
-  // (the TextQueries dedupIndexDirs pattern)
-  private val erIndexDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  sys.addShutdownHook {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    erIndexDirs.asScala.filter(Files.exists(_)).foreach { dir =>
-      scala.util.Using(Files.walk(dir)) { st =>
-        st.iterator.asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
-      }
-    }
-  }
-
   // er_candidates' oracle, shared by er_resolve as its pair CTE: an
   // independent self-join formulation of the blocked comparison
   private lazy val erPairsSql: String =
@@ -1053,13 +1038,9 @@ object CoreQueries {
       val cust = Tables.customer(s, d).select(
         col("c_custkey").as("id"), col("c_name").as("name"),
         concat_ws("|", col("c_nationkey"), col("c_mktsegment")).as("block"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_er_probe_")
-      val path = dir.toAbsolutePath.toString
-      erIndexDirs.add(dir)
-      graft.operators.RecordIndex.write(
-        cust.where(col("id") % 3 =!= 2), path)
-      graft.operators.RecordIndex.appendEpoch(s, path, 0L,
-        cust.where(col("id") % 3 === 2))
+      val path = IndexScenario.build(s, graft.operators.RecordIndex, "graft_er_probe_",
+        IndexScenario.lastThird(cust, col("id")))(
+        graft.operators.RecordIndex.write(IndexScenario.baseRows(cust, col("id")), _))
       val shard = Tables.customer(s, d).where(col("c_custkey") % 9 === 0)
         .select((col("c_custkey") + 10000000000L).as("id"),
           concat(expr("substring(c_name, 1, length(c_name)-1)"),
@@ -1088,13 +1069,9 @@ object CoreQueries {
       val cust = Tables.customer(s, d).select(
         col("c_custkey").as("id"), col("c_name").as("name"),
         col("c_nationkey").cast("string").as("block"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_er_resc_")
-      val path = dir.toAbsolutePath.toString
-      erIndexDirs.add(dir)
-      graft.operators.RecordIndex.write(
-        cust.where(col("id") % 3 =!= 2), path)
-      graft.operators.RecordIndex.appendEpoch(s, path, 0L,
-        cust.where(col("id") % 3 === 2))
+      val path = IndexScenario.build(s, graft.operators.RecordIndex, "graft_er_resc_",
+        IndexScenario.lastThird(cust, col("id")))(
+        graft.operators.RecordIndex.write(IndexScenario.baseRows(cust, col("id")), _))
       val shard = Tables.customer(s, d).where(col("c_custkey") % 9 === 0)
         .select((col("c_custkey") + 10000000000L).as("id"),
           concat(expr("substring(c_name, 1, length(c_name)-1)"),
@@ -1140,13 +1117,9 @@ object CoreQueries {
         col("c_custkey").as("id"), col("c_name").as("name"),
         col("c_nationkey").cast("string").as("block"),
         col("c_mktsegment").as("segment"), col("c_acctbal").as("acctbal"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_er_multi_")
-      val path = dir.toAbsolutePath.toString
-      erIndexDirs.add(dir)
-      graft.operators.RecordIndex.write(
-        cust.where(col("id") % 3 =!= 2), path)
-      graft.operators.RecordIndex.appendEpoch(s, path, 0L,
-        cust.where(col("id") % 3 === 2))
+      val path = IndexScenario.build(s, graft.operators.RecordIndex, "graft_er_multi_",
+        IndexScenario.lastThird(cust, col("id")))(
+        graft.operators.RecordIndex.write(IndexScenario.baseRows(cust, col("id")), _))
       val shard = Tables.customer(s, d).where(col("c_custkey") % 9 === 0)
         .select((col("c_custkey") + 10000000000L).as("id"),
           concat(expr("substring(c_name, 1, length(c_name)-1)"),
@@ -1171,10 +1144,8 @@ object CoreQueries {
       val cust = Tables.customer(s, d).select(
         col("c_custkey").as("id"), col("c_name").as("name"),
         concat_ws("|", col("c_nationkey"), col("c_mktsegment")).as("block"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_er_eval_")
-      val path = dir.toAbsolutePath.toString
-      erIndexDirs.add(dir)
-      graft.operators.RecordIndex.write(cust, path)
+      val path = IndexScenario.build(s, graft.operators.RecordIndex, "graft_er_eval_")(
+        graft.operators.RecordIndex.write(cust, _))
       val shard = Tables.customer(s, d).where(col("c_custkey") % 9 === 0)
         .select((col("c_custkey") + 10000000000L).as("id"),
           concat(expr("substring(c_name, 1, length(c_name)-1)"),
@@ -1220,9 +1191,7 @@ object CoreQueries {
       val cust = Tables.customer(s, d).select(
         col("c_custkey").as("id"), col("c_name").as("name"),
         concat_ws("|", col("c_nationkey"), col("c_mktsegment")).as("block"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_er_adm_")
-      erIndexDirs.add(dir)
-      val path = dir.toAbsolutePath.toString
+      val path = graft.operators.Storage.tempIndexDir("graft_er_adm_")
       graft.operators.RecordAdmission.init(s, path)
       val typod = concat(
         expr("substring(name, 1, length(name)-1)"), lit("X")).as("name")

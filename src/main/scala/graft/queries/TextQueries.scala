@@ -24,29 +24,7 @@ import graft.operators.{Dedup, Dsir}
   *    xxhash64 kernel path keeps its ScalaTest bit-parity coverage.
   */
 object TextQueries {
-
-  // temp index roots for the persisted-dedup queries, retired at JVM
-  // exit (same pattern as VectorQueries' ANN index dirs)
-  private val dedupIndexDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  sys.addShutdownHook {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    dedupIndexDirs.asScala.filter(Files.exists(_)).foreach { dir =>
-      scala.util.Using(Files.walk(dir)) { st =>
-        st.iterator.asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
-      }
-    }
-  }
-
-  /** Overlap a delta query's two INDEPENDENT epoch appends from a
-    * driver pool (guide §2.6): each is marker-guarded, idempotent,
-    * and writes a disjoint `deltas/<epoch>` dir; everything below
-    * them runs only after both commits, so the commits commute and
-    * the result is byte-identical to the sequential order. */
-  private def appendBoth(a: => Any, b: => Any): Unit =
-    graft.operators.Storage.runConcurrently(Seq(() => { a; () }, () => { b; () }))
+  import IndexScenario.{baseRows, lastThird, parityThirds}
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -64,16 +42,9 @@ object TextQueries {
     // its oracle.
     "dedup_exact_delta" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ch_delta_")
-      val path = dir.toAbsolutePath.toString
-      dedupIndexDirs.add(dir)
-      graft.operators.ContentHashIndex.write(
-        docs.where(col("doc_id") % 3 =!= 2), path)
-      appendBoth(
-        graft.operators.ContentHashIndex.appendEpoch(s, path, 0L,
-          docs.where(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 0)),
-        graft.operators.ContentHashIndex.appendEpoch(s, path, 1L,
-          docs.where(col("doc_id") % 3 === 2 && col("doc_id") % 2 =!= 0)))
+      val path = IndexScenario.build(s, graft.operators.ContentHashIndex,
+        "graft_ch_delta_", parityThirds(docs, col("doc_id")))(
+        graft.operators.ContentHashIndex.write(baseRows(docs, col("doc_id")), _))
       graft.operators.ContentHashIndex.serveGroups(s, path)
         .select("keep_doc_id", "n_copies")
     }),
@@ -86,11 +57,8 @@ object TextQueries {
     // probe, non-vacuous by construction.
     "dedup_exact_probe" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ch_probe_")
-      val path = dir.toAbsolutePath.toString
-      dedupIndexDirs.add(dir)
-      graft.operators.ContentHashIndex.write(
-        docs.where(col("doc_id") % 3 =!= 2), path)
+      val path = IndexScenario.build(s, graft.operators.ContentHashIndex, "graft_ch_probe_")(
+        graft.operators.ContentHashIndex.write(baseRows(docs, col("doc_id")), _))
       graft.operators.ContentHashIndex.probeNew(s, path,
         docs.where(col("doc_id") % 5 === 0)
           .select((col("doc_id") + 10000000000L).as("doc_id"), col("text")))
@@ -120,15 +88,9 @@ object TextQueries {
     // union, which is what the shared oracle asserts.
     "dedup_minhash_delta" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_mh_delta_")
-      val path = dir.toAbsolutePath.toString
-      dedupIndexDirs.add(dir)
-      graft.operators.MinHashIndex.write(docs.where(col("doc_id") % 3 =!= 2), path)
-      appendBoth(
-        graft.operators.MinHashIndex.appendEpoch(s, path, 0L,
-          docs.where(col("doc_id") % 3 === 2 && col("doc_id") % 2 === 0)),
-        graft.operators.MinHashIndex.appendEpoch(s, path, 1L,
-          docs.where(col("doc_id") % 3 === 2 && col("doc_id") % 2 =!= 0)))
+      val path = IndexScenario.build(s, graft.operators.MinHashIndex,
+        "graft_mh_delta_", parityThirds(docs, col("doc_id")))(
+        graft.operators.MinHashIndex.write(baseRows(docs, col("doc_id")), _))
       graft.operators.MinHashIndex.servePairs(s, path)
         .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
     }),
@@ -141,10 +103,8 @@ object TextQueries {
     // a shard-side member.
     "dedup_minhash_probe" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_mh_probe_")
-      val path = dir.toAbsolutePath.toString
-      dedupIndexDirs.add(dir)
-      graft.operators.MinHashIndex.write(docs.where(col("doc_id") % 3 =!= 2), path)
+      val path = IndexScenario.build(s, graft.operators.MinHashIndex, "graft_mh_probe_")(
+        graft.operators.MinHashIndex.write(baseRows(docs, col("doc_id")), _))
       graft.operators.MinHashIndex.probePairs(s, path,
         docs.where(col("doc_id") % 3 === 2))
         .select(col("a_id"), col("b_id"), round(col("jaccard"), 6).as("jaccard"))
@@ -163,9 +123,7 @@ object TextQueries {
     // of every admitted doc.
     "dedup_admission_loop" -> ((s, d) => {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_adm_loop_")
-      dedupIndexDirs.add(dir)
-      val path = dir.toAbsolutePath.toString
+      val path = graft.operators.Storage.tempIndexDir("graft_adm_loop_")
       graft.operators.Admission.init(s, path)
       def shard(e: Int): DataFrame = {
         val own = docs.where(col("doc_id") % 3 === e)
@@ -208,9 +166,7 @@ object TextQueries {
         .select(col("doc_id"), col("text"), col("embedding"))
       val cents = emb.where(col("vec_id") < 16)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_adm_sem_")
-      dedupIndexDirs.add(dir)
-      val path = dir.toAbsolutePath.toString
+      val path = graft.operators.Storage.tempIndexDir("graft_adm_sem_")
       graft.operators.Admission.init(s, path, semanticCentroids = Some(cents))
       def shard(e: Int): DataFrame = {
         val own = base.where(col("doc_id") % 3 === e)
@@ -264,9 +220,7 @@ object TextQueries {
         .select(col("doc_id"), col("text"),
           col("c0"), col("c1"), col("c2"), col("c3"))
         .localCheckpoint(true)
-      val dir = java.nio.file.Files.createTempDirectory("graft_adm_mm_")
-      dedupIndexDirs.add(dir)
-      val path = dir.toAbsolutePath.toString
+      val path = graft.operators.Storage.tempIndexDir("graft_adm_mm_")
       graft.operators.Admission.init(s, path, perceptual = true)
       val sigCols = Seq(col("c0"), col("c1"), col("c2"), col("c3"))
       def shard(e: Int): DataFrame = {
@@ -316,9 +270,7 @@ object TextQueries {
         .select(col("doc_id"), col("text"),
           col("c0"), col("c1"), col("c2"), col("c3"))
         .localCheckpoint(true)
-      val dir = java.nio.file.Files.createTempDirectory("graft_adm_vid_")
-      dedupIndexDirs.add(dir)
-      val path = dir.toAbsolutePath.toString
+      val path = graft.operators.Storage.tempIndexDir("graft_adm_vid_")
       graft.operators.Admission.init(s, path, perceptual = true)
       val sigCols = Seq(col("c0"), col("c1"), col("c2"), col("c3"))
       def shard(e: Int): DataFrame = {
@@ -356,15 +308,9 @@ object TextQueries {
     // round-trip parquet exactly), the shared oracle.
     "dedup_simhash_delta" -> ((s, d) => {
       val sigs = Dedup.simhashSignaturesMd5(Tables.documents(s, d))
-      val dir = java.nio.file.Files.createTempDirectory("graft_simham_delta_")
-      val path = dir.toAbsolutePath.toString
-      dedupIndexDirs.add(dir)
-      graft.operators.HammingIndex.write(
-        sigs.where(col("doc_id") % 3 =!= 2), path)
-      graft.operators.HammingIndex.appendEpoch(s, path, 0L,
-        sigs.where(col("doc_id") % 3 === 2))
-      graft.operators.HammingIndex.compact(s, path)
-      graft.operators.HammingIndex.gc(s, path)
+      val path = IndexScenario.build(s, graft.operators.HammingIndex,
+        "graft_simham_delta_", lastThird(sigs, col("doc_id")), compact = true)(
+        graft.operators.HammingIndex.write(baseRows(sigs, col("doc_id")), _))
       graft.operators.HammingIndex.servePairs(s, path, maxHamming = 3)
     }),
 
@@ -377,18 +323,11 @@ object TextQueries {
     // resolves generation 0 plus delta 0 only.
     "dedup_simhash_asof" -> ((s, d) => {
       val sigs = Dedup.simhashSignaturesMd5(Tables.documents(s, d))
-      val dir = java.nio.file.Files.createTempDirectory("graft_simham_asof_")
-      val path = dir.toAbsolutePath.toString
-      dedupIndexDirs.add(dir)
-      graft.operators.HammingIndex.write(
-        sigs.where(col("doc_id") % 3 === 0), path)
-      appendBoth(
-        graft.operators.HammingIndex.appendEpoch(s, path, 0L,
-          sigs.where(col("doc_id") % 3 === 1)),
-        graft.operators.HammingIndex.appendEpoch(s, path, 1L,
-          sigs.where(col("doc_id") % 3 === 2)))
-      graft.operators.HammingIndex.compact(s, path)
-      graft.operators.HammingIndex.gc(s, path, retainGens = 1)
+      // one third per generation step: base, then epochs 0 and 1
+      val third = (r: Int) => sigs.where(col("doc_id") % 3 === r)
+      val path = IndexScenario.build(s, graft.operators.HammingIndex,
+        "graft_simham_asof_", Seq(third(1), third(2)), compact = true, retainGens = 1)(
+        graft.operators.HammingIndex.write(third(0), _))
       graft.operators.HammingIndex.servePairsAsOf(s, path, epoch = 0L)
     }),
 
@@ -398,16 +337,10 @@ object TextQueries {
     // ≥ 1 token), so the whole view is hash-oracled.
     "dedup_index_stats" -> ((s, d) => {
       val sigs = Dedup.simhashSignaturesMd5(Tables.documents(s, d))
-      val dir = java.nio.file.Files.createTempDirectory("graft_simham_stats_")
-      val path = dir.toAbsolutePath.toString
-      dedupIndexDirs.add(dir)
-      graft.operators.HammingIndex.write(
-        sigs.where(col("doc_id") % 3 === 0), path)
-      appendBoth(
-        graft.operators.HammingIndex.appendEpoch(s, path, 0L,
-          sigs.where(col("doc_id") % 3 === 1)),
-        graft.operators.HammingIndex.appendEpoch(s, path, 1L,
-          sigs.where(col("doc_id") % 3 === 2)))
+      val third = (r: Int) => sigs.where(col("doc_id") % 3 === r)
+      val path = IndexScenario.build(s, graft.operators.HammingIndex,
+        "graft_simham_stats_", Seq(third(1), third(2)))(
+        graft.operators.HammingIndex.write(third(0), _))
       graft.operators.HammingIndex.segmentStats(s, path)
     }),
 
@@ -421,19 +354,13 @@ object TextQueries {
     // contract).
     "dedup_index_diff" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ch_diff_")
-      val path = dir.toAbsolutePath.toString
-      dedupIndexDirs.add(dir)
-      graft.operators.ContentHashIndex.write(
-        docs.where(col("doc_id") % 3 =!= 2), path)
-      appendBoth(
-        graft.operators.ContentHashIndex.appendEpoch(s, path, 0L,
-          docs.where(col("doc_id") % 3 === 2)),
-        graft.operators.ContentHashIndex.appendEpoch(s, path, 1L,
-          docs.where(col("doc_id") % 7 === 0)
-            .select(col("doc_id"), concat(col("text"), lit(" rev2")).as("text"))
-            .unionByName(docs.where(col("doc_id") % 11 === 0)
-              .select((col("doc_id") + 10000000000L).as("doc_id"), col("text")))))
+      val crawl = docs.where(col("doc_id") % 7 === 0)
+        .select(col("doc_id"), concat(col("text"), lit(" rev2")).as("text"))
+        .unionByName(docs.where(col("doc_id") % 11 === 0)
+          .select((col("doc_id") + 10000000000L).as("doc_id"), col("text")))
+      val path = IndexScenario.build(s, graft.operators.ContentHashIndex,
+        "graft_ch_diff_", lastThird(docs, col("doc_id")) :+ crawl)(
+        graft.operators.ContentHashIndex.write(baseRows(docs, col("doc_id")), _))
       graft.operators.ContentHashIndex.diffAsOf(s, path, 0L, 1L)
     }),
 

@@ -14,32 +14,7 @@ import graft.operators.{Bloom, Similarity}
   * 0.0 + x == x), then one sqrt and one division — all IEEE-exact.
   */
 object VectorQueries {
-
-  // All knn_ivf_persisted index dirs of this JVM, cleaned by ONE
-  // shutdown hook (registered with the object, not per invocation);
-  // the Files.walk stream is closed via Using.
-  private val ivfIndexDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  sys.addShutdownHook {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    ivfIndexDirs.asScala.filter(Files.exists(_)).foreach { dir =>
-      scala.util.Using(Files.walk(dir)) { st =>
-        st.iterator.asScala.toSeq
-          .sortBy(-_.getNameCount).foreach(p => Files.deleteIfExists(p))
-      }
-    }
-  }
-
-  /** Overlap a delta query's two INDEPENDENT epoch appends from a
-    * driver pool (guide §2.6 — the second job back-fills the first's
-    * task tail): each append is marker-guarded and idempotent, writes
-    * a disjoint `deltas/<epoch>` dir against the FIXED stored state,
-    * and the serve/compact below runs only after both have committed
-    * — so the commits commute and the result is byte-identical to the
-    * sequential order. */
-  private def appendBoth(a: => Any, b: => Any): Unit =
-    graft.operators.Storage.runConcurrently(Seq(() => { a; () }, () => { b; () }))
+  import IndexScenario.{baseRows, lastThird, parityThirds}
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -119,10 +94,8 @@ object VectorQueries {
             t => length(t) > 0)).as("toks"))
       val seeds = embAll.where(col("vec_id") < 16)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_hyb_ivf_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.IvfIndex.write(corpusEmb, seeds, path)
+      val path = IndexScenario.build(s, graft.operators.IvfIndex, "graft_hyb_ivf_")(
+        graft.operators.IvfIndex.write(corpusEmb, seeds, _))
       val dense = graft.operators.IvfIndex.serveAll(s, path,
         corpusEmb.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("q")),
@@ -167,10 +140,8 @@ object VectorQueries {
             t => length(t) > 0)).as("toks"))
       val seeds = embAll.where(col("vec_id") < 16)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_hybe_ivf_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.IvfIndex.write(corpusEmb, seeds, path)
+      val path = IndexScenario.build(s, graft.operators.IvfIndex, "graft_hybe_ivf_")(
+        graft.operators.IvfIndex.write(corpusEmb, seeds, _))
       val dense = graft.operators.IvfIndex.serveAll(s, path,
         corpusEmb.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("q")),
@@ -433,21 +404,10 @@ object VectorQueries {
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
       val cb = Similarity.ivfPqSeedCodebook(
         e.select(col("vec_id"), col("embedding")), seeds)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_delta_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.IvfPqIndex.write(
-        e.where(col("vec_id") % 3 =!= 2).select(col("vec_id"), col("embedding")),
-        seeds, cb, path)
-      appendBoth(
-        graft.operators.IvfPqIndex.appendEpoch(s, path, 0L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 0)
-            .select(col("vec_id"), col("embedding"))),
-        graft.operators.IvfPqIndex.appendEpoch(s, path, 1L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 =!= 0)
-            .select(col("vec_id"), col("embedding"))))
-      graft.operators.IvfPqIndex.compact(s, path)
-      graft.operators.IvfPqIndex.gc(s, path)
+      val v = e.select(col("vec_id"), col("embedding"))
+      val path = IndexScenario.build(s, graft.operators.IvfPqIndex,
+        "graft_ivfpq_delta_", parityThirds(v, col("vec_id")), compact = true)(
+        graft.operators.IvfPqIndex.write(baseRows(v, col("vec_id")), seeds, cb, _))
       graft.operators.IvfPqIndex.serveAll(s, path,
         e.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("q")),
@@ -488,20 +448,14 @@ object VectorQueries {
     "knn_ivfpq_trained_delta" -> ((s, d) => {
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val (centroids, cbPerM) = Similarity.ivfPqTrainState(e)
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_tdelta_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.IvfPqIndex.writeTrained(
-        e.where(col("vec_id") % 3 =!= 2), centroids, cbPerM, path)
-      graft.operators.Storage.unpersistLocalCheckpoint(centroids)
-      graft.operators.Storage.unpersistLocalCheckpoint(cbPerM)
-      appendBoth(
-        graft.operators.IvfPqIndex.appendEpoch(s, path, 0L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 0)),
-        graft.operators.IvfPqIndex.appendEpoch(s, path, 1L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 =!= 0)))
-      graft.operators.IvfPqIndex.compact(s, path)
-      graft.operators.IvfPqIndex.gc(s, path)
+      val path = IndexScenario.build(s, graft.operators.IvfPqIndex,
+        "graft_ivfpq_tdelta_", parityThirds(e, col("vec_id")), compact = true) { p =>
+        graft.operators.IvfPqIndex.writeTrained(
+          baseRows(e, col("vec_id")), centroids, cbPerM, p)
+        // the epochs encode against the stored state, not these pins
+        graft.operators.Storage.unpersistLocalCheckpoint(centroids)
+        graft.operators.Storage.unpersistLocalCheckpoint(cbPerM)
+      }
       graft.operators.IvfPqIndex.serveAll(s, path,
         e.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("q")),
@@ -521,15 +475,8 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
       val seeds = e.where(col("vec_id") < 16)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      // per-invocation unique dir: concurrent runs (verify + bench, or
-      // two scale factors) must not race on a shared fixed path. The
-      // serve DataFrame reads the dir lazily, so cleanup is deferred
-      // to JVM exit; one hook drains ivfIndexDirs so a multi-pass
-      // bench doesn't accumulate hooks or index copies past exit.
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_index_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.IvfIndex.write(e, seeds, path)
+      val path = IndexScenario.build(s, graft.operators.IvfIndex, "graft_ivf_index_")(
+        graft.operators.IvfIndex.write(e, seeds, _))
       graft.operators.IvfIndex.serveAll(s, path,
         e.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("q")),
@@ -548,18 +495,9 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
       val seeds = e.where(col("vec_id") < 16)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_delta_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.IvfIndex.write(
-        e.where(col("vec_id") % 3 =!= 2), seeds, path)
-      appendBoth(
-        graft.operators.IvfIndex.appendEpoch(s, path, 0L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 0)
-            .select(col("vec_id"), col("embedding"))),
-        graft.operators.IvfIndex.appendEpoch(s, path, 1L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 =!= 0)
-            .select(col("vec_id"), col("embedding"))))
+      val path = IndexScenario.build(s, graft.operators.IvfIndex, "graft_ivf_delta_",
+        parityThirds(e.select(col("vec_id"), col("embedding")), col("vec_id")))(
+        graft.operators.IvfIndex.write(baseRows(e, col("vec_id")), seeds, _))
       graft.operators.IvfIndex.serveAll(s, path,
         e.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("q")),
@@ -577,20 +515,10 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
       val seeds = e.where(col("vec_id") < 16)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_ivf_asof_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.IvfIndex.write(
-        e.where(col("vec_id") % 3 =!= 2), seeds, path)
-      appendBoth(
-        graft.operators.IvfIndex.appendEpoch(s, path, 0L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 0)
-            .select(col("vec_id"), col("embedding"))),
-        graft.operators.IvfIndex.appendEpoch(s, path, 1L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 =!= 0)
-            .select(col("vec_id"), col("embedding"))))
-      graft.operators.IvfIndex.compact(s, path)
-      graft.operators.IvfIndex.gc(s, path, retainGens = 1)
+      val path = IndexScenario.build(s, graft.operators.IvfIndex, "graft_ivf_asof_",
+        parityThirds(e.select(col("vec_id"), col("embedding")), col("vec_id")),
+        compact = true, retainGens = 1)(
+        graft.operators.IvfIndex.write(baseRows(e, col("vec_id")), seeds, _))
       graft.operators.IvfIndex.serveAsOf(s, path, epoch = 0L,
         e.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("q")),
@@ -605,19 +533,10 @@ object VectorQueries {
     // oracle asserts.
     "knn_sq8_delta" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_sq8_delta_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.Sq8Index.write(
-        e.where(col("vec_id") % 3 =!= 2).select(col("vec_id"), col("embedding")),
-        path)
-      appendBoth(
-        graft.operators.Sq8Index.appendEpoch(s, path, 0L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 0)
-            .select(col("vec_id"), col("embedding"))),
-        graft.operators.Sq8Index.appendEpoch(s, path, 1L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 =!= 0)
-            .select(col("vec_id"), col("embedding"))))
+      val v = e.select(col("vec_id"), col("embedding"))
+      val path = IndexScenario.build(s, graft.operators.Sq8Index, "graft_sq8_delta_",
+        parityThirds(v, col("vec_id")))(
+        graft.operators.Sq8Index.write(baseRows(v, col("vec_id")), _))
       graft.operators.Sq8Index.serveAll(s, path,
         e.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("qv")),
@@ -634,21 +553,10 @@ object VectorQueries {
     // the path a long-running ingest takes every compactEvery epochs.
     "knn_sq8_compact" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_sq8_cpt_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.Sq8Index.write(
-        e.where(col("vec_id") % 3 =!= 2).select(col("vec_id"), col("embedding")),
-        path)
-      appendBoth(
-        graft.operators.Sq8Index.appendEpoch(s, path, 0L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 0)
-            .select(col("vec_id"), col("embedding"))),
-        graft.operators.Sq8Index.appendEpoch(s, path, 1L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 =!= 0)
-            .select(col("vec_id"), col("embedding"))))
-      graft.operators.Sq8Index.compact(s, path)
-      graft.operators.Sq8Index.gc(s, path)
+      val v = e.select(col("vec_id"), col("embedding"))
+      val path = IndexScenario.build(s, graft.operators.Sq8Index, "graft_sq8_cpt_",
+        parityThirds(v, col("vec_id")), compact = true)(
+        graft.operators.Sq8Index.write(baseRows(v, col("vec_id")), _))
       graft.operators.Sq8Index.serveAll(s, path,
         e.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("qv")),
@@ -664,19 +572,10 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
       val cb = e.where(col("vec_id") < 16)
         .select(col("vec_id").cast("int").as("cw_k"), col("embedding").as("cw"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_pq_delta_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.PqIndex.write(
-        e.where(col("vec_id") % 3 =!= 2).select(col("vec_id"), col("embedding")),
-        cb, path)
-      appendBoth(
-        graft.operators.PqIndex.appendEpoch(s, path, 0L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 0)
-            .select(col("vec_id"), col("embedding"))),
-        graft.operators.PqIndex.appendEpoch(s, path, 1L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 =!= 0)
-            .select(col("vec_id"), col("embedding"))))
+      val v = e.select(col("vec_id"), col("embedding"))
+      val path = IndexScenario.build(s, graft.operators.PqIndex, "graft_pq_delta_",
+        parityThirds(v, col("vec_id")))(
+        graft.operators.PqIndex.write(baseRows(v, col("vec_id")), cb, _))
       graft.operators.PqIndex.serveAll(s, path,
         e.where(col("vec_id") < 8)
           .select(col("vec_id").as("query_id"), col("embedding").as("q")),
@@ -696,14 +595,10 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
       val seeds = e.where(col("vec_id") < 16)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_sem_probe_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.IvfIndex.write(
-        e.where(col("vec_id") % 3 =!= 2).select(col("vec_id"), col("embedding")),
-        seeds, path)
-      graft.operators.IvfIndex.appendEpoch(s, path, 0L,
-        e.where(col("vec_id") % 3 === 2).select(col("vec_id"), col("embedding")))
+      val v = e.select(col("vec_id"), col("embedding"))
+      val path = IndexScenario.build(s, graft.operators.IvfIndex, "graft_sem_probe_",
+        lastThird(v, col("vec_id")))(
+        graft.operators.IvfIndex.write(baseRows(v, col("vec_id")), seeds, _))
       graft.operators.IvfIndex.probeSemantic(s, path,
         e.where(col("vec_id") % 5 === 0)
           .select((col("vec_id") + 10000000000L).as("vec_id"), col("embedding")))
@@ -725,14 +620,10 @@ object VectorQueries {
         .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
       val cb = Similarity.ivfPqSeedCodebook(
         e.select(col("vec_id"), col("embedding")), seeds)
-      val dir = java.nio.file.Files.createTempDirectory("graft_sem_pq_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.IvfPqIndex.write(
-        e.where(col("vec_id") % 3 =!= 2).select(col("vec_id"), col("embedding")),
-        seeds, cb, path)
-      graft.operators.IvfPqIndex.appendEpoch(s, path, 0L,
-        e.where(col("vec_id") % 3 === 2).select(col("vec_id"), col("embedding")))
+      val v = e.select(col("vec_id"), col("embedding"))
+      val path = IndexScenario.build(s, graft.operators.IvfPqIndex, "graft_sem_pq_",
+        lastThird(v, col("vec_id")))(
+        graft.operators.IvfPqIndex.write(baseRows(v, col("vec_id")), seeds, cb, _))
       graft.operators.IvfPqIndex.probeSemantic(s, path,
         e.where(col("vec_id") % 5 === 0)
           .select((col("vec_id") + 10000000000L).as("vec_id"), col("embedding")),
@@ -744,19 +635,10 @@ object VectorQueries {
     // base ∪ deltas — bit-identical to knn_binary over the union.
     "knn_binary_delta" -> ((s, d) => {
       val e = Tables.embeddings(s, d)
-      val dir = java.nio.file.Files.createTempDirectory("graft_bin_delta_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.BinaryIndex.write(
-        e.where(col("vec_id") % 3 =!= 2).select(col("vec_id"), col("embedding")),
-        path)
-      appendBoth(
-        graft.operators.BinaryIndex.appendEpoch(s, path, 0L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 === 0)
-            .select(col("vec_id"), col("embedding"))),
-        graft.operators.BinaryIndex.appendEpoch(s, path, 1L,
-          e.where(col("vec_id") % 3 === 2 && col("vec_id") % 2 =!= 0)
-            .select(col("vec_id"), col("embedding"))))
+      val v = e.select(col("vec_id"), col("embedding"))
+      val path = IndexScenario.build(s, graft.operators.BinaryIndex, "graft_bin_delta_",
+        parityThirds(v, col("vec_id")))(
+        graft.operators.BinaryIndex.write(baseRows(v, col("vec_id")), _))
       graft.operators.BinaryIndex.serveAll(s, path,
         graft.operators.Similarity.binarySignatures(e.where(col("vec_id") < 8))
           .select(col("vec_id").as("query_id"), col("sig").as("qsig")),
@@ -781,18 +663,9 @@ object VectorQueries {
     "knn_maxsim_delta" -> ((s, d) => {
       val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
       val docOf = floor(col("vec_id") / 4).cast("long")
-      val dir = java.nio.file.Files.createTempDirectory("graft_maxsim_delta_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.MaxSimIndex.write(
-        e.where(docOf % 3 =!= 2), path, tokensPerDoc = 4)
-      appendBoth(
-        graft.operators.MaxSimIndex.appendEpoch(s, path, 0L,
-          e.where(docOf % 3 === 2 && docOf % 2 === 0)),
-        graft.operators.MaxSimIndex.appendEpoch(s, path, 1L,
-          e.where(docOf % 3 === 2 && docOf % 2 =!= 0)))
-      graft.operators.MaxSimIndex.compact(s, path)
-      graft.operators.MaxSimIndex.gc(s, path)
+      val path = IndexScenario.build(s, graft.operators.MaxSimIndex,
+        "graft_maxsim_delta_", parityThirds(e, docOf), compact = true)(
+        graft.operators.MaxSimIndex.write(baseRows(e, docOf), _, tokensPerDoc = 4))
       graft.operators.MaxSimIndex.serveAll(s, path,
         graft.operators.Similarity.tokenBags(e, 4).where(col("doc_id") < 4)
           .select(col("doc_id").as("query_id"), col("toks").as("qtoks")),
@@ -1146,16 +1019,10 @@ object VectorQueries {
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      val dir = java.nio.file.Files.createTempDirectory("graft_mmham_delta_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
       try {
-        graft.operators.HammingIndex.write(
-          sigs.where(col("doc_id") % 3 =!= 2), path)
-        graft.operators.HammingIndex.appendEpoch(s, path, 0L,
-          sigs.where(col("doc_id") % 3 === 2))
-        graft.operators.HammingIndex.compact(s, path)
-        graft.operators.HammingIndex.gc(s, path)
+        val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_mmham_delta_",
+          lastThird(sigs, col("doc_id")), compact = true)(
+          graft.operators.HammingIndex.write(baseRows(sigs, col("doc_id")), _))
         // the serve reads only the persisted segments — the pin can
         // release before the (lazy) result leaves the query body
         graft.operators.HammingIndex.servePairs(s, path, maxHamming = 3)
@@ -1175,14 +1042,10 @@ object VectorQueries {
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      val dir = java.nio.file.Files.createTempDirectory("graft_mmham_probe_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
       try {
-        graft.operators.HammingIndex.write(
-          sigs.where(col("doc_id") % 3 =!= 2), path)
-        graft.operators.HammingIndex.appendEpoch(s, path, 0L,
-          sigs.where(col("doc_id") % 3 === 2))
+        val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_mmham_probe_",
+          lastThird(sigs, col("doc_id")))(
+          graft.operators.HammingIndex.write(baseRows(sigs, col("doc_id")), _))
         // probePairs eagerly pins its (output-sized) result, so the
         // sigs pin can release before the result leaves the body
         graft.operators.HammingIndex.probePairs(s, path,
@@ -1230,16 +1093,10 @@ object VectorQueries {
         s, Multimodal.audioAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      val dir = java.nio.file.Files.createTempDirectory("graft_audham_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
       try {
-        graft.operators.HammingIndex.write(
-          sigs.where(col("doc_id") % 3 =!= 2), path)
-        graft.operators.HammingIndex.appendEpoch(s, path, 0L,
-          sigs.where(col("doc_id") % 3 === 2))
-        graft.operators.HammingIndex.compact(s, path)
-        graft.operators.HammingIndex.gc(s, path)
+        val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_audham_",
+          lastThird(sigs, col("doc_id")), compact = true)(
+          graft.operators.HammingIndex.write(baseRows(sigs, col("doc_id")), _))
         graft.operators.HammingIndex.probePairs(s, path,
           sigs.where(col("doc_id") % 5 === 0)
             .select((col("doc_id") + 10000000000L).as("doc_id"),
@@ -1257,10 +1114,8 @@ object VectorQueries {
       val sigs = Multimodal.imageAHash(
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
-      val dir = java.nio.file.Files.createTempDirectory("graft_hotbk_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
-      graft.operators.HammingIndex.write(sigs, path)
+      val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_hotbk_")(
+        graft.operators.HammingIndex.write(sigs, _))
       graft.operators.HammingIndex.saturatedBuckets(s, path, maxBucket = 32)
     }),
 
@@ -1281,16 +1136,10 @@ object VectorQueries {
         s, Multimodal.videoAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      val dir = java.nio.file.Files.createTempDirectory("graft_vidham_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
       try {
-        graft.operators.HammingIndex.write(
-          sigs.where(col("doc_id") % 3 =!= 2), path)
-        graft.operators.HammingIndex.appendEpoch(s, path, 0L,
-          sigs.where(col("doc_id") % 3 === 2))
-        graft.operators.HammingIndex.compact(s, path)
-        graft.operators.HammingIndex.gc(s, path)
+        val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_vidham_",
+          lastThird(sigs, col("doc_id")), compact = true)(
+          graft.operators.HammingIndex.write(baseRows(sigs, col("doc_id")), _))
         graft.operators.HammingIndex.probePairs(s, path,
           sigs.where(col("doc_id") % 5 === 0)
             .select((col("doc_id") + 10000000000L).as("doc_id"),
@@ -1442,16 +1291,10 @@ object VectorQueries {
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      val dir = java.nio.file.Files.createTempDirectory("graft_mmham_ccdur_")
-      val path = dir.toAbsolutePath.toString
-      ivfIndexDirs.add(dir)
       try {
-        graft.operators.HammingIndex.write(
-          sigs.where(col("doc_id") % 3 =!= 2), path)
-        graft.operators.HammingIndex.appendEpoch(s, path, 0L,
-          sigs.where(col("doc_id") % 3 === 2))
-        graft.operators.HammingIndex.compact(s, path)
-        graft.operators.HammingIndex.gc(s, path)
+        val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_mmham_ccdur_",
+          lastThird(sigs, col("doc_id")), compact = true)(
+          graft.operators.HammingIndex.write(baseRows(sigs, col("doc_id")), _))
         // connectedComponents consumes the (disk-backed) pair relation
         // eagerly into its persisted edge set, so the sigs pin can
         // release before the labels leave the body

@@ -891,17 +891,10 @@ object StreamingOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         onBatch(epoch, graft.operators.Admission.admitEpoch(
           spark, path, epoch, batch.toDF(), threshold, semanticThreshold))
-        if (compactEvery > 0) {
-          // admitEpoch returned, so ALL THREE stores have committed
-          // this epoch — the between-appends window the single-writer
-          // contract carves out for maintenance
-          val (_, upto) = graft.operators.LsmSegments
-            .current(spark, s"$path/admitted")
-          val unfolded = graft.operators.Admission
-            .committedEpochs(spark, path).count(_ > upto)
-          if (unfolded >= compactEvery)
-            graft.operators.Admission.compact(spark, path, retainGens = retainGens)
-        }
+        // admitEpoch returned, so every store has committed this epoch
+        maintainEvery(spark, compactEvery, s"$path/admitted",
+          graft.operators.Admission.committedEpochs(spark, path))(
+          graft.operators.Admission.compact(spark, path, retainGens = retainGens))
         ()
       }
       .start()
@@ -935,17 +928,10 @@ object StreamingOps {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         onBatch(epoch, graft.operators.RecordAdmission.admitEpoch(
           spark, path, epoch, batch.toDF(), maxDist, maxPairsPerBlock))
-        if (compactEvery > 0) {
-          // admitEpoch returned, so BOTH stores have committed this
-          // epoch — the between-appends maintenance window
-          val (_, upto) = graft.operators.LsmSegments
-            .current(spark, s"$path/admitted")
-          val unfolded = graft.operators.RecordAdmission
-            .committedEpochs(spark, path).count(_ > upto)
-          if (unfolded >= compactEvery)
-            graft.operators.RecordAdmission.compact(
-              spark, path, retainGens = retainGens)
-        }
+        // admitEpoch returned, so both stores have committed this epoch
+        maintainEvery(spark, compactEvery, s"$path/admitted",
+          graft.operators.RecordAdmission.committedEpochs(spark, path))(
+          graft.operators.RecordAdmission.compact(spark, path, retainGens = retainGens))
         ()
       }
       .start()
@@ -993,28 +979,20 @@ object StreamingOps {
       retainGens: Int = 1)(
       onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = input.sparkSession
-    val committed = index.committedEpochs(spark, indexPath)
-    require(committed.isEmpty || options.contains("checkpointLocation"),
-      s"ingestStream(${index.getClass.getSimpleName.stripSuffix("$")}): " +
-        s"index at $indexPath already holds committed ingest " +
-        s"epochs ${committed.mkString("[", ",", "]")} from a previous stream; " +
-        "a query without a durable checkpointLocation restarts epoch ids at 0 " +
-        "and its first batches would collide with those markers and be " +
-        "silently skipped. Pass the original checkpointLocation to resume " +
-        "that lineage, or ingest into a fresh index (compact the old one).")
+    requireDurableLineage(
+      s"ingestStream(${index.getClass.getSimpleName.stripSuffix("$")})",
+      index.committedEpochs(spark, indexPath).lastOption, indexPath, options)
     input.writeStream
       .outputMode("append")
       .options(options)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         val appended = index.appendEpoch(spark, indexPath, epoch, batch.toDF())
-        if (appended && compactEvery > 0) {
-          val (_, upto) = graft.operators.LsmSegments.current(spark, indexPath)
-          val unfolded = index.committedEpochs(spark, indexPath).count(_ > upto)
-          if (unfolded >= compactEvery) {
+        if (appended)
+          maintainEvery(spark, compactEvery, indexPath,
+            index.committedEpochs(spark, indexPath)) {
             index.compact(spark, indexPath)
             index.gc(spark, indexPath, retainGens = retainGens)
           }
-        }
         onBatch(epoch, appended)
         ()
       }
@@ -1344,6 +1322,21 @@ object StreamingOps {
       }
       .start()
   }
+
+  /** The in-loop maintenance rule of [[ingestStream]] and the two
+    * admission streams: with `compactEvery > 0`, run `fold` once
+    * `compactEvery` of the `committed` epochs lie past the generation
+    * marker at `genPath` (the epochs not yet folded into its base).
+    * Callers run it between appends, after the batch's every store has
+    * committed: the window the [[graft.operators.LsmSegments]]
+    * single-writer contract carves out for maintenance. Two directory
+    * listings, no data read. */
+  private def maintainEvery(spark: SparkSession, compactEvery: Int,
+      genPath: String, committed: => Seq[Long])(fold: => Unit): Unit =
+    if (compactEvery > 0) {
+      val (_, upto) = graft.operators.LsmSegments.current(spark, genPath)
+      if (committed.count(_ > upto) >= compactEvery) fold
+    }
 
   /** Lineage pairing for every durable maintenance stream (the
     * [[ingestStream]] guard, shared): epoch ids are only meaningful

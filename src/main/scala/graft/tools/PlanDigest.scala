@@ -250,17 +250,17 @@ object PlanDigest {
       // over a tiny on-disk index
       val mhDocs = Seq((1L, "aa bb cc dd ee"), (2L, "aa bb cc dd ff"))
         .toDF("doc_id", "text")
-      val mhPath = java.nio.file.Files.createTempDirectory("graft_digest_mh").toString
+      val mhPath = graft.operators.Storage.tempIndexDir("graft_digest_mh")
       graft.operators.MinHashIndex.write(mhDocs, mhPath)
       val mhFp = graft.operators.MinHashIndex.fingerprints(
         Seq((10L, "aa bb cc dd ee gg")).toDF("doc_id", "text"), 3, 16, 8)
         .localCheckpoint(true)
-      val chPath = java.nio.file.Files.createTempDirectory("graft_digest_ch").toString
+      val chPath = graft.operators.Storage.tempIndexDir("graft_digest_ch")
       graft.operators.ContentHashIndex.write(mhDocs, chPath)
       val chFp = graft.operators.ContentHashIndex.fingerprints(
         Seq((10L, "aa bb cc dd ee")).toDF("doc_id", "text"))
         .localCheckpoint(true)
-      val ivfPath = java.nio.file.Files.createTempDirectory("graft_digest_ivf").toString
+      val ivfPath = graft.operators.Storage.tempIndexDir("graft_digest_ivf")
       val vecs = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)))
         .toDF("vec_id", "embedding")
       val ivfCents = Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 1.0f)))

@@ -9,6 +9,8 @@
 #   tools/gate.sh --full      # sf0.01 + sf0.1 bench (the full round shape)
 #   tools/gate.sh --perf      # each perfbench workload once: oracle and
 #                             # stream-multiset checks, 0 failed operations
+#   tools/gate.sh --plans     # regenerate the plan digest at sf0.01 and
+#                             # fail on any byte of drift from PLAN_DIGEST.md
 #
 # Gotchas encoded here (see .claude/skills/verify/SKILL.md for more):
 # Spark logs land on stderr as [error]; only check.py's final
@@ -20,9 +22,9 @@ MODE="${1:-gate}"
 case "$MODE" in
   --quick) SF=/root/testdata/sf0.001; RUN_TESTS=0; RUN_BENCH=0 ;;
   --full)  SF=/root/testdata/sf0.01;  RUN_TESTS=1; RUN_BENCH=1 ;;
-  --perf)  ;;
+  --perf|--plans) ;;
   gate)    SF=/root/testdata/sf0.01;  RUN_TESTS=1; RUN_BENCH=0 ;;
-  *) echo "unknown mode '$MODE' (use --quick, --full, --perf, or no argument)"; exit 2 ;;
+  *) echo "unknown mode '$MODE' (use --quick, --full, --perf, --plans, or no argument)"; exit 2 ;;
 esac
 
 if [[ "$MODE" == --perf ]]; then
@@ -40,6 +42,27 @@ if [[ "$MODE" == --perf ]]; then
       "${RESULT:-null}" 2>/dev/null \
       || { echo "PERFBENCH $W FAILED (full log: $LOGS/perf_$W.log)"; exit 1; }
   done
+  echo "== gate: GREEN =="
+  exit 0
+fi
+
+if [[ "$MODE" == --plans ]]; then
+  # the digest goes to a temp file (SPARK_GRAFT_PLAN_OUT), never over
+  # the committed one, so a drifting tree leaves PLAN_DIGEST.md intact
+  LOGS=$(mktemp -d /tmp/graft_gatelog.XXXXXX)
+  DIGEST=$LOGS/PLAN_DIGEST.md
+  echo "== gate: plan digest @/root/testdata/sf0.01 =="
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 SPARK_GRAFT_PLAN_OUT="$DIGEST" \
+    sbt -batch "runMain graft.tools.PlanDigest" > "$LOGS/plans.log" 2>&1 \
+    || { echo "PLAN DIGEST RUN FAILED (full log: $LOGS/plans.log)"; exit 1; }
+  [[ -s $DIGEST ]] || { echo "NO DIGEST WRITTEN (full log: $LOGS/plans.log)"; exit 1; }
+  if diff -u PLAN_DIGEST.md "$DIGEST" > "$LOGS/plans.diff"; then
+    echo "PLAN_DIGEST.md byte-identical ($(grep -c '^## ' "$DIGEST") sections)"
+  else
+    head -40 "$LOGS/plans.diff"
+    echo "PLAN DRIFT (full diff: $LOGS/plans.diff)"
+    exit 1
+  fi
   echo "== gate: GREEN =="
   exit 0
 fi
