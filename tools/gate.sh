@@ -9,7 +9,7 @@
 #   tools/gate.sh --full      # sf0.01 + sf0.1 bench (the full round shape)
 #   tools/gate.sh --perf      # each perfbench workload once: oracle and
 #                             # stream-multiset checks, 0 failed operations
-#   tools/gate.sh --plans     # regenerate the plan digest at sf0.01 and
+#   tools/gate.sh --plans     # regenerate the plan digest (sf0.01) and
 #                             # fail on any byte of drift from PLAN_DIGEST.md
 #
 # Gotchas encoded here (see .claude/skills/verify/SKILL.md for more):
@@ -48,11 +48,12 @@ fi
 
 if [[ "$MODE" == --plans ]]; then
   # the digest goes to a temp file (SPARK_GRAFT_PLAN_OUT), never over
-  # the committed one, so a drifting tree leaves PLAN_DIGEST.md intact
+  # the committed one, so a drifting tree leaves PLAN_DIGEST.md intact;
+  # it runs at PlanDigest's default scale, the one the committed file uses
   LOGS=$(mktemp -d /tmp/graft_gatelog.XXXXXX)
   DIGEST=$LOGS/PLAN_DIGEST.md
-  echo "== gate: plan digest @/root/testdata/sf0.01 =="
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 SPARK_GRAFT_PLAN_OUT="$DIGEST" \
+  echo "== gate: plan digest =="
+  env -u SPARK_GRAFT_SF_DIR SPARK_GRAFT_PLAN_OUT="$DIGEST" \
     sbt -batch "runMain graft.tools.PlanDigest" > "$LOGS/plans.log" 2>&1 \
     || { echo "PLAN DIGEST RUN FAILED (full log: $LOGS/plans.log)"; exit 1; }
   [[ -s $DIGEST ]] || { echo "NO DIGEST WRITTEN (full log: $LOGS/plans.log)"; exit 1; }
