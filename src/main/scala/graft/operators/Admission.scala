@@ -254,7 +254,7 @@ object Admission {
   /** The admission decision for one shard against the CURRENT index
     * state — the pure policy, shared by the loop and its spec.
     * Returns an eagerly materialized shard-column frame (at most
-    * shard-sized; release with [[Storage.unpersistLocalCheckpoint]]).
+    * shard-sized), which the caller owns.
     * Does NOT mutate anything. */
   private[graft] def decide(
       spark: SparkSession, path: String, shard: DataFrame,
@@ -278,7 +278,7 @@ object Admission {
     val hashed = shard
       .withColumn("text_hash", xxhash64(col("text")))
       .localCheckpoint(eager = true)
-    val exactSurvivors = debugTime("exact stage")(try {
+    val exactSurvivors = debugTime("exact stage")(Storage.releasing(hashed) { hashed =>
       val exactDropped = ContentHashIndex
         .probeNewPlan(spark, store(path, "exact"),
           hashed.select(col("doc_id"), col("text_hash")))
@@ -293,31 +293,31 @@ object Admission {
         .select(shardCols.map(c => col(s"first.$c").as(c)): _*)
         .join(broadcast(exactDropped), Seq("doc_id"), "left_anti")
         .localCheckpoint(eager = true)
-    } finally Storage.unpersistLocalCheckpoint(hashed))
-    val nearSurvivors = debugTime("neardup stage")(try {
-      // near-dup stage: pairs touching the shard, vs index ∪ shard
-      // (eager, output-sized — released below)
-      val pairs = MinHashIndex.probePairs(
-        spark, store(path, "neardup"), exactSurvivors, threshold)
-      try dropPaired(exactSurvivors, pairs)
-      finally Storage.unpersistLocalCheckpoint(pairs)
-    } finally Storage.unpersistLocalCheckpoint(exactSurvivors))
+    })
+    // near-dup stage: pairs touching the shard, vs index ∪ shard
+    // (eager, output-sized)
+    val nearSurvivors = debugTime("neardup stage")(
+      Storage.releasing(exactSurvivors) { survivors =>
+        Storage.releasing(MinHashIndex.probePairs(
+          spark, store(path, "neardup"), survivors, threshold))(
+          dropPaired(survivors, _))
+      })
     // perceptual stage (when on): the same drop law over the hamming
     // ≤ 3 pairs touching the shard — the signature probe is o(index)
     // and runs BEFORE the (embedding-heavy) semantic stage
     val percSurvivors =
       if (!hasPerceptual(spark, path)) nearSurvivors
-      else debugTime("perceptual stage")(try {
-        val pairs = HammingIndex.probePairs(
-          spark, store(path, "perceptual"),
-          nearSurvivors.select(col("doc_id"),
-            col("c0"), col("c1"), col("c2"), col("c3")),
-          maxHamming = 3, maxBucket = perceptualMaxBucket)
-        try dropPaired(nearSurvivors, pairs)
-        finally Storage.unpersistLocalCheckpoint(pairs)
-      } finally Storage.unpersistLocalCheckpoint(nearSurvivors))
+      else debugTime("perceptual stage")(
+        Storage.releasing(nearSurvivors) { survivors =>
+          Storage.releasing(HammingIndex.probePairs(
+            spark, store(path, "perceptual"),
+            survivors.select(col("doc_id"),
+              col("c0"), col("c1"), col("c2"), col("c3")),
+            maxHamming = 3, maxBucket = perceptualMaxBucket))(
+            dropPaired(survivors, _))
+        })
     if (!hasSemantic(spark, path)) percSurvivors
-    else debugTime("semantic stage")(try {
+    else debugTime("semantic stage")(Storage.releasing(percSurvivors) { percSurvivors =>
       // semantic stage: same drop law over the same-inverted-list
       // cosine pairs vs the indexed embeddings ∪ the surviving shard.
       // Compressed tier: ADC shortlist over the PQ codes, exact
@@ -336,9 +336,8 @@ object Admission {
         else IvfIndex.probeSemantic(
           spark, store(path, "semantic"), shardVecs,
           semanticThreshold, semanticMaxList)
-      try dropPaired(percSurvivors, pairs)
-      finally Storage.unpersistLocalCheckpoint(pairs)
-    } finally Storage.unpersistLocalCheckpoint(percSurvivors))
+      Storage.releasing(pairs)(dropPaired(percSurvivors, _))
+    })
   }
 
   /** Admit one epoch: decide (or, on replay, re-read the committed
@@ -356,11 +355,10 @@ object Admission {
     // itself would happily commit into a half-existing store
     LsmSegments.current(spark, admittedPath)
     debugTime("wal commit")(LsmSegments.appendEpoch(spark, admittedPath, epoch) { p =>
-      val admitted = decide(
+      Storage.releasing(decide(
         spark, path, shard, threshold, semanticThreshold,
-        semanticMaxList, semanticShortlist, perceptualMaxBucket)
-      try AdmittedLog.writeSegment(admitted, p)
-      finally Storage.unpersistLocalCheckpoint(admitted)
+        semanticMaxList, semanticShortlist, perceptualMaxBucket))(
+        AdmittedLog.writeSegment(_, p))
     })
     val admitted = spark.read.parquet(s"$admittedPath/deltas/$epoch")
     // the per-store index appends are mutually independent (disjoint

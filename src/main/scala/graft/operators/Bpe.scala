@@ -32,10 +32,9 @@ import org.apache.spark.sql.functions._
   *    greedy left-to-right scan (accumulator = built array + one
   *    pending token), ZERO shuffle.
   *
-  * Storage protocol (same as [[Graph.pageRank]]): each round's vocab
-  * is localCheckpoint'ed and the superseded round released, so the
-  * lineage stays flat in the merge count and executor storage holds
-  * at most two vocab snapshots.
+  * Storage: the vocab rounds run in [[Storage.rounds]], so the lineage
+  * stays flat in the merge count and executor storage holds at most
+  * two vocab snapshots.
   *
   * Determinism: counts are exact integers, tie-breaks total, and the
   * greedy scan is order-defined — the whole merge trajectory is
@@ -58,73 +57,71 @@ object Bpe {
       .agg(count(lit(1)).as("wcount"))
     // Seed symbol sequences: one character per symbol. split on a
     // between-characters lookahead keeps no empty leading element.
-    var vocab = words
+    val vocab = words
       .select(col("word"), col("wcount"),
         split(col("word"), "(?!^)(?=.)").as("toks"))
       .localCheckpoint(true)
-    val merged = Seq.newBuilder[DataFrame]
-    val bests = Seq.newBuilder[DataFrame]
+    // the per-step merge rows, pinned as each round lands; the
+    // returned table is their union
+    val bests = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     try {
-      for (step <- 1 to merges) {
-        // in-row adjacent pairs -> one combinable weighted count
-        val pairCounts = vocab
-          .select(col("wcount"),
-            explode(zip_with(
-              slice(col("toks"), lit(1), size(col("toks")) - 1),
-              slice(col("toks"), lit(2), size(col("toks")) - 1),
-              (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
-          .groupBy(col("p.l").as("m_left"), col("p.r").as("m_right"))
-          .agg(sum(col("wcount")).as("pair_count"))
-        // singleton argmax, total tie order: count DESC, pair ASC.
-        // A corpus that exhausts adjacent pairs before `merges`
-        // rounds would make this aggregate all-NULL (and the oracle's
-        // LIMIT 1 empty) — fail loudly instead of diverging. Lazy
-        // here: it materializes inside the SAME job as the next vocab
-        // round (broadcast subtree), not as its own checkpoint job.
-        val bestLazy = pairCounts
-          .agg(min_by(
-            struct(col("m_left"), col("m_right"), col("pair_count")),
-            struct(negate(col("pair_count")), col("m_left"), col("m_right")))
-            .as("m"))
-          .select(lit(step).as("step"),
-            when(col("m").isNull, raise_error(lit(
-              s"Bpe.learn: no adjacent pairs left at merge step $step — " +
-                "lower `merges` for this corpus")))
-              .otherwise(col("m.m_left")).as("m_left"),
-            col("m.m_right").as("m_right"), col("m.pair_count").as("pair_count"))
-        // the last learned merge is never applied — its application
-        // would only be read by a (nonexistent) next round
-        val best =
-          if (step < merges) {
-            // ONE materializing job per round: the argmax computes in
-            // the broadcast subtree, the merge applies in the main
-            // scan, and the chosen pair rides along as carried
-            // columns — then lifting the per-step merge row back out
-            // is a trivial limit over the in-memory blocks (the prior
-            // formulation paid a second full vocab-aggregation job
-            // per round just to checkpoint that one row).
-            val nextMeta = vocab.crossJoin(broadcast(bestLazy))
-              .select(col("word"), col("wcount"),
-                applyMerge(col("toks"), col("m_left"), col("m_right")).as("toks"),
-                col("step"), col("m_left"), col("m_right"), col("pair_count"))
-              .localCheckpoint(true)
-            Storage.unpersistLocalCheckpoint(vocab)
-            vocab = nextMeta.select(col("word"), col("wcount"), col("toks"))
-            nextMeta
-              .select(col("step"), col("m_left"), col("m_right"), col("pair_count"))
-              .limit(1).localCheckpoint(true)
-          } else bestLazy.localCheckpoint(true)
-        merged += best
-        bests += best
+      // rounds 1 .. merges−1 learn AND apply their merge in ONE
+      // materializing job each: the argmax computes in the broadcast
+      // subtree, the merge applies in the main scan, and the chosen
+      // pair rides along as carried columns, so lifting the step's
+      // merge row back out is a trivial limit over the in-memory blocks
+      // rather than a second vocab aggregation
+      val last = Storage.rounds(vocab, merges - 1, done = { meta =>
+        bests += meta
+          .select(col("step"), col("m_left"), col("m_right"), col("pair_count"))
+          .limit(1).localCheckpoint(true)
+        false
+      }) { meta =>
+        val vocab = meta.select(col("word"), col("wcount"), col("toks"))
+        vocab.crossJoin(broadcast(bestPair(vocab, step = bests.size + 1)))
+          .select(col("word"), col("wcount"),
+            applyMerge(col("toks"), col("m_left"), col("m_right")).as("toks"),
+            col("step"), col("m_left"), col("m_right"), col("pair_count"))
       }
-      // materialize the merge table ONCE, then release every per-step
-      // singleton — callers hold exactly one k-row block, not k+1
-      val out = merged.result().reduce(_ unionAll _).localCheckpoint(true)
-      bests.result().foreach(Storage.unpersistLocalCheckpoint)
-      out
-    } finally {
-      Storage.unpersistLocalCheckpoint(vocab)
-    }
+      // the last learned merge is never applied — its application
+      // would only be read by a (nonexistent) next round
+      Storage.releasing(last) { meta =>
+        bests += bestPair(meta.select(col("word"), col("wcount"), col("toks")),
+          step = merges).localCheckpoint(true)
+        // materialize the merge table ONCE: callers hold exactly one
+        // k-row block, the per-step rows are released below
+        bests.reduce(_ unionAll _).localCheckpoint(true)
+      }
+    } finally bests.foreach(Storage.unpersistLocalCheckpoint)
+  }
+
+  /** The merge learned at `step`: the singleton argmax over the
+    * vocab's weighted adjacent pairs, total tie order count DESC, pair
+    * ASC. Lazy, so it materializes inside the job that consumes it. A
+    * corpus that exhausts adjacent pairs before `merges` rounds would
+    * make the aggregate all-NULL (and the oracle's LIMIT 1 empty), so
+    * it fails loudly instead of diverging. */
+  private def bestPair(vocab: DataFrame, step: Int): DataFrame = {
+    // in-row adjacent pairs -> one combinable weighted count
+    val pairCounts = vocab
+      .select(col("wcount"),
+        explode(zip_with(
+          slice(col("toks"), lit(1), size(col("toks")) - 1),
+          slice(col("toks"), lit(2), size(col("toks")) - 1),
+          (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
+      .groupBy(col("p.l").as("m_left"), col("p.r").as("m_right"))
+      .agg(sum(col("wcount")).as("pair_count"))
+    pairCounts
+      .agg(min_by(
+        struct(col("m_left"), col("m_right"), col("pair_count")),
+        struct(negate(col("pair_count")), col("m_left"), col("m_right")))
+        .as("m"))
+      .select(lit(step).as("step"),
+        when(col("m").isNull, raise_error(lit(
+          s"Bpe.learn: no adjacent pairs left at merge step $step — " +
+            "lower `merges` for this corpus")))
+          .otherwise(col("m.m_left")).as("m_left"),
+        col("m.m_right").as("m_right"), col("m.pair_count").as("pair_count"))
   }
 
   /** Greedy left-to-right application of one merge (l, r) to a symbol

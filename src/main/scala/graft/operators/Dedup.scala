@@ -342,27 +342,28 @@ object Dedup {
     *
     * Driver-coordinated min-label propagation WITH pointer jumping:
     * each round a node takes the minimum of (its label, its
-    * in-neighbors' labels, its label's label). The jump step halves
-    * the remaining distance to the component minimum every round, so
-    * convergence is O(log diameter) — a 20-round budget covers
-    * diameters up to ~2²⁰, and the loop FAILS LOUDLY if it ever
-    * exhausts the budget rather than returning silently-wrong labels.
-    * Each round's result is localCheckpoint'ed so plan lineage stays
-    * flat; the loop runs actions, but every action is a distributed
+    * in-neighbors' labels, its label's label). The jump halves the
+    * remaining distance to the component minimum only when ids grow
+    * along a path; on a chain whose ids are shuffled it does not, and
+    * such a chain can need more rounds than the budget (a replay of
+    * this rule took 26–41 rounds on 80-node shuffled-id paths, over
+    * the default 20). The loop then FAILS LOUDLY rather than returning
+    * silently-wrong labels. The O(log n)-round replacement (FastSV) is
+    * ROADMAP direction 1. Every round's action is a distributed
     * aggregation — nothing is collected to the driver.
     *
-    * Storage hygiene: each round's blocks are unpersisted as soon as
-    * the next round is materialized (and the edge relation when the
-    * loop ends), so executor storage stays at one round's working set
-    * instead of growing by one cached relation per round. Only the
-    * returned label frame stays cached — localCheckpoint truncates
-    * lineage, so the result's blocks must outlive the call.
+    * Storage: the rounds run in [[Storage.rounds]] (each round
+    * checkpointed, the superseded one released), and the edge relation
+    * is released when the loop ends. Only the returned label frame
+    * stays cached — localCheckpoint truncates lineage, so the result's
+    * blocks must outlive the call.
     *
     * Round plan: [[Graph.broadcastStateRows]] picks it from the
     * measured label count, and [[Graph.regimeEdges]] lays the edge
     * relation out for it — the same threshold and prelude as the graph
     * iteratives. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    require(maxIter >= 1, s"connectedComponents: maxIter must be >= 1, got $maxIter")
     // both directions in ONE pass (a unionAll of two projections
     // would re-run the upstream pair generation per branch) into a
     // PERSISTED raw relation — the upstream pair generation is read
@@ -373,7 +374,7 @@ object Dedup {
         struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = raw.select(col("src").as("doc_id")).distinct()
+    val labels = raw.select(col("src").as("doc_id")).distinct()
       .withColumn("cluster_id", col("doc_id"))
       .localCheckpoint(true)
     // |V| picks the round plan: counting the checkpointed labels costs
@@ -381,82 +382,73 @@ object Dedup {
     val nV = labels.count()
     val (smallGraph, edges) = Graph.regimeEdges(raw, nV)
     var it = 0
-    var converged = nV == 0L
-    try {
-      while (!converged && it < maxIter) {
-        val next = (if (smallGraph) {
-          // BROADCAST round plan (guide §3.1: broadcast the side that
-          // fits): the |V|-row label state ships to the executors and
-          // the round is ONE stage over the dst-partitioned edges —
-          // in-neighbor min (partial+final agg with no exchange), own
-          // label merge, pointer jump, all via broadcast joins. Every
-          // node appears as a dst (both directions were emitted), so
-          // the aggregation covers the full label domain.
-          val inMin = edges
-            .join(broadcast(labels), edges("src") === labels("doc_id"))
-            .groupBy(col("dst").as("doc_id"))
-            .agg(min("cluster_id").as("nbr_min"))
-          val own = inMin
-            .join(broadcast(labels.select(col("doc_id").as("o_id"),
-              col("cluster_id").as("own"))), col("doc_id") === col("o_id"))
-            .select(col("doc_id"),
-              least(col("nbr_min"), col("own")).as("cluster_id"),
-              col("own").as("prev"))
-          own
-            .join(broadcast(labels.select(col("doc_id").as("p_id"),
-              col("cluster_id").as("p_label"))),
-              own("cluster_id") === col("p_id"), "left")
-            .select(col("doc_id"),
-              least(col("cluster_id"), coalesce(col("p_label"), col("cluster_id")))
-                .as("cluster_id"),
-              col("prev"))
-        } else {
-          // SHUFFLE round plan (the 100 TB regime): only the |V|-row
-          // label state moves; the edge relation streams through the
-          // shuffle_hash join with no re-exchange. Each doc
-          // contributes exactly one row from the labels branch, so
-          // min(prev) recovers its previous label through the
-          // aggregation — the convergence test then reads straight
-          // off the checkpointed result.
-          val propagated = edges
-            .join(labels.hint("shuffle_hash"), edges("src") === labels("doc_id"))
-            .select(col("dst").as("doc_id"), col("cluster_id"),
-              lit(null).cast("long").as("prev"))
-            .unionAll(labels.select(
-              col("doc_id"), col("cluster_id"), col("cluster_id").as("prev")))
-            .groupBy("doc_id").agg(
-              min("cluster_id").as("cluster_id"), min("prev").as("prev"))
-          // pointer jump: follow my label to ITS label (labels are doc
-          // ids, so every label row exists in the labels relation)
-          propagated
-            .join(labels.select(col("doc_id").as("p_id"), col("cluster_id").as("p_label")),
-              propagated("cluster_id") === col("p_id"), "left")
-            .select(col("doc_id"),
-              least(col("cluster_id"), coalesce(col("p_label"), col("cluster_id")))
-                .as("cluster_id"),
-              col("prev"))
-        }).localCheckpoint(true)
-        converged = next.where(col("cluster_id") =!= col("prev")).isEmpty
-        // `next` is eagerly materialized and the convergence check has
-        // run — nothing references the superseded round's blocks anymore
-        Storage.unpersistLocalCheckpoint(labels)
-        labels = next.select("doc_id", "cluster_id")
-        it += 1
-        // dev-only round visibility for the optimization profiles
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(s"[cc] round $it converged=$converged")
-      }
-      require(converged,
+    // the convergence probe, over the checkpointed round
+    def converged(next: DataFrame): Boolean = {
+      val done = next.where(col("cluster_id") =!= col("prev")).isEmpty
+      it += 1
+      // dev-only round visibility for the optimization profiles
+      if (sys.env.contains("GRAFT_CC_DEBUG"))
+        println(s"[cc] round $it converged=$done")
+      require(done || it < maxIter,
         s"connectedComponents did not converge in $maxIter rounds — raise maxIter")
-      labels
-    } finally {
-      // success or failure, the edge relations are never needed again;
-      // on failure (non-convergence or a mid-loop job error) the last
-      // round's labels must be released too — a caller that catches
-      // and retries with a larger budget must not strand blocks
-      edges.unpersist(blocking = false)
-      if (!converged) Storage.unpersistLocalCheckpoint(labels)
+      done
     }
+    try Storage.rounds(labels, if (nV == 0L) 0 else maxIter, done = converged) { prev =>
+      val labels = prev.select("doc_id", "cluster_id")
+      if (smallGraph) {
+        // BROADCAST round plan (guide §3.1: broadcast the side that
+        // fits): the |V|-row label state ships to the executors and
+        // the round is ONE stage over the dst-partitioned edges —
+        // in-neighbor min (partial+final agg with no exchange), own
+        // label merge, pointer jump, all via broadcast joins. Every
+        // node appears as a dst (both directions were emitted), so
+        // the aggregation covers the full label domain.
+        val inMin = edges
+          .join(broadcast(labels), edges("src") === labels("doc_id"))
+          .groupBy(col("dst").as("doc_id"))
+          .agg(min("cluster_id").as("nbr_min"))
+        val own = inMin
+          .join(broadcast(labels.select(col("doc_id").as("o_id"),
+            col("cluster_id").as("own"))), col("doc_id") === col("o_id"))
+          .select(col("doc_id"),
+            least(col("nbr_min"), col("own")).as("cluster_id"),
+            col("own").as("prev"))
+        own
+          .join(broadcast(labels.select(col("doc_id").as("p_id"),
+            col("cluster_id").as("p_label"))),
+            own("cluster_id") === col("p_id"), "left")
+          .select(col("doc_id"),
+            least(col("cluster_id"), coalesce(col("p_label"), col("cluster_id")))
+              .as("cluster_id"),
+            col("prev"))
+      } else {
+        // SHUFFLE round plan (the 100 TB regime): only the |V|-row
+        // label state moves; the edge relation streams through the
+        // shuffle_hash join with no re-exchange. Each doc
+        // contributes exactly one row from the labels branch, so
+        // min(prev) recovers its previous label through the
+        // aggregation — the convergence test then reads straight
+        // off the checkpointed result.
+        val propagated = edges
+          .join(labels.hint("shuffle_hash"), edges("src") === labels("doc_id"))
+          .select(col("dst").as("doc_id"), col("cluster_id"),
+            lit(null).cast("long").as("prev"))
+          .unionAll(labels.select(
+            col("doc_id"), col("cluster_id"), col("cluster_id").as("prev")))
+          .groupBy("doc_id").agg(
+            min("cluster_id").as("cluster_id"), min("prev").as("prev"))
+        // pointer jump: follow my label to ITS label (labels are doc
+        // ids, so every label row exists in the labels relation)
+        propagated
+          .join(labels.select(col("doc_id").as("p_id"), col("cluster_id").as("p_label")),
+            propagated("cluster_id") === col("p_id"), "left")
+          .select(col("doc_id"),
+            least(col("cluster_id"), coalesce(col("p_label"), col("cluster_id")))
+              .as("cluster_id"),
+            col("prev"))
+      }
+    }.select("doc_id", "cluster_id")
+    finally edges.unpersist(blocking = false)
   }
 
   /** Canonical-survivor selection — the decision step that turns a

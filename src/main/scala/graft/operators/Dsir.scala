@@ -114,11 +114,9 @@ object Dsir {
   def updateStats(
       state: DataFrame, batch: DataFrame, targetPred: Column,
       nBuckets: Int): DataFrame = {
-    val delta = denseStats(batch, targetPred, nBuckets)
-      .select(col("bucket"), col("rc").as("drc"), col("tc").as("dtc"))
-    val merged = statsFoldPlan(state, delta).localCheckpoint(true)
-    graft.operators.Storage.unpersistLocalCheckpoint(delta)
-    merged
+    Storage.releasing(denseStats(batch, targetPred, nBuckets)
+        .select(col("bucket"), col("rc").as("drc"), col("tc").as("dtc")))(
+      statsFoldPlan(state, _).localCheckpoint(true))
   }
 
   /** Pure fold plan for one [[updateStats]] step — factored out so
@@ -170,8 +168,8 @@ object Dsir {
     * fit pins one nBuckets-row checkpoint for the life of the returned
     * plan; callers that score repeatedly or need explicit release
     * should hold [[denseStats]] themselves (score via [[lrFromStats]]
-    * + [[scoreAgainst]], release with Storage.unpersistLocalCheckpoint
-    * — the pattern TextQueries' dsirStats memo implements). */
+    * + [[scoreAgainst]] — the pattern TextQueries' dsirStats memo
+    * implements). */
   def importanceWeights(docs: DataFrame, targetPred: Column, nBuckets: Int): DataFrame =
     scoreAgainst(logRatioModel(docs, targetPred, nBuckets), docs, nBuckets)
 

@@ -19,13 +19,11 @@ import org.apache.spark.sql.functions._
   * Round plans: each iterative picks its regime from the measured
   * state size — see [[broadcastStateRows]].
   *
-  * Storage protocol (same as [[Dedup.connectedComponents]]): the edge
-  * list — often an expensive join upstream — is cached ONCE, growing
-  * round state is checkpointed (or chained lazily where a round
-  * references it exactly once), superseded rounds are released as
-  * soon as their successor is materialized, and every base relation
-  * is released before returning — the result frame is itself
-  * materialized, so nothing dangles. Without this, Spark's
+  * Storage: the edge list — often an expensive join upstream — is
+  * cached ONCE, growing round state runs in [[Storage.rounds]] (or
+  * chains lazily where a round references it exactly once), and every
+  * base relation is released before returning — the result frame is
+  * itself materialized, so nothing dangles. Without this, Spark's
   * no-plan-sharing rule re-evaluates the edge subplan several times
   * per iteration.
   */
@@ -150,33 +148,26 @@ object Graph {
     // one eager job warms BOTH caches (nodeInfo reads raw) AND
     // measures |V| — nodeInfo is one row per node
     val (broadcastState, e) = regimeEdges(raw, nodeInfo.count())
-    // round 0 derives from the cached nodeInfo — only successor
-    // rounds own a checkpoint (and are safe to release when
-    // superseded)
-    var pr = nodeInfo.withColumn("pr", col("is_src") * lit(SCALE))
-    var prOwned = false
+    // round 0 derives from the cached nodeInfo (and through it from
+    // the caller's edges), so the shuffle loop borrows it
+    val base = nodeInfo.withColumn("pr", col("is_src") * lit(SCALE))
     try {
-      if (broadcastState) {
-        // the broadcast round references the previous state exactly
-        // ONCE (contrib is a pure projection; nodeInfo/e are cached
-        // relations), so the whole trajectory chains LAZILY into one
-        // materializing job — plan size is linear in iters and the
-        // k−1 intermediate checkpoint jobs (pure round latency at
-        // small |V|) disappear. Identical expressions per round, so
-        // the trajectory stays bit-identical to the per-round-
-        // checkpointed form the spec pins.
-        for (_ <- 1 to iters) pr = pprRound(e, nodeInfo, pr, broadcastState)
-        pr = pr.localCheckpoint(true)
-        prOwned = true
-      } else for (_ <- 1 to iters) {
-        val next = pprRound(e, nodeInfo, pr, broadcastState).localCheckpoint(true)
-        if (prOwned) Storage.unpersistLocalCheckpoint(pr)
-        pr = next
-        prOwned = true
-      }
-      // iters == 0: materialize the base ranks before the finally
-      // releases the nodeInfo blocks they'd otherwise recompute from
-      if (!prOwned) pr = pr.localCheckpoint(true)
+      val pr =
+        if (broadcastState || iters <= 0)
+          // the broadcast round references the previous state exactly
+          // ONCE (contrib is a pure projection; nodeInfo/e are cached
+          // relations), so the whole trajectory chains LAZILY into one
+          // materializing job — plan size is linear in iters and the
+          // k−1 intermediate checkpoint jobs (pure round latency at
+          // small |V|) disappear. Identical expressions per round, so
+          // the trajectory stays bit-identical to the per-round-
+          // checkpointed form the spec pins. (No rounds: materialize
+          // the base ranks, which read the nodeInfo blocks released
+          // below.)
+          (1 to iters).foldLeft(base)((pr, _) =>
+            pprRound(e, nodeInfo, pr, broadcastState)).localCheckpoint(true)
+        else Storage.rounds(base, iters, ownsInit = false)(
+          pprRound(e, nodeInfo, _, broadcastState))
       pr.select(col("node_id"), col("pr"))
     } finally {
       // the returned ranks are materialized — the base relations are
@@ -425,8 +416,16 @@ object Graph {
     var hubState = nodes.select(col("node_id"), lit(SCALE).as("hub"))
     var aNorm: DataFrame = null
     var hNorm: DataFrame = null
-    var rawAPrev: DataFrame = null
-    var rawHPrev: DataFrame = null
+    // HITS keeps its own loop: a round is TWO checkpoints (the raw
+    // sums of both half-steps), and the last round's authorities are
+    // read again by the final merge, so [[Storage.rounds]]' one live
+    // frame per round cannot hold it. `live` is the round's checkpoints
+    // the current normalized states read.
+    var live = Seq.empty[DataFrame]
+    def releaseLive(): Unit = {
+      live.foreach(Storage.unpersistLocalCheckpoint)
+      live = Nil
+    }
     try {
       if (broadcastState) for (i <- 1 to iters) {
         // broadcast regime: the window-form normalizer references its
@@ -439,12 +438,12 @@ object Graph {
         aNorm = hitsMaxNormBc(hitsRawAuth(eDst, hubState, broadcastState), "ra", "auth")
         if (i == iters) {
           aNorm = aNorm.localCheckpoint(true)
-          rawAPrev = aNorm
+          live :+= aNorm
         }
         hNorm = hitsMaxNormBc(hitsRawHub(eSrc, aNorm, broadcastState), "rh", "hub")
         if (i == iters) {
           hNorm = hNorm.localCheckpoint(true)
-          rawHPrev = hNorm
+          live :+= hNorm
         }
         hubState = hNorm
       } else for (_ <- 1 to iters) {
@@ -453,33 +452,29 @@ object Graph {
         val rawA = hitsRawAuth(eSrc, hubState, broadcastState).localCheckpoint(true)
         // the previous round's raw relations fed this job (via the
         // lazy normalizers); safe to release only now
-        if (rawAPrev != null) Storage.unpersistLocalCheckpoint(rawAPrev)
-        if (rawHPrev != null) Storage.unpersistLocalCheckpoint(rawHPrev)
+        releaseLive()
+        live = Seq(rawA)
         aNorm = hitsMaxNorm(rawA, "ra", "auth")
         // hub half-step over the NEW authorities
         val rawH = hitsRawHub(eDst, aNorm, broadcastState).localCheckpoint(true)
+        live :+= rawH
         hNorm = hitsMaxNorm(rawH, "rh", "hub")
         hubState = hNorm
-        rawAPrev = rawA
-        rawHPrev = rawH
       }
-      val result =
-        if (iters <= 0) // no rounds ran (hNorm/aNorm never assigned)
-          nodes.select(col("node_id"),
-            lit(SCALE).as("hub"), lit(SCALE).as("auth"))
-            .localCheckpoint(true)
-        else
-          nodes
-            .join(reattachSide(hNorm, broadcastState), Seq("node_id"), "left")
-            .join(reattachSide(aNorm, broadcastState), Seq("node_id"), "left")
-            .select(col("node_id"),
-              coalesce(col("hub"), lit(0L)).as("hub"),
-              coalesce(col("auth"), lit(0L)).as("auth"))
-            .localCheckpoint(true)
-      result
+      if (iters <= 0) // no rounds ran (hNorm/aNorm never assigned)
+        nodes.select(col("node_id"),
+          lit(SCALE).as("hub"), lit(SCALE).as("auth"))
+          .localCheckpoint(true)
+      else
+        nodes
+          .join(reattachSide(hNorm, broadcastState), Seq("node_id"), "left")
+          .join(reattachSide(aNorm, broadcastState), Seq("node_id"), "left")
+          .select(col("node_id"),
+            coalesce(col("hub"), lit(0L)).as("hub"),
+            coalesce(col("auth"), lit(0L)).as("auth"))
+          .localCheckpoint(true)
     } finally {
-      if (rawAPrev != null) Storage.unpersistLocalCheckpoint(rawAPrev)
-      if (rawHPrev != null) Storage.unpersistLocalCheckpoint(rawHPrev)
+      releaseLive()
       Storage.unpersistLocalCheckpoint(nodes)
       eSrc.unpersist(blocking = false)
       eDst.unpersist(blocking = false)
@@ -660,7 +655,7 @@ object Graph {
     * driver-side but the one-count convergence probe per round over
     * an already-materialized relation (pinned in PlanShapeSpec). */
   def kCore(und: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var edges: DataFrame = und
+    val adjacency = und
       .select(explode(array(
         struct(col("a").as("node"), col("b").as("nbr")),
         struct(col("b").as("node"), col("a").as("nbr")))).as("e"))
@@ -668,38 +663,33 @@ object Graph {
       .agg(collect_set(col("e.nbr")).as("nbrs"))
       .select(col("src"), explode(col("nbrs")).as("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var n = edges.count()
+    var n = adjacency.count()
     // regime probe: |E| bounds the O(|V|) alive relation the
     // broadcast round ships, so the edge count (already measured for
     // the convergence test) is a safe conservative guard
     val smallGraph = n <= broadcastStateRows(und)
     var done = n == 0
-    // in the small regime each round's survivors are checkpointed
+    // kCore keeps its own loop: the shuffle regime PERSISTS its rounds
+    // (see above), which [[Storage.rounds]]' checkpoint loop cannot do.
+    // In the small regime each round's survivors are checkpointed
     // (LEAF state — the broadcast round references it twice, which
     // on a persisted-only state would double the ANALYZED plan tree
     // per round, the exact driver OOM the window form was built to
-    // avoid); the initial persisted adjacency is released as soon as
-    // round 1's checkpoint exists
-    var edgesCkpt: DataFrame = null
+    // avoid); either way a superseded round, the persisted adjacency
+    // included, is released once its successor is materialized
+    def release(state: DataFrame): Unit =
+      if (smallGraph && (state ne adjacency)) Storage.unpersistLocalCheckpoint(state)
+      else state.unpersist(blocking = false)
+    var edges = adjacency
     try {
       for (_ <- 1 to rounds if !done) {
-        val m =
-          if (smallGraph) {
-            val next = kCoreRoundBc(edges, k).localCheckpoint(true)
-            val c = next.count()
-            if (edgesCkpt != null) Storage.unpersistLocalCheckpoint(edgesCkpt)
-            else edges.unpersist(blocking = false)
-            edgesCkpt = next
-            edges = next
-            c
-          } else {
-            val next = kCoreRound(edges, k)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val c = next.count()
-            edges.unpersist(blocking = false)
-            edges = next
-            c
-          }
+        val next =
+          if (smallGraph) kCoreRoundBc(edges, k).localCheckpoint(true)
+          else kCoreRound(edges, k)
+            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val m = next.count()
+        release(edges)
+        edges = next
         done = m == n || m == 0
         n = m
       }
@@ -709,10 +699,7 @@ object Graph {
         .groupBy(col("src").as("node_id"))
         .agg(count(lit(1)).as("deg_in_core"))
         .localCheckpoint(true)
-    } finally {
-      if (edgesCkpt != null) Storage.unpersistLocalCheckpoint(edgesCkpt)
-      else edges.unpersist(blocking = false)
-    }
+    } finally release(edges)
   }
 
   /** One peel round over a hash(src)-partitioned SYMMETRIC edge list —
@@ -806,7 +793,7 @@ object Graph {
     // separate nodes relation exists: round N's reattach left-joins
     // votes back onto the state itself. The init checkpoint doubles
     // as the job that warms the raw edge cache.
-    var lbl = raw.select(col("src").as("node_id"))
+    val lbl = raw.select(col("src").as("node_id"))
       .union(raw.select(col("dst").as("node_id")))
       .distinct()
       .select(col("node_id"),
@@ -817,14 +804,8 @@ object Graph {
           .as("community"))
       .localCheckpoint(true)
     val (broadcastState, e) = regimeEdges(raw, lbl.count())
-    try {
-      for (_ <- 1 to rounds) {
-        val next = labelPropRound(e, lbl, broadcastState).localCheckpoint(true)
-        Storage.unpersistLocalCheckpoint(lbl)
-        lbl = next
-      }
-      lbl
-    } finally e.unpersist(blocking = false)
+    try Storage.rounds(lbl, rounds)(labelPropRound(e, _, broadcastState))
+    finally e.unpersist(blocking = false)
   }
 
   /** Multi-source BFS: minimum hop count from any node in `sources`
@@ -864,9 +845,8 @@ object Graph {
     * |V|-row outer join. Induction gives exactness: after round r,
     * dist(v) equals the ≤ r-hop optimum (every prefix-optimal value
     * is offered the round after it is achieved), so frontier pruning
-    * changes cost, never the answer. Same storage protocol as
-    * [[pageRank]]: edges persisted pre-partitioned once, each round's
-    * state checkpointed, superseded rounds released immediately.
+    * changes cost, never the answer. Edges are persisted
+    * pre-partitioned once and the rounds run in [[Storage.rounds]].
     *
     * Overflow headroom: dist ≤ rounds · max|w|; the relaxation add is
     * int64 with no guard — callers with |w| near 2⁶³/rounds own the
@@ -889,20 +869,13 @@ object Graph {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     import spark.implicits._
     // round-0 state = the sources at distance 0; also the warm-up job
-    var state = sources.toSet.toSeq.sorted.toDF("node_id")
+    val state = sources.toSet.toSeq.sorted.toDF("node_id")
       .select(col("node_id").cast("long").as("node_id"),
         lit(0L).as("dist"), lit(true).as("improved"))
       .localCheckpoint(true)
-    try {
-      for (_ <- 1 to rounds) {
-        val next = ssspRound(e, state).localCheckpoint(true)
-        Storage.unpersistLocalCheckpoint(state)
-        state = next
-      }
-      val out = state.select(col("node_id"), col("dist")).localCheckpoint(true)
-      Storage.unpersistLocalCheckpoint(state)
-      out
-    } finally e.unpersist(blocking = false)
+    try Storage.releasing(Storage.rounds(state, rounds)(ssspRound(e, _)))(
+      _.select(col("node_id"), col("dist")).localCheckpoint(true))
+    finally e.unpersist(blocking = false)
   }
 
   /** PER-SOURCE bounded BFS: [[bfs]] keyed by (src_id, node_id) —
@@ -922,22 +895,14 @@ object Graph {
       .repartition(col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     import spark.implicits._
-    var state = sources.toSet.toSeq.sorted.toDF("src_id")
+    val state = sources.toSet.toSeq.sorted.toDF("src_id")
       .select(col("src_id").cast("long").as("src_id"),
         col("src_id").cast("long").as("node_id"),
         lit(0L).as("hops"), lit(true).as("improved"))
       .localCheckpoint(true)
-    try {
-      for (_ <- 1 to maxHops) {
-        val next = bfsPerSourceRound(e, state).localCheckpoint(true)
-        Storage.unpersistLocalCheckpoint(state)
-        state = next
-      }
-      val out = state.select(col("src_id"), col("node_id"), col("hops"))
-        .localCheckpoint(true)
-      Storage.unpersistLocalCheckpoint(state)
-      out
-    } finally e.unpersist(blocking = false)
+    try Storage.releasing(Storage.rounds(state, maxHops)(bfsPerSourceRound(e, _)))(
+      _.select(col("src_id"), col("node_id"), col("hops")).localCheckpoint(true))
+    finally e.unpersist(blocking = false)
   }
 
   /** One composite-keyed BFS superstep — [[ssspRound]] keyed by

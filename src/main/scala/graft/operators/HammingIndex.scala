@@ -127,8 +127,7 @@ object HammingIndex extends SegmentedIndex {
     * from the index) — the admission check, vs the indexed corpus ∪
     * the shard. `maxHamming` ≤ 3 keeps the 4-chunk pigeonhole
     * exhaustive (asserted). Returns (a_id, b_id, hamming), eagerly
-    * materialized (output-sized); release with
-    * [[Storage.unpersistLocalCheckpoint]]. */
+    * materialized (output-sized). */
   def probePairs(
       spark: SparkSession, path: String, newSignatures: DataFrame,
       maxHamming: Int = 3, maxBucket: Int = Int.MaxValue): DataFrame = {
@@ -137,10 +136,8 @@ object HammingIndex extends SegmentedIndex {
         "pigeonhole (exhaustive blocking needs maxHamming + 1 <= chunks)")
     require(maxBucket >= 2,
       s"probePairs: maxBucket $maxBucket can admit no pairs at all")
-    val newSigs = sigCols(newSignatures).localCheckpoint(eager = true)
-    try probePairsPlan(spark, path, newSigs, maxHamming, maxBucket)
-      .localCheckpoint(eager = true)
-    finally Storage.unpersistLocalCheckpoint(newSigs)
+    Storage.releasing(sigCols(newSignatures).localCheckpoint(eager = true))(
+      probePairsPlan(spark, path, _, maxHamming, maxBucket).localCheckpoint(eager = true))
   }
 
   /** The pure probe plan over ALREADY-MATERIALIZED shard signatures —

@@ -109,8 +109,7 @@ object IvfIndex extends SegmentedIndex {
     * corpus is never shuffled; within-shard pairs are a broadcast
     * self-join. The shard assignment is computed ONCE (eager
     * localCheckpoint — it feeds three plan branches) and the result
-    * comes back eagerly materialized (it is output-sized); release
-    * with [[Storage.unpersistLocalCheckpoint]].
+    * comes back eagerly materialized (it is output-sized).
     *
     * SKEW CAP (`maxList`): a touched inverted list holding more than
     * `maxList` INDEXED members is saturated and contributes NO pairs —
@@ -130,11 +129,9 @@ object IvfIndex extends SegmentedIndex {
   def probeSemantic(
       spark: SparkSession, path: String, newVectors: DataFrame,
       threshold: Double = 0.95, maxList: Int = 4096): DataFrame = {
-    val shard = Similarity.ivfAssign(newVectors, centroids(spark, path))
-      .localCheckpoint(eager = true)
-    try probeSemanticPlan(spark, path, shard, threshold, maxList)
-      .localCheckpoint(eager = true)
-    finally Storage.unpersistLocalCheckpoint(shard)
+    Storage.releasing(Similarity.ivfAssign(newVectors, centroids(spark, path))
+        .localCheckpoint(eager = true))(
+      probeSemanticPlan(spark, path, _, threshold, maxList).localCheckpoint(eager = true))
   }
 
   /** Pure plan builder of [[probeSemantic]] over an already-assigned,

@@ -246,12 +246,10 @@ object IvfPqIndex extends SegmentedIndex {
       vectorSource: DataFrame, threshold: Double = 0.95,
       shortlist: Int = 8, maxList: Int = 4096): DataFrame = {
     val centroids = spark.read.parquet(s"$path/centroids")
-    val shard = Similarity.ivfAssign(newVectors, centroids)
-      .localCheckpoint(eager = true)
-    try probeSemanticPlan(
-      spark, path, shard, vectorSource, threshold, shortlist, maxList)
-      .localCheckpoint(eager = true)
-    finally Storage.unpersistLocalCheckpoint(shard)
+    Storage.releasing(Similarity.ivfAssign(newVectors, centroids)
+        .localCheckpoint(eager = true))(
+      probeSemanticPlan(spark, path, _, vectorSource, threshold, shortlist, maxList)
+        .localCheckpoint(eager = true))
   }
 
   /** Pure plan builder of [[probeSemantic]] over an already-assigned,

@@ -147,18 +147,14 @@ object MinHashIndex extends SegmentedIndex {
     * branch's scan so an exchange can't be reused either — so the
     * fingerprints are an eager localCheckpoint released before return,
     * and the RESULT comes back eagerly materialized (it is
-    * output-sized: the near-dup pairs touching the shard). Same
-    * pinned-result contract as [[Dedup.connectedComponents]]; release
-    * with [[Storage.unpersistLocalCheckpoint]] when done. */
+    * output-sized: the near-dup pairs touching the shard). */
   def probePairs(
       spark: SparkSession, path: String, newDocuments: DataFrame,
       threshold: Double = 0.5): DataFrame = {
     val (shingleN, numHashes, bands) = readMeta(spark, path)
-    val newFp = fingerprints(newDocuments, shingleN, numHashes, bands)
-      .localCheckpoint(eager = true)
-    try probePairsPlan(spark, path, newFp, threshold)
-      .localCheckpoint(eager = true)
-    finally Storage.unpersistLocalCheckpoint(newFp)
+    Storage.releasing(fingerprints(newDocuments, shingleN, numHashes, bands)
+        .localCheckpoint(eager = true))(
+      probePairsPlan(spark, path, _, threshold).localCheckpoint(eager = true))
   }
 
   /** The pure probe plan over ALREADY-MATERIALIZED shard fingerprints

@@ -72,35 +72,34 @@ object RecordAdmission {
   /** The admission decision for one shard against the CURRENT
     * register — the pure policy, shared by the loop and its spec.
     * Returns an eagerly materialized (id, name, block) frame (at most
-    * shard-sized; release with [[Storage.unpersistLocalCheckpoint]]).
+    * shard-sized), which the caller owns.
     * Does NOT mutate anything. */
   private[graft] def decide(
       spark: SparkSession, path: String, shard: DataFrame,
       maxDist: Int, maxPairsPerBlock: Long = 100000000L): DataFrame = {
     // one scan of the shard source, pinned: three consumers below
     // (register probe, in-shard pair law, survivor projections)
-    val pinned = shard.select("id", "name", "block")
-      .localCheckpoint(eager = true)
-    try {
+    Storage.releasing(shard.select("id", "name", "block")
+        .localCheckpoint(eager = true)) { pinned =>
       // stage 1: the o(index) fuzzy screen vs the register
-      val matches = RecordIndex.probeShard(
-        spark, store(path, "register"), pinned, maxDist, maxPairsPerBlock)
-      val screened = try pinned
-        .join(broadcast(matches.select(col("shard_id").as("id")).distinct()),
-          Seq("id"), "left_anti")
-        .localCheckpoint(eager = true)
-      finally Storage.unpersistLocalCheckpoint(matches)
+      val screened = Storage.releasing(RecordIndex.probeShard(
+          spark, store(path, "register"), pinned, maxDist, maxPairsPerBlock)) { matches =>
+        pinned
+          .join(broadcast(matches.select(col("shard_id").as("id")).distinct()),
+            Seq("id"), "left_anti")
+          .localCheckpoint(eager = true)
+      }
       // stage 2: smaller-id dominance among screen survivors — any
       // a < b pair drops b (a rejected survivor still dominates)
-      try {
+      Storage.releasing(screened) { screened =>
         val pairs = EntityResolution.blockedPairs(
           screened, Seq("block"), maxDist, maxPairsPerBlock)
         screened
           .join(broadcast(pairs.select(col("b_id").as("id")).distinct()),
             Seq("id"), "left_anti")
           .localCheckpoint(eager = true)
-      } finally Storage.unpersistLocalCheckpoint(screened)
-    } finally Storage.unpersistLocalCheckpoint(pinned)
+      }
+    }
   }
 
   /** Admit one epoch: decide (or, on replay, re-read the committed
@@ -115,9 +114,8 @@ object RecordAdmission {
     // fail fast on a loop that was never [[init]]ed
     LsmSegments.current(spark, admittedPath)
     LsmSegments.appendEpoch(spark, admittedPath, epoch) { p =>
-      val admitted = decide(spark, path, shard, maxDist, maxPairsPerBlock)
-      try AdmittedLog.writeSegment(admitted, p)
-      finally Storage.unpersistLocalCheckpoint(admitted)
+      Storage.releasing(decide(spark, path, shard, maxDist, maxPairsPerBlock))(
+        AdmittedLog.writeSegment(_, p))
     }
     val admitted = spark.read.parquet(s"$admittedPath/deltas/$epoch")
     RecordIndex.appendEpoch(spark, store(path, "register"), epoch, admitted)

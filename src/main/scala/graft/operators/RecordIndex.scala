@@ -55,19 +55,15 @@ object RecordIndex extends SegmentedIndex {
   def probeShard(
       spark: SparkSession, path: String, shard: DataFrame,
       maxDist: Int, maxPairsPerBlock: Long = 100000000L): DataFrame = {
-    // same pinned-result contract as MinHashIndex/HammingIndex
-    // .probePairs: the shard feeds three plan branches (block count,
-    // block semi-join keys, the final pair join) that share no work,
-    // and the RESULT is eagerly materialized so a sink running more
-    // than one action can never re-read segment files a concurrent
-    // compact/gc retired mid-batch — the snapshot-per-batch guarantee
-    // recordProbeStream documents. Release with
-    // [[Storage.unpersistLocalCheckpoint]].
-    val pinned = shard.select("id", "name", "block")
-      .localCheckpoint(eager = true)
-    try probeShardOver(readAll(spark, path), pinned, maxDist, maxPairsPerBlock)
-      .localCheckpoint(eager = true)
-    finally Storage.unpersistLocalCheckpoint(pinned)
+    // the shard feeds three plan branches (block count, block
+    // semi-join keys, the final pair join) that share no work, and the
+    // RESULT is eagerly materialized so a sink running more than one
+    // action can never re-read segment files a concurrent compact/gc
+    // retired mid-batch — the snapshot-per-batch guarantee
+    // recordProbeStream documents
+    Storage.releasing(shard.select("id", "name", "block").localCheckpoint(eager = true))(
+      probeShardOver(readAll(spark, path), _, maxDist, maxPairsPerBlock)
+        .localCheckpoint(eager = true))
   }
 
   /** [[probeShard]] against an explicit snapshot (the as-of serves
@@ -123,19 +119,17 @@ object RecordIndex extends SegmentedIndex {
     * expands, the comparison streams through one equi-join on
     * `block` (Σ |shard_b|·|index_b| — the blocking contract's own
     * bound), and the same loud per-block budget rides the FIRST
-    * scored field. Result eagerly pinned; release with
-    * [[Storage.unpersistLocalCheckpoint]]. */
+    * scored field. Result eagerly pinned. */
   def probeShardMulti(
       spark: SparkSession, path: String, shard: DataFrame,
       fields: Seq[EntityResolution.FieldScore], minScore: Int,
       maxPairsPerBlock: Long = 100000000L): DataFrame = {
     require(fields.nonEmpty, "probeShardMulti: no fields to score")
-    val pinned = shard
-      .select((Seq("id", "block") ++ fields.map(_.field)).map(col): _*)
-      .localCheckpoint(eager = true)
-    try probeShardMultiOver(readAll(spark, path), pinned, fields,
-      minScore, maxPairsPerBlock).localCheckpoint(eager = true)
-    finally Storage.unpersistLocalCheckpoint(pinned)
+    Storage.releasing(shard
+        .select((Seq("id", "block") ++ fields.map(_.field)).map(col): _*)
+        .localCheckpoint(eager = true))(
+      probeShardMultiOver(readAll(spark, path), _, fields,
+        minScore, maxPairsPerBlock).localCheckpoint(eager = true))
   }
 
   /** [[probeShardMulti]] against an explicit snapshot. */

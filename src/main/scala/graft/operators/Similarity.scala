@@ -388,91 +388,80 @@ object Similarity {
         slice(guarded, m * subDim + 1, subDim)): _*)))
       .toDF("vec_id", "m", "sv")
       .localCheckpoint(true)
-    // round state: one row per subspace holding the cw_k-ascending
-    // centroid list — the exact form the broadcast assignment consumes
-    // (the kmeans one-row-state protocol, keyed by m)
-    var cents = sliced.where(col("vec_id") < codebookSize)
-      .select(col("m"), col("vec_id").cast("int").as("cw_k"), col("sv").as("cw"))
-      .groupBy("m")
-      .agg(array_sort(collect_list(struct(col("cw_k"), col("cw")))).as("cents"))
-      .localCheckpoint(true)
-    try for (_ <- 1 to iters) {
-      val assigned = sliced.join(broadcast(cents), "m")
-        .select(col("m"), col("sv"),
-          aggregate(col("cents"),
-            struct(lit(Double.NegativeInfinity).as("key"), lit(-1).as("cw_k")),
-            (acc, c) => {
-              // argmax of -d2 == argmin d2; strict > keeps the FIRST
-              // (lowest cw_k) on ties, matching ORDER BY d2, cw_k
-              val key = -squaredL2(col("sv"), c.getField("cw"))
-              when(key > acc.getField("key"),
-                struct(key.as("key"), c.getField("cw_k").as("cw_k")))
-                .otherwise(acc)
-            }).getField("cw_k").as("cw_k"))
-      // recompute in ONE static-width aggregation (subDim is a
-      // parameter, so the per-dimension decimal sums are columns — no
-      // explode, no second shuffle; identical exact arithmetic), then
-      // fold straight back into the per-m broadcast form — one
-      // materializing job per round, superseded round released
-      val sumCols = (0 until subDim).map(d =>
-        fpSum(element_at(col("sv"), d + 1).cast("double")).as(s"s$d"))
-      val next = assigned.groupBy("m", "cw_k")
-        .agg(sumCols.head, (sumCols.tail :+ count(lit(1)).as("n")): _*)
-        .select(col("m"), col("cw_k"),
-          array((0 until subDim).map(d =>
-            fpMean(col(s"s$d"), col("n"))): _*).as("cw"))
+    Storage.releasing(sliced) { _ =>
+      // round state: one row per subspace holding the cw_k-ascending
+      // centroid list — the exact form the broadcast assignment
+      // consumes (the kmeans one-row-state protocol, keyed by m)
+      val seed = sliced.where(col("vec_id") < codebookSize)
+        .select(col("m"), col("vec_id").cast("int").as("cw_k"), col("sv").as("cw"))
         .groupBy("m")
         .agg(array_sort(collect_list(struct(col("cw_k"), col("cw")))).as("cents"))
         .localCheckpoint(true)
-      Storage.unpersistLocalCheckpoint(cents)
-      cents = next
-    } catch { case t: Throwable =>
-      Storage.unpersistLocalCheckpoint(sliced)
-      Storage.unpersistLocalCheckpoint(cents)
-      throw t
-    }
-    // post-loop encode/LUT/top-k under try/finally: a failure here
-    // must release sliced + cents just like a training failure — the
-    // eager localCheckpoint(true) below is the last reader of either
-    try {
-    val cb = cents
-      .select(col("m"), explode(col("cents")).as("c"))
-      .select(col("m"), col("c.cw_k").as("cw_k"), col("c.cw").as("cw"))
-    val cbDense = cb.select(col("m"),
-      (row_number().over(Window.partitionBy("m").orderBy("cw_k")) - 1).as("cw_k"),
-      col("cw"))
-    // encode: argmin d2 per (vector, subspace), ties to lowest code —
-    // the subspace pivot folds into the SAME aggregation (filtered
-    // struct-min per m; min ignores the other subspaces' nulls), so
-    // one shuffle produces one code row per vector
-    val enc = sliced.join(broadcast(cbDense), "m")
-      .select(col("vec_id"), col("m"), col("cw_k"),
-        squaredL2(col("sv"), col("cw")).as("d2"))
-    val codeCols = (0 until subspaces).map(m =>
-      min(when(col("m") === m, struct(col("d2"), col("cw_k"))))
-        .getField("cw_k").as(s"c$m"))
-    val codes = enc.groupBy("vec_id").agg(codeCols.head, codeCols.tail: _*)
-    // per-query ADC lookup tables, code-ordered, same one-shuffle pivot
-    val qenc = sliced.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), col("m"), col("sv"))
-      .join(broadcast(cbDense), "m")
-      .select(col("query_id"), col("m"), col("cw_k"),
-        squaredL2(col("sv"), col("cw")).as("d2"))
-    val lutCols = (0 until subspaces).map(m =>
-      transform(array_sort(collect_list(when(col("m") === m,
-        struct(col("cw_k"), col("d2"))))), e => e.getField("d2")).as(s"lut_$m"))
-    val luts = qenc.groupBy("query_id").agg(lutCols.head, lutCols.tail: _*)
-    val scored = codes.join(broadcast(luts), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        (0 until subspaces).map(m =>
-          element_at(col(s"lut_$m"), col(s"c$m") + 1)).reduce(_ + _).as("adc_dist"))
-    // materialize the (queries × k)-row answer, then release the
-    // sliced corpus and trained codebooks — storage-flat like kmeans
-    saltedTopK(scored, score = "adc_dist", ascending = true,
-      k = k, salts = salts).localCheckpoint(true)
-    } finally {
-      Storage.unpersistLocalCheckpoint(sliced)
-      Storage.unpersistLocalCheckpoint(cents)
+      val trained = Storage.rounds(seed, iters) { cents =>
+        val assigned = sliced.join(broadcast(cents), "m")
+          .select(col("m"), col("sv"),
+            aggregate(col("cents"),
+              struct(lit(Double.NegativeInfinity).as("key"), lit(-1).as("cw_k")),
+              (acc, c) => {
+                // argmax of -d2 == argmin d2; strict > keeps the FIRST
+                // (lowest cw_k) on ties, matching ORDER BY d2, cw_k
+                val key = -squaredL2(col("sv"), c.getField("cw"))
+                when(key > acc.getField("key"),
+                  struct(key.as("key"), c.getField("cw_k").as("cw_k")))
+                  .otherwise(acc)
+              }).getField("cw_k").as("cw_k"))
+        // recompute in ONE static-width aggregation (subDim is a
+        // parameter, so the per-dimension decimal sums are columns — no
+        // explode, no second shuffle; identical exact arithmetic), then
+        // fold straight back into the per-m broadcast form — one
+        // materializing job per round
+        val sumCols = (0 until subDim).map(d =>
+          fpSum(element_at(col("sv"), d + 1).cast("double")).as(s"s$d"))
+        assigned.groupBy("m", "cw_k")
+          .agg(sumCols.head, (sumCols.tail :+ count(lit(1)).as("n")): _*)
+          .select(col("m"), col("cw_k"),
+            array((0 until subDim).map(d =>
+              fpMean(col(s"s$d"), col("n"))): _*).as("cw"))
+          .groupBy("m")
+          .agg(array_sort(collect_list(struct(col("cw_k"), col("cw")))).as("cents"))
+      }
+      Storage.releasing(trained) { cents =>
+        val cb = cents
+          .select(col("m"), explode(col("cents")).as("c"))
+          .select(col("m"), col("c.cw_k").as("cw_k"), col("c.cw").as("cw"))
+        val cbDense = cb.select(col("m"),
+          (row_number().over(Window.partitionBy("m").orderBy("cw_k")) - 1).as("cw_k"),
+          col("cw"))
+        // encode: argmin d2 per (vector, subspace), ties to lowest code —
+        // the subspace pivot folds into the SAME aggregation (filtered
+        // struct-min per m; min ignores the other subspaces' nulls), so
+        // one shuffle produces one code row per vector
+        val enc = sliced.join(broadcast(cbDense), "m")
+          .select(col("vec_id"), col("m"), col("cw_k"),
+            squaredL2(col("sv"), col("cw")).as("d2"))
+        val codeCols = (0 until subspaces).map(m =>
+          min(when(col("m") === m, struct(col("d2"), col("cw_k"))))
+            .getField("cw_k").as(s"c$m"))
+        val codes = enc.groupBy("vec_id").agg(codeCols.head, codeCols.tail: _*)
+        // per-query ADC lookup tables, code-ordered, same one-shuffle pivot
+        val qenc = sliced.where(col("vec_id") < nQueries)
+          .select(col("vec_id").as("query_id"), col("m"), col("sv"))
+          .join(broadcast(cbDense), "m")
+          .select(col("query_id"), col("m"), col("cw_k"),
+            squaredL2(col("sv"), col("cw")).as("d2"))
+        val lutCols = (0 until subspaces).map(m =>
+          transform(array_sort(collect_list(when(col("m") === m,
+            struct(col("cw_k"), col("d2"))))), e => e.getField("d2")).as(s"lut_$m"))
+        val luts = qenc.groupBy("query_id").agg(lutCols.head, lutCols.tail: _*)
+        val scored = codes.join(broadcast(luts), col("vec_id") =!= col("query_id"))
+          .select(col("query_id"), col("vec_id"),
+            (0 until subspaces).map(m =>
+              element_at(col(s"lut_$m"), col(s"c$m") + 1)).reduce(_ + _).as("adc_dist"))
+        // materialize the (queries × k)-row answer before both scopes
+        // release the sliced corpus and the trained codebooks
+        saltedTopK(scored, score = "adc_dist", ascending = true,
+          k = k, salts = salts).localCheckpoint(true)
+      }
     }
   }
 
@@ -836,8 +825,7 @@ object Similarity {
     * bit-for-bit in DuckDB (`CAST AS REAL` rounds identically). A
     * centroid whose cluster empties drops out, in both engines.
     *
-    * Each round is localCheckpoint'ed and the superseded round
-    * released (the `Dedup.connectedComponents` protocol): with the
+    * The rounds run in [[Storage.rounds]], each checkpointed: with the
     * static-width per-dimension sums the per-round plan is wide, and
     * chaining rounds lazily made Catalyst re-analysis — not execution
     * — the dominant cost (measured ~2× the run time at iters=3).
@@ -847,9 +835,9 @@ object Similarity {
     * state k-row and re-aggregating it into the broadcast row cost an
     * extra 2-stage job per round, pure scheduling latency at any SF.
     * Checkpoint blocks are one row each, so the storage cost is nil;
-    * the returned centroid table stays materialized for the caller
-    * (callers release it once consumed — Storage
-    * .unpersistLocalCheckpoint walks to the underlying block).
+    * the returned centroid table is a projection of the last round's
+    * checkpoint, which the caller owns (release it with
+    * [[Storage.releasing]] once consumed).
     *
     * Returns (c_id, c_vec: array<float>). */
   /** Exact, engine-unambiguous fixed-point mean pieces shared by
@@ -896,66 +884,59 @@ object Similarity {
           lit(s"kmeans: embedding dimension must be $dims, got "),
           size(col("embedding")).cast("string")))).as("embedding"))
       .localCheckpoint(true)
-    var centsRow = emb
-      .where(col("vec_id") < k)
-      .agg(array_sort(collect_list(
-        struct(col("vec_id").as("c_id"), col("embedding").as("c_vec")))).as("cents"))
-      .localCheckpoint(true)
-    try for (_ <- 1 to iters) {
-      // assignment is IN-ROW: the (tiny) centroid table folds into ONE
-      // broadcast row sorted by c_id, and each vector scans it with an
-      // aggregate HOF — the corpus is never shuffled to pick a
-      // centroid (vs. a join + groupBy(vec_id), which re-shuffles all
-      // n embeddings every iteration). Strict `>` over the ascending
-      // c_id scan keeps the FIRST best — the same tie-break as the
-      // oracle's (cos DESC, c_id ASC). A NaN cosine (zero-norm input)
-      // maps to -inf, mirroring DuckDB where 0.0/0.0 is NULL and NULL
-      // sorts LAST under ORDER BY DESC; the `acc.c_id == -1` clause
-      // still adopts the first centroid when EVERY key is -inf, which
-      // is the all-NULL tie both engines break to the lowest c_id.
-      val assigned = emb.crossJoin(broadcast(centsRow))
-        .select(col("vec_id"), col("embedding"),
-          aggregate(col("cents"),
-            struct(lit(Double.NegativeInfinity).as("key"), lit(-1L).as("c_id")),
-            (acc, c) => {
-              // argmax key: cosine directly, or -d2 so argmax = argmin L2
-              val cs = metric match {
-                case "cosine" => cosine(col("embedding"), c.getField("c_vec"))
-                case "l2" => -squaredL2(col("embedding"), c.getField("c_vec"))
-              }
-              val key = when(isnan(cs), lit(Double.NegativeInfinity)).otherwise(cs)
-              when(key > acc.getField("key") || acc.getField("c_id") === -1L,
-                struct(key.as("key"), c.getField("c_id").as("c_id")))
-                .otherwise(acc)
-            }).getField("c_id").as("c_id"))
-      // recompute in ONE static-width aggregation (same shape as
-      // pqKnnTrained): per-dimension FIXED-POINT sums as columns — no
-      // explode of n×dims rows, no second shuffle; the 2^36 integer
-      // sums are exact and order-independent so the result is
-      // bit-identical to the explode+groupBy form the oracle unrolls,
-      // on BOTH engines (see fpSum — the old decimal recipe was
-      // engine-ambiguous at the 15th digit)
-      val sumCols = (0 until dims).map(d =>
-        fpSum(element_at(col("embedding"), d + 1).cast("double")).as(s"s$d"))
-      val next = assigned
-        .groupBy("c_id")
-        .agg(sumCols.head, (sumCols.tail :+ count(lit(1)).as("n")): _*)
-        .select(col("c_id"),
-          array((0 until dims).map(d =>
-            fpMean(col(s"s$d"), col("n"))): _*).as("c_vec"))
-        // fold straight into next round's broadcast form — one job
-        .agg(array_sort(collect_list(struct(col("c_id"), col("c_vec")))).as("cents"))
+    val trained = Storage.releasing(emb) { _ =>
+      val seed = emb
+        .where(col("vec_id") < k)
+        .agg(array_sort(collect_list(
+          struct(col("vec_id").as("c_id"), col("embedding").as("c_vec")))).as("cents"))
         .localCheckpoint(true)
-      Storage.unpersistLocalCheckpoint(centsRow)
-      centsRow = next
-    } catch { case t: Throwable =>
-      // release-on-failure: a mid-loop job failure must not strand the
-      // current round's centroid checkpoint (same protocol as
-      // pqKnnTrained / connectedComponents)
-      Storage.unpersistLocalCheckpoint(centsRow)
-      throw t
-    } finally Storage.unpersistLocalCheckpoint(emb)
-    centsRow
+      Storage.rounds(seed, iters) { centsRow =>
+        // assignment is IN-ROW: the (tiny) centroid table folds into ONE
+        // broadcast row sorted by c_id, and each vector scans it with an
+        // aggregate HOF — the corpus is never shuffled to pick a
+        // centroid (vs. a join + groupBy(vec_id), which re-shuffles all
+        // n embeddings every iteration). Strict `>` over the ascending
+        // c_id scan keeps the FIRST best — the same tie-break as the
+        // oracle's (cos DESC, c_id ASC). A NaN cosine (zero-norm input)
+        // maps to -inf, mirroring DuckDB where 0.0/0.0 is NULL and NULL
+        // sorts LAST under ORDER BY DESC; the `acc.c_id == -1` clause
+        // still adopts the first centroid when EVERY key is -inf, which
+        // is the all-NULL tie both engines break to the lowest c_id.
+        val assigned = emb.crossJoin(broadcast(centsRow))
+          .select(col("vec_id"), col("embedding"),
+            aggregate(col("cents"),
+              struct(lit(Double.NegativeInfinity).as("key"), lit(-1L).as("c_id")),
+              (acc, c) => {
+                // argmax key: cosine directly, or -d2 so argmax = argmin L2
+                val cs = metric match {
+                  case "cosine" => cosine(col("embedding"), c.getField("c_vec"))
+                  case "l2" => -squaredL2(col("embedding"), c.getField("c_vec"))
+                }
+                val key = when(isnan(cs), lit(Double.NegativeInfinity)).otherwise(cs)
+                when(key > acc.getField("key") || acc.getField("c_id") === -1L,
+                  struct(key.as("key"), c.getField("c_id").as("c_id")))
+                  .otherwise(acc)
+              }).getField("c_id").as("c_id"))
+        // recompute in ONE static-width aggregation (same shape as
+        // pqKnnTrained): per-dimension FIXED-POINT sums as columns — no
+        // explode of n×dims rows, no second shuffle; the 2^36 integer
+        // sums are exact and order-independent so the result is
+        // bit-identical to the explode+groupBy form the oracle unrolls,
+        // on BOTH engines (see fpSum — the old decimal recipe was
+        // engine-ambiguous at the 15th digit)
+        val sumCols = (0 until dims).map(d =>
+          fpSum(element_at(col("embedding"), d + 1).cast("double")).as(s"s$d"))
+        assigned
+          .groupBy("c_id")
+          .agg(sumCols.head, (sumCols.tail :+ count(lit(1)).as("n")): _*)
+          .select(col("c_id"),
+            array((0 until dims).map(d =>
+              fpMean(col(s"s$d"), col("n"))): _*).as("c_vec"))
+          // fold straight into next round's broadcast form — one job
+          .agg(array_sort(collect_list(struct(col("c_id"), col("c_vec")))).as("cents"))
+      }
+    }
+    trained
       .select(explode(col("cents")).as("c"))
       .select(col("c.c_id").as("c_id"), col("c.c_vec").as("c_vec"))
   }
@@ -1100,10 +1081,8 @@ object Similarity {
     val e = embeddings.select(col("vec_id"), col("embedding"), col("label"))
     val centroids = e.where(col("vec_id") < nCentroids)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-    val assigned = filteredIvfAssign(e, centroids).localCheckpoint(true)
-    try {
-      val truth = filteredBruteKnn(e, nQueries, k).localCheckpoint(true)
-      try {
+    Storage.releasing(filteredIvfAssign(e, centroids).localCheckpoint(true)) { assigned =>
+      Storage.releasing(filteredBruteKnn(e, nQueries, k).localCheckpoint(true)) { truth =>
         val queries = e.where(col("vec_id") < nQueries)
           .select(col("vec_id").as("query_id"), col("embedding").as("q"),
             col("label").as("qlabel"))
@@ -1141,8 +1120,8 @@ object Similarity {
               (col("scanned_rows").cast("double") /
                 (col("nq") * col("n_total"))).as("scan_frac"))
         }.reduce(_.unionByName(_)).localCheckpoint(true)
-      } finally Storage.unpersistLocalCheckpoint(truth)
-    } finally Storage.unpersistLocalCheckpoint(assigned)
+      }
+    }
   }
 
   /** MMR (Maximal Marginal Relevance, Carbonell & Goldstein 1998)
@@ -1188,10 +1167,10 @@ object Similarity {
       .join(embeddings.select(col("vec_id"), col("embedding")), "vec_id")
       .select(col("query_id"), col("vec_id"), col("rel"), col("embedding"))
       .localCheckpoint(eager = true)
-    try {
+    Storage.releasing(cand) { _ =>
       val w1 = Window.partitionBy("query_id")
         .orderBy(col("mmr_score").desc, col("vec_id").asc)
-      var selected = cand
+      val top1 = cand
         .select(col("query_id"), col("vec_id"),
           (lit(lam) * col("rel")).as("mmr_score"))
         .withColumn("rn", row_number().over(w1))
@@ -1199,7 +1178,10 @@ object Similarity {
         .select(col("query_id"), col("vec_id"), lit(1).as("mmr_rank"),
           col("mmr_score"))
         .localCheckpoint(eager = true)
-      for (i <- 2 to k) {
+      // round i picks the i-th item; the caller owns the last round
+      var i = 1
+      Storage.rounds(top1, k - 1) { selected =>
+        i += 1
         val selEmb = selected
           .join(cand, Seq("query_id", "vec_id"))
           .select(col("query_id"), col("embedding").as("s_emb"))
@@ -1218,14 +1200,9 @@ object Similarity {
           .where(col("rn") === 1)
           .select(col("query_id"), col("vec_id"), lit(i).as("mmr_rank"),
             col("mmr_score"))
-        val next = selected.unionByName(pick).localCheckpoint(eager = true)
-        Storage.unpersistLocalCheckpoint(selected)
-        selected = next
+        selected.unionByName(pick)
       }
-      // already checkpointed by the last round; release with
-      // Storage.unpersistLocalCheckpoint when done
-      selected
-    } finally Storage.unpersistLocalCheckpoint(cand)
+    }
   }
 
   /** The index-BUILD half of IVF: nearest centroid per vector (ties
@@ -1297,10 +1274,8 @@ object Similarity {
     val e = embeddings.select(col("vec_id"), col("embedding"))
     val centroids = e.where(col("vec_id") < nCentroids)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-    val assigned = ivfAssign(e, centroids).localCheckpoint(true)
-    try {
-      val truth = bruteForceKnn(e, nQueries, k).localCheckpoint(true)
-      try {
+    Storage.releasing(ivfAssign(e, centroids).localCheckpoint(true)) { assigned =>
+      Storage.releasing(bruteForceKnn(e, nQueries, k).localCheckpoint(true)) { truth =>
         val queries = e.where(col("vec_id") < nQueries)
           .select(col("vec_id").as("query_id"), col("embedding").as("q"))
         val wProbe = Window.partitionBy("query_id")
@@ -1328,8 +1303,8 @@ object Similarity {
               (col("scanned_rows").cast("double") /
                 (col("nq") * col("n_total"))).as("scan_frac"))
         }.reduce(_.unionByName(_)).localCheckpoint(true)
-      } finally Storage.unpersistLocalCheckpoint(truth)
-    } finally Storage.unpersistLocalCheckpoint(assigned)
+      }
+    }
   }
 
   /** The SCALAR-TIER frontier — recall@k vs bytes actually scanned
@@ -1355,31 +1330,30 @@ object Similarity {
       salts: Int = 32): DataFrame = {
     val e = embeddings.select(col("vec_id"), col("embedding"))
     val truth = bruteForceKnn(e, nQueries, k, salts).localCheckpoint(true)
-    // one row, materialized ONCE: four tier rows consume it, and an
-    // unpinned aggregate would re-scan the embedding column per tier
-    val stats = e.agg(count(lit(1)).as("n_total"),
-      max(size(col("embedding"))).cast("long").as("dims"))
-      .localCheckpoint(true)
-    try {
-      val tiers: Seq[(String, DataFrame, org.apache.spark.sql.Column)] = Seq(
-        ("float32_brute", truth, col("dims") * 4),
-        ("sq8", sq8Knn(e, nQueries, k, salts), col("dims") + 8),
-        ("binary", binaryKnn(e, nQueries, k, salts),
-          expr("((dims + 63) div 64) * 8")),
-        ("pq", pqKnn(e, nQueries, k, salts = salts), lit(4L)))
-      tiers.map { case (name, res, bytes) =>
-        val hits = retrievalEval(res, truth, k)
-          .agg(sum(col("n_hits")).as("hits"), count(lit(1)).as("nq"))
-        hits.crossJoin(broadcast(stats))
-          .select(lit(name).as("tier"),
-            (col("hits").cast("double") / (col("nq") * k)).as(s"recall_at_$k"),
-            col("hits").cast("long").as("n_hits"),
-            bytes.cast("long").as("bytes_per_vec"),
-            ((col("n_total") - 1) * bytes).cast("long").as("scanned_bytes"))
-      }.reduce(_.unionByName(_)).localCheckpoint(true)
-    } finally {
-      Storage.unpersistLocalCheckpoint(stats)
-      Storage.unpersistLocalCheckpoint(truth)
+    Storage.releasing(truth) { _ =>
+      // one row, materialized ONCE: four tier rows consume it, and an
+      // unpinned aggregate would re-scan the embedding column per tier
+      val stats = e.agg(count(lit(1)).as("n_total"),
+        max(size(col("embedding"))).cast("long").as("dims"))
+        .localCheckpoint(true)
+      Storage.releasing(stats) { _ =>
+        val tiers: Seq[(String, DataFrame, org.apache.spark.sql.Column)] = Seq(
+          ("float32_brute", truth, col("dims") * 4),
+          ("sq8", sq8Knn(e, nQueries, k, salts), col("dims") + 8),
+          ("binary", binaryKnn(e, nQueries, k, salts),
+            expr("((dims + 63) div 64) * 8")),
+          ("pq", pqKnn(e, nQueries, k, salts = salts), lit(4L)))
+        tiers.map { case (name, res, bytes) =>
+          val hits = retrievalEval(res, truth, k)
+            .agg(sum(col("n_hits")).as("hits"), count(lit(1)).as("nq"))
+          hits.crossJoin(broadcast(stats))
+            .select(lit(name).as("tier"),
+              (col("hits").cast("double") / (col("nq") * k)).as(s"recall_at_$k"),
+              col("hits").cast("long").as("n_hits"),
+              bytes.cast("long").as("bytes_per_vec"),
+              ((col("n_total") - 1) * bytes).cast("long").as("scanned_bytes"))
+        }.reduce(_.unionByName(_)).localCheckpoint(true)
+      }
     }
   }
 
@@ -1403,9 +1377,8 @@ object Similarity {
     val cand = ivfPqKnn(e, nQueries, shortlists.max, nCentroids,
       nProbe, subspaces, subDim, codebookSize, salts)
       .localCheckpoint(true)
-    try {
-      val truth = bruteForceKnn(e, nQueries, k).localCheckpoint(true)
-      try {
+    Storage.releasing(cand) { _ =>
+      Storage.releasing(bruteForceKnn(e, nQueries, k).localCheckpoint(true)) { truth =>
         val queries = e.where(col("vec_id") < nQueries)
           .select(col("vec_id").as("query_id"), col("embedding").as("q"))
         shortlists.map { s =>
@@ -1431,8 +1404,8 @@ object Similarity {
               col("hits").cast("long").as("n_hits"),
               col("rescored_rows").cast("long").as("rescored_rows"))
         }.reduce(_.unionByName(_)).localCheckpoint(true)
-      } finally Storage.unpersistLocalCheckpoint(truth)
-    } finally Storage.unpersistLocalCheckpoint(cand)
+      }
+    }
   }
 
   /** IVF-PQ with residual encoding — the composed billion-scale ANN
@@ -1601,29 +1574,27 @@ object Similarity {
       subspaces: Int = 4, subDim: Int = 16, codebookSize: Int = 16,
       coarseIters: Int = 3, pqIters: Int = 2, salts: Int = 32): DataFrame = {
     val emb = embeddings.select(col("vec_id"), col("embedding"))
-    val centroids = kmeans(emb, nCentroids, coarseIters, dims = subspaces * subDim)
-    // the residual relation feeds training AND encode — materialize
-    // once (plan branches share no work), release before return
-    val residuals = ivfPqResiduals(emb, centroids).localCheckpoint(true)
-    try {
-      val sliced = ivfPqSliceResiduals(residuals, subspaces, subDim)
-        .localCheckpoint(true)
-      try {
-        val cbDense = trainResidualCodebook(sliced, subDim, codebookSize, pqIters)
-        try {
-          val codes = ivfPqEncodePerM(sliced, cbDense, subspaces)
-          val queries = emb.where(col("vec_id") < nQueries)
-            .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-          val luts = ivfPqLutsPerM(
-            queries, centroids, cbDense, subspaces, subDim, nProbe)
-          saltedTopK(ivfPqAdcScore(codes, luts, subspaces),
-            score = "adc_dist", ascending = true, k = k, salts = salts)
-            .localCheckpoint(true)
-        } finally Storage.unpersistLocalCheckpoint(cbDense)
-      } finally Storage.unpersistLocalCheckpoint(sliced)
-    } finally {
-      Storage.unpersistLocalCheckpoint(residuals)
-      Storage.unpersistLocalCheckpoint(centroids)
+    Storage.releasing(
+        kmeans(emb, nCentroids, coarseIters, dims = subspaces * subDim)) { centroids =>
+      // the residual relation feeds training AND encode — materialize
+      // once (plan branches share no work), release before return
+      Storage.releasing(ivfPqResiduals(emb, centroids).localCheckpoint(true)) { residuals =>
+        val sliced = ivfPqSliceResiduals(residuals, subspaces, subDim)
+          .localCheckpoint(true)
+        Storage.releasing(sliced) { _ =>
+          Storage.releasing(
+              trainResidualCodebook(sliced, subDim, codebookSize, pqIters)) { cbDense =>
+            val codes = ivfPqEncodePerM(sliced, cbDense, subspaces)
+            val queries = emb.where(col("vec_id") < nQueries)
+              .select(col("vec_id").as("query_id"), col("embedding").as("q"))
+            val luts = ivfPqLutsPerM(
+              queries, centroids, cbDense, subspaces, subDim, nProbe)
+            saltedTopK(ivfPqAdcScore(codes, luts, subspaces),
+              score = "adc_dist", ascending = true, k = k, salts = salts)
+              .localCheckpoint(true)
+          }
+        }
+      }
     }
   }
 
@@ -1633,8 +1604,7 @@ object Similarity {
     * [[ivfPqKnnTrained]] derives internally, exposed so the persisted
     * [[IvfPqIndex.writeTrained]] tier can run the production shape:
     * train once (here), persist, then encode every arriving epoch
-    * against the STORED state forever. Caller releases both frames
-    * with [[Storage.unpersistLocalCheckpoint]] once persisted. */
+    * against the STORED state forever. The caller owns both frames. */
   def ivfPqTrainState(
       embeddings: DataFrame, nCentroids: Int = 16,
       subspaces: Int = 4, subDim: Int = 16, codebookSize: Int = 16,
@@ -1648,8 +1618,8 @@ object Similarity {
     val sliced = ivfPqSliceResiduals(
       ivfPqResiduals(emb, centroids), subspaces, subDim)
       .localCheckpoint(true)
-    try (centroids, trainResidualCodebook(sliced, subDim, codebookSize, pqIters))
-    finally Storage.unpersistLocalCheckpoint(sliced)
+    Storage.releasing(sliced)(
+      sliced => (centroids, trainResidualCodebook(sliced, subDim, codebookSize, pqIters)))
   }
 
   /** Slice residual rows (vec_id, c_id, r) into per-subspace rows
@@ -1745,47 +1715,42 @@ object Similarity {
     val d2 = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
       aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
         lit(0.0), (acc, t) => acc + t)
-    var cents = sliced.where(col("vec_id") < codebookSize)
+    val seed = sliced.where(col("vec_id") < codebookSize)
       .select(col("m"), col("vec_id").cast("int").as("cw_k"), col("sv").as("cw"))
       .groupBy("m")
       .agg(array_sort(collect_list(struct(col("cw_k"), col("cw")))).as("cents"))
       .localCheckpoint(true)
-    try {
-      for (_ <- 1 to iters) {
-        val assigned = sliced.join(broadcast(cents), "m")
-          .select(col("m"), col("sv"),
-            aggregate(col("cents"),
-              struct(lit(Double.NegativeInfinity).as("key"), lit(-1).as("cw_k")),
-              (acc, c) => {
-                // argmax of -d2 == argmin d2; strict > keeps the FIRST
-                // (lowest cw_k) on ties, matching ORDER BY d2, cw_k
-                val key = -d2(col("sv"), c.getField("cw"))
-                when(key > acc.getField("key"),
-                  struct(key.as("key"), c.getField("cw_k").as("cw_k")))
-                  .otherwise(acc)
-              }).getField("cw_k").as("cw_k"))
-        // fixed-point means — see fpSum/fpMean
-        val sumCols = (0 until subDim).map(d =>
-          fpSum(element_at(col("sv"), d + 1)).as(s"s$d"))
-        val next = assigned.groupBy("m", "cw_k")
-          .agg(sumCols.head, (sumCols.tail :+ count(lit(1)).as("n")): _*)
-          .select(col("m"), col("cw_k"),
-            array((0 until subDim).map(d =>
-              fpMean(col(s"s$d"), col("n"))): _*).as("cw"))
-          .groupBy("m")
-          .agg(array_sort(collect_list(struct(col("cw_k"), col("cw")))).as("cents"))
-          .localCheckpoint(true)
-        Storage.unpersistLocalCheckpoint(cents)
-        cents = next
-      }
-      cents
-        .select(col("m"), explode(col("cents")).as("c"))
+    val trained = Storage.rounds(seed, iters) { cents =>
+      val assigned = sliced.join(broadcast(cents), "m")
+        .select(col("m"), col("sv"),
+          aggregate(col("cents"),
+            struct(lit(Double.NegativeInfinity).as("key"), lit(-1).as("cw_k")),
+            (acc, c) => {
+              // argmax of -d2 == argmin d2; strict > keeps the FIRST
+              // (lowest cw_k) on ties, matching ORDER BY d2, cw_k
+              val key = -d2(col("sv"), c.getField("cw"))
+              when(key > acc.getField("key"),
+                struct(key.as("key"), c.getField("cw_k").as("cw_k")))
+                .otherwise(acc)
+            }).getField("cw_k").as("cw_k"))
+      // fixed-point means — see fpSum/fpMean
+      val sumCols = (0 until subDim).map(d =>
+        fpSum(element_at(col("sv"), d + 1)).as(s"s$d"))
+      assigned.groupBy("m", "cw_k")
+        .agg(sumCols.head, (sumCols.tail :+ count(lit(1)).as("n")): _*)
+        .select(col("m"), col("cw_k"),
+          array((0 until subDim).map(d =>
+            fpMean(col(s"s$d"), col("n"))): _*).as("cw"))
+        .groupBy("m")
+        .agg(array_sort(collect_list(struct(col("cw_k"), col("cw")))).as("cents"))
+    }
+    Storage.releasing(trained)(
+      _.select(col("m"), explode(col("cents")).as("c"))
         .select(col("m"),
           (row_number().over(Window.partitionBy("m").orderBy(col("c.cw_k"))) - 1)
             .cast("int").as("cw_k"),
           col("c.cw").as("cw"))
-        .localCheckpoint(true)
-    } finally Storage.unpersistLocalCheckpoint(cents)
+        .localCheckpoint(true))
   }
 
   /** Semantic deduplication (SemDeDup-style): k-means-cluster the
@@ -1808,28 +1773,27 @@ object Similarity {
       dims: Int = 64): DataFrame = {
     // the trained centroid block is released once the k-row result
     // materializes — the operator's retained footprint is its answer
-    val centroids = kmeans(embeddings, k, iters, dims = dims)
-    val assigned = embeddings
-      .join(broadcast(centroids))
-      .select(col("vec_id"), col("c_id"),
-        cosine(col("embedding"), col("c_vec")).as("c_cos"))
-      .groupBy("vec_id")
-      .agg(max_by(
-        struct(col("c_id"), col("c_cos")),
-        struct(col("c_cos"), (-col("c_id")).cast("double"))).as("a"))
-      .select(col("vec_id"), col("a.c_id").as("c_id"), col("a.c_cos").as("cos"))
-    val out = assigned
-      .groupBy("c_id")
-      .agg(
-        count(lit(1)).as("n_members"),
-        max_by(
-          struct(col("vec_id"), col("cos")),
-          struct(col("cos"), -col("vec_id"))).as("keep"))
-      .select(col("c_id"), col("keep.vec_id").as("keep_vec_id"),
-        col("n_members"), round(col("keep.cos"), 6).as("keep_cos"))
-      .localCheckpoint(true)
-    Storage.unpersistLocalCheckpoint(centroids)
-    out
+    Storage.releasing(kmeans(embeddings, k, iters, dims = dims)) { centroids =>
+      val assigned = embeddings
+        .join(broadcast(centroids))
+        .select(col("vec_id"), col("c_id"),
+          cosine(col("embedding"), col("c_vec")).as("c_cos"))
+        .groupBy("vec_id")
+        .agg(max_by(
+          struct(col("c_id"), col("c_cos")),
+          struct(col("c_cos"), (-col("c_id")).cast("double"))).as("a"))
+        .select(col("vec_id"), col("a.c_id").as("c_id"), col("a.c_cos").as("cos"))
+      assigned
+        .groupBy("c_id")
+        .agg(
+          count(lit(1)).as("n_members"),
+          max_by(
+            struct(col("vec_id"), col("cos")),
+            struct(col("cos"), -col("vec_id"))).as("keep"))
+        .select(col("c_id"), col("keep.vec_id").as("keep_vec_id"),
+          col("n_members"), round(col("keep.cos"), 6).as("keep_cos"))
+        .localCheckpoint(true)
+    }
   }
 
   /** What MMR BUYS, measured: per query the intra-list similarity
@@ -1864,13 +1828,12 @@ object Similarity {
             .cast(org.apache.spark.sql.types.DecimalType(38, 0))).cast("double")
           / count(lit(1)) / fp).as(name))
     }
-    val mmrRes = mmrRerank(embeddings, nQueries, k, shortlist, lam, mu)
-    try {
+    Storage.releasing(mmrRerank(embeddings, nQueries, k, shortlist, lam, mu)) { mmrRes =>
       val plain = ils(
         bruteForceKnn(emb, nQueries, k).select("query_id", "vec_id"), "ils_topk")
       val diverse = ils(mmrRes.select("query_id", "vec_id"), "ils_mmr")
       plain.join(diverse, "query_id").localCheckpoint(true)
-    } finally Storage.unpersistLocalCheckpoint(mmrRes)
+    }
   }
 
   /** Self-supervised dataset PRUNING (Sorscher et al. 2022, "Beyond
@@ -1895,25 +1858,24 @@ object Similarity {
   def pruneHard(
       embeddings: DataFrame, k: Int = 16, iters: Int = 3,
       dims: Int = 64): DataFrame = {
-    val centroids = kmeans(embeddings, k, iters, dims = dims)
-    val assigned = embeddings
-      .join(broadcast(centroids))
-      .select(col("vec_id"), col("c_id"),
-        cosine(col("embedding"), col("c_vec")).as("c_cos"))
-      .groupBy("vec_id")
-      .agg(max_by(
-        struct(col("c_id"), col("c_cos")),
-        struct(col("c_cos"), (-col("c_id")).cast("double"))).as("a"))
-      .select(col("vec_id"), col("a.c_id").as("c_id"), col("a.c_cos").as("cos"))
-    val w = Window.partitionBy("c_id").orderBy(col("cos").asc, col("vec_id").asc)
-    val out = assigned
-      .withColumn("hard_rank", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("c_id")))
-      .where(col("hard_rank") * 2 <= col("n") + 1)
-      .select(col("c_id"), col("vec_id"), col("hard_rank"), col("cos"))
-      .localCheckpoint(true)
-    Storage.unpersistLocalCheckpoint(centroids)
-    out
+    Storage.releasing(kmeans(embeddings, k, iters, dims = dims)) { centroids =>
+      val assigned = embeddings
+        .join(broadcast(centroids))
+        .select(col("vec_id"), col("c_id"),
+          cosine(col("embedding"), col("c_vec")).as("c_cos"))
+        .groupBy("vec_id")
+        .agg(max_by(
+          struct(col("c_id"), col("c_cos")),
+          struct(col("c_cos"), (-col("c_id")).cast("double"))).as("a"))
+        .select(col("vec_id"), col("a.c_id").as("c_id"), col("a.c_cos").as("cos"))
+      val w = Window.partitionBy("c_id").orderBy(col("cos").asc, col("vec_id").asc)
+      assigned
+        .withColumn("hard_rank", row_number().over(w))
+        .withColumn("n", count(lit(1)).over(Window.partitionBy("c_id")))
+        .where(col("hard_rank") * 2 <= col("n") + 1)
+        .select(col("c_id"), col("vec_id"), col("hard_rank"), col("cos"))
+        .localCheckpoint(true)
+    }
   }
 
   /** Brute-force near-dup definition: all pairs within a label block.

@@ -2,11 +2,23 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 
-/** Shared storage protocol for iterative operators (connected
-  * components, PageRank, k-means, BPE, triangle counting): rounds are
-  * `localCheckpoint(true)`-materialized and the superseded round's
-  * blocks released as soon as the next one exists, so executor
-  * storage stays flat in the iteration count. */
+/** Storage policy shared by the operators and queries: who releases a
+  * `localCheckpoint`, and when.
+  *
+  * Ownership contract. A checkpoint has exactly one owner at a time,
+  * and only the owner releases it:
+  *  - [[releasing]] owns a pin for one use (pin, use, release), and
+  *    releases it whether the use returns or throws;
+  *  - [[rounds]] owns the live round of an iterative operator: each
+  *    round is `localCheckpoint(true)`-materialized and the round it
+  *    supersedes released as soon as it exists, so executor storage
+  *    stays flat in the iteration count;
+  *  - a frame returned to a caller is the caller's, and what an
+  *    operator returns is materialized (or reads only a checkpoint the
+  *    caller now owns), so it never reads a released block.
+  * A release unpersists every `LogicalRDD` in the frame's analyzed
+  * plan, so no scope may be handed a lazy frame over a checkpoint that
+  * someone else still owns. */
 private[graft] object Storage {
 
   /** Release the RDD blocks behind a localCheckpoint'ed frame.
@@ -17,6 +29,46 @@ private[graft] object Storage {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** Run `use` on `pin`, then release `pin`'s checkpoint, whether
+    * `use` returns or throws. What `use` returns must not read `pin`:
+    * materialize it inside the scope, or serve it from elsewhere. */
+  def releasing[A](pin: DataFrame)(use: DataFrame => A): A =
+    try use(pin) finally unpersistLocalCheckpoint(pin)
+
+  /** Up to `maxRounds` rounds of `step` from `init`, stopping after
+    * the first round `done` accepts. Each round is checkpointed
+    * eagerly, the round it supersedes is released as soon as it
+    * exists, and `done` probes the checkpointed round. A throw in
+    * `step` or `done` releases the live round. Returns the last round,
+    * which the caller owns (`init` itself when no round ran).
+    *
+    * `init` is handed over by default: the caller's own checkpoint,
+    * released like any superseded round. With `ownsInit = false` it is
+    * borrowed (a lazy frame over caches or checkpoints the caller still
+    * reads, which a release would reach) and never released. */
+  def rounds(
+      init: DataFrame, maxRounds: Int, ownsInit: Boolean = true,
+      done: DataFrame => Boolean = _ => false)(
+      step: DataFrame => DataFrame): DataFrame = {
+    var live = init
+    var owned = ownsInit
+    var finished = false
+    try {
+      var n = 0
+      var stop = false
+      while (!stop && n < maxRounds) {
+        val next = step(live).localCheckpoint(true)
+        if (owned) unpersistLocalCheckpoint(live)
+        live = next
+        owned = true
+        n += 1
+        stop = done(live)
+      }
+      finished = true
+      live
+    } finally if (!finished && owned) unpersistLocalCheckpoint(live)
+  }
 
   /** Run MUTUALLY INDEPENDENT driver-side actions (each typically one
     * Spark job — e.g. the marker-guarded, idempotent delta-epoch

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
+import graft.operators.Storage
 
 /** Relational core: scans, filters, joins (inner/outer/semi/anti),
   * aggregations, grouping sets, window functions, sorts/top-k, set
@@ -659,13 +660,12 @@ object CoreQueries {
       // materialize the 20-row answer and release the |V|-row rank
       // relation the trainer left behind — the query's retained
       // footprint is its result, not the iteration state
-      val pr = graft.operators.Graph.pageRank(edges, iters = 3)
-      val out = pr
-        .orderBy(col("pr").desc, col("node_id").asc)
-        .limit(20)
-        .localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(pr)
-      out
+      Storage.releasing(graft.operators.Graph.pageRank(edges, iters = 3)) { pr =>
+        pr
+          .orderBy(col("pr").desc, col("node_id").asc)
+          .limit(20)
+          .localCheckpoint(true)
+      }
     }),
 
     // triangle counting over the part co-purchase graph (edge = two
@@ -687,13 +687,12 @@ object CoreQueries {
             b => struct(a.as("a"), b.as("b")))))).as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
         .distinct()
-      val tc = graft.operators.Graph.triangleCounts(und)
-      val out = tc
-        .orderBy(col("n_triangles").desc, col("node_id").asc)
-        .limit(20)
-        .localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(tc)
-      out
+      Storage.releasing(graft.operators.Graph.triangleCounts(und)) { tc =>
+        tc
+          .orderBy(col("n_triangles").desc, col("node_id").asc)
+          .limit(20)
+          .localCheckpoint(true)
+      }
     }),
 
     // the INCREMENTAL maintenance path proven at the driver's gate on
@@ -733,13 +732,12 @@ object CoreQueries {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("src"),
           (col("l_suppkey") + 10000000000L).as("dst"))
-      val h = graft.operators.Graph.hits(edges, iters = 3)
-      val out = h
-        .orderBy(col("auth").desc, col("node_id").asc)
-        .limit(20)
-        .localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(h)
-      out
+      Storage.releasing(graft.operators.Graph.hits(edges, iters = 3)) { h =>
+        h
+          .orderBy(col("auth").desc, col("node_id").asc)
+          .limit(20)
+          .localCheckpoint(true)
+      }
     }),
 
     // link-prediction features over the part co-purchase graph:
@@ -754,13 +752,12 @@ object CoreQueries {
           transform(slice(col("ps"), i + 2, size(col("ps"))),
             b => struct(a.as("a"), b.as("b")))))).as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
-      val lp = graft.operators.Graph.linkPredictionScores(und)
-      val out = lp
-        .orderBy(col("ra").desc, col("cn").desc, col("a").asc, col("b").asc)
-        .limit(100)
-        .localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(lp)
-      out
+      Storage.releasing(graft.operators.Graph.linkPredictionScores(und)) { lp =>
+        lp
+          .orderBy(col("ra").desc, col("cn").desc, col("a").asc, col("b").asc)
+          .limit(100)
+          .localCheckpoint(true)
+      }
     }),
 
     // personalized PageRank from a 3-customer source set over the
@@ -776,14 +773,13 @@ object CoreQueries {
           struct(col("c").as("src"), col("sp").as("dst")),
           struct(col("sp").as("src"), col("c").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      val pr = graft.operators.Graph.personalizedPageRank(
-        edges, sources = Seq(1L, 2L, 3L), iters = 3)
-      val out = pr
-        .orderBy(col("pr").desc, col("node_id").asc)
-        .limit(20)
-        .localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(pr)
-      out
+      Storage.releasing(graft.operators.Graph.personalizedPageRank(
+        edges, sources = Seq(1L, 2L, 3L), iters = 3)) { pr =>
+        pr
+          .orderBy(col("pr").desc, col("node_id").asc)
+          .limit(20)
+          .localCheckpoint(true)
+      }
     }),
 
     // k-core decomposition (8-round peel budget, early-exit at the
@@ -805,13 +801,12 @@ object CoreQueries {
           transform(slice(col("ps"), i + 2, size(col("ps"))),
             b => struct(a.as("a"), b.as("b")))))).as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
-      val kc = graft.operators.Graph.kCore(und, k = 60, rounds = 8)
-      val out = kc
-        .orderBy(col("deg_in_core").desc, col("node_id").asc)
-        .limit(100)
-        .localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(kc)
-      out
+      Storage.releasing(graft.operators.Graph.kCore(und, k = 60, rounds = 8)) { kc =>
+        kc
+          .orderBy(col("deg_in_core").desc, col("node_id").asc)
+          .limit(100)
+          .localCheckpoint(true)
+      }
     }),
 
     // label-propagation communities (3 synchronous rounds,
@@ -828,10 +823,9 @@ object CoreQueries {
           struct(col("c").as("src"), col("sp").as("dst")),
           struct(col("sp").as("src"), col("c").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      val lp = graft.operators.Graph.labelPropagation(edges, rounds = 3)
-      val out = lp.orderBy(col("node_id").asc).localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(lp)
-      out
+      Storage.releasing(graft.operators.Graph.labelPropagation(edges, rounds = 3)) { lp =>
+        lp.orderBy(col("node_id").asc).localCheckpoint(true)
+      }
     }),
 
     // multi-source BFS over the symmetrized customer↔supplier
@@ -891,25 +885,25 @@ object CoreQueries {
         .select(col("e.a").as("a"), col("e.b").as("b"))
         .distinct()
         .localCheckpoint(true) // two consumers below — never rebuilt
-      val tc = graft.operators.Graph.triangleCounts(und)
-      val deg = und
-        .select(explode(array(col("a"), col("b"))).as("node_id"))
-        .groupBy("node_id").agg(count(lit(1)).as("degree"))
-      val out = deg.where(col("degree") >= 2)
-        .join(tc, Seq("node_id"), "left")
-        .select(col("node_id"),
-          coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
-          col("degree"),
-          (coalesce(col("n_triangles"), lit(0L)).cast("double") * lit(2.0) /
-            (col("degree") * (col("degree") - 1))).as("c"))
-        .orderBy(col("c").desc, col("node_id").asc)
-        .limit(20)
-        .select(col("node_id"), col("n_triangles"), col("degree"),
-          round(col("c"), 6).as("coeff"))
-        .localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(tc)
-      graft.operators.Storage.unpersistLocalCheckpoint(und)
-      out
+      Storage.releasing(und) { _ =>
+        Storage.releasing(graft.operators.Graph.triangleCounts(und)) { tc =>
+          val deg = und
+            .select(explode(array(col("a"), col("b"))).as("node_id"))
+            .groupBy("node_id").agg(count(lit(1)).as("degree"))
+          deg.where(col("degree") >= 2)
+            .join(tc, Seq("node_id"), "left")
+            .select(col("node_id"),
+              coalesce(col("n_triangles"), lit(0L)).as("n_triangles"),
+              col("degree"),
+              (coalesce(col("n_triangles"), lit(0L)).cast("double") * lit(2.0) /
+                (col("degree") * (col("degree") - 1))).as("c"))
+            .orderBy(col("c").desc, col("node_id").asc)
+            .limit(20)
+            .select(col("node_id"), col("n_triangles"), col("degree"),
+              round(col("c"), 6).as("coeff"))
+            .localCheckpoint(true)
+        }
+      }
     }),
 
     // harmonic closeness to a 4-customer landmark set within 4 hops
@@ -1077,29 +1071,28 @@ object CoreQueries {
           concat(expr("substring(c_name, 1, length(c_name)-1)"),
             lit("X")).as("name"),
           col("c_nationkey").cast("string").as("block"))
-      val matches = graft.operators.RecordIndex
-        .probeShard(s, path, shard, maxDist = 1)
-      val fields = Tables.customer(s, d)
-        .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-      // matches is output-sized (eagerly pinned by probeShard): it is
-      // the build side of BOTH joins — the records table streams
-      val withI = fields
-        .select(col("c_custkey").as("indexed_id"),
-          col("c_mktsegment").as("i_seg"), col("c_acctbal").as("i_bal"))
-        .join(broadcast(matches), Seq("indexed_id"))
-      val out = fields
-        .select((col("c_custkey") + 10000000000L).as("shard_id"),
-          col("c_mktsegment").as("s_seg"), col("c_acctbal").as("s_bal"))
-        .join(broadcast(withI), Seq("shard_id"))
-        .select(col("shard_id"), col("indexed_id"), col("name_dist"),
-          (lit(3) +
-            lit(2) * (col("i_seg") === col("s_seg")).cast("int") +
-            lit(1) * (abs(col("i_bal") - col("s_bal")) <= 100.0).cast("int"))
-            .cast("int").as("score"))
-        .localCheckpoint(true)
-      // the probe pin fed its two joins; only the rescored final stays
-      graft.operators.Storage.unpersistLocalCheckpoint(matches)
-      out
+      // the probe pin feeds the two joins; only the rescored final stays
+      Storage.releasing(graft.operators.RecordIndex
+          .probeShard(s, path, shard, maxDist = 1)) { matches =>
+        val fields = Tables.customer(s, d)
+          .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
+        // matches is output-sized (eagerly pinned by probeShard): it is
+        // the build side of BOTH joins — the records table streams
+        val withI = fields
+          .select(col("c_custkey").as("indexed_id"),
+            col("c_mktsegment").as("i_seg"), col("c_acctbal").as("i_bal"))
+          .join(broadcast(matches), Seq("indexed_id"))
+        fields
+          .select((col("c_custkey") + 10000000000L).as("shard_id"),
+            col("c_mktsegment").as("s_seg"), col("c_acctbal").as("s_bal"))
+          .join(broadcast(withI), Seq("shard_id"))
+          .select(col("shard_id"), col("indexed_id"), col("name_dist"),
+            (lit(3) +
+              lit(2) * (col("i_seg") === col("s_seg")).cast("int") +
+              lit(1) * (abs(col("i_bal") - col("s_bal")) <= 100.0).cast("int"))
+              .cast("int").as("score"))
+          .localCheckpoint(true)
+      }
     }),
 
     // ...and the MULTI-FIELD DURABLE REGISTER — the probe-side answer
@@ -1152,25 +1145,24 @@ object CoreQueries {
             lit("X")).as("name"),
           concat_ws("|", col("c_nationkey"), col("c_mktsegment")).as("block"))
       val nShard = shard.agg(count(lit(1)).as("n_shard"))
-      val matches =
-        graft.operators.RecordIndex.probeShard(s, path, shard, maxDist = 1)
-      val out = matches
-        .agg(
-          count(lit(1)).as("n_matches"),
-          sum(when(col("indexed_id") === col("shard_id") - 10000000000L, 1L)
-            .otherwise(0L)).as("n_self_matches"),
-          countDistinct(when(
-            col("indexed_id") === col("shard_id") - 10000000000L,
-            col("shard_id"))).as("n_caught"))
-        .crossJoin(broadcast(nShard))
-        .select(col("n_shard"), col("n_matches"), col("n_self_matches"),
-          col("n_caught"),
-          round(col("n_caught").cast("double") /
-            col("n_shard").cast("double"), 6).as("recall"))
-        .localCheckpoint(true)
-      // the probe pin fed the one-row fold; release it now
-      graft.operators.Storage.unpersistLocalCheckpoint(matches)
-      out
+      // the probe pin feeds the one-row fold only
+      Storage.releasing(
+          graft.operators.RecordIndex.probeShard(s, path, shard, maxDist = 1)) { matches =>
+        matches
+          .agg(
+            count(lit(1)).as("n_matches"),
+            sum(when(col("indexed_id") === col("shard_id") - 10000000000L, 1L)
+              .otherwise(0L)).as("n_self_matches"),
+            countDistinct(when(
+              col("indexed_id") === col("shard_id") - 10000000000L,
+              col("shard_id"))).as("n_caught"))
+          .crossJoin(broadcast(nShard))
+          .select(col("n_shard"), col("n_matches"), col("n_self_matches"),
+            col("n_caught"),
+            round(col("n_caught").cast("double") /
+              col("n_shard").cast("double"), 6).as("recall"))
+          .localCheckpoint(true)
+      }
     }),
 
     // the ER ADMISSION LOOP end-to-end — Admission's structured-

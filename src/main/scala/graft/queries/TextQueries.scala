@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions._
-import graft.operators.{Dedup, Dsir}
+import graft.operators.{Dedup, Dsir, Storage}
 
 /** Text-analysis + deduplication query surface over `documents`
   * (SURVEY.md §2.3). Oracle policy:
@@ -239,13 +239,12 @@ object TextQueries {
               concat(lit("perceptual recrawl of asset "), col("doc_id"),
                 lit(" reworded entirely")).as("text") +: sigCols: _*))
       }
-      try (0 to 2).map { e =>
+      // the fold runs eagerly (admitEpoch writes each epoch); the
+      // returned union reads only the stored segments
+      Storage.releasing(base)(_ => (0 to 2).map { e =>
         graft.operators.Admission.admitEpoch(s, path, e.toLong, shard(e))
           .select(col("doc_id"), lit(e.toLong).as("epoch"))
-      }.reduce(_.unionByName(_))
-      // the fold ran eagerly (admitEpoch writes each epoch); the
-      // returned union reads only the stored segments
-      finally graft.operators.Storage.unpersistLocalCheckpoint(base)
+      }.reduce(_.unionByName(_)))
     }),
 
     // ...and the perceptual stage is SIGNATURE-AGNOSTIC by
@@ -286,11 +285,10 @@ object TextQueries {
               concat(lit("perceptual recrawl of video "), col("doc_id"),
                 lit(" reworded entirely")).as("text") +: sigCols: _*))
       }
-      try (0 to 2).map { e =>
+      Storage.releasing(base)(_ => (0 to 2).map { e =>
         graft.operators.Admission.admitEpoch(s, path, e.toLong, shard(e))
           .select(col("doc_id"), lit(e.toLong).as("epoch"))
-      }.reduce(_.unionByName(_))
-      finally graft.operators.Storage.unpersistLocalCheckpoint(base)
+      }.reduce(_.unionByName(_)))
     }),
 
     // md5-bit variant so the whole pipeline (tokenize → bit votes →

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.multimodal.Multimodal
-import graft.operators.{Bloom, Similarity}
+import graft.operators.{Bloom, Similarity, Storage}
 
 /** Similarity-search + sketch + multimodal query surface (SURVEY.md
   * §2.3). The DuckDB oracle reproduces cosine scores bit-exactly: both
@@ -177,11 +177,13 @@ object VectorQueries {
         array_distinct(filter(split(lower(col("text")), "\\s+"),
           t => length(t) > 0)).as("toks"))
       val embAll = Tables.embeddings(s, d).select("vec_id", "embedding")
-      Similarity.mmrRerankWith(
-        Similarity.hybridRrf(lex, embAll, nQueries = 8, m = 20, k = 20)
-          .select(col("query_id"), col("doc_id").as("vec_id"),
+      // the fused shortlist is a pin of its own; MMR materializes
+      // what it reads of it before the scope releases it
+      Storage.releasing(Similarity.hybridRrf(lex, embAll, nQueries = 8, m = 20, k = 20))(
+        fused => Similarity.mmrRerankWith(
+          fused.select(col("query_id"), col("doc_id").as("vec_id"),
             col("rrf").as("rel")),
-        embAll, k = 5)
+          embAll, k = 5))
     }),
 
     // ...and the full tuning curve: the filtered recall–cost frontier
@@ -450,11 +452,10 @@ object VectorQueries {
       val (centroids, cbPerM) = Similarity.ivfPqTrainState(e)
       val path = IndexScenario.build(s, graft.operators.IvfPqIndex,
         "graft_ivfpq_tdelta_", parityThirds(e, col("vec_id")), compact = true) { p =>
-        graft.operators.IvfPqIndex.writeTrained(
-          baseRows(e, col("vec_id")), centroids, cbPerM, p)
         // the epochs encode against the stored state, not these pins
-        graft.operators.Storage.unpersistLocalCheckpoint(centroids)
-        graft.operators.Storage.unpersistLocalCheckpoint(cbPerM)
+        Storage.releasing(centroids)(_ => Storage.releasing(cbPerM)(_ =>
+          graft.operators.IvfPqIndex.writeTrained(
+            baseRows(e, col("vec_id")), centroids, cbPerM, p)))
       }
       graft.operators.IvfPqIndex.serveAll(s, path,
         e.where(col("vec_id") < 8)
@@ -695,12 +696,9 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
       // materialize the 40-row answer, then release the trained
       // centroid block — the trainer's output is consumed, not kept
-      val cents = Similarity.kmeans(e, k = 16, iters = 3)
-      val out = Similarity
-        .ivfKnnWith(e, cents, nQueries = 8, k = 5, nProbe = 4)
-        .localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(cents)
-      out
+      Storage.releasing(Similarity.kmeans(e, k = 16, iters = 3))(
+        Similarity.ivfKnnWith(e, _, nQueries = 8, k = 5, nProbe = 4)
+          .localCheckpoint(true))
     }),
 
     // threshold 0.35 sits below the max pairwise cosine of the random
@@ -1019,14 +1017,14 @@ object VectorQueries {
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      try {
+      Storage.releasing(sigs) { _ =>
         val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_mmham_delta_",
           lastThird(sigs, col("doc_id")), compact = true)(
           graft.operators.HammingIndex.write(baseRows(sigs, col("doc_id")), _))
         // the serve reads only the persisted segments — the pin can
         // release before the (lazy) result leaves the query body
         graft.operators.HammingIndex.servePairs(s, path, maxHamming = 3)
-      } finally graft.operators.Storage.unpersistLocalCheckpoint(sigs)
+      }
     }),
 
     // ...and the image ADMISSION probe: a re-keyed shard of signatures
@@ -1042,7 +1040,7 @@ object VectorQueries {
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      try {
+      Storage.releasing(sigs) { _ =>
         val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_mmham_probe_",
           lastThird(sigs, col("doc_id")))(
           graft.operators.HammingIndex.write(baseRows(sigs, col("doc_id")), _))
@@ -1052,7 +1050,7 @@ object VectorQueries {
           sigs.where(col("doc_id") % 5 === 0)
             .select((col("doc_id") + 10000000000L).as("doc_id"),
               col("c0"), col("c1"), col("c2"), col("c3")))
-      } finally graft.operators.Storage.unpersistLocalCheckpoint(sigs)
+      }
     }),
 
     // ...and the SKEW-CAPPED pair law — the production form for real
@@ -1093,7 +1091,7 @@ object VectorQueries {
         s, Multimodal.audioAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      try {
+      Storage.releasing(sigs) { _ =>
         val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_audham_",
           lastThird(sigs, col("doc_id")), compact = true)(
           graft.operators.HammingIndex.write(baseRows(sigs, col("doc_id")), _))
@@ -1101,7 +1099,7 @@ object VectorQueries {
           sigs.where(col("doc_id") % 5 === 0)
             .select((col("doc_id") + 10000000000L).as("doc_id"),
               col("c0"), col("c1"), col("c2"), col("c3")))
-      } finally graft.operators.Storage.unpersistLocalCheckpoint(sigs)
+      }
     }),
 
     // the skew-cap MONITORING view, itself oracled: the
@@ -1136,7 +1134,7 @@ object VectorQueries {
         s, Multimodal.videoAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      try {
+      Storage.releasing(sigs) { _ =>
         val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_vidham_",
           lastThird(sigs, col("doc_id")), compact = true)(
           graft.operators.HammingIndex.write(baseRows(sigs, col("doc_id")), _))
@@ -1144,7 +1142,7 @@ object VectorQueries {
           sigs.where(col("doc_id") % 5 === 0)
             .select((col("doc_id") + 10000000000L).as("doc_id"),
               col("c0"), col("c1"), col("c2"), col("c3")))
-      } finally graft.operators.Storage.unpersistLocalCheckpoint(sigs)
+      }
     }),
 
     // ...and the CAPPED video pair law — for the densest signature
@@ -1250,8 +1248,7 @@ object VectorQueries {
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      try cappedEvalOver(sigs) finally
-        graft.operators.Storage.unpersistLocalCheckpoint(sigs)
+      Storage.releasing(sigs)(cappedEvalOver)
     }),
 
     // ...the same sizing instrument for the OTHER two signature
@@ -1264,8 +1261,7 @@ object VectorQueries {
         s, Multimodal.videoAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      try cappedEvalOver(sigs) finally
-        graft.operators.Storage.unpersistLocalCheckpoint(sigs)
+      Storage.releasing(sigs)(cappedEvalOver)
     }),
 
     "mm_capped_eval_audio" -> ((s, d) => {
@@ -1273,8 +1269,7 @@ object VectorQueries {
         s, Multimodal.audioAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      try cappedEvalOver(sigs) finally
-        graft.operators.Storage.unpersistLocalCheckpoint(sigs)
+      Storage.releasing(sigs)(cappedEvalOver)
     }),
 
     // ...and the DURABLE form of the capped decision chain — what a
@@ -1291,7 +1286,7 @@ object VectorQueries {
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true)
-      try {
+      Storage.releasing(sigs) { _ =>
         val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_mmham_ccdur_",
           lastThird(sigs, col("doc_id")), compact = true)(
           graft.operators.HammingIndex.write(baseRows(sigs, col("doc_id")), _))
@@ -1303,7 +1298,7 @@ object VectorQueries {
             maxHamming = 3, maxBucket = 32))
           .select(col("doc_id").as("asset_id"), col("cluster_id"),
             (col("doc_id") === col("cluster_id")).as("is_survivor"))
-      } finally graft.operators.Storage.unpersistLocalCheckpoint(sigs)
+      }
     }),
 
     // ...and the ONLINE form of the capped decision chain, proven at
@@ -1323,7 +1318,7 @@ object VectorQueries {
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
         .localCheckpoint(true) // two halves + the fold branch it
-      try {
+      Storage.releasing(sigs) { _ =>
         val st = graft.streaming.StreamingOps.emptyHammingClusterState(
           s, maxHamming = 3, maxBucket = 32)
         try {
@@ -1336,7 +1331,7 @@ object VectorQueries {
               (col("doc_id") === col("cluster_id")).as("is_survivor"))
             .localCheckpoint(true)
         } finally st.release()
-      } finally graft.operators.Storage.unpersistLocalCheckpoint(sigs)
+      }
     }))
 
   /** The cap-sizing fold shared by the three mm_capped_eval* rows:

@@ -1811,10 +1811,11 @@ object StreamingOps {
         // a saturated bucket pulled pairs out — merges may have to
         // un-happen, so rebuild from the maintained capped pair set
         // (bounded by the same law the batch chain pays every run)
-        val labels = graft.operators.Dedup.connectedComponents(
-          newAdmitted.select(col("a_id"), col("b_id")).distinct())
-          .select(col("doc_id").as("node_id"), col("cluster_id"))
-          .localCheckpoint(true)
+        val labels = graft.operators.Storage.releasing(
+          graft.operators.Dedup.connectedComponents(
+            newAdmitted.select(col("a_id"), col("b_id")).distinct()))(
+          _.select(col("doc_id").as("node_id"), col("cluster_id"))
+            .localCheckpoint(true))
         graft.operators.Storage.unpersistLocalCheckpoint(state.cc.labels)
         state.cc.labels = labels
       } else {

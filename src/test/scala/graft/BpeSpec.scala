@@ -148,4 +148,21 @@ class BpeSpec extends AnyFunSuite {
     assert(after - before <= 1,
       s"expected <=1 retained RDD (the merge table), got ${after - before}")
   }
+
+  test("learn past the corpus's last pair fails loudly and leaves no rounds pinned") {
+    // "abc" has two merges in it; step 3 finds no adjacent pair and
+    // fails by design — the vocab round and the merge rows of steps 1
+    // and 2, all checkpointed by then, must be released on that path too
+    // compared as ids: the registry holds its RDDs weakly, so RDDs
+    // other suites left behind may go away meanwhile
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val docs = Seq((1L, "abc")).toDF("doc_id", "text")
+    val before = persisted
+    val e = intercept[Exception](Bpe.learn(docs, merges = 4))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toList
+    assert(msgs.exists(_.contains("no adjacent pairs left")), msgs.mkString(" | "))
+    val left = persisted -- before
+    assert(left.isEmpty, s"a failed learn left ${left.size} persistent RDDs behind")
+  }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
-# One-command provability gate: compile -> test -> verify vs DuckDB
-# oracle -> bench. Mirrors what the round driver runs, so a green gate
-# here means a green round.
+# One-command provability gate: release-path grep -> compile -> test ->
+# verify vs DuckDB oracle -> bench. Mirrors what the round driver runs,
+# so a green gate here means a green round.
 #
 # Usage:
 #   tools/gate.sh              # gate scale (sf0.01), no bench
@@ -74,6 +74,15 @@ fi
 OUT=$(mktemp -d /tmp/graft_gate.XXXXXX)
 LOGS=$(mktemp -d /tmp/graft_gatelog.XXXXXX)
 LOG=$LOGS/gate.log
+
+echo "== gate: release path =="
+# queries release their checkpoints through Storage.releasing and
+# Storage.rounds only; a direct release call is how a leak on the
+# failure path comes back
+if grep -rn "unpersistLocalCheckpoint" src/main/scala/graft/queries/; then
+  echo "DIRECT CHECKPOINT RELEASE IN queries/ (use Storage.releasing)"
+  exit 1
+fi
 
 echo "== gate: compile =="
 sbt -batch compile
