@@ -36,7 +36,7 @@ object BinaryIndex extends SegmentedIndex {
     serveSnapshot(readAll(spark, path), queries, k, salts)
 
   /** The serving plan over an ALREADY-RESOLVED snapshot — the seam a
-    * long-lived server (e.g. [[graft.streaming.StreamingOps.binaryServeStream]])
+    * long-lived server (e.g. a [[graft.streaming.StreamingOps.foreachBatch]] serve)
     * uses to resolve the base∪deltas snapshot once and answer many
     * query batches against that one consistent view. */
   private[graft] def serveSnapshot(

@@ -144,7 +144,7 @@ object IvfPqIndex extends SegmentedIndex {
 
   /** Resolve one consistent snapshot PLUS the index's fixed trained
     * state in a single call — the handle a long-lived server (e.g.
-    * [[graft.streaming.StreamingOps.ivfPqServeStream]]) opens once and
+    * a [[graft.streaming.StreamingOps.foreachBatch]] serve) opens once and
     * answers many query batches against. */
   private[graft] def openAll(
       spark: SparkSession, path: String): (DataFrame, DataFrame, DataFrame, Int, Int) = {

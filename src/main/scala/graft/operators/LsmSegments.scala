@@ -190,6 +190,18 @@ private[graft] object LsmSegments {
     }
   }
 
+  /** Delete the delta data of every epoch below `epoch`, keeping the
+    * markers as the replay guard: the retention rule of a store whose
+    * newest committed delta is a full snapshot of its state (the
+    * durable maintenance streams in [[graft.streaming.StreamingOps]]).
+    * A writer operation, run between appends like [[gc]]. */
+  def retireDeltasBelow(spark: SparkSession, path: String, epoch: Long): Unit = {
+    val f = fs(spark, path)
+    listNames(spark, s"$path/deltas")
+      .filter(n => n.nonEmpty && n.forall(_.isDigit) && n.toLong < epoch)
+      .foreach(n => f.delete(new org.apache.hadoop.fs.Path(s"$path/deltas/$n"), true))
+  }
+
   /** One consistent snapshot: the current base path plus the delta
     * paths of committed epochs newer than the base's fold point. A
     * committed-but-missing delta dir surfaces as a loud read failure

@@ -88,7 +88,7 @@ object PqIndex extends SegmentedIndex {
 
   /** Resolve one consistent snapshot PLUS the index's fixed trained
     * state (codebook, grid) in a single call — the handle a
-    * long-lived server (e.g. [[graft.streaming.StreamingOps.pqServeStream]])
+    * long-lived server (e.g. a [[graft.streaming.StreamingOps.foreachBatch]] serve)
     * opens once and answers many query batches against. */
   private[graft] def openAll(
       spark: SparkSession, path: String): (DataFrame, DataFrame, Int, Int) = {

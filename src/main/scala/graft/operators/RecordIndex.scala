@@ -59,8 +59,8 @@ object RecordIndex extends SegmentedIndex {
     // semi-join keys, the final pair join) that share no work, and the
     // RESULT is eagerly materialized so a sink running more than one
     // action can never re-read segment files a concurrent compact/gc
-    // retired mid-batch — the snapshot-per-batch guarantee
-    // recordProbeStream documents
+    // retired mid-batch — the per-batch screening guarantee
+    // StreamingOps.foreachBatch documents
     Storage.releasing(shard.select("id", "name", "block").localCheckpoint(eager = true))(
       probeShardOver(readAll(spark, path), _, maxDist, maxPairsPerBlock)
         .localCheckpoint(eager = true))

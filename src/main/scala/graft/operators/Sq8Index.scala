@@ -45,7 +45,7 @@ object Sq8Index extends SegmentedIndex {
     serveSnapshot(readAsOf(spark, path, epoch), queries, k, salts)
 
   /** The serving plan over an ALREADY-RESOLVED snapshot — the seam a
-    * long-lived server (e.g. [[graft.streaming.StreamingOps.sq8ServeStream]])
+    * long-lived server (e.g. a [[graft.streaming.StreamingOps.foreachBatch]] serve)
     * uses to resolve the base∪deltas snapshot once and answer many
     * query batches against that one consistent view. */
   private[graft] def serveSnapshot(

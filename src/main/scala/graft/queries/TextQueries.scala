@@ -969,8 +969,8 @@ object TextQueries {
     }))
 
   // One materialized merge table per (application, sf dir): learn runs
-  // once (localCheckpoint pins the result as an in-memory relation with
-  // no lineage), then every text_bpe_encode invocation — including
+  // once (its result is already an eager checkpoint, an in-memory
+  // relation with no lineage), then every text_bpe_encode invocation — including
   // bench passes 2..n — is the pure zero-shuffle encode. Keyed by
   // applicationId because a checkpointed plan dies with its context.
   // The session rides along so entries whose context has stopped can
@@ -988,8 +988,7 @@ object TextQueries {
   private[graft] def learnedMerges(s: SparkSession, d: String): DataFrame = {
     bpeMergeMemo.entrySet().removeIf(e => e.getValue._1.sparkContext.isStopped)
     bpeMergeMemo.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ =>
-      (s, graft.operators.Bpe.learn(Tables.documents(s, d), merges = 6)
-        .localCheckpoint(eager = true)))._2
+      (s, graft.operators.Bpe.learn(Tables.documents(s, d), merges = 6)))._2
   }
 
   // DSIR fit stats memo: one pinned 256-row checkpoint per (session,

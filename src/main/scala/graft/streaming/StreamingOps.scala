@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.operators.{Dsir, LsmSegments, Storage}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import java.sql.Timestamp
 
 /** Streaming operators beyond the reference's surface (SURVEY.md
@@ -275,7 +276,6 @@ object StreamingOps {
   def dsirGate(
       docs: DataFrame, model: DataFrame, nBuckets: Int,
       minLogw: Double): DataFrame = {
-    import graft.operators.Dsir
     docs
       .crossJoin(broadcast(Dsir.modelAsMap(model)))
       .withColumn("logw",
@@ -306,62 +306,37 @@ object StreamingOps {
       docs: DataFrame, targetPred: org.apache.spark.sql.Column,
       nBuckets: Int,
       options: Map[String, String] = Map.empty)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Dsir, Storage}
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
     var state = Dsir.emptyStats(docs.sparkSession, nBuckets)
-    docs.writeStream
-      .outputMode("append")
-      .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        val next = Dsir.updateStats(state, batch.toDF(), targetPred, nBuckets)
-        Storage.unpersistLocalCheckpoint(state)
-        state = next
-        sink(Dsir.lrFromStats(state, nBuckets), epoch)
-        ()
-      }
-      .start()
+    foreachBatch(docs, options) { (batch, epoch) =>
+      state = foldStats(state, batch, targetPred, nBuckets)
+      sink(Dsir.lrFromStats(state, nBuckets), epoch)
+    }
+  }
+
+  /** [[Dsir.updateStats]], releasing the superseded stats. */
+  private def foldStats(stats: DataFrame, batch: DataFrame,
+      targetPred: org.apache.spark.sql.Column, nBuckets: Int): DataFrame = {
+    val next = Dsir.updateStats(stats, batch, targetPred, nBuckets)
+    Storage.unpersistLocalCheckpoint(stats)
+    next
   }
 
   /** Durable, restartable [[dsirModelStream]]: the dense stats are
-    * snapshotted per epoch into an [[EpochStateStore]] under
-    * `stateDir`, and the fold is idempotent per epoch — a batch
-    * replayed after a crash (stream checkpoint commit lost) finds its
-    * generation already committed and is NOT re-folded, so counts
-    * never double. Restart resumes from the latest committed
-    * generation; pass the stream's own `checkpointLocation` in
-    * `options` so the source's offsets are replayable too — then the
-    * served model always equals the one-shot batch fit over every doc
-    * ever delivered (pinned in DsirSpec's stop/restart test). */
+    * committed per epoch under `stateDir` and the fold is idempotent
+    * per epoch ([[durableStateStream]]), so counts never double and
+    * the served model always equals the one-shot batch fit over every
+    * doc ever delivered (pinned in DsirSpec's stop/restart test). */
   def durableDsirModelStream(
       docs: DataFrame, targetPred: org.apache.spark.sql.Column,
       nBuckets: Int, stateDir: String,
       options: Map[String, String] = Map.empty)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.{Dsir, Storage}
-    val spark = docs.sparkSession
-    val store = new EpochStateStore(spark, stateDir)
-    val resumed = store.latestCommitted(Seq("stats"))
-    requireDurableLineage("durableDsirModelStream", resumed.map(_._1),
-      stateDir, options)
-    var state = resumed match {
-      case Some((_, m)) => m("stats").localCheckpoint(true)
-      case None => Dsir.emptyStats(spark, nBuckets)
-    }
-    docs.writeStream
-      .outputMode("append")
-      .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        if (!store.isCommitted(epoch)) {
-          val next = Dsir.updateStats(state, batch.toDF(), targetPred, nBuckets)
-          Storage.unpersistLocalCheckpoint(state)
-          state = next
-          store.commit(epoch, Map("stats" -> state))
-        }
-        sink(Dsir.lrFromStats(state, nBuckets), epoch)
-        ()
-      }
-      .start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    durableStateStream[DataFrame]("durableDsirModelStream", docs, stateDir, options)(
+      _.fold(Dsir.emptyStats(docs.sparkSession, nBuckets))(read => read("stats")))(
+      update = foldStats(_, _, targetPred, nBuckets),
+      relations = stats => Map("stats" -> stats),
+      sink = (stats, epoch) => sink(Dsir.lrFromStats(stats, nBuckets), epoch))
 
   // ---- streaming fuzzy dedup (MinHash-LSH over micro-batches) ----
 
@@ -535,314 +510,46 @@ object StreamingOps {
       .where(col("d") === 0)
       .drop("d")
 
-  /** Online ANN serving: a micro-batch stream of query vectors
-    * (query_id, q: array<float>) served against a durable IVF index
-    * ([[graft.operators.IvfIndex]]). `foreachBatch` is the honest
-    * composition here — per-query top-k ranking is state-free across
-    * batches, so running the BATCH serving plan per micro-batch is
-    * semantically exact (pinned against `IvfIndex.serveAll` in
-    * StreamingOpsSpec), where a streaming window/rank would be
-    * rejected by the planner in append mode. The base∪deltas snapshot
-    * and the centroids resolve once at stream start and are reused
-    * every batch (the LIFETIME BOUND below applies): centroids
-    * broadcast, and the corpus is touched only in the probed c_id
-    * partitions — the partition-pruned scan that makes per-batch
-    * serving O(probed lists), not O(corpus), at 100 TB. */
-  def ivfServeStream(
-      queries: DataFrame,
-      indexPath: String,
-      k: Int = 5,
-      nProbe: Int = 4,
-      // writeStream pass-throughs: a serving deployment needs at least
-      // a durable checkpointLocation (restartable offsets) and usually
-      // a queryName/trigger; defaults preserve the ephemeral test shape
-      options: Map[String, String] = Map.empty,
-      queryName: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = queries.sparkSession
-    val assigned = graft.operators.IvfIndex.readAll(spark, indexPath)
-    val centroids = graft.operators.IvfIndex.centroids(spark, indexPath)
-    serveStream(queries, options, queryName, trigger)(batch =>
-      graft.operators.Similarity.ivfServe(assigned, centroids, batch, k, nProbe))(sink)
-  }
-
-  /** [[ivfServeStream]]'s SQ8-tier sibling: micro-batches of query
-    * vectors (query_id, qv: array<float>) served against a durable
-    * [[graft.operators.Sq8Index]]. The base∪deltas snapshot is
-    * resolved ONCE at stream start (one consistent view for the
-    * stream's lifetime — restart to pick up later-ingested epochs).
-    * LIFETIME BOUND, shared by every fixed-snapshot serve stream here
-    * (ivf/sq8/pq/ivfPq/binary): a concurrent ingest loop compacting
-    * with `retainGens = 1` keeps this view's files alive for exactly
-    * ONE further compaction cycle — after the SECOND in-loop
-    * compaction gc retires them and the stream's batches fail loudly
-    * (FileNotFoundException), they do not silently serve partial
-    * results. A server that must outlive compaction cycles either
-    * restarts within each cycle, runs its ingest with a larger
-    * `retainGens`, or screens per-batch like [[exactProbeStream]]
-    * (snapshot-per-batch, always-fresh). Each batch runs the
-    * exact batch serving plan — per-query top-k is state-free across
-    * batches, so streaming == [[graft.operators.Sq8Index.serveAll]]
-    * restricted per batch (pinned in StreamingOpsSpec). */
-  def sq8ServeStream(
-      queries: DataFrame,
-      indexPath: String,
-      k: Int = 5,
-      salts: Int = 32,
-      options: Map[String, String] = Map.empty,
-      queryName: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val snapshot = graft.operators.Sq8Index.readAll(queries.sparkSession, indexPath)
-    serveStream(queries, options, queryName, trigger)(batch =>
-      graft.operators.Sq8Index.serveSnapshot(snapshot, batch, k, salts))(sink)
-  }
-
-  /** [[ivfServeStream]]'s PQ-tier sibling: micro-batches of query
-    * vectors (query_id, q: array<float>) served against a durable
-    * [[graft.operators.PqIndex]]. Snapshot AND trained state
-    * (codebook, grid) resolve once at stream start; per batch the
-    * standard ADC pipeline runs — LUTs built from the fixed codebook,
-    * broadcast, codes never shuffled. */
-  def pqServeStream(
-      queries: DataFrame,
-      indexPath: String,
-      k: Int = 5,
-      salts: Int = 32,
-      options: Map[String, String] = Map.empty,
-      queryName: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val (snapshot, codebook, subspaces, subDim) =
-      graft.operators.PqIndex.openAll(queries.sparkSession, indexPath)
-    serveStream(queries, options, queryName, trigger)(batch =>
-      graft.operators.PqIndex.serveSnapshot(
-        snapshot, codebook, subspaces, subDim, batch, k, salts))(sink)
-  }
-
-  /** [[ivfServeStream]]'s IVF-PQ-tier sibling: micro-batches of query
-    * vectors (query_id, q: array<float>) served against a durable
-    * [[graft.operators.IvfPqIndex]]. Snapshot AND trained state
-    * (centroids, residual codebook, grid) resolve once at stream
-    * start; per batch the IVFADC pipeline runs — per-(query, probed
-    * centroid) LUTs built from the fixed trained state, broadcast,
-    * codes touched only in the probed c_id partitions. */
-  def ivfPqServeStream(
-      queries: DataFrame,
-      indexPath: String,
-      k: Int = 5,
-      nProbe: Int = 4,
-      salts: Int = 32,
-      options: Map[String, String] = Map.empty,
-      queryName: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val (snapshot, centroids, codebook, subspaces, subDim) =
-      graft.operators.IvfPqIndex.openAll(queries.sparkSession, indexPath)
-    serveStream(queries, options, queryName, trigger)(batch =>
-      graft.operators.IvfPqIndex.serveSnapshot(
-        snapshot, centroids, codebook, subspaces, subDim,
-        batch, k, nProbe, salts))(sink)
-  }
-
-  /** [[ivfServeStream]]'s late-interaction sibling: micro-batches of
-    * query BAGS (query_id, qtoks — derive with
-    * [[graft.operators.Similarity.tokenBags]]) served against a
-    * durable [[graft.operators.MaxSimIndex]]; snapshot resolved once,
-    * in-row HOF MaxSim per batch. */
-  def maxSimServeStream(
-      queries: DataFrame,
-      indexPath: String,
-      k: Int = 5,
-      salts: Int = 32,
-      options: Map[String, String] = Map.empty,
-      queryName: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val snapshot = graft.operators.MaxSimIndex.readAll(queries.sparkSession, indexPath)
-    serveStream(queries, options, queryName, trigger)(batch =>
-      graft.operators.MaxSimIndex.serveSnapshot(snapshot, batch, k, salts))(sink)
-  }
-
-  /** [[ivfServeStream]]'s binary-tier sibling: micro-batches of
-    * PACKED queries (query_id, qsig: array<long> — pack with the
-    * index's own sign-bit representation) served against a durable
-    * [[graft.operators.BinaryIndex]]; snapshot resolved once, XOR+
-    * popcount per candidate per batch. */
-  def binaryServeStream(
-      queries: DataFrame,
-      indexPath: String,
-      k: Int = 5,
-      salts: Int = 32,
-      options: Map[String, String] = Map.empty,
-      queryName: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val snapshot = graft.operators.BinaryIndex.readAll(queries.sparkSession, indexPath)
-    serveStream(queries, options, queryName, trigger)(batch =>
-      graft.operators.BinaryIndex.serveSnapshot(snapshot, batch, k, salts))(sink)
-  }
-
-  /** Read-only SCREENING stream over a persisted exact-dedup index:
-    * each micro-batch of documents (doc_id, text) is probed against
-    * the index ([[graft.operators.ContentHashIndex.probeNew]]) and
-    * the hits — (doc_id, earliest indexed copy, indexed multiplicity)
-    * — handed to `sink`. The serving-side counterpart of
-    * [[admissionIngestStream]] when this consumer only FLAGS (another
-    * party owns admission): it never writes, so any number of
-    * screening streams run beside the single ingest writer.
+  /** Start a stream that hands each micro-batch to `f` with its epoch
+    * id: append mode, `options` passed to the writer as given (a
+    * durable `checkpointLocation` for restartable offsets, a
+    * `queryName`). Every stream this object starts goes through here.
     *
-    * Unlike the ANN serve streams (one fixed snapshot for the stream's
-    * lifetime), the index snapshot here resolves PER BATCH — two
-    * directory listings of driver metadata — so every batch screens
-    * against the freshest committed state while a concurrent ingest
-    * appends; marker-last commits mean a batch never sees a torn
-    * segment. probeNew is per-document against the index, so the
-    * streamed union equals the batch probe of the union (pinned in
-    * StreamingOpsSpec). */
-  def exactProbeStream(
-      documents: DataFrame,
-      indexPath: String,
-      options: Map[String, String] = Map.empty,
-      queryName: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = documents.sparkSession
-    serveStream(documents, options, queryName, trigger)(batch =>
-      graft.operators.ContentHashIndex.probeNew(spark, indexPath, batch))(sink)
-  }
-
-  /** [[exactProbeStream]]'s near-dup sibling: each micro-batch is a
-    * SHARD screened independently —
-    * [[graft.operators.MinHashIndex.probePairs]] emits every verified
-    * near-dup pair touching the batch (against the indexed corpus ∪
-    * the batch itself; cross-batch batch-to-batch pairs are by design
-    * absent — a screening consumer that needs those is an admission
-    * loop and should run [[admissionIngestStream]], which appends
-    * survivors so later shards see them). Per-batch results are
-    * eagerly materialized by probePairs' pinned-result contract and
-    * released after `sink` returns. Snapshot-per-batch like the exact
-    * sibling. */
-  def minhashProbeStream(
-      documents: DataFrame,
-      indexPath: String,
-      threshold: Double = 0.5,
-      options: Map[String, String] = Map.empty,
-      queryName: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = documents.sparkSession
-    serveStream(documents, options, queryName, trigger,
-      release = graft.operators.Storage.unpersistLocalCheckpoint)(batch =>
-      graft.operators.MinHashIndex.probePairs(
-        spark, indexPath, batch, threshold))(sink)
-  }
-
-  /** The PERCEPTUAL-HASH sibling of [[minhashProbeStream]] — image
-    * admission screening: each micro-batch of chunked Hamming
-    * signatures (doc_id, c0..c3 — compute with the index's own fixed
-    * signature function, e.g.
-    * [[graft.multimodal.Multimodal.imageAHash]]) is probed against a
-    * persisted [[graft.operators.HammingIndex]]; every pair within the
-    * hamming budget touching the batch is handed to `sink`
-    * (pigeonhole-exhaustive blocking, only colliding chunk buckets
-    * move). Read-only, snapshot-per-batch, per-batch results eagerly
-    * materialized and released after the sink. */
-  def hammingProbeStream(
-      signatures: DataFrame,
-      indexPath: String,
-      maxHamming: Int = 3,
-      // the shared skew cap ([[graft.operators.HammingIndex.probePairs]]'s
-      // contract: a hot bucket past the cap saturates and contributes
-      // no pairs — dropped whole, never partial); default uncapped
-      maxBucket: Int = Int.MaxValue,
-      options: Map[String, String] = Map.empty,
-      queryName: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = signatures.sparkSession
-    serveStream(signatures, options, queryName, trigger,
-      release = graft.operators.Storage.unpersistLocalCheckpoint)(batch =>
-      graft.operators.HammingIndex.probePairs(
-        spark, indexPath, batch, maxHamming, maxBucket))(sink)
-  }
-
-  /** The STRUCTURED-RECORD sibling of [[minhashProbeStream]] — fuzzy
-    * master-data admission: each micro-batch of records (id, name,
-    * block) is probed against a persisted
-    * [[graft.operators.RecordIndex]]; every indexed record in the
-    * batch's blocks within `maxDist` name edits is handed to `sink`.
-    * Read-only, snapshot-per-batch, per-batch results eagerly
-    * materialized and released after the sink. */
-  def recordProbeStream(
-      records: DataFrame,
-      indexPath: String,
-      maxDist: Int = 1,
-      options: Map[String, String] = Map.empty,
-      queryName: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = records.sparkSession
-    serveStream(records, options, queryName, trigger,
-      release = graft.operators.Storage.unpersistLocalCheckpoint)(batch =>
-      graft.operators.RecordIndex.probeShard(
-        spark, indexPath, batch, maxDist))(sink)
-  }
-
-  /** The EMBEDDING sibling of [[minhashProbeStream]]: each micro-batch
-    * of vectors (vec_id, embedding) is screened against a persisted
-    * IVF index ([[graft.operators.IvfIndex.probeSemantic]] — SemDeDup
-    * at ingest: same-inverted-list pairs at cos ≥ threshold, candidate
-    * generation cluster-blocked and partition-pruned to the lists the
-    * batch touches). Read-only, snapshot-per-batch, per-batch results
-    * eagerly materialized and released after `sink` returns — the
-    * same contracts as the text screening streams. */
-  def semanticProbeStream(
-      vectors: DataFrame,
-      indexPath: String,
-      threshold: Double = 0.95,
-      options: Map[String, String] = Map.empty,
-      queryName: Option[String] = None,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = vectors.sparkSession
-    serveStream(vectors, options, queryName, trigger,
-      release = graft.operators.Storage.unpersistLocalCheckpoint)(batch =>
-      graft.operators.IvfIndex.probeSemantic(
-        spark, indexPath, batch, threshold))(sink)
-  }
-
-  /** Shared scaffolding of the eleven serve and probe streams:
-    * `foreachBatch` running a BATCH serving plan per micro-batch (the honest
-    * composition — per-query top-k is state-free across batches, so
-    * this is semantically exact where a streaming window/rank would
-    * be rejected by the planner in append mode), with the writeStream
-    * pass-throughs a serving deployment needs. Index relations load
-    * once, outside this helper, and are reused every batch. */
-  private def serveStream(
-      queries: DataFrame,
-      options: Map[String, String],
-      queryName: Option[String],
-      trigger: Option[org.apache.spark.sql.streaming.Trigger],
-      // called after `sink` returns — the seam for serves whose per-
-      // batch result is eagerly materialized and must be released
-      // (probePairs' pinned-result contract)
-      release: DataFrame => Unit = _ => ())(
-      serve: DataFrame => DataFrame)(
-      sink: DataFrame => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = queries.writeStream
+    * Serving a durable index tier is this driver plus the tier's own
+    * batch plan. `foreachBatch` is the honest composition: per-query
+    * top-k and per-document screening are state-free across batches,
+    * so the batch plan per micro-batch is exact (streamed output ==
+    * the batch serve or probe restricted per batch, pinned in
+    * StreamingOpsSpec), where a streaming window/rank would be
+    * rejected by the planner in append mode. Two snapshot contracts:
+    *  - FIXED SNAPSHOT (the ANN tiers): resolve the base∪deltas
+    *    snapshot and trained state once, before the stream starts
+    *    (`readAll`, `openAll`, `IvfIndex.centroids`), and call the
+    *    tier's `serveSnapshot` (IVF: `Similarity.ivfServe`) per
+    *    batch. One consistent view for the stream's lifetime; restart
+    *    to pick up later epochs. LIFETIME BOUND: an ingest loop
+    *    compacting with `retainGens = 1` keeps that view's files alive
+    *    for exactly ONE further compaction cycle; after the second,
+    *    gc retires them and the stream's batches fail loudly
+    *    (FileNotFoundException) rather than serve partial results. A
+    *    server that must outlive compaction cycles restarts within
+    *    each cycle, runs its ingest with a larger `retainGens`, or
+    *    screens per batch.
+    *  - PER-BATCH SCREENING (the probes): call `probeNew`,
+    *    `probePairs`, `probeShard` or `probeSemantic` per batch. Each
+    *    resolves the snapshot per batch (driver listings only), so
+    *    every batch sees the freshest committed state while one
+    *    ingest writer appends, and marker-last commits mean it never
+    *    sees a torn segment. Read-only, so any number run beside the
+    *    writer. The pair probes return an eagerly materialized pin:
+    *    hand it to the sink inside `Storage.releasing`. */
+  def foreachBatch(input: DataFrame, options: Map[String, String] = Map.empty)(
+      f: (DataFrame, Long) => Unit): StreamingQuery =
+    input.writeStream
       .outputMode("append")
       .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val out = serve(batch.toDF())
-        try sink(out) finally release(out)
-        ()
-      }
-    queryName.foreach(writer.queryName)
-    trigger.foreach(writer.trigger)
-    writer.start()
-  }
+      .foreachBatch { (batch: Dataset[Row], epoch: Long) => f(batch.toDF(), epoch) }
+      .start()
 
   /** The full ADMISSION LOOP as a durable stream — the production
     * composition of the dedup-index surface: each micro-batch of
@@ -880,24 +587,19 @@ object StreamingOps {
       // generations the triggered gc retains per store; 1 (default)
       // keeps one superseded snapshot alive for concurrent readers
       retainGens: Int = 1)(
-      onBatch: (Long, DataFrame) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery = {
+      onBatch: (Long, DataFrame) => Unit = (_, _) => ()): StreamingQuery = {
     val spark = documents.sparkSession
-    requireDurableLineage("admissionIngestStream",
+    requireDurableLineage(spark, "admissionIngestStream",
       graft.operators.Admission.committedEpochs(spark, path).lastOption,
       path, options)
-    documents.writeStream
-      .outputMode("append")
-      .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        onBatch(epoch, graft.operators.Admission.admitEpoch(
-          spark, path, epoch, batch.toDF(), threshold, semanticThreshold))
-        // admitEpoch returned, so every store has committed this epoch
-        maintainEvery(spark, compactEvery, s"$path/admitted",
-          graft.operators.Admission.committedEpochs(spark, path))(
-          graft.operators.Admission.compact(spark, path, retainGens = retainGens))
-        ()
-      }
-      .start()
+    foreachBatch(documents, options) { (batch, epoch) =>
+      onBatch(epoch, graft.operators.Admission.admitEpoch(
+        spark, path, epoch, batch, threshold, semanticThreshold))
+      // admitEpoch returned, so every store has committed this epoch
+      maintainEvery(spark, compactEvery, s"$path/admitted",
+        graft.operators.Admission.committedEpochs(spark, path))(
+        graft.operators.Admission.compact(spark, path, retainGens = retainGens))
+    }
   }
 
   /** [[admissionIngestStream]]'s ENTITY-RESOLUTION sibling — the
@@ -917,24 +619,19 @@ object StreamingOps {
       options: Map[String, String] = Map.empty,
       compactEvery: Int = 0,
       retainGens: Int = 1)(
-      onBatch: (Long, DataFrame) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery = {
+      onBatch: (Long, DataFrame) => Unit = (_, _) => ()): StreamingQuery = {
     val spark = records.sparkSession
-    requireDurableLineage("recordAdmissionIngestStream",
+    requireDurableLineage(spark, "recordAdmissionIngestStream",
       graft.operators.RecordAdmission.committedEpochs(spark, path).lastOption,
       path, options)
-    records.writeStream
-      .outputMode("append")
-      .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        onBatch(epoch, graft.operators.RecordAdmission.admitEpoch(
-          spark, path, epoch, batch.toDF(), maxDist, maxPairsPerBlock))
-        // admitEpoch returned, so both stores have committed this epoch
-        maintainEvery(spark, compactEvery, s"$path/admitted",
-          graft.operators.RecordAdmission.committedEpochs(spark, path))(
-          graft.operators.RecordAdmission.compact(spark, path, retainGens = retainGens))
-        ()
-      }
-      .start()
+    foreachBatch(records, options) { (batch, epoch) =>
+      onBatch(epoch, graft.operators.RecordAdmission.admitEpoch(
+        spark, path, epoch, batch, maxDist, maxPairsPerBlock))
+      // admitEpoch returned, so both stores have committed this epoch
+      maintainEvery(spark, compactEvery, s"$path/admitted",
+        graft.operators.RecordAdmission.committedEpochs(spark, path))(
+        graft.operators.RecordAdmission.compact(spark, path, retainGens = retainGens))
+    }
   }
 
   /** Streaming INGEST into any persisted index tier — the exactly-once
@@ -956,7 +653,7 @@ object StreamingOps {
     * compaction keeps reading consistently for a full further cycle
     * while the stream compacts under it; a long-lived serve stream
     * needs `retainGens` sized to its lifetime in compaction cycles
-    * (see the serve streams' LIFETIME BOUND note). The maintenance
+    * (the LIFETIME BOUND in [[foreachBatch]]). The maintenance
     * runs inside the single ingest writer, between appends — exactly
     * the window the [[graft.operators.LsmSegments]] single-writer
     * contract carves out for it; a replayed epoch never triggers it
@@ -968,8 +665,9 @@ object StreamingOps {
     * at 0 for a fresh/temporary checkpoint, so a new lineage against
     * an already-ingested index would collide with old markers and
     * SILENTLY skip its first batches). Resuming an index therefore
-    * requires the original `checkpointLocation`; starting without one
-    * against a non-empty index fails fast instead of dropping data. */
+    * requires the original `checkpointLocation`; starting without one,
+    * or with one whose offset log has not reached the index's latest
+    * epoch, fails fast instead of dropping data. */
   def ingestStream(
       index: graft.operators.SegmentedIndex,
       input: DataFrame,
@@ -977,26 +675,21 @@ object StreamingOps {
       options: Map[String, String] = Map.empty,
       compactEvery: Int = 0,
       retainGens: Int = 1)(
-      onBatch: (Long, Boolean) => Unit = (_, _) => ()): org.apache.spark.sql.streaming.StreamingQuery = {
+      onBatch: (Long, Boolean) => Unit = (_, _) => ()): StreamingQuery = {
     val spark = input.sparkSession
-    requireDurableLineage(
+    requireDurableLineage(spark,
       s"ingestStream(${index.getClass.getSimpleName.stripSuffix("$")})",
       index.committedEpochs(spark, indexPath).lastOption, indexPath, options)
-    input.writeStream
-      .outputMode("append")
-      .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        val appended = index.appendEpoch(spark, indexPath, epoch, batch.toDF())
-        if (appended)
-          maintainEvery(spark, compactEvery, indexPath,
-            index.committedEpochs(spark, indexPath)) {
-            index.compact(spark, indexPath)
-            index.gc(spark, indexPath, retainGens = retainGens)
-          }
-        onBatch(epoch, appended)
-        ()
-      }
-      .start()
+    foreachBatch(input, options) { (batch, epoch) =>
+      val appended = index.appendEpoch(spark, indexPath, epoch, batch)
+      if (appended)
+        maintainEvery(spark, compactEvery, indexPath,
+          index.committedEpochs(spark, indexPath)) {
+          index.compact(spark, indexPath)
+          index.gc(spark, indexPath, retainGens = retainGens)
+        }
+      onBatch(epoch, appended)
+    }
   }
 
   /** The pretrain gate with FUZZY dedup: the stateless quality and
@@ -1183,9 +876,9 @@ object StreamingOps {
     * sorted adjacency (node, nbrs: array<long>) and the per-node
     * triangle counts — both localCheckpoint'ed, superseded generations
     * released per batch ([[graft.operators.Storage]] protocol).
-    * Session-lived: a restart rebuilds from the replayed source (a
-    * durable variant would snapshot both relations as parquet keyed by
-    * epoch and make the update idempotent per epoch). */
+    * Session-lived: a restart rebuilds from the replayed source;
+    * [[durableTriangleMaintenanceStream]] commits both relations per
+    * epoch instead. */
   final class TriangleState private[streaming] (
       private[streaming] var adj: DataFrame,
       private[streaming] var counts: DataFrame) {
@@ -1204,8 +897,8 @@ object StreamingOps {
     /** Release the state's cached blocks (callers done maintaining —
       * e.g. a batch replay that keeps only a derived result). */
     def release(): Unit = {
-      graft.operators.Storage.unpersistLocalCheckpoint(adj)
-      graft.operators.Storage.unpersistLocalCheckpoint(counts)
+      Storage.unpersistLocalCheckpoint(adj)
+      Storage.unpersistLocalCheckpoint(counts)
     }
   }
 
@@ -1256,30 +949,28 @@ object StreamingOps {
         greatest(col("src"), col("dst")).cast("long").as("b"))
       .distinct()
     val adjA = state.adj.select(col("node").as("a_"), col("nbrs").as("na"))
-    val fresh = cand
+    Storage.releasing(cand
       .join(adjA, col("a") === col("a_"), "left")
       .where(col("na").isNull || !array_contains(col("na"), col("b")))
       .select(col("a"), col("b"))
-      .localCheckpoint(true)
-    try {
+      .localCheckpoint(true)) { fresh =>
       // the Δ adjacency serves BOTH the 2-new wedge expansion and the
       // 3-new oriented closure — checkpointed once (tiny: |Δ| nodes)
       // so neither branch regroups it (plan branches share nothing)
-      val dAdj = fresh
+      val newCounts = Storage.releasing(fresh
         .select(explode(array(
           struct(col("a").as("node"), col("b").as("nbr")),
           struct(col("b").as("node"), col("a").as("nbr")))).as("e"))
         .groupBy(col("e.node").as("c"))
         .agg(sort_array(collect_list(col("e.nbr"))).as("dn"))
-        .localCheckpoint(true)
-      val deltaCounts = triangleDeltaPlan(fresh, state.adj, dAdj)
-      val newCounts = state.counts
-        .join(deltaCounts, Seq("node_id"), "full")
-        .select(col("node_id"),
-          (coalesce(col("n_triangles"), lit(0L)) +
-            coalesce(col("dc"), lit(0L))).as("n_triangles"))
-        .localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(dAdj)
+        .localCheckpoint(true)) { dAdj =>
+        state.counts
+          .join(triangleDeltaPlan(fresh, state.adj, dAdj), Seq("node_id"), "full")
+          .select(col("node_id"),
+            (coalesce(col("n_triangles"), lit(0L)) +
+              coalesce(col("dc"), lit(0L))).as("n_triangles"))
+          .localCheckpoint(true)
+      }
       // adjacency upsert: regroup only the touched nodes
       val touched = fresh.select(col("a").as("node"))
         .union(fresh.select(col("b").as("node"))).distinct()
@@ -1296,12 +987,12 @@ object StreamingOps {
         .join(touched, Seq("node"), "anti")
         .unionByName(updAdj)
         .localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(state.adj)
-      graft.operators.Storage.unpersistLocalCheckpoint(state.counts)
+      Storage.unpersistLocalCheckpoint(state.adj)
+      Storage.unpersistLocalCheckpoint(state.counts)
       state.adj = newAdj
       state.counts = newCounts
       state
-    } finally graft.operators.Storage.unpersistLocalCheckpoint(fresh)
+    }
   }
 
   /** Streaming graph maintenance: ingest an edge stream (src, dst) via
@@ -1311,16 +1002,11 @@ object StreamingOps {
   def triangleMaintenanceStream(
       edges: DataFrame,
       options: Map[String, String] = Map.empty)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val state = emptyTriangleState(edges.sparkSession)
-    edges.writeStream
-      .outputMode("append")
-      .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        sink(updateTriangles(state, batch.toDF()).snapshot, epoch)
-        ()
-      }
-      .start()
+    foreachBatch(edges, options) { (batch, epoch) =>
+      sink(updateTriangles(state, batch).snapshot, epoch)
+    }
   }
 
   /** The in-loop maintenance rule of [[ingestStream]] and the two
@@ -1334,28 +1020,89 @@ object StreamingOps {
   private def maintainEvery(spark: SparkSession, compactEvery: Int,
       genPath: String, committed: => Seq[Long])(fold: => Unit): Unit =
     if (compactEvery > 0) {
-      val (_, upto) = graft.operators.LsmSegments.current(spark, genPath)
+      val (_, upto) = LsmSegments.current(spark, genPath)
       if (committed.count(_ > upto) >= compactEvery) fold
     }
 
-  /** Lineage pairing for every durable maintenance stream (the
-    * [[ingestStream]] guard, shared): epoch ids are only meaningful
-    * relative to ONE streaming checkpoint lineage. A fresh/absent
-    * checkpointLocation restarts them at 0, so replayed ids would
-    * match the old generation's commit markers and new batch content
-    * would be silently never folded (or folded against mismatched
-    * batch boundaries) — fail fast instead. */
+  /** Lineage pairing for every durable stream (ingest, admission and
+    * maintenance): epoch ids are only meaningful relative to ONE
+    * streaming checkpoint lineage. An absent or fresh
+    * checkpointLocation restarts them at 0, so its ids would match the
+    * store's old commit markers and its first batches would be
+    * silently skipped (or folded against mismatched batch
+    * boundaries) — fail fast instead. A store holding committed
+    * epochs therefore needs a checkpoint whose offset log
+    * (`<checkpointLocation>/offsets/<batchId>`, one driver-side
+    * listing) has reached the store's latest epoch. */
   private def requireDurableLineage(
-      name: String, resumedEpoch: Option[Long], stateDir: String,
-      options: Map[String, String]): Unit =
-    require(resumedEpoch.isEmpty || options.contains("checkpointLocation"),
-      s"$name: state at $stateDir already holds committed generations " +
-        s"(latest epoch ${resumedEpoch.getOrElse(-1L)}) from a previous " +
-        "stream; a query without a durable checkpointLocation restarts " +
-        "epoch ids at 0 and its first batches would collide with those " +
-        "markers and be silently skipped. Pass the original " +
-        "checkpointLocation to resume that lineage, or use a fresh " +
-        "stateDir.")
+      spark: SparkSession, name: String, resumedEpoch: Option[Long],
+      stateDir: String, options: Map[String, String]): Unit =
+    resumedEpoch.foreach { latest =>
+      val logged = options.get("checkpointLocation").toSeq.flatMap { chk =>
+        val offsets = new org.apache.hadoop.fs.Path(chk, "offsets")
+        val fs = offsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!fs.exists(offsets)) Nil
+        else fs.listStatus(offsets).toSeq.map(_.getPath.getName)
+          .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
+      }
+      require(logged.nonEmpty && logged.max >= latest,
+        s"$name: state at $stateDir already holds committed epochs " +
+          s"(latest $latest) from a previous stream, and this query's " +
+          "checkpointLocation is " +
+          options.get("checkpointLocation").fold("absent")(c =>
+            s"$c, whose offset log " +
+              logged.maxOption.fold("is empty")(m => s"ends at batch $m")) +
+          ": its epoch ids restart below that, so its first batches would " +
+          "collide with those markers and be silently skipped. Pass the " +
+          "original checkpointLocation to resume that lineage, or use a " +
+          "fresh stateDir.")
+    }
+
+  /** The shared body of the four durable maintenance streams. The
+    * state lives in an [[graft.operators.LsmSegments]] store at
+    * `stateDir` whose every committed delta is a full snapshot of the
+    * state's named relations, `deltas/<epoch>/<name>`:
+    *  - start: after [[requireDurableLineage]], `open` builds the
+    *    state, from a reader of the latest committed epoch's relations
+    *    (each read checkpointed) or from scratch (`None`);
+    *  - per batch: `update` and the write of its `relations` run
+    *    inside `LsmSegments.appendEpoch`, so a replayed epoch (its
+    *    batch re-delivered after the stream lost its commit) finds its
+    *    marker and is not re-applied, and a torn write is overwritten
+    *    by the replay;
+    *  - after each commit the older epochs' data is deleted, their
+    *    markers kept as the replay guard, so the store holds one
+    *    committed snapshot plus the one being written.
+    * `sink` sees the state after every batch, replays included. With
+    * the stream's own `checkpointLocation` (a replayable source) this
+    * is exactly-once maintenance.
+    *
+    * 100 TB shape: a snapshot is plain parquet writes of the state
+    * relations (executor-parallel); the driver touches only marker
+    * and directory listings. */
+  private def durableStateStream[S](
+      name: String, input: DataFrame, stateDir: String,
+      options: Map[String, String])(
+      open: Option[String => DataFrame] => S)(
+      update: (S, DataFrame) => S,
+      relations: S => Map[String, DataFrame],
+      sink: (S, Long) => Unit): StreamingQuery = {
+    val spark = input.sparkSession
+    val latest = LsmSegments.committedEpochs(spark, stateDir).lastOption
+    requireDurableLineage(spark, name, latest, stateDir, options)
+    var state = open(latest.map(e => relation =>
+      spark.read.parquet(s"$stateDir/deltas/$e/$relation").localCheckpoint(true)))
+    foreachBatch(input, options) { (batch, epoch) =>
+      val committed = LsmSegments.appendEpoch(spark, stateDir, epoch) { dir =>
+        state = update(state, batch)
+        relations(state).foreach { case (relation, df) =>
+          df.write.mode("overwrite").parquet(s"$dir/$relation")
+        }
+      }
+      if (committed) LsmSegments.retireDeltasBelow(spark, stateDir, epoch)
+      sink(state, epoch)
+    }
+  }
 
   /** Pure delta-counts plan for one [[updateTriangles]] step —
     * factored out so PLAN_DIGEST can publish the inner tree (the
@@ -1427,43 +1174,25 @@ object StreamingOps {
       .agg(sum(col("c")).as("dc"))
   }
 
-  /** Durable, restartable [[triangleMaintenanceStream]]: state is
-    * snapshotted per epoch into an [[EpochStateStore]] under
-    * `stateDir` and the update is idempotent per epoch — a batch
-    * replayed after a crash (stream checkpoint commit lost) finds its
-    * generation already committed and is NOT re-applied, so counts
-    * never double. Restart resumes from the latest committed
-    * generation; pass the stream's own `checkpointLocation` in
-    * `options` to make the source offsets replayable too. */
+  /** Durable, restartable [[triangleMaintenanceStream]]: the
+    * adjacency and the counts are committed per epoch under
+    * `stateDir` and the update is idempotent per epoch
+    * ([[durableStateStream]]) — a batch replayed after a crash is NOT
+    * re-applied, so counts never double. Restart resumes from the
+    * latest committed epoch; pass the stream's own `checkpointLocation`
+    * in `options` to make the source offsets replayable too. */
   def durableTriangleMaintenanceStream(
       edges: DataFrame,
       stateDir: String,
       options: Map[String, String] = Map.empty)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = edges.sparkSession
-    val store = new EpochStateStore(spark, stateDir)
-    val resumed = store.latestCommitted(Seq("adj", "counts"))
-    requireDurableLineage("durableTriangleMaintenanceStream",
-      resumed.map(_._1), stateDir, options)
-    val state = resumed match {
-      case Some((_, m)) => new TriangleState(
-        m("adj").localCheckpoint(true), m("counts").localCheckpoint(true))
-      case None => emptyTriangleState(spark)
-    }
-    edges.writeStream
-      .outputMode("append")
-      .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        if (!store.isCommitted(epoch)) {
-          updateTriangles(state, batch.toDF())
-          store.commit(epoch,
-            Map("adj" -> state.adj, "counts" -> state.counts))
-        }
-        sink(state.snapshot, epoch)
-        ()
-      }
-      .start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    durableStateStream[TriangleState](
+      "durableTriangleMaintenanceStream", edges, stateDir, options)(
+      _.fold(emptyTriangleState(edges.sparkSession))(read =>
+        new TriangleState(read("adj"), read("counts"))))(
+      update = updateTriangles,
+      relations = st => Map("adj" -> st.adj, "counts" -> st.counts),
+      sink = (st, epoch) => sink(st.snapshot, epoch))
 
   // ---- streaming graph maintenance (incremental connected components) ----
 
@@ -1479,7 +1208,7 @@ object StreamingOps {
 
     /** Release the state's cached blocks. */
     def release(): Unit =
-      graft.operators.Storage.unpersistLocalCheckpoint(labels)
+      Storage.unpersistLocalCheckpoint(labels)
   }
 
   def emptyCcState(spark: SparkSession): CcState = {
@@ -1522,29 +1251,29 @@ object StreamingOps {
     val la = state.labels.select(col("node_id").as("a_"), col("cluster_id").as("ca_"))
     val lb = state.labels.select(col("node_id").as("b_"), col("cluster_id").as("cb_"))
     // Δ endpoints resolved to current labels; new nodes label themselves
-    val resolved = cand
+    Storage.releasing(cand
       .join(la, col("a") === col("a_"), "left")
       .join(lb, col("b") === col("b_"), "left")
       .select(col("a"), col("b"),
         coalesce(col("ca_"), col("a")).as("ca"),
         coalesce(col("cb_"), col("b")).as("cb"))
-      .localCheckpoint(true)
-    try {
+      .localCheckpoint(true)) { resolved =>
       // merge graph over labels: micro-batch-sized, driver-coordinated
       // CC is fine here (the budget covers the batch's merge diameter)
       val mergePairs = resolved
         .where(col("ca") =!= col("cb"))
         .select(col("ca").as("a_id"), col("cb").as("b_id"))
-      val mapping = graft.operators.Dedup.connectedComponents(mergePairs)
-        .select(col("doc_id").as("old_label"), col("cluster_id").as("new_label"))
-        .where(col("old_label") =!= col("new_label"))
-      val newLabels = ccRemapPlan(state.labels, mapping, resolved)
-        .localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(mapping)
-      graft.operators.Storage.unpersistLocalCheckpoint(state.labels)
+      val newLabels = Storage.releasing(
+        graft.operators.Dedup.connectedComponents(mergePairs)) { merged =>
+        val mapping = merged
+          .select(col("doc_id").as("old_label"), col("cluster_id").as("new_label"))
+          .where(col("old_label") =!= col("new_label"))
+        ccRemapPlan(state.labels, mapping, resolved).localCheckpoint(true)
+      }
+      Storage.unpersistLocalCheckpoint(state.labels)
       state.labels = newLabels
       state
-    } finally graft.operators.Storage.unpersistLocalCheckpoint(resolved)
+    }
   }
 
   /** Pure label-remap plan for one [[updateCc]] step — factored out
@@ -1587,48 +1316,27 @@ object StreamingOps {
   def ccMaintenanceStream(
       edges: DataFrame,
       options: Map[String, String] = Map.empty)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val state = emptyCcState(edges.sparkSession)
-    edges.writeStream
-      .outputMode("append")
-      .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        sink(updateCc(state, batch.toDF()).snapshot, epoch)
-        ()
-      }
-      .start()
+    foreachBatch(edges, options) { (batch, epoch) =>
+      sink(updateCc(state, batch).snapshot, epoch)
+    }
   }
 
-  /** Durable, restartable [[ccMaintenanceStream]] — same epoch-
-    * snapshot + idempotent-replay protocol as
-    * [[durableTriangleMaintenanceStream]]. */
+  /** Durable, restartable [[ccMaintenanceStream]]: the labels are
+    * committed per epoch with idempotent replay, the
+    * [[durableStateStream]] protocol. */
   def durableCcMaintenanceStream(
       edges: DataFrame,
       stateDir: String,
       options: Map[String, String] = Map.empty)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = edges.sparkSession
-    val store = new EpochStateStore(spark, stateDir)
-    val resumed = store.latestCommitted(Seq("labels"))
-    requireDurableLineage("durableCcMaintenanceStream",
-      resumed.map(_._1), stateDir, options)
-    val state = resumed match {
-      case Some((_, m)) => new CcState(m("labels").localCheckpoint(true))
-      case None => emptyCcState(spark)
-    }
-    edges.writeStream
-      .outputMode("append")
-      .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        if (!store.isCommitted(epoch)) {
-          updateCc(state, batch.toDF())
-          store.commit(epoch, Map("labels" -> state.labels))
-        }
-        sink(state.snapshot, epoch)
-        ()
-      }
-      .start()
-  }
+      sink: (DataFrame, Long) => Unit): StreamingQuery =
+    durableStateStream[CcState](
+      "durableCcMaintenanceStream", edges, stateDir, options)(
+      _.fold(emptyCcState(edges.sparkSession))(read => new CcState(read("labels"))))(
+      update = updateCc,
+      relations = st => Map("labels" -> st.labels),
+      sink = (st, epoch) => sink(st.snapshot, epoch))
 
   /** Maintained state for ONLINE CAPPED PERCEPTUAL CLUSTERING — the
     * Hamming-signature closure of the cosineLshVerdicts → [[updateCc]]
@@ -1684,10 +1392,10 @@ object StreamingOps {
       admitted.select(col("a_id"), col("b_id")).distinct()
 
     def release(): Unit = {
-      graft.operators.Storage.unpersistLocalCheckpoint(counts)
-      graft.operators.Storage.unpersistLocalCheckpoint(members)
-      graft.operators.Storage.unpersistLocalCheckpoint(admitted)
-      graft.operators.Storage.unpersistLocalCheckpoint(seen)
+      Storage.unpersistLocalCheckpoint(counts)
+      Storage.unpersistLocalCheckpoint(members)
+      Storage.unpersistLocalCheckpoint(admitted)
+      Storage.unpersistLocalCheckpoint(seen)
       cc.release()
     }
   }
@@ -1725,14 +1433,13 @@ object StreamingOps {
       state: HammingClusterState, batch: DataFrame): HammingClusterState = {
     val bucketKey = Seq("chunk", "chunk_val")
     // genuinely-new signatures only (at-least-once delivery tolerated)
-    val fresh = batch
+    Storage.releasing(batch
       .select(col("doc_id").cast("long").as("doc_id"),
         col("c0").cast("long"), col("c1").cast("long"),
         col("c2").cast("long"), col("c3").cast("long"))
       .dropDuplicates("doc_id")
       .join(state.seen, Seq("doc_id"), "anti")
-      .localCheckpoint(true)
-    try {
+      .localCheckpoint(true)) { fresh =>
       val chunked = fresh.select(
         col("doc_id"), col("c0"), col("c1"), col("c2"), col("c3"),
         posexplode(array(col("c0"), col("c1"), col("c2"), col("c3"))))
@@ -1740,7 +1447,7 @@ object StreamingOps {
       // bucket occupancy fold: n is monotone, so saturation is
       // permanent and "newly saturated" is exactly the n_old <= cap <
       // n frontier of this batch
-      val merged = state.counts.withColumnRenamed("n", "n_old")
+      Storage.releasing(state.counts.withColumnRenamed("n", "n_old")
         .join(chunked.groupBy(bucketKey.map(col): _*)
           .agg(count(lit(1)).as("dn")), bucketKey, "full")
         .select(col("chunk"), col("chunk_val"),
@@ -1748,84 +1455,84 @@ object StreamingOps {
             coalesce(col("dn"), lit(0L))).as("n"),
           coalesce(col("n_old"), lit(0L)).as("n_old"),
           col("dn").isNotNull.as("touched"))
-        .localCheckpoint(true)
-      val newlySat = merged
-        .where(col("n") > state.maxBucket && col("n_old") <= state.maxBucket)
-        .select(col("chunk"), col("chunk_val"))
-      // pair delta: only buckets still within the cap AND touched this
-      // batch can admit; expansion is in-row over <= cap members and
-      // keeps only pairs with a Δ endpoint (old×old already admitted)
-      val open = merged.where(col("n") <= state.maxBucket && col("touched"))
-        .select(col("chunk"), col("chunk_val"))
-      val pooled = state.members
-        .withColumn("is_new", lit(false))
-        .unionByName(chunked.select(
-          col("chunk"), col("chunk_val"), col("doc_id"),
-          col("c0"), col("c1"), col("c2"), col("c3"))
-          .withColumn("is_new", lit(true)))
-        .join(open, bucketKey, "semi")
-      val sorted = array_sort(collect_list(struct(
-        col("doc_id"), col("c0"), col("c1"), col("c2"), col("c3"),
-        col("is_new"))))
-      val pairDelta = pooled
-        .groupBy(bucketKey.map(col): _*)
-        .agg(sorted.as("ids"))
-        .select(col("chunk"), col("chunk_val"),
-          explode(flatten(transform(col("ids"), (a, i) =>
-            transform(slice(col("ids"), i + 2, size(col("ids"))),
-              b => struct(a.as("a"), b.as("b")))))).as("p"))
-        .where(col("p.a.is_new") || col("p.b.is_new"))
-        .where((0 until 4).map(c =>
-          bit_count(col(s"p.a.c$c").bitwiseXOR(col(s"p.b.c$c"))))
-          .reduce(_ + _) <= state.maxHamming)
-        .select(col("chunk"), col("chunk_val"),
-          col("p.a.doc_id").as("a_id"), col("p.b.doc_id").as("b_id"))
-        .localCheckpoint(true)
-      // state upserts (retraction = the anti-join on newlySat)
-      val newAdmitted = state.admitted
-        .join(newlySat, bucketKey, "anti")
-        .unionByName(pairDelta)
-        .localCheckpoint(true)
-      val newMembers = state.members
-        .join(newlySat, bucketKey, "anti")
-        .unionByName(chunked
-          .select(col("chunk"), col("chunk_val"), col("doc_id"),
+        .localCheckpoint(true)) { merged =>
+        val newlySat = merged
+          .where(col("n") > state.maxBucket && col("n_old") <= state.maxBucket)
+          .select(col("chunk"), col("chunk_val"))
+        // pair delta: only buckets still within the cap AND touched this
+        // batch can admit; expansion is in-row over <= cap members and
+        // keeps only pairs with a Δ endpoint (old×old already admitted)
+        val open = merged.where(col("n") <= state.maxBucket && col("touched"))
+          .select(col("chunk"), col("chunk_val"))
+        val pooled = state.members
+          .withColumn("is_new", lit(false))
+          .unionByName(chunked.select(
+            col("chunk"), col("chunk_val"), col("doc_id"),
             col("c0"), col("c1"), col("c2"), col("c3"))
-          .join(merged.where(col("n") <= state.maxBucket)
-            .select(col("chunk"), col("chunk_val")), bucketKey, "semi"))
-        .localCheckpoint(true)
-      val newSeen = state.seen.unionByName(fresh.select("doc_id"))
-        .localCheckpoint(true)
-      val retracting = !newlySat.isEmpty
-      graft.operators.Storage.unpersistLocalCheckpoint(state.counts)
-      graft.operators.Storage.unpersistLocalCheckpoint(state.members)
-      graft.operators.Storage.unpersistLocalCheckpoint(state.admitted)
-      graft.operators.Storage.unpersistLocalCheckpoint(state.seen)
-      state.counts = merged.select(col("chunk"), col("chunk_val"), col("n"))
-        .localCheckpoint(true)
-      graft.operators.Storage.unpersistLocalCheckpoint(merged)
-      state.members = newMembers
-      state.admitted = newAdmitted
-      state.seen = newSeen
-      if (retracting) {
-        // a saturated bucket pulled pairs out — merges may have to
-        // un-happen, so rebuild from the maintained capped pair set
-        // (bounded by the same law the batch chain pays every run)
-        val labels = graft.operators.Storage.releasing(
-          graft.operators.Dedup.connectedComponents(
-            newAdmitted.select(col("a_id"), col("b_id")).distinct()))(
-          _.select(col("doc_id").as("node_id"), col("cluster_id"))
-            .localCheckpoint(true))
-        graft.operators.Storage.unpersistLocalCheckpoint(state.cc.labels)
-        state.cc.labels = labels
-      } else {
-        // append-only delta: the broadcast-remap incremental merge
-        updateCc(state.cc,
-          pairDelta.select(col("a_id").as("src"), col("b_id").as("dst")))
+            .withColumn("is_new", lit(true)))
+          .join(open, bucketKey, "semi")
+        val sorted = array_sort(collect_list(struct(
+          col("doc_id"), col("c0"), col("c1"), col("c2"), col("c3"),
+          col("is_new"))))
+        Storage.releasing(pooled
+          .groupBy(bucketKey.map(col): _*)
+          .agg(sorted.as("ids"))
+          .select(col("chunk"), col("chunk_val"),
+            explode(flatten(transform(col("ids"), (a, i) =>
+              transform(slice(col("ids"), i + 2, size(col("ids"))),
+                b => struct(a.as("a"), b.as("b")))))).as("p"))
+          .where(col("p.a.is_new") || col("p.b.is_new"))
+          .where((0 until 4).map(c =>
+            bit_count(col(s"p.a.c$c").bitwiseXOR(col(s"p.b.c$c"))))
+            .reduce(_ + _) <= state.maxHamming)
+          .select(col("chunk"), col("chunk_val"),
+            col("p.a.doc_id").as("a_id"), col("p.b.doc_id").as("b_id"))
+          .localCheckpoint(true)) { pairDelta =>
+          // state upserts (retraction = the anti-join on newlySat)
+          val newAdmitted = state.admitted
+            .join(newlySat, bucketKey, "anti")
+            .unionByName(pairDelta)
+            .localCheckpoint(true)
+          val newMembers = state.members
+            .join(newlySat, bucketKey, "anti")
+            .unionByName(chunked
+              .select(col("chunk"), col("chunk_val"), col("doc_id"),
+                col("c0"), col("c1"), col("c2"), col("c3"))
+              .join(merged.where(col("n") <= state.maxBucket)
+                .select(col("chunk"), col("chunk_val")), bucketKey, "semi"))
+            .localCheckpoint(true)
+          val newSeen = state.seen.unionByName(fresh.select("doc_id"))
+            .localCheckpoint(true)
+          val retracting = !newlySat.isEmpty
+          Storage.unpersistLocalCheckpoint(state.counts)
+          Storage.unpersistLocalCheckpoint(state.members)
+          Storage.unpersistLocalCheckpoint(state.admitted)
+          Storage.unpersistLocalCheckpoint(state.seen)
+          state.counts = merged.select(col("chunk"), col("chunk_val"), col("n"))
+            .localCheckpoint(true)
+          state.members = newMembers
+          state.admitted = newAdmitted
+          state.seen = newSeen
+          if (retracting) {
+            // a saturated bucket pulled pairs out — merges may have to
+            // un-happen, so rebuild from the maintained capped pair set
+            // (bounded by the same law the batch chain pays every run)
+            val labels = Storage.releasing(
+              graft.operators.Dedup.connectedComponents(
+                newAdmitted.select(col("a_id"), col("b_id")).distinct()))(
+              _.select(col("doc_id").as("node_id"), col("cluster_id"))
+                .localCheckpoint(true))
+            Storage.unpersistLocalCheckpoint(state.cc.labels)
+            state.cc.labels = labels
+          } else {
+            // append-only delta: the broadcast-remap incremental merge
+            updateCc(state.cc,
+              pairDelta.select(col("a_id").as("src"), col("b_id").as("dst")))
+          }
+          state
+        }
       }
-      graft.operators.Storage.unpersistLocalCheckpoint(pairDelta)
-      state
-    } finally graft.operators.Storage.unpersistLocalCheckpoint(fresh)
+    }
   }
 
   /** Streaming perceptual-cluster maintenance: ingest a signature
@@ -1840,78 +1547,55 @@ object StreamingOps {
       maxHamming: Int = 3,
       maxBucket: Int = 4096,
       options: Map[String, String] = Map.empty)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val state = emptyHammingClusterState(
       signatures.sparkSession, maxHamming, maxBucket)
-    signatures.writeStream
-      .outputMode("append")
-      .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        sink(updateHammingClusters(state, batch.toDF()).snapshot, epoch)
-        ()
-      }
-      .start()
+    foreachBatch(signatures, options) { (batch, epoch) =>
+      sink(updateHammingClusters(state, batch).snapshot, epoch)
+    }
   }
 
   /** Durable, restartable [[hammingClusterMaintenanceStream]] — the
     * full capped-clustering state (bucket occupancy, open-bucket
     * members, bucket-keyed admitted pairs, seen docs, labels)
-    * snapshotted per epoch through [[EpochStateStore]] with
-    * idempotent replay, the [[durableTriangleMaintenanceStream]]
-    * protocol. The retraction machinery survives the restart with the
-    * state: a bucket whose occupancy crosses `maxBucket` AFTER a
-    * kill/resume still takes exactly its own pre-restart admitted
-    * pairs back out (pinned in StreamingOpsSpec). The cap parameters
-    * are persisted WITH the state and verified on resume — a resume
-    * under different (maxHamming, maxBucket) would silently change
-    * the law the snapshot satisfies, so it fails loudly instead. */
+    * committed per epoch with idempotent replay, the
+    * [[durableStateStream]] protocol. The retraction machinery survives
+    * the restart with the state: a bucket whose occupancy crosses
+    * `maxBucket` AFTER a kill/resume still takes exactly its own
+    * pre-restart admitted pairs back out (pinned in StreamingOpsSpec).
+    * The cap parameters are committed WITH the state and verified on
+    * resume — a resume under different (maxHamming, maxBucket) would
+    * silently change the law the snapshot satisfies, so it fails
+    * loudly instead. */
   def durableHammingClusterMaintenanceStream(
       signatures: DataFrame,
       stateDir: String,
       maxHamming: Int = 3,
       maxBucket: Int = 4096,
       options: Map[String, String] = Map.empty)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
     val spark = signatures.sparkSession
     import spark.implicits._
-    val store = new EpochStateStore(spark, stateDir)
-    val names = Seq("counts", "members", "admitted", "seen", "labels", "params")
-    val resumed = store.latestCommitted(names)
-    requireDurableLineage("durableHammingClusterMaintenanceStream",
-      resumed.map(_._1), stateDir, options)
-    val state = resumed match {
-      case Some((_, m)) =>
-        val p = m("params").as[(Int, Int)].collect().head
+    val params = Seq((maxHamming, maxBucket)).toDF("max_hamming", "max_bucket")
+    durableStateStream[HammingClusterState](
+      "durableHammingClusterMaintenanceStream", signatures, stateDir, options)(
+      _.fold(emptyHammingClusterState(spark, maxHamming, maxBucket)) { read =>
+        val p = Storage.releasing(read("params"))(_.as[(Int, Int)].collect().head)
         require(p == ((maxHamming, maxBucket)),
           s"durableHammingClusterMaintenanceStream: state at $stateDir was " +
             s"maintained under (maxHamming, maxBucket) = $p; resuming with " +
             s"($maxHamming, $maxBucket) would change the law the snapshot " +
             "satisfies — pass the original cap parameters or use a fresh " +
             "stateDir")
-        new HammingClusterState(
-          m("counts").localCheckpoint(true),
-          m("members").localCheckpoint(true),
-          m("admitted").localCheckpoint(true),
-          m("seen").localCheckpoint(true),
-          new CcState(m("labels").localCheckpoint(true)),
+        new HammingClusterState(read("counts"), read("members"),
+          read("admitted"), read("seen"), new CcState(read("labels")),
           maxHamming, maxBucket)
-      case None => emptyHammingClusterState(spark, maxHamming, maxBucket)
-    }
-    val params = Seq((maxHamming, maxBucket)).toDF("max_hamming", "max_bucket")
-    signatures.writeStream
-      .outputMode("append")
-      .options(options)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        if (!store.isCommitted(epoch)) {
-          updateHammingClusters(state, batch.toDF())
-          store.commit(epoch, Map(
-            "counts" -> state.counts, "members" -> state.members,
-            "admitted" -> state.admitted, "seen" -> state.seen,
-            "labels" -> state.cc.labels, "params" -> params))
-        }
-        sink(state.snapshot, epoch)
-        ()
-      }
-      .start()
+      })(
+      update = updateHammingClusters,
+      relations = st => Map(
+        "counts" -> st.counts, "members" -> st.members,
+        "admitted" -> st.admitted, "seen" -> st.seen,
+        "labels" -> st.cc.labels, "params" -> params),
+      sink = (st, epoch) => sink(st.snapshot, epoch))
   }
 }

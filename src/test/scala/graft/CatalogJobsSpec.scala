@@ -114,7 +114,7 @@ class CatalogJobsSpec extends AnyFunSuite {
     * whose job counts move between runs of the same code (knn_mmr
     * 38–40, knn_mmr_hybrid 52–55, knn_mmr_ivf 41–44, knn_eval_mmr 47–49
     * jobs over 14 runs), and text_bpe_encode, which learns its merge
-    * table only on a session's first call (37 jobs, then 4), so its
+    * table only on a session's first call (36 jobs, then 4), so its
     * count depends on which suites ran before. */
   private val trainerPinned = Seq(
     "mm_capped_eval" -> 13,
@@ -144,21 +144,14 @@ class CatalogJobsSpec extends AnyFunSuite {
     * the lower count, and one more also passes. */
   private val racy = Set("dedup_admission_semantic", "er_rollup")
 
-  /** Queries that keep more than their result's own pins cached after
-    * they ran, each with its reason. */
-  private val keeps = Map(
-    "text_bpe_encode" -> ("the per-session merge-table memo re-pins the " +
-      "table Bpe.learn already pinned, and learn's own pin stays behind " +
-      "until the garbage collector drops it"))
-
   /** The ids of the persistent RDDs in the session. */
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   /** "name: pinned n, got m" for every query whose count moved, and
     * "name: left k ..." for every query that left a persistent RDD
     * behind beyond the checkpoints its result reads (the query's own
-    * result pin), unless [[keeps]] names it. The sweep reads the RDD
-    * registry around the same run, so it costs no job. */
+    * result pin). The sweep reads the RDD registry around the same
+    * run, so it costs no job. */
   private def moved(pins: Seq[(String, Int)]): Seq[String] = {
     // counted from the same state whatever suites ran before: no cached
     // relations (a suite that leaves a loader's relation cached, as
@@ -182,7 +175,7 @@ class CatalogJobsSpec extends AnyFunSuite {
         if (want == Unpinned || got == want || (racy(name) && got == want + 1)) None
         else Some(s"$name: pinned $want, got $got")
       val leaked =
-        if (left.isEmpty || keeps.contains(name)) None
+        if (left.isEmpty) None
         else Some(s"$name: left ${left.size} persistent RDDs beyond its result")
       jobs ++ leaked
     }

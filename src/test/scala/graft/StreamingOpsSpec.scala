@@ -351,10 +351,13 @@ class StreamingOpsSpec extends AnyFunSuite {
     // serving deployments need a durable checkpoint + a query name —
     // pass both through the writeStream options seam
     val chk = java.nio.file.Files.createTempDirectory("graft_ivf_chk").toString
-    val q = StreamingOps.ivfServeStream(
-      mem.toDF().toDF("query_id", "q"), path, k = 5, nProbe = 2,
-      options = Map("checkpointLocation" -> chk),
-      queryName = Some("ivf_serve_test")) { batchOut =>
+    // fixed snapshot: base ∪ deltas and the centroids resolve once
+    val assigned = graft.operators.IvfIndex.readAll(spark, path)
+    val centroids = graft.operators.IvfIndex.centroids(spark, path)
+    val q = StreamingOps.foreachBatch(mem.toDF().toDF("query_id", "q"),
+      Map("checkpointLocation" -> chk, "queryName" -> "ivf_serve_test")) { (batch, _) =>
+      val batchOut = graft.operators.Similarity.ivfServe(
+        assigned, centroids, batch, k = 5, nProbe = 2)
       served.synchronized {
         served ++= batchOut.as[(Long, Long, Int, Double)].collect()
       }
@@ -400,8 +403,11 @@ class StreamingOpsSpec extends AnyFunSuite {
       .select(F.col("vec_id").as("query_id"), F.col("embedding").as("q"))
     val mem = MemoryStream[(Long, Array[Float])]
     val served = scala.collection.mutable.ArrayBuffer[(Long, Long, Int, Double)]()
-    val q = StreamingOps.ivfServeStream(
-      mem.toDF().toDF("query_id", "q"), path, k = 5, nProbe = 2) { out =>
+    val assigned = graft.operators.IvfIndex.readAll(spark, path)
+    val centroids = graft.operators.IvfIndex.centroids(spark, path)
+    val q = StreamingOps.foreachBatch(mem.toDF().toDF("query_id", "q")) { (batch, _) =>
+      val out = graft.operators.Similarity.ivfServe(
+        assigned, centroids, batch, k = 5, nProbe = 2)
       served.synchronized { served ++= out.as[(Long, Long, Int, Double)].collect() }
     }
     try {
@@ -700,37 +706,71 @@ class StreamingOpsSpec extends AnyFunSuite {
     try q3.processAllAvailable() finally q3.stop()
     assert(snaps.synchronized(snaps.last) == expect(e2),
       "replayed epoch was re-applied: triangle counts doubled")
-    // exactly one committed state generation remains on disk
-    val gens = new java.io.File(st).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("gen="))
-      .filter(f => new java.io.File(f, "_COMMITTED").exists())
-    assert(gens.length == 1, s"superseded generations not pruned: ${gens.toSeq}")
+    // exactly one committed state snapshot remains on disk, the latest
+    // epoch's; the older epochs' markers stay as the replay guard
+    def digits(dir: String) = new java.io.File(s"$st/$dir").list().toSeq
+      .filter(_.forall(_.isDigit)).map(_.toLong).sorted
+    val (markers, snapshots) = (digits("epochs"), digits("deltas"))
+    assert(snapshots == Seq(markers.max) && markers.length > 1,
+      s"superseded epochs not retired: data $snapshots, markers $markers")
   }
 
   test("EpochStateStore ignores torn generations and prunes superseded ones") {
-    // the commit protocol's crash window, tested at the store level:
-    // a generation with data but no marker (died mid-write) must be
-    // invisible to restart, then clobbered by the replay's overwrite;
-    // committing the next generation retires the previous one
-    val dir = java.nio.file.Files.createTempDirectory("graft_ess").toString
-    val store = new graft.streaming.EpochStateStore(spark, dir)
-    assert(store.latestCommitted(Seq("labels")).isEmpty)
-    store.commit(0L, Map("labels" -> Seq((1L, 1L)).toDF("node_id", "cluster_id")))
-    // torn gen 1: data written, marker lost
-    Seq((2L, 2L)).toDF("node_id", "cluster_id")
-      .write.parquet(s"$dir/gen=1/labels")
-    val (e0, m0) = store.latestCommitted(Seq("labels")).get
-    assert(e0 == 0L &&
-      m0("labels").as[(Long, Long)].collect().toSeq == Seq((1L, 1L)),
-      "torn generation leaked into restart")
-    assert(!store.isCommitted(1L))
-    // the replay overwrites the torn attempt and commits; gen 0 retires
-    store.commit(1L, Map("labels" -> Seq((3L, 3L)).toDF("node_id", "cluster_id")))
-    val (e1, m1) = store.latestCommitted(Seq("labels")).get
-    assert(e1 == 1L &&
-      m1("labels").as[(Long, Long)].collect().toSeq == Seq((3L, 3L)))
-    assert(!new java.io.File(s"$dir/gen=0").exists(),
-      "superseded generation not pruned")
+    // the durable state's commit window on its LsmSegments layout: an
+    // epoch whose data landed but whose marker did not (died mid-write)
+    // must be invisible to resume, then overwritten by the replay of
+    // that epoch; a commit retires the previous epoch's data and keeps
+    // its marker as the replay guard
+    val base = java.nio.file.Files.createTempDirectory("graft_ess").toString
+    val (src, ckpt, st) = (s"$base/src", s"$base/chk", s"$base/state")
+    @volatile var lastSnap: Map[Long, Long] = Map.empty
+    def start() = StreamingOps.durableCcMaintenanceStream(
+      spark.readStream.schema("src LONG, dst LONG").parquet(src),
+      st, Map("checkpointLocation" -> ckpt)) { (snap, _) =>
+      lastSnap = snap.as[(Long, Long)].collect().toMap
+    }
+    def labelsAt(epoch: Long) =
+      spark.read.parquet(s"$st/deltas/$epoch/labels").as[(Long, Long)].collect().toMap
+    Seq((1L, 2L)).toDF("src", "dst").coalesce(1).write.mode("append").parquet(src)
+    val q1 = start()
+    try q1.processAllAvailable() finally q1.stop()
+    assert(graft.operators.LsmSegments.committedEpochs(spark, st) == Seq(0L))
+    // torn epoch 1: data written, marker lost
+    Seq((9L, 9L)).toDF("node_id", "cluster_id").write.parquet(s"$st/deltas/1/labels")
+    // the next batch is epoch 1 again: it resumes from epoch 0's labels
+    // and its commit overwrites the torn data
+    Seq((2L, 3L)).toDF("src", "dst").coalesce(1).write.mode("append").parquet(src)
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L)
+    assert(lastSnap == want, s"torn epoch leaked into resume: $lastSnap")
+    assert(graft.operators.LsmSegments.committedEpochs(spark, st) == Seq(0L, 1L))
+    assert(labelsAt(1L) == want, "the replay did not overwrite the torn data")
+    assert(!new java.io.File(s"$st/deltas/0").exists(),
+      "superseded epoch's data not retired")
+    assert(new java.io.File(s"$st/epochs/0").exists(),
+      "the retired epoch's replay-guard marker is gone")
+  }
+
+  test("durable state refuses a fresh checkpoint lineage against committed epochs") {
+    // a FRESH checkpointLocation restarts epoch ids at 0: against a
+    // store whose epoch 0 is committed, its first batch would find that
+    // marker and be skipped, silently dropping the new edges. The
+    // checkpoint's offset log must have reached the store's latest epoch.
+    val base = java.nio.file.Files.createTempDirectory("graft_dur_lineage").toString
+    val (src, st) = (s"$base/src", s"$base/state")
+    def start(ckpt: String) = StreamingOps.durableCcMaintenanceStream(
+      spark.readStream.schema("src LONG, dst LONG").parquet(src),
+      st, Map("checkpointLocation" -> ckpt)) { (_, _) => () }
+    Seq((1L, 2L)).toDF("src", "dst").coalesce(1).write.mode("append").parquet(src)
+    val q1 = start(s"$base/chkA")
+    try q1.processAllAvailable() finally q1.stop()
+    Seq((3L, 4L)).toDF("src", "dst").coalesce(1).write.mode("append").parquet(src)
+    val e = intercept[IllegalArgumentException](start(s"$base/chkB").stop())
+    assert(e.getMessage.contains("checkpointLocation"), e.getMessage)
+    // the original lineage still resumes
+    val q2 = start(s"$base/chkA")
+    try q2.processAllAvailable() finally q2.stop()
   }
 
   test("durable CC maintenance: restart resumes and replayed epochs are idempotent") {
@@ -768,7 +808,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     // the composed ingest pipeline, durable end-to-end: file-source
     // docs -> minhashLshVerdicts (flatMapGroupsWithState, state in the
     // STREAM checkpoint) -> (partner, doc) edges -> durable CC
-    // maintenance (labels in the EpochStateStore). The query is KILLED
+    // maintenance (labels in the durable state store). The query is KILLED
     // between batches and resumed from both stores; the final cluster
     // snapshot must equal the batch pipeline — connectedComponents
     // over the batch minhashLsh pairs of every doc ever delivered.
@@ -1406,11 +1446,11 @@ class StreamingOpsSpec extends AnyFunSuite {
   }
 
   test("streaming SQ8/PQ/binary serve equals each tier's batch index serve per micro-batch") {
-    // the three serve-stream siblings of ivfServeStream: query vectors
-    // arriving over two micro-batches against each persisted tier must
-    // produce exactly the batch serveAll rows for the union of queries
-    // (per-query top-k is state-free across batches). The snapshot +
-    // trained state resolve once at stream start.
+    // the IVF serve's three siblings: query vectors arriving over two
+    // micro-batches against each persisted tier must produce exactly
+    // the batch serveAll rows for the union of queries (per-query top-k
+    // is state-free across batches). The snapshot + trained state
+    // resolve once at stream start.
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.{functions => F}
     val e = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
@@ -1444,13 +1484,17 @@ class StreamingOpsSpec extends AnyFunSuite {
       .select($"vec_id", $"embedding").as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
     val sq8Chk = java.nio.file.Files.createTempDirectory("graft_sq8_srv_chk").toString
     val sq8Got = runServe[(Long, Seq[Float])](floatQs, sq8Chk,
-      (qdf, sink) => StreamingOps.sq8ServeStream(qdf, sq8Path, k = 5,
-        options = Map("checkpointLocation" -> sq8Chk),
-        queryName = Some("sq8_serve_test"))(sink),
+      (qdf, sink) => {
+        val snapshot = graft.operators.Sq8Index.readAll(spark, sq8Path)
+        StreamingOps.foreachBatch(qdf,
+          Map("checkpointLocation" -> sq8Chk, "queryName" -> "sq8_serve_test")) { (batch, _) =>
+          sink(graft.operators.Sq8Index.serveSnapshot(snapshot, batch, k = 5, salts = 32))
+        }
+      },
       _.toDF("query_id", "qv"))
     val sq8Want = want(graft.operators.Sq8Index.serveAll(spark, sq8Path,
       e.where($"vec_id" < 6).select($"vec_id".as("query_id"), $"embedding".as("qv")), k = 5))
-    assert(sq8Got == sq8Want && sq8Got.nonEmpty, "sq8ServeStream diverged from batch serveAll")
+    assert(sq8Got == sq8Want && sq8Got.nonEmpty, "streamed SQ8 serve diverged from batch serveAll")
     assert(new java.io.File(s"$sq8Chk/commits").list().nonEmpty,
       "checkpointLocation option did not reach the streaming writer")
 
@@ -1461,11 +1505,18 @@ class StreamingOpsSpec extends AnyFunSuite {
     graft.operators.PqIndex.write(e, cb, pqPath)
     val pqGot = runServe[(Long, Seq[Float])](floatQs,
       java.nio.file.Files.createTempDirectory("graft_pq_srv_chk").toString,
-      (qdf, sink) => StreamingOps.pqServeStream(qdf, pqPath, k = 5)(sink),
+      (qdf, sink) => {
+        val (snapshot, codebook, subspaces, subDim) =
+          graft.operators.PqIndex.openAll(spark, pqPath)
+        StreamingOps.foreachBatch(qdf) { (batch, _) =>
+          sink(graft.operators.PqIndex.serveSnapshot(
+            snapshot, codebook, subspaces, subDim, batch, k = 5, salts = 32))
+        }
+      },
       _.toDF("query_id", "q"))
     val pqWant = want(graft.operators.PqIndex.serveAll(spark, pqPath,
       e.where($"vec_id" < 6).select($"vec_id".as("query_id"), $"embedding".as("q")), k = 5))
-    assert(pqGot == pqWant && pqGot.nonEmpty, "pqServeStream diverged from batch serveAll")
+    assert(pqGot == pqWant && pqGot.nonEmpty, "streamed PQ serve diverged from batch serveAll")
 
     // binary: PACKED queries (query_id, qsig)
     val binPath = java.nio.file.Files.createTempDirectory("graft_bin_srv").toString
@@ -1474,12 +1525,17 @@ class StreamingOpsSpec extends AnyFunSuite {
       .as[(Long, Seq[Long])].collect().sortBy(_._1).toSeq
     val binGot = runServe[(Long, Seq[Long])](packedQs,
       java.nio.file.Files.createTempDirectory("graft_bin_srv_chk").toString,
-      (qdf, sink) => StreamingOps.binaryServeStream(qdf, binPath, k = 5)(sink),
+      (qdf, sink) => {
+        val snapshot = graft.operators.BinaryIndex.readAll(spark, binPath)
+        StreamingOps.foreachBatch(qdf) { (batch, _) =>
+          sink(graft.operators.BinaryIndex.serveSnapshot(snapshot, batch, k = 5, salts = 32))
+        }
+      },
       _.toDF("query_id", "qsig"))
     val binWant = want(graft.operators.BinaryIndex.serveAll(spark, binPath,
       graft.operators.Similarity.binarySignatures(e.where($"vec_id" < 6))
         .select($"vec_id".as("query_id"), $"sig".as("qsig")), k = 5))
-    assert(binGot == binWant && binGot.nonEmpty, "binaryServeStream diverged from batch serveAll")
+    assert(binGot == binWant && binGot.nonEmpty, "streamed binary serve diverged from batch serveAll")
   }
 
   test("streaming IVFADC ingest + serve equal the batch tier (delta segments against the stored trained state)") {
@@ -1487,7 +1543,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     // residual-encoded against the index's FIXED stored state and land
     // as committed delta segments — serveAll must equal an index built
     // from everything at once (codes are pure functions of the stored
-    // state). ivfPqServeStream: query micro-batches against the fixed
+    // state). The serve stream: query micro-batches against the fixed
     // snapshot must reproduce the batch serveAll rows exactly.
     implicit val sqlCtx = spark.sqlContext
     val e = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
@@ -1526,8 +1582,11 @@ class StreamingOpsSpec extends AnyFunSuite {
       .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
     val qmem = MemoryStream[(Long, Seq[Float])]
     val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Int, Double)]()
-    val sq = StreamingOps.ivfPqServeStream(
-      qmem.toDF().toDF("query_id", "q"), inc, k = 5, nProbe = 4) { b =>
+    val (snapshot, centroids, codebook, subspaces, subDim) =
+      graft.operators.IvfPqIndex.openAll(spark, inc)
+    val sq = StreamingOps.foreachBatch(qmem.toDF().toDF("query_id", "q")) { (batch, _) =>
+      val b = graft.operators.IvfPqIndex.serveSnapshot(snapshot, centroids,
+        codebook, subspaces, subDim, batch, k = 5, nProbe = 4, salts = 32)
       out.synchronized { out ++= b.as[(Long, Long, Int, Double)].collect() }
     }
     try {
@@ -1540,7 +1599,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       k = 5, nProbe = 4)
       .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
     assert(servedStream == wantStream && servedStream.nonEmpty,
-      "ivfPqServeStream diverged from batch serveAll")
+      "streamed IVFADC serve diverged from batch serveAll")
   }
 
   test("streaming MaxSim ingest + serve equal the batch tier (document-atomic bag segments)") {
@@ -1548,7 +1607,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     // per document against the index's fixed tokensPerDoc grouping and
     // land as committed delta segments — document-atomic batches (all
     // tokens of a doc in one batch), so serveAll must equal an index
-    // built from everything at once. maxSimServeStream: query-bag
+    // built from everything at once. The serve stream: query-bag
     // micro-batches against the fixed snapshot must reproduce batch
     // serveAll exactly.
     implicit val sqlCtx = spark.sqlContext
@@ -1586,8 +1645,9 @@ class StreamingOpsSpec extends AnyFunSuite {
     val qRows = queries.as[(Long, Seq[Seq[Float]])].collect().sortBy(_._1).toSeq
     val qmem = MemoryStream[(Long, Seq[Seq[Float]])]
     val out = scala.collection.mutable.ArrayBuffer[(Long, Long, Int, Double)]()
-    val sq = StreamingOps.maxSimServeStream(
-      qmem.toDF().toDF("query_id", "qtoks"), inc, k = 5) { b =>
+    val snapshot = graft.operators.MaxSimIndex.readAll(spark, inc)
+    val sq = StreamingOps.foreachBatch(qmem.toDF().toDF("query_id", "qtoks")) { (batch, _) =>
+      val b = graft.operators.MaxSimIndex.serveSnapshot(snapshot, batch, k = 5, salts = 32)
       out.synchronized { out ++= b.as[(Long, Long, Int, Double)].collect() }
     }
     try {
@@ -1595,7 +1655,7 @@ class StreamingOpsSpec extends AnyFunSuite {
       qmem.addData(qRows.drop(2): _*); sq.processAllAvailable()
     } finally sq.stop()
     assert(out.sortBy(r => (r._1, r._3)).toSeq == servedAll(inc),
-      "maxSimServeStream diverged from batch serveAll")
+      "streamed MaxSim serve diverged from batch serveAll")
   }
 
   test("ingest loop auto-compacts past the epoch threshold; readers on the retained generation stay consistent") {
@@ -1698,8 +1758,8 @@ class StreamingOpsSpec extends AnyFunSuite {
     // exact screening: streamed hit union == batch probe of the union
     val mem = MemoryStream[(Long, String)]
     val hits = scala.collection.mutable.ArrayBuffer[(Long, Long, Long)]()
-    val q = StreamingOps.exactProbeStream(
-      mem.toDF().toDF("doc_id", "text"), exPath) { out =>
+    val q = StreamingOps.foreachBatch(mem.toDF().toDF("doc_id", "text")) { (batch, _) =>
+      val out = graft.operators.ContentHashIndex.probeNew(spark, exPath, batch)
       hits.synchronized { hits ++= out.as[(Long, Long, Long)].collect() }
     }
     try {
@@ -1715,11 +1775,13 @@ class StreamingOpsSpec extends AnyFunSuite {
     // minhash screening: each micro-batch == batch probePairs on that shard
     val mem2 = MemoryStream[(Long, String)]
     val pairsSeen = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-    val q2 = StreamingOps.minhashProbeStream(
-      mem2.toDF().toDF("doc_id", "text"), mhPath) { out =>
-      pairsSeen.synchronized {
-        pairsSeen ++= out.select("a_id", "b_id", "jaccard")
-          .as[(Long, Long, Double)].collect()
+    val q2 = StreamingOps.foreachBatch(mem2.toDF().toDF("doc_id", "text")) { (batch, _) =>
+      graft.operators.Storage.releasing(
+        graft.operators.MinHashIndex.probePairs(spark, mhPath, batch)) { out =>
+        pairsSeen.synchronized {
+          pairsSeen ++= out.select("a_id", "b_id", "jaccard")
+            .as[(Long, Long, Double)].collect()
+        }
       }
     }
     def batchPairs(shard: Seq[(Long, String)]): Set[(Long, Long, Double)] = {
@@ -1743,7 +1805,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   test("hamming ingest + probe streams equal the batch tier (image signatures)") {
     // ingestStream(HammingIndex): signature micro-batches land as committed
     // delta segments — servePairs must equal an index built from
-    // everything at once. hammingProbeStream: each batch's pairs equal
+    // everything at once. The probe stream: each batch's pairs equal
     // the batch probePairs on that shard.
     implicit val sqlCtx = spark.sqlContext
     val sigs = graft.multimodal.Multimodal.imageAHash(
@@ -1776,9 +1838,12 @@ class StreamingOpsSpec extends AnyFunSuite {
     val (s1, s2) = shard.splitAt(shard.length / 2)
     val pmem = MemoryStream[(Long, Int, Int, Int, Int)]
     val seen = scala.collection.mutable.ArrayBuffer[(Long, Long, Int)]()
-    val pq = StreamingOps.hammingProbeStream(
-      pmem.toDF().toDF("doc_id", "c0", "c1", "c2", "c3"), inc) { out =>
-      seen.synchronized { seen ++= out.as[(Long, Long, Int)].collect() }
+    val pq = StreamingOps.foreachBatch(
+      pmem.toDF().toDF("doc_id", "c0", "c1", "c2", "c3")) { (batch, _) =>
+      graft.operators.Storage.releasing(
+        graft.operators.HammingIndex.probePairs(spark, inc, batch)) { out =>
+        seen.synchronized { seen ++= out.as[(Long, Long, Int)].collect() }
+      }
     }
     def batchPairs(sh: Seq[(Long, Int, Int, Int, Int)]) = {
       val r = graft.operators.HammingIndex.probePairs(
@@ -1813,10 +1878,12 @@ class StreamingOpsSpec extends AnyFunSuite {
     val (h1, h2) = recrawl.splitAt(recrawl.length / 2)
     val mem = MemoryStream[(Long, Seq[Float])]
     val seen = scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-    val q = StreamingOps.semanticProbeStream(
-      mem.toDF().toDF("vec_id", "embedding"), path, threshold = 0.9) { out =>
-      seen.synchronized {
-        seen ++= out.as[(Long, Long, Double)].collect()
+    val q = StreamingOps.foreachBatch(mem.toDF().toDF("vec_id", "embedding")) { (batch, _) =>
+      graft.operators.Storage.releasing(
+        graft.operators.IvfIndex.probeSemantic(spark, path, batch, threshold = 0.9)) { out =>
+        seen.synchronized {
+          seen ++= out.as[(Long, Long, Double)].collect()
+        }
       }
     }
     def batchPairs(shard: Seq[(Long, Seq[Float])]): Set[(Long, Long, Double)] = {
@@ -1839,7 +1906,7 @@ class StreamingOpsSpec extends AnyFunSuite {
   test("record ingest + probe streams equal the batch ER tier") {
     // ingestStream(RecordIndex): record micro-batches land as committed delta
     // segments — a probe against the streamed index must equal one
-    // against an all-at-once register. recordProbeStream: each batch's
+    // against an all-at-once register. The probe stream: each batch's
     // fuzzy matches equal the batch probeShard on that shard.
     implicit val sqlCtx = spark.sqlContext
     val names = Vector("alpha", "alphb", "alpzb", "beta", "betta", "gamma")
@@ -1872,9 +1939,11 @@ class StreamingOpsSpec extends AnyFunSuite {
     val (s1, s2) = shard.splitAt(shard.length / 2)
     val pmem = MemoryStream[(Long, String, String)]
     val seen = scala.collection.mutable.ArrayBuffer[(Long, Long, Int)]()
-    val pq = StreamingOps.recordProbeStream(
-      pmem.toDF().toDF("id", "name", "block"), inc, maxDist = 2) { out =>
-      seen.synchronized { seen ++= out.as[(Long, Long, Int)].collect() }
+    val pq = StreamingOps.foreachBatch(pmem.toDF().toDF("id", "name", "block")) { (batch, _) =>
+      graft.operators.Storage.releasing(
+        graft.operators.RecordIndex.probeShard(spark, inc, batch, maxDist = 2)) { out =>
+        seen.synchronized { seen ++= out.as[(Long, Long, Int)].collect() }
+      }
     }
     def batchProbe(sh: Seq[(Long, String, String)]) =
       graft.operators.RecordIndex.probeShard(
@@ -1955,7 +2024,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     // the strongest durability claim: the bucket that saturates does
     // so in the SECOND lifetime of the query — its occupancy, its
     // members, and the admitted pairs it must take back were all
-    // recovered from the EpochStateStore, so the post-resume snapshot
+    // recovered from the durable state store, so the post-resume snapshot
     // only matches the batch capped chain if the whole retraction
     // state survived the kill
     implicit val sqlCtx = spark.sqlContext

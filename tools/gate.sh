@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
-# One-command provability gate: release-path grep -> compile -> test ->
-# verify vs DuckDB oracle -> bench. Mirrors what the round driver runs,
-# so a green gate here means a green round.
+# One-command provability gate: release-path and stream-driver greps ->
+# compile -> test -> verify vs DuckDB oracle -> bench. Mirrors what the
+# round driver runs, so a green gate here means a green round.
 #
 # Usage:
 #   tools/gate.sh              # gate scale (sf0.01), no bench
@@ -81,6 +81,22 @@ echo "== gate: release path =="
 # failure path comes back
 if grep -rn "unpersistLocalCheckpoint" src/main/scala/graft/queries/; then
   echo "DIRECT CHECKPOINT RELEASE IN queries/ (use Storage.releasing)"
+  exit 1
+fi
+
+echo "== gate: one stream driver, one durable commit =="
+# every stream in streaming/ starts through StreamingOps.foreachBatch,
+# and durable state commits through LsmSegments' epoch markers only: a
+# second writeStream chain or a second commit marker is how the
+# per-tier wrappers and the second commit protocol come back
+WRITE_STREAMS=$( (grep -ro '\.writeStream' src/main/scala/graft/streaming/ || true) | wc -l)
+if (( WRITE_STREAMS > 1 )); then
+  grep -rn '\.writeStream' src/main/scala/graft/streaming/
+  echo "$WRITE_STREAMS .writeStream IN streaming/ (start streams with StreamingOps.foreachBatch)"
+  exit 1
+fi
+if grep -rn "_COMMITTED" src/main; then
+  echo "_COMMITTED MARKER IN src/main (commit durable state with LsmSegments.appendEpoch)"
   exit 1
 fi
 
