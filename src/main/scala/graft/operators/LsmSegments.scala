@@ -198,7 +198,7 @@ private[graft] object LsmSegments {
   def retireDeltasBelow(spark: SparkSession, path: String, epoch: Long): Unit = {
     val f = fs(spark, path)
     listNames(spark, s"$path/deltas")
-      .filter(n => n.nonEmpty && n.forall(_.isDigit) && n.toLong < epoch)
+      .filter(n => n.forall(_.isDigit) && n.toLong < epoch)
       .foreach(n => f.delete(new org.apache.hadoop.fs.Path(s"$path/deltas/$n"), true))
   }
 

@@ -1038,21 +1038,20 @@ object StreamingOps {
       spark: SparkSession, name: String, resumedEpoch: Option[Long],
       stateDir: String, options: Map[String, String]): Unit =
     resumedEpoch.foreach { latest =>
-      val logged = options.get("checkpointLocation").toSeq.flatMap { chk =>
-        val offsets = new org.apache.hadoop.fs.Path(chk, "offsets")
+      val chk = options.get("checkpointLocation")
+      val lastLogged = chk.flatMap { c =>
+        val offsets = new org.apache.hadoop.fs.Path(c, "offsets")
         val fs = offsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(offsets)) Nil
+        if (!fs.exists(offsets)) None
         else fs.listStatus(offsets).toSeq.map(_.getPath.getName)
-          .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong)
+          .filter(_.forall(_.isDigit)).map(_.toLong).maxOption
       }
-      require(logged.nonEmpty && logged.max >= latest,
-        s"$name: state at $stateDir already holds committed epochs " +
-          s"(latest $latest) from a previous stream, and this query's " +
-          "checkpointLocation is " +
-          options.get("checkpointLocation").fold("absent")(c =>
-            s"$c, whose offset log " +
-              logged.maxOption.fold("is empty")(m => s"ends at batch $m")) +
-          ": its epoch ids restart below that, so its first batches would " +
+      require(lastLogged.exists(_ >= latest),
+        s"$name: state at $stateDir already holds committed epochs up to " +
+          s"$latest from a previous stream, but this query's " +
+          s"checkpointLocation (${chk.getOrElse("none")}) has logged " +
+          s"${lastLogged.fold("no batch")(b => s"batches only up to $b")}: " +
+          "its epoch ids restart below that, so its first batches would " +
           "collide with those markers and be silently skipped. Pass the " +
           "original checkpointLocation to resume that lineage, or use a " +
           "fresh stateDir.")

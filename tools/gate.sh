@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
-# One-command provability gate: release-path and stream-driver greps ->
-# compile -> test -> verify vs DuckDB oracle -> bench. Mirrors what the
-# round driver runs, so a green gate here means a green round.
+# One-command provability gate: greps -> compile -> test ->
+# verify vs DuckDB oracle -> bench. Mirrors what the round driver runs,
+# so a green gate here means a green round.
 #
 # Usage:
 #   tools/gate.sh              # gate scale (sf0.01), no bench
