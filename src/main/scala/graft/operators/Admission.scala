@@ -360,7 +360,7 @@ object Admission {
         semanticMaxList, semanticShortlist, perceptualMaxBucket))(
         AdmittedLog.writeSegment(_, p))
     })
-    val admitted = spark.read.parquet(s"$admittedPath/deltas/$epoch")
+    val admitted = LsmSegments.readArtifacts(spark, Seq(s"$admittedPath/deltas/$epoch"))
     // the per-store index appends are mutually independent (disjoint
     // store dirs, each individually idempotent and marker-guarded; the
     // crash-safety proof only orders them AFTER the admitted commit,

@@ -90,7 +90,7 @@ object HammingIndex extends SegmentedIndex {
     (("base", basePath) +: deltaPaths.map(p =>
         (s"delta_${p.substring(p.lastIndexOf('/') + 1)}", p)))
       .map { case (tag, p) =>
-        spark.read.parquet(p)
+        LsmSegments.readArtifacts(spark, Seq(p))
           .agg(count(lit(1)).as("n_rows"))
           .select(lit(tag).as("segment"), col("n_rows"))
       }

@@ -37,21 +37,14 @@ import org.apache.spark.sql.functions._
   * compaction-race test). */
 object IvfIndex extends SegmentedIndex {
 
-  /** The c_id partition column comes back type-inferred (int), so it
-    * is cast to the long the serving plan expects. */
-  override protected def loadSegment(spark: SparkSession, p: String): DataFrame =
-    spark.read.parquet(p)
-      .select(col("vec_id"), col("embedding"), col("c_id").cast("long").as("c_id"))
-
-  /** c_id-partitioned with the empty-frame fallback, shared with
-    * [[IvfPqIndex]] — see [[LsmSegments.writeCidPartitionedSegment]]. */
-  override private[graft] def writeSegment(df: DataFrame, p: String): Unit =
-    LsmSegments.writeCidPartitionedSegment(df, p)
+  /** Segments are partitioned by inverted list, so a probe reads only
+    * the probed lists' dirs; the carried schema declares c_id long. */
+  override protected def partitionCols: Seq[String] = Seq("c_id")
 
   /** The trained centroid table (c_id, c_vec), FIXED for the life of
     * the index. */
   def centroids(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/centroids")
+    LsmSegments.readArtifacts(spark, Seq(s"$path/centroids"))
 
   /** Assign an epoch of vectors (vec_id, embedding) against the stored
     * centroids. */
@@ -66,7 +59,7 @@ object IvfIndex extends SegmentedIndex {
     // the centroids write and the base write are independent jobs —
     // overlap them (guide §2.6); marker after both settle
     initBase(spark, path, Seq(
-      () => centroids.write.mode("overwrite").parquet(s"$path/centroids")))(
+      () => LsmSegments.writeArtifact(centroids, s"$path/centroids")))(
       Similarity.ivfAssign(embeddings, centroids))
   }
 

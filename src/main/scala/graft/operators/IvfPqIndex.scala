@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * Layout: `<path>/centroids` = (c_id, c_vec array<float>),
   * `<path>/codebook` = (cw_k int, cw full-dim array<double> — RESIDUAL
   * codewords, doubles because residuals are exact float32 differences
-  * computed in double), `<path>/meta` = one row (subspaces, sub_dim),
+  * computed in double), `<path>/meta.json` = (subspaces, sub_dim),
   * plus the [[LsmSegments]] base/delta segments of (vec_id, c0..c_{M−1})
   * PARTITIONED BY c_id — one directory per inverted list per segment.
   * Codes are ints and centroid floats / codeword doubles round-trip
@@ -29,21 +29,29 @@ import org.apache.spark.sql.functions._
   * same trained state (pinned by spec + the `knn_ivfpq_delta` oracle). */
 object IvfPqIndex extends SegmentedIndex {
 
-  /** Shared with [[IvfIndex]]: c_id-partitioned with the empty-frame
-    * fallback (an empty micro-batch epoch must not poison the store —
-    * see [[LsmSegments.writeCidPartitionedSegment]]). */
-  override private[graft] def writeSegment(df: DataFrame, p: String): Unit =
-    LsmSegments.writeCidPartitionedSegment(df, p)
-
-  /** The c_id partition column comes back type-inferred (int); the
-    * serving plan joins it against the probe LUTs' long. */
-  override protected def loadSegment(spark: SparkSession, p: String): DataFrame =
-    spark.read.parquet(p).withColumn("c_id", col("c_id").cast("long"))
+  /** Segments are partitioned by inverted list like [[IvfIndex]]'s;
+    * the carried schema declares c_id long, as the probe LUTs join it. */
+  override protected def partitionCols: Seq[String] = Seq("c_id")
 
   private def readMeta(spark: SparkSession, path: String): (Int, Int) = {
-    val r = spark.read.parquet(s"$path/meta").head()
-    (r.getAs[Int]("subspaces"), r.getAs[Int]("sub_dim"))
+    val m = LsmSegments.readMeta(spark, path)
+    (m("subspaces"), m("sub_dim"))
   }
+
+  /** The fixed trained state: coarse centroids, then the codebook. */
+  private def trainedState(spark: SparkSession, path: String): (DataFrame, DataFrame) =
+    (LsmSegments.readArtifacts(spark, Seq(s"$path/centroids")),
+      LsmSegments.readArtifacts(spark, Seq(s"$path/codebook")))
+
+  /** The init siblings of [[write]] and [[writeTrained]]: the trained
+    * state and the grid, in disjoint dirs. */
+  private def stateWrites(
+      centroids: DataFrame, codebook: DataFrame, path: String,
+      subspaces: Int, subDim: Int): Seq[() => Unit] = Seq(
+    () => LsmSegments.writeArtifact(centroids, s"$path/centroids"),
+    () => LsmSegments.writeArtifact(codebook, s"$path/codebook"),
+    () => LsmSegments.writeMeta(centroids.sparkSession, path,
+      Map("subspaces" -> subspaces, "sub_dim" -> subDim)))
 
   /** Persist the trained state (coarse centroids + residual codebook +
     * grid metadata) and assign/encode `vectors` (vec_id, embedding) as
@@ -65,20 +73,15 @@ object IvfPqIndex extends SegmentedIndex {
       vectors: DataFrame, centroids: DataFrame, codebook: DataFrame,
       path: String, subspaces: Int = 4, subDim: Int = 16): Unit = {
     val spark = vectors.sparkSession
-    import spark.implicits._
-    // ALL FOUR init jobs overlap (guide §2.6): the three trained-state
-    // writes land in disjoint dirs, and the base encode runs against
+    // the init writes overlap (guide §2.6): the trained-state writes
+    // land in disjoint dirs, and the base encode runs against
     // the SAME in-memory dense state the writes persist — float32
     // centroids / double codewords round-trip parquet exactly and the
     // dense re-key is a deterministic projection, so encode-from-
     // memory is bit-identical to the old encode-from-stored. The gen
     // marker still lands only after every job settles (initBaseWith).
     val denseCb = Similarity.denseCodebook(codebook)
-    initBase(spark, path, Seq(
-      () => centroids.write.mode("overwrite").parquet(s"$path/centroids"),
-      () => denseCb.write.mode("overwrite").parquet(s"$path/codebook"),
-      () => Seq((subspaces, subDim)).toDF("subspaces", "sub_dim")
-        .write.mode("overwrite").parquet(s"$path/meta")))(
+    initBase(spark, path, stateWrites(centroids, denseCb, path, subspaces, subDim))(
       encodeWith(vectors, centroids, denseCb, subspaces, subDim))
   }
 
@@ -100,17 +103,12 @@ object IvfPqIndex extends SegmentedIndex {
       vectors: DataFrame, centroids: DataFrame, cbPerM: DataFrame,
       path: String, subspaces: Int = 4, subDim: Int = 16): Unit = {
     val spark = vectors.sparkSession
-    import spark.implicits._
-    // same four-way overlap as [[write]]: per-m codewords are float32
+    // same overlap as [[write]]: per-m codewords are float32
     // (exact parquet round-trip) and the per-m dense re-key is a
     // deterministic projection, so the in-memory encode matches the
     // stored-state encode bit-for-bit; marker after all jobs settle
     val denseCb = Similarity.denseCodebookPerM(cbPerM)
-    initBase(spark, path, Seq(
-      () => centroids.write.mode("overwrite").parquet(s"$path/centroids"),
-      () => denseCb.write.mode("overwrite").parquet(s"$path/codebook"),
-      () => Seq((subspaces, subDim)).toDF("subspaces", "sub_dim")
-        .write.mode("overwrite").parquet(s"$path/meta")))(
+    initBase(spark, path, stateWrites(centroids, denseCb, path, subspaces, subDim))(
       encodeWith(vectors, centroids, denseCb, subspaces, subDim))
   }
 
@@ -123,8 +121,8 @@ object IvfPqIndex extends SegmentedIndex {
     * schema. */
   protected def encode(spark: SparkSession, path: String, vectors: DataFrame): DataFrame = {
     val (subspaces, subDim) = readMeta(spark, path)
-    encodeWith(vectors, spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/codebook"), subspaces, subDim)
+    val (centroids, codebook) = trainedState(spark, path)
+    encodeWith(vectors, centroids, codebook, subspaces, subDim)
   }
 
   /** The encode plan over explicit state relations — the stored ones
@@ -149,9 +147,8 @@ object IvfPqIndex extends SegmentedIndex {
   private[graft] def openAll(
       spark: SparkSession, path: String): (DataFrame, DataFrame, DataFrame, Int, Int) = {
     val (subspaces, subDim) = readMeta(spark, path)
-    (readAll(spark, path),
-      spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/codebook"), subspaces, subDim)
+    val (centroids, codebook) = trainedState(spark, path)
+    (readAll(spark, path), centroids, codebook, subspaces, subDim)
   }
 
   /** The serving plan over an [[openAll]] handle: per-(query, probed
@@ -197,9 +194,8 @@ object IvfPqIndex extends SegmentedIndex {
       spark: SparkSession, path: String, epoch: Long, queries: DataFrame,
       k: Int = 5, nProbe: Int = 4, salts: Int = 32): DataFrame = {
     val (subspaces, subDim) = readMeta(spark, path)
-    serveSnapshot(readAsOf(spark, path, epoch),
-      spark.read.parquet(s"$path/centroids"),
-      spark.read.parquet(s"$path/codebook"),
+    val (centroids, codebook) = trainedState(spark, path)
+    serveSnapshot(readAsOf(spark, path, epoch), centroids, codebook,
       subspaces, subDim, queries, k, nProbe, salts)
   }
 
@@ -245,7 +241,7 @@ object IvfPqIndex extends SegmentedIndex {
       spark: SparkSession, path: String, newVectors: DataFrame,
       vectorSource: DataFrame, threshold: Double = 0.95,
       shortlist: Int = 8, maxList: Int = 4096): DataFrame = {
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val centroids = LsmSegments.readArtifacts(spark, Seq(s"$path/centroids"))
     Storage.releasing(Similarity.ivfAssign(newVectors, centroids)
         .localCheckpoint(eager = true))(
       probeSemanticPlan(spark, path, _, vectorSource, threshold, shortlist, maxList)
@@ -264,8 +260,7 @@ object IvfPqIndex extends SegmentedIndex {
       maxList: Int = 4096, salts: Int = 32): DataFrame = {
     import graft.functions.VectorFunctions.cosine
     val (subspaces, subDim) = readMeta(spark, path)
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val codebook = spark.read.parquet(s"$path/codebook")
+    val (centroids, codebook) = trainedState(spark, path)
     val touched = shard.select(col("c_id")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val allSegs = readAll(spark, path)

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Marker-last LSM segment protocol shared, through
   * [[SegmentedIndex]], by the ten persisted index tiers and the two
@@ -13,6 +15,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Layout under an index `path`:
   *  - `base/<gen>/`   — base segment data, one dir per generation;
+  *    like every artifact dir (deltas, trained state, durable-state
+  *    relations) it holds `_schema.json`, the schema its writer
+  *    recorded ([[writeArtifact]]), written after the data and before
+  *    the marker, so the marker commits it too;
   *  - `gens/<gen>_<upto>` — empty generation marker, written LAST:
   *    the CURRENT base is the max `<gen>`, and `<upto>` is the
   *    highest delta epoch folded into it (−1 for a fresh index).
@@ -33,6 +39,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * lands). Superseded generations and folded delta data are retired
   * only by an explicit [[gc]], so lazily-evaluated DataFrames handed
   * out before a compact keep reading their own consistent snapshot.
+  *
+  * Reads: a snapshot is ONE parquet scan of `base/<gen>` plus its
+  * deltas under the carried schema ([[readArtifacts]]) — no schema-
+  * inference job, and Spark's file packing sizes its partitions, so a
+  * compaction writes about one file per core however many segments it
+  * folds. The c_id-partitioned tiers scan each segment on its own
+  * (multi-root partitioned reads conflict), still under the carried
+  * schema, which declares `c_id` long.
   *
   * 100 TB shape: this is the metadata layer only — segment data
   * stays wherever the index writes it (c_id-partitioned parquet for
@@ -84,28 +98,96 @@ private[graft] object LsmSegments {
     }
   }
 
-  /** Write one c_id-partitioned segment — the on-disk shape both
-    * inverted-list tiers ([[IvfIndex]], [[IvfPqIndex]]) share, so the
-    * empty-frame fallback lives ONCE here: a partitioned write of an
-    * EMPTY frame lands no partition dirs and no data files —
-    * unreadable (no schema to infer) — yet the caller still commits
-    * the epoch/generation marker, permanently poisoning the store. An
-    * empty segment is a real case (an empty streaming micro-batch, an
-    * admission epoch where nothing survives, an empty store init for
-    * the admission loop's semantic stage), so it is rewritten
-    * unpartitioned: one metadata-only parquet file carrying the
-    * schema, c_id as a plain (long) column. Both tiers' loadSegment
-    * unions byName and casts c_id to long (a no-op on the plain
-    * column), and the zero-row segment never affects pruning. The
-    * check is one driver-side directory listing. */
-  private[graft] def writeCidPartitionedSegment(df: DataFrame, p: String): Unit = {
-    graft.sources.FileSources.writePartitionedParquet(
-      df, p, partitionCols = Seq("c_id"))
-    val dir = new org.apache.hadoop.fs.Path(p)
-    val f = dir.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val hasParts = f.exists(dir) &&
-      f.listStatus(dir).exists(_.getPath.getName.startsWith("c_id="))
-    if (!hasParts) df.write.mode("overwrite").parquet(p)
+  /** The schema sidecar inside every artifact dir. Parquet readers
+    * skip `_`-prefixed files, so the data scan never sees it. */
+  private val SchemaFile = "_schema.json"
+
+  private def writeText(spark: SparkSession, file: String, text: String): Unit = {
+    val out = fs(spark, file).create(new org.apache.hadoop.fs.Path(file), true)
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
+  private def readText(spark: SparkSession, file: String): Option[String] = {
+    val f = fs(spark, file)
+    val p = new org.apache.hadoop.fs.Path(file)
+    if (!f.exists(p)) None
+    else {
+      val in = f.open(p)
+      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    }
+  }
+
+  /** Write `df` as the parquet artifact at `p` (overwrite — a replay
+    * clobbers a torn attempt), partitioned by `partitionCols`, then the
+    * schema a read of it reports — every field nullable, partition
+    * columns last — as its sidecar `p/_schema.json`. Whatever marker
+    * commits `p` lands after both. A partitioned write of an empty
+    * frame lands no data file; its sidecar still carries the schema,
+    * so it reads back as zero rows. */
+  def writeArtifact(df: DataFrame, p: String, partitionCols: Seq[String] = Nil): Unit = {
+    graft.sources.FileSources.writePartitionedParquet(df, p, partitionCols)
+    val (parts, data) = df.schema.fields.toSeq.partition(f => partitionCols.contains(f.name))
+    writeText(df.sparkSession, s"$p/$SchemaFile",
+      Bridge.asNullable(StructType(data ++ parts)).json)
+  }
+
+  /** The one schema the artifacts at `paths` carry. A committed
+    * artifact without a sidecar, or two artifacts whose sidecars
+    * differ, fail naming the paths: there is no inference fallback. */
+  private[graft] def carriedSchema(spark: SparkSession, paths: Seq[String]): StructType = {
+    val schemas = paths.map { p =>
+      val json = readText(spark, s"$p/$SchemaFile").getOrElse(
+        throw new IllegalStateException(
+          s"LsmSegments: artifact $p carries no $SchemaFile — it was " +
+            "written without its schema (by a writer older than the " +
+            "sidecar, or by hand); rewrite it through writeArtifact"))
+      p -> DataType.fromJson(json).asInstanceOf[StructType]
+    }
+    val (first, schema) = schemas.head
+    schemas.find(_._2 != schema).foreach { case (p, other) =>
+      throw new IllegalStateException(
+        s"LsmSegments: artifacts $first and $p carry different schemas " +
+          s"(${schema.simpleString} vs ${other.simpleString}); one " +
+          "snapshot reads every segment under one schema")
+    }
+    schema
+  }
+
+  /** THE artifact reader: every index segment, trained-state table and
+    * durable-state relation is read here, under the schema its writer
+    * recorded, so no read runs a schema-inference job. All `paths`
+    * are ONE parquet scan, whose file packing sizes the partitions
+    * (and so the files a compaction writes). `perPath` scans each
+    * path on its own and unions them by name: a multi-root read of
+    * partitioned dirs fails on Spark's conflicting-directory check,
+    * so the c_id-partitioned tiers take that form. */
+  def readArtifacts(
+      spark: SparkSession, paths: Seq[String], perPath: Boolean = false): DataFrame = {
+    val reader = spark.read.schema(carriedSchema(spark, paths))
+    if (perPath) paths.map(reader.parquet(_)).reduce(_ unionByName _)
+    else reader.parquet(paths: _*)
+  }
+
+  /** A tier's scalar parameters, written as `<path>/meta.json` (an
+    * [[initBaseWith]] sibling, so the generation marker lands after
+    * it) and read back on the driver through the Hadoop FS: no Spark
+    * job either way. */
+  def writeMeta(spark: SparkSession, path: String, meta: Map[String, Int]): Unit = {
+    import scala.jdk.CollectionConverters._
+    writeText(spark, s"$path/meta.json",
+      new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(meta.asJava))
+  }
+
+  /** [[writeMeta]]'s parameters; a missing file fails naming it. */
+  def readMeta(spark: SparkSession, path: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    val file = s"$path/meta.json"
+    val json = readText(spark, file).getOrElse(
+      throw new IllegalStateException(s"LsmSegments: $file is missing"))
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      .properties().asScala.map(e => e.getKey -> e.getValue.asInt).toMap
   }
 
   /** Committed delta epochs, ascending. */
@@ -331,22 +413,24 @@ private[graft] object LsmSegments {
   * siblings) and its serving and probe plans; the admission loops'
   * decision logs are the identity-encoded instance ([[AdmittedLog]]).
   *
-  * Every snapshot read unions the segments byName in (base, deltas by
-  * epoch) order, so a reader's plan is the same whichever operation
-  * resolved the segment list. */
+  * Every snapshot read is one scan of (base, deltas by epoch) under
+  * the schema the segments carry, so a reader's plan is the same
+  * whichever operation resolved the segment list, and runs no job. */
 abstract class SegmentedIndex {
 
   /** One epoch of input as segment rows, using the tier's FIXED
     * trained state read from `path` (none for the stateless tiers). */
   protected def encode(spark: SparkSession, path: String, input: DataFrame): DataFrame
 
-  /** One segment as the serving plans expect it. */
-  protected def loadSegment(spark: SparkSession, p: String): DataFrame =
-    spark.read.parquet(p)
+  /** The columns a segment is partitioned by on disk: `c_id` for the
+    * inverted-list tiers ([[IvfIndex]], [[IvfPqIndex]]), whose probes
+    * prune to the probed lists' dirs. */
+  protected def partitionCols: Seq[String] = Nil
 
-  /** Persist one segment (overwrite — a replay clobbers a torn attempt). */
+  /** Persist one segment with its schema sidecar (overwrite — a replay
+    * clobbers a torn attempt). */
   private[graft] def writeSegment(df: DataFrame, p: String): Unit =
-    df.write.mode("overwrite").parquet(p)
+    LsmSegments.writeArtifact(df, p, partitionCols)
 
   /** Commit `segment` as base generation 0 ([[LsmSegments.initBaseWith]]:
     * the siblings and the base write overlap, the marker lands last). */
@@ -354,8 +438,10 @@ abstract class SegmentedIndex {
       siblings: Seq[() => Unit] = Nil)(segment: => DataFrame): Unit =
     LsmSegments.initBaseWith(spark, path, siblings)(writeSegment(segment, _))
 
-  private def union(spark: SparkSession, paths: Seq[String]): DataFrame =
-    paths.map(loadSegment(spark, _)).reduce(_ unionByName _)
+  /** A snapshot's segments under their carried schema: one scan, or
+    * one per segment for the partitioned tiers. */
+  private def load(spark: SparkSession, paths: Seq[String]): DataFrame =
+    LsmSegments.readArtifacts(spark, paths, perPath = partitionCols.nonEmpty)
 
   /** Idempotently encode + append one epoch as a delta segment; false =
     * epoch already committed (replay — nothing is read or written). */
@@ -372,7 +458,7 @@ abstract class SegmentedIndex {
     * committed deltas not yet folded into it. */
   def readAll(spark: SparkSession, path: String): DataFrame = {
     val (basePath, deltaPaths) = LsmSegments.liveSegments(spark, path)
-    union(spark, basePath +: deltaPaths)
+    load(spark, basePath +: deltaPaths)
   }
 
   /** [[readAll]] AS OF a committed delta epoch ([[LsmSegments
@@ -380,14 +466,14 @@ abstract class SegmentedIndex {
     * past the gc horizon fail loudly). */
   def readAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame = {
     val (basePath, deltaPaths) = LsmSegments.segmentsAsOf(spark, path, epoch)
-    union(spark, basePath +: deltaPaths)
+    load(spark, basePath +: deltaPaths)
   }
 
   /** Fold committed deltas into a new base generation (marker written
     * last — interleaved readers stay consistent); data retired by
     * [[gc]], so lazy plans handed out before the compact stay valid. */
   def compact(spark: SparkSession, path: String): Unit =
-    LsmSegments.compact(spark, path, union(spark, _), writeSegment)
+    LsmSegments.compact(spark, path, load(spark, _), writeSegment)
 
   /** Retire superseded generations + folded delta data (epoch markers
     * kept — the replay guard). */

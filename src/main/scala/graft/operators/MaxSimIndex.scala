@@ -30,21 +30,19 @@ import org.apache.spark.sql.functions._
 object MaxSimIndex extends SegmentedIndex {
 
   private def readMeta(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/meta").head().getAs[Int]("tokens_per_doc")
+    LsmSegments.readMeta(spark, path)("tokens_per_doc")
 
   /** Bag `vectors` (vec_id, embedding) into per-doc token lists and
     * persist as base generation 0; `tokensPerDoc` is fixed for the
-    * life of the index (stored in `meta` — the grouping law is part
+    * life of the index (stored in `meta.json` — the grouping law is part
     * of the index identity, like a PQ codebook). */
   def write(vectors: DataFrame, path: String, tokensPerDoc: Int = 4): Unit = {
     val spark = vectors.sparkSession
-    import spark.implicits._
     // the base bags use the PASSED tokensPerDoc, not the stored meta
-    // — the two init writes are independent jobs, overlapped (guide
-    // §2.6); the gen marker lands after both settle
+    // — the two init writes are independent, overlapped (guide §2.6);
+    // the gen marker lands after both settle
     initBase(spark, path, Seq(
-      () => Seq(tokensPerDoc).toDF("tokens_per_doc")
-        .write.mode("overwrite").parquet(s"$path/meta")))(
+      () => LsmSegments.writeMeta(spark, path, Map("tokens_per_doc" -> tokensPerDoc))))(
       Similarity.tokenBags(vectors, tokensPerDoc))
   }
 

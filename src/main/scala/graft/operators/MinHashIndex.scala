@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * union corpus (pinned by spec + the `dedup_minhash_delta` oracle,
   * which is [[Dedup.minhashLsh]]'s own exact all-pairs Jaccard SQL).
   *
-  * Layout: `<path>/meta` = one row (shingle_n, num_hashes, bands),
+  * Layout: `<path>/meta.json` = (shingle_n, num_hashes, bands),
   * plus [[LsmSegments]] base/delta segments of
   * `(doc_id, sh: array<string>, band_hashes: array<long>)` — the
   * array index of `band_hashes` IS the band id. Reference behavior
@@ -38,8 +38,8 @@ import org.apache.spark.sql.functions._
 object MinHashIndex extends SegmentedIndex {
 
   private def readMeta(spark: SparkSession, path: String): (Int, Int, Int) = {
-    val r = spark.read.parquet(s"$path/meta").head()
-    (r.getAs[Int]("shingle_n"), r.getAs[Int]("num_hashes"), r.getAs[Int]("bands"))
+    val m = LsmSegments.readMeta(spark, path)
+    (m("shingle_n"), m("num_hashes"), m("bands"))
   }
 
   /** One fingerprint row per document with ≥ 1 shingle: the exact
@@ -67,14 +67,12 @@ object MinHashIndex extends SegmentedIndex {
       documents: DataFrame, path: String, shingleN: Int = 3,
       numHashes: Int = 16, bands: Int = 8): Unit = {
     val spark = documents.sparkSession
-    import spark.implicits._
     // the base fingerprints use the PASSED parameters, not the stored
-    // meta — the two init writes are independent jobs, overlapped
-    // (guide §2.6); the gen marker lands after both settle
+    // meta — the two init writes are independent, overlapped (guide
+    // §2.6); the gen marker lands after both settle
     initBase(spark, path, Seq(
-      () => Seq((shingleN, numHashes, bands))
-        .toDF("shingle_n", "num_hashes", "bands")
-        .write.mode("overwrite").parquet(s"$path/meta")))(
+      () => LsmSegments.writeMeta(spark, path,
+        Map("shingle_n" -> shingleN, "num_hashes" -> numHashes, "bands" -> bands))))(
       fingerprints(documents, shingleN, numHashes, bands))
   }
 

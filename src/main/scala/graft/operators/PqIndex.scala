@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * generation swapped in by a marker written last.
   *
   * Layout: `<path>/codebook` = (cw_k int, cw full-dim array<float>),
-  * `<path>/meta` = one row (subspaces, sub_dim), plus the
+  * `<path>/meta.json` = (subspaces, sub_dim), plus the
   * [[LsmSegments]] base/delta segments of (vec_id, c0..c_{M−1}).
   * Codes are ints and the codebook floats round-trip parquet exactly,
   * so [[serveAll]] over any base/delta split is hash-identical to
@@ -24,12 +24,12 @@ import org.apache.spark.sql.functions._
 object PqIndex extends SegmentedIndex {
 
   private def readMeta(spark: SparkSession, path: String): (Int, Int) = {
-    val r = spark.read.parquet(s"$path/meta").head()
-    (r.getAs[Int]("subspaces"), r.getAs[Int]("sub_dim"))
+    val m = LsmSegments.readMeta(spark, path)
+    (m("subspaces"), m("sub_dim"))
   }
 
   private def readCodebook(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/codebook")
+    LsmSegments.readArtifacts(spark, Seq(s"$path/codebook"))
 
   /** Persist the codebook + grid metadata and encode `vectors`
     * (vec_id, embedding) as base generation 0. `codebook` = (cw_k
@@ -45,15 +45,14 @@ object PqIndex extends SegmentedIndex {
       vectors: DataFrame, codebook: DataFrame, path: String,
       subspaces: Int = 4, subDim: Int = 16): Unit = {
     val spark = vectors.sparkSession
-    import spark.implicits._
     val cb = Similarity.denseCodebook(codebook)
-    // all three init jobs overlap (guide §2.6): the two small state
-    // writes land in disjoint dirs and the base encode already runs
-    // against the in-memory cb; the gen marker lands after all settle
+    // the init writes overlap (guide §2.6): the two small state writes
+    // land in disjoint dirs and the base encode already runs against
+    // the in-memory cb; the gen marker lands after all settle
     initBase(spark, path, Seq(
-      () => cb.write.mode("overwrite").parquet(s"$path/codebook"),
-      () => Seq((subspaces, subDim)).toDF("subspaces", "sub_dim")
-        .write.mode("overwrite").parquet(s"$path/meta")))(
+      () => LsmSegments.writeArtifact(cb, s"$path/codebook"),
+      () => LsmSegments.writeMeta(spark, path,
+        Map("subspaces" -> subspaces, "sub_dim" -> subDim))))(
       Similarity.pqEncodeCodes(vectors, cb, subspaces, subDim))
   }
 

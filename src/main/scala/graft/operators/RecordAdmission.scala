@@ -117,7 +117,7 @@ object RecordAdmission {
       Storage.releasing(decide(spark, path, shard, maxDist, maxPairsPerBlock))(
         AdmittedLog.writeSegment(_, p))
     }
-    val admitted = spark.read.parquet(s"$admittedPath/deltas/$epoch")
+    val admitted = LsmSegments.readArtifacts(spark, Seq(s"$admittedPath/deltas/$epoch"))
     RecordIndex.appendEpoch(spark, store(path, "register"), epoch, admitted)
     admitted
   }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
   *  - [[releasing]] owns a pin for one use (pin, use, release), and
   *    releases it whether the use returns or throws;
   *  - [[rounds]] owns the live round of an iterative operator: each
-  *    round is `localCheckpoint(true)`-materialized and the round it
+  *    round is checkpointed and materialized, and the round it
   *    supersedes released as soon as it exists, so executor storage
   *    stays flat in the iteration count;
   *  - a frame returned to a caller is the caller's, and what an
@@ -30,6 +30,27 @@ private[graft] object Storage {
       case _ => ()
     }
 
+  /** `df` checkpointed and materialized by the one job
+    * `localCheckpoint(eager = true)` runs, with one difference: eager
+    * mode registers its RDD before that job and hands back no frame
+    * when the job fails, so nobody could release it. Here the
+    * checkpoint is taken lazily, its RDD counted through the frame's
+    * `LogicalRDD`, and released if the count throws. */
+  private def checkpoint(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint(eager = false)
+    try {
+      cp.queryExecution.analyzed.foreach {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.count()
+        case _ => ()
+      }
+      cp
+    } catch {
+      case e: Throwable =>
+        unpersistLocalCheckpoint(cp)
+        throw e
+    }
+  }
+
   /** Run `use` on `pin`, then release `pin`'s checkpoint, whether
     * `use` returns or throws. What `use` returns must not read `pin`:
     * materialize it inside the scope, or serve it from elsewhere. */
@@ -37,11 +58,12 @@ private[graft] object Storage {
     try use(pin) finally unpersistLocalCheckpoint(pin)
 
   /** Up to `maxRounds` rounds of `step` from `init`, stopping after
-    * the first round `done` accepts. Each round is checkpointed
-    * eagerly, the round it supersedes is released as soon as it
-    * exists, and `done` probes the checkpointed round. A throw in
-    * `step` or `done` releases the live round. Returns the last round,
-    * which the caller owns (`init` itself when no round ran).
+    * the first round `done` accepts. Each round is checkpointed and
+    * materialized ([[checkpoint]]), the round it supersedes is
+    * released as soon as it exists, and `done` probes the checkpointed
+    * round. A throw in `step`, in a round's own checkpoint job or in
+    * `done` releases the live round. Returns the last round, which the
+    * caller owns (`init` itself when no round ran).
     *
     * `init` is handed over by default: the caller's own checkpoint,
     * released like any superseded round. With `ownsInit = false` it is
@@ -58,7 +80,7 @@ private[graft] object Storage {
       var n = 0
       var stop = false
       while (!stop && n < maxRounds) {
-        val next = step(live).localCheckpoint(true)
+        val next = checkpoint(step(live))
         if (owned) unpersistLocalCheckpoint(live)
         live = next
         owned = true

@@ -1063,7 +1063,8 @@ object StreamingOps {
     * state's named relations, `deltas/<epoch>/<name>`:
     *  - start: after [[requireDurableLineage]], `open` builds the
     *    state, from a reader of the latest committed epoch's relations
-    *    (each read checkpointed) or from scratch (`None`);
+    *    (each read under the schema it was written with, and
+    *    checkpointed) or from scratch (`None`);
     *  - per batch: `update` and the write of its `relations` run
     *    inside `LsmSegments.appendEpoch`, so a replayed epoch (its
     *    batch re-delivered after the stream lost its commit) finds its
@@ -1090,12 +1091,13 @@ object StreamingOps {
     val latest = LsmSegments.committedEpochs(spark, stateDir).lastOption
     requireDurableLineage(spark, name, latest, stateDir, options)
     var state = open(latest.map(e => relation =>
-      spark.read.parquet(s"$stateDir/deltas/$e/$relation").localCheckpoint(true)))
+      LsmSegments.readArtifacts(spark, Seq(s"$stateDir/deltas/$e/$relation"))
+        .localCheckpoint(true)))
     foreachBatch(input, options) { (batch, epoch) =>
       val committed = LsmSegments.appendEpoch(spark, stateDir, epoch) { dir =>
         state = update(state, batch)
         relations(state).foreach { case (relation, df) =>
-          df.write.mode("overwrite").parquet(s"$dir/$relation")
+          LsmSegments.writeArtifact(df, s"$dir/$relation")
         }
       }
       if (committed) LsmSegments.retireDeltasBelow(spark, stateDir, epoch)

@@ -113,7 +113,7 @@ class AdmissionSpec extends AnyFunSuite {
     val decided = Admission.decide(spark, path, shard1, 0.5)
     try {
       LsmSegments.appendEpoch(spark, s"$path/admitted", 1L)(p =>
-        decided.write.mode("overwrite").parquet(p))
+        graft.operators.AdmittedLog.writeSegment(decided, p))
     } finally graft.operators.Storage.unpersistLocalCheckpoint(decided)
     ContentHashIndex.appendEpoch(spark, s"$path/exact", 1L,
       spark.read.parquet(s"$path/admitted/deltas/1"))
@@ -320,7 +320,7 @@ class AdmissionSpec extends AnyFunSuite {
     val decided = Admission.decide(spark, path, semShard1, 0.5)
     try {
       LsmSegments.appendEpoch(spark, s"$path/admitted", 1L)(p =>
-        decided.write.mode("overwrite").parquet(p))
+        graft.operators.AdmittedLog.writeSegment(decided, p))
     } finally graft.operators.Storage.unpersistLocalCheckpoint(decided)
     val committed1 = spark.read.parquet(s"$path/admitted/deltas/1")
     ContentHashIndex.appendEpoch(spark, s"$path/exact", 1L, committed1)
@@ -432,7 +432,7 @@ class AdmissionSpec extends AnyFunSuite {
     val decided = Admission.decide(spark, path, mmShard1, 0.5)
     try {
       LsmSegments.appendEpoch(spark, s"$path/admitted", 1L)(p =>
-        decided.write.mode("overwrite").parquet(p))
+        graft.operators.AdmittedLog.writeSegment(decided, p))
     } finally graft.operators.Storage.unpersistLocalCheckpoint(decided)
     val committed1 = spark.read.parquet(s"$path/admitted/deltas/1")
     ContentHashIndex.appendEpoch(spark, s"$path/exact", 1L, committed1)

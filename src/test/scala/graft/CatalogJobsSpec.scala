@@ -31,49 +31,49 @@ class CatalogJobsSpec extends AnyFunSuite {
     "sketch_quantiles" -> 2,
     "text_stats" -> 2,
     "graph_pagerank" -> 19,
-    "knn_sq8_compact" -> 16)
+    "knn_sq8_compact" -> 12)
 
   /** The queries that write, append to, compact or probe a durable
     * index tier, the admission loops included, so a change to the
     * shared segment code or to the queries' index lifecycle that adds
     * a schema read or a segment write shows up here. */
   private val indexPinned = Seq(
-    "knn_ivf_persisted" -> 15,
-    "knn_ivf_delta" -> 27,
-    "knn_ivf_asof" -> 30,
-    "knn_sq8_delta" -> 14,
-    "knn_pq_delta" -> 37,
-    "knn_ivfpq_delta" -> 57,
-    "knn_binary_delta" -> 14,
-    "knn_maxsim_delta" -> 25,
-    "dedup_exact_delta" -> 11,
-    "dedup_exact_probe" -> 10,
-    "dedup_index_diff" -> 18,
-    "dedup_minhash_delta" -> 18,
-    "dedup_minhash_probe" -> 17,
-    "dedup_simhash_delta" -> 11,
-    "dedup_simhash_asof" -> 15,
-    "er_probe" -> 13,
-    "mm_neardup_delta" -> 11,
-    "er_probe_rescored" -> 16,
-    "er_probe_multi" -> 13,
-    "er_probe_eval" -> 16,
-    "er_admission_loop" -> 66,
-    "dedup_admission_loop" -> 111,
-    "dedup_admission_semantic" -> 206,
-    "dedup_admission_multimodal" -> 163,
-    "dedup_admission_video" -> 163,
-    "dedup_index_stats" -> 13,
-    "knn_hybrid_rrf_persisted" -> 31,
-    "knn_eval_hybrid_persisted" -> 38,
-    "knn_ivfpq_trained_delta" -> 81,
-    "dedup_semantic_probe" -> 27,
-    "dedup_semantic_probe_pq" -> 64,
-    "mm_neardup_probe" -> 13,
-    "mm_audio_neardup" -> 15,
-    "mm_video_neardup" -> 15,
-    "mm_hot_buckets" -> 5,
-    "mm_neardup_clusters_durable" -> 48)
+    "knn_ivf_persisted" -> 13,
+    "knn_ivf_delta" -> 21,
+    "knn_ivf_asof" -> 22,
+    "knn_sq8_delta" -> 11,
+    "knn_pq_delta" -> 24,
+    "knn_ivfpq_delta" -> 40,
+    "knn_binary_delta" -> 11,
+    "knn_maxsim_delta" -> 16,
+    "dedup_exact_delta" -> 8,
+    "dedup_exact_probe" -> 9,
+    "dedup_index_diff" -> 13,
+    "dedup_minhash_delta" -> 10,
+    "dedup_minhash_probe" -> 13,
+    "dedup_simhash_delta" -> 8,
+    "dedup_simhash_asof" -> 10,
+    "er_probe" -> 11,
+    "mm_neardup_delta" -> 8,
+    "er_probe_rescored" -> 14,
+    "er_probe_multi" -> 11,
+    "er_probe_eval" -> 15,
+    "er_admission_loop" -> 57,
+    "dedup_admission_loop" -> 83,
+    "dedup_admission_semantic" -> 164,
+    "dedup_admission_multimodal" -> 129,
+    "dedup_admission_video" -> 129,
+    "dedup_index_stats" -> 10,
+    "knn_hybrid_rrf_persisted" -> 29,
+    "knn_eval_hybrid_persisted" -> 36,
+    "knn_ivfpq_trained_delta" -> 64,
+    "dedup_semantic_probe" -> 23,
+    "dedup_semantic_probe_pq" -> 52,
+    "mm_neardup_probe" -> 11,
+    "mm_audio_neardup" -> 12,
+    "mm_video_neardup" -> 12,
+    "mm_hot_buckets" -> 4,
+    "mm_neardup_clusters_durable" -> 45)
 
   /** The graph and clustering queries: each graph iterative (and the
     * connected components behind the two clustering queries) measures
@@ -138,7 +138,7 @@ class CatalogJobsSpec extends AnyFunSuite {
     "knn_eval_mmr" -> Unpinned)
 
   /** Queries whose count varies by one between runs of the same code:
-    * dedup_admission_semantic ran 206 or 207 jobs in repeated runs
+    * dedup_admission_semantic ran 164 or 165 jobs in repeated runs
     * within one JVM (the moving job is an AQE query-stage job that some
     * runs launch and others do not), er_rollup 35 or 36. Their pin is
     * the lower count, and one more also passes. */

@@ -67,10 +67,9 @@ class IvfPqIndexSpec extends AnyFunSuite {
     // the torn epoch's dir was reclaimed by gc; its replay must commit
     assert(IvfPqIndex.appendEpoch(spark, p, 2L, e.where($"vec_id" < 0)),
       "the torn epoch must be committable by its replay after gc")
-    // ...and that replay is an EMPTY epoch (nothing matched) — the
-    // empty-frame fallback must leave a schema-bearing segment behind,
-    // or every later readAll/serveAll/compact dies on schema inference
-    // against the committed-but-dataless delta dir
+    // ...and that replay is an EMPTY epoch (nothing matched): a
+    // partitioned write of it lands no data file, so its schema
+    // sidecar alone must keep readAll/serveAll/compact working
     assert(served(p, e) == want, "an empty committed epoch broke serving")
     IvfPqIndex.compact(spark, p)
     IvfPqIndex.gc(spark, p)
@@ -86,8 +85,7 @@ class IvfPqIndexSpec extends AnyFunSuite {
     IvfPqIndex.appendEpoch(spark, p, 0L, e.where($"vec_id" % 2 === 1))
     val want = served(p, e)
     // compact STEP 1 only: write the merged view to base/1, NO marker
-    graft.sources.FileSources.writePartitionedParquet(
-      IvfPqIndex.readAll(spark, p), s"$p/base/1", partitionCols = Seq("c_id"))
+    IvfPqIndex.writeSegment(IvfPqIndex.readAll(spark, p), s"$p/base/1")
     assert(served(p, e) == want,
       "reader between compact's base-rewrite and marker swap diverged")
     val dup = IvfPqIndex.readAll(spark, p)

@@ -96,8 +96,7 @@ class MinHashIndexSpec extends AnyFunSuite {
     val want = served()
     assert(want.map(p => (p._1, p._2)) == Set((1L, 2L), (3L, 10L), (11L, 12L)))
     // compact STEP 1 only: write the merged view to base/1, NO marker
-    MinHashIndex.readAll(spark, path)
-      .write.mode("overwrite").parquet(s"$path/base/1")
+    MinHashIndex.writeSegment(MinHashIndex.readAll(spark, path), s"$path/base/1")
     assert(served() == want,
       "reader between compact's base-rewrite and marker swap diverged")
     assert(MinHashIndex.readAll(spark, path)

@@ -73,7 +73,7 @@ class RecordAdmissionSpec extends AnyFunSuite {
     RecordAdmission.admitEpoch(spark, path, 0L, shard(0L), maxDist = 1)
     val decided = RecordAdmission.decide(spark, path, shard(1L), maxDist = 1)
     try LsmSegments.appendEpoch(spark, s"$path/admitted", 1L)(p =>
-      decided.write.mode("overwrite").parquet(p))
+      graft.operators.AdmittedLog.writeSegment(decided, p))
     finally Storage.unpersistLocalCheckpoint(decided)
     assert(LsmSegments.committedEpochs(spark, s"$path/register") == Seq(0L),
       "test harness: the register append must be missing")

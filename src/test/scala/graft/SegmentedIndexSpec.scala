@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructType}
 import graft.operators._
 import graft.streaming.StreamingOps
 
@@ -76,7 +77,38 @@ class SegmentedIndexSpec extends AnyFunSuite {
     } finally s.close()
   }
 
+  /** Every dir under `root` holding a schema sidecar. */
+  private def artifacts(root: String): Seq[String] =
+    files(root).toSeq.map(_._1).filter(_.endsWith("_schema.json"))
+      .map(f => java.nio.file.Paths.get(root, f).getParent.toString).sorted
+
+  /** The carried schema of each artifact under `root` equals what a
+    * fresh inference reads, nullability and metadata included, except
+    * that the c_id partition column, inferred as int from its dir
+    * names, is declared long. */
+  private def assertCarriedEqualsInferred(root: String): Unit = {
+    val dirs = artifacts(root)
+    assert(dirs.nonEmpty, s"no artifact under $root carries a schema")
+    dirs.foreach { d =>
+      val inferred = spark.read.parquet(d).schema
+      val want = StructType(inferred.map(f =>
+        if (f.name == "c_id") f.copy(dataType = LongType) else f))
+      val carried = LsmSegments.carriedSchema(spark, Seq(d))
+      assert(carried == want, s"$d: carried $carried, inferred $inferred")
+    }
+  }
+
   tiers.foreach { t =>
+    test(s"${name(t)}: every artifact carries its schema and a snapshot read runs no job") {
+      val p = tmp(s"${name(t)}_schema")
+      t.write(part(t, 0), p)
+      assert(t.index.appendEpoch(spark, p, 0L, part(t, 1)))
+      assert(artifacts(p).exists(_.endsWith("deltas/0")))
+      assertCarriedEqualsInferred(p)
+      assert(JobCount(spark)(t.index.readAll(spark, p)) == 0)
+      assert(JobCount(spark)(t.index.readAsOf(spark, p, -1L)) == 0)
+    }
+
     test(s"${name(t)}: append, replay, as-of, compact and gc through the shared code") {
       val p = tmp(name(t))
       t.write(part(t, 0), p)
@@ -136,5 +168,57 @@ class SegmentedIndexSpec extends AnyFunSuite {
         StreamingOps.ingestStream(t.index, stream(MemoryStream[Int]), p)())
       assert(e.getMessage.contains("checkpointLocation"), e.getMessage)
     }
+  }
+
+  test("the admission decision log carries the schema a read infers") {
+    val p = tmp("admitted")
+    RecordAdmission.init(spark, p)
+    RecordAdmission.admitEpoch(spark, p, 0L, spark.range(30).select(
+      $"id", concat(lit("name"), ($"id" % 7).cast("string")).as("name"),
+      concat(lit("b"), ($"id" % 3).cast("string")).as("block")))
+    assert(artifacts(p).exists(_.endsWith("admitted/deltas/0")))
+    assertCarriedEqualsInferred(p)
+  }
+
+  test("a committed segment without its schema sidecar fails, naming the segment") {
+    val p = tmp("no_sidecar")
+    Sq8Index.write(embs.where($"vec_id" % 2 === 0), p)
+    assert(Sq8Index.appendEpoch(spark, p, 0L, embs.where($"vec_id" % 2 === 1)))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(p, "deltas", "0", "_schema.json"))
+    val e = intercept[IllegalStateException](Sq8Index.readAll(spark, p))
+    assert(e.getMessage.contains(s"$p/deltas/0"), e.getMessage)
+  }
+
+  test("compaction merges segment files: three cycles do not grow the base") {
+    val p = tmp("sq8_files")
+    def baseFiles(): Int = {
+      val (base, _) = LsmSegments.liveSegments(spark, p)
+      new java.io.File(base).listFiles().count(_.getName.endsWith(".parquet"))
+    }
+    // the base starts at one file per core, each epoch adds two files
+    Sq8Index.write(embs.where($"vec_id" % 4 === 0).repartition(8), p)
+    val start = baseFiles()
+    assert(start == 8)
+    (1 to 3).foreach { m =>
+      assert(Sq8Index.appendEpoch(spark, p, m.toLong,
+        embs.where($"vec_id" % 4 === m).repartition(2)))
+      Sq8Index.compact(spark, p)
+      assert(baseFiles() <= start, s"cycle $m grew the base to ${baseFiles()} files")
+    }
+    assert(Sq8Index.readAll(spark, p).count() == embs.count())
+  }
+
+  test("an empty IVF epoch commits and serves") {
+    val p = tmp("ivf_empty")
+    IvfIndex.write(embs, seeds, p)
+    val queries = embs.where($"vec_id" < 4).select($"vec_id".as("query_id"), $"embedding".as("q"))
+    def served() = rows(IvfIndex.serveAll(spark, p, queries, k = 5, nProbe = 2))
+    val want = served()
+    assert(IvfIndex.appendEpoch(spark, p, 0L, embs.where($"vec_id" < 0)))
+    assert(IvfIndex.committedEpochs(spark, p) == Seq(0L))
+    assert(IvfIndex.readAll(spark, p).schema("c_id").dataType == LongType)
+    assert(served() == want && want.nonEmpty)
+    IvfIndex.compact(spark, p)
+    assert(served() == want)
   }
 }

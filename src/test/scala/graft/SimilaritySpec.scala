@@ -804,9 +804,8 @@ class SimilaritySpec extends AnyFunSuite {
         .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
     val want = served()
     // compact STEP 1 only: write the merged view to base/1, NO marker
-    val assigned = graft.operators.IvfIndex.readAll(spark, p)
-    graft.sources.FileSources.writePartitionedParquet(
-      assigned, s"$p/base/1", partitionCols = Seq("c_id"))
+    graft.operators.IvfIndex.writeSegment(
+      graft.operators.IvfIndex.readAll(spark, p), s"$p/base/1")
     assert(served() == want,
       "reader between compact's base-rewrite and marker swap diverged " +
         "(double count or torn base)")

@@ -86,10 +86,9 @@ class StorageSpec extends AnyFunSuite {
       inc(df)
     })
     assert(added(before).isEmpty)
-    // a failing job inside round 2's own checkpoint: init and round 1
-    // are released. (Spark registers the failed checkpoint's RDD
-    // before its job runs and hands back no frame for it, so that one
-    // is left to Spark's context cleaner.)
+    // a failing job inside round 2's own checkpoint: init, round 1 and
+    // the failed round's checkpoint, which is registered before its
+    // job runs, are all released
     val rounds = Set.newBuilder[Int]
     val e = intercept[Exception](Storage.rounds(pin(4), 5) { df =>
       rounds ++= rddIds(df)
@@ -100,13 +99,13 @@ class StorageSpec extends AnyFunSuite {
       .exists(t => String.valueOf(t.getMessage).contains("round failed")))
     assert(rounds.result().size == 2)
     assert((rounds.result() & persisted).isEmpty)
-    val failedRound = added(before)
+    assert(added(before).isEmpty)
     // a throw in done, in round 2
     intercept[IllegalArgumentException](Storage.rounds(pin(4), 5, done = { r =>
       require(r.agg(min($"x")).as[Long].head() < 2, "did not converge")
       false
     })(inc))
-    assert((added(before) -- failedRound).isEmpty)
+    assert(added(before).isEmpty)
   }
 
   test("the round loop leaves a borrowed init and the checkpoint it reads untouched") {

@@ -84,6 +84,16 @@ if grep -rn "unpersistLocalCheckpoint" src/main/scala/graft/queries/; then
   exit 1
 fi
 
+echo "== gate: carried schemas =="
+# index segments, trained state and durable state are read through
+# LsmSegments.readArtifacts under the schema their writer recorded; a
+# plain parquet read in operators/ or streaming/ is a schema-inference
+# job coming back
+if grep -rn "read\.parquet(" src/main/scala/graft/operators/ src/main/scala/graft/streaming/; then
+  echo "INFERRING PARQUET READ IN operators/ OR streaming/ (use LsmSegments.readArtifacts)"
+  exit 1
+fi
+
 echo "== gate: one stream driver, one durable commit =="
 # every stream in streaming/ starts through StreamingOps.foreachBatch,
 # and durable state commits through LsmSegments' epoch markers only: a
