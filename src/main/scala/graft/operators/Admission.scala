@@ -248,7 +248,7 @@ object Admission {
     survivors
       .join(broadcast(dropB.unionByName(dropA).distinct()),
         Seq("doc_id"), "left_anti")
-      .localCheckpoint(eager = true)
+      .transform(Storage.pin)
   }
 
   /** The admission decision for one shard against the CURRENT index
@@ -277,7 +277,7 @@ object Admission {
     // regime for every fold that matters, so it stays.)
     val hashed = shard
       .withColumn("text_hash", xxhash64(col("text")))
-      .localCheckpoint(eager = true)
+      .transform(Storage.pin)
     val exactSurvivors = debugTime("exact stage")(Storage.releasing(hashed) { hashed =>
       val exactDropped = ContentHashIndex
         .probeNewPlan(spark, store(path, "exact"),
@@ -292,7 +292,7 @@ object Admission {
           .as("first"))
         .select(shardCols.map(c => col(s"first.$c").as(c)): _*)
         .join(broadcast(exactDropped), Seq("doc_id"), "left_anti")
-        .localCheckpoint(eager = true)
+        .transform(Storage.pin)
     })
     // near-dup stage: pairs touching the shard, vs index ∪ shard
     // (eager, output-sized)

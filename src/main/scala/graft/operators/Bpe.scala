@@ -60,7 +60,7 @@ object Bpe {
     val vocab = words
       .select(col("word"), col("wcount"),
         split(col("word"), "(?!^)(?=.)").as("toks"))
-      .localCheckpoint(true)
+      .transform(Storage.pin)
     // the per-step merge rows, pinned as each round lands; the
     // returned table is their union
     val bests = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -74,7 +74,7 @@ object Bpe {
       val last = Storage.rounds(vocab, merges - 1, done = { meta =>
         bests += meta
           .select(col("step"), col("m_left"), col("m_right"), col("pair_count"))
-          .limit(1).localCheckpoint(true)
+          .limit(1).transform(Storage.pin)
         false
       }) { meta =>
         val vocab = meta.select(col("word"), col("wcount"), col("toks"))
@@ -87,10 +87,10 @@ object Bpe {
       // would only be read by a (nonexistent) next round
       Storage.releasing(last) { meta =>
         bests += bestPair(meta.select(col("word"), col("wcount"), col("toks")),
-          step = merges).localCheckpoint(true)
+          step = merges).transform(Storage.pin)
         // materialize the merge table ONCE: callers hold exactly one
         // k-row block, the per-step rows are released below
-        bests.reduce(_ unionAll _).localCheckpoint(true)
+        bests.reduce(_ unionAll _).transform(Storage.pin)
       }
     } finally bests.foreach(Storage.unpersistLocalCheckpoint)
   }

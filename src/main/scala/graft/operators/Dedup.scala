@@ -365,22 +365,17 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     require(maxIter >= 1, s"connectedComponents: maxIter must be >= 1, got $maxIter")
     // both directions in ONE pass (a unionAll of two projections
-    // would re-run the upstream pair generation per branch) into a
-    // PERSISTED raw relation — the upstream pair generation is read
-    // exactly once no matter which round plan runs below.
-    val raw = pairs
+    // would re-run the upstream pair generation per branch) into the
+    // CACHED raw relation of [[Graph.regimeEdges]] — the upstream pair
+    // generation is read exactly once no matter which round plan runs
+    // below. |V|, the labels pin's own count, picks the round plan.
+    val (smallGraph, edges, labels, nV) = Graph.regimeEdges(pairs
       .select(explode(array(
         struct(col("a_id").as("src"), col("b_id").as("dst")),
         struct(col("b_id").as("src"), col("a_id").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val labels = raw.select(col("src").as("doc_id")).distinct()
-      .withColumn("cluster_id", col("doc_id"))
-      .localCheckpoint(true)
-    // |V| picks the round plan: counting the checkpointed labels costs
-    // what the old isEmpty check cost and buys the regime decision
-    val nV = labels.count()
-    val (smallGraph, edges) = Graph.regimeEdges(raw, nV)
+      .select(col("e.src").as("src"), col("e.dst").as("dst")))(raw =>
+      Storage.pinCounted(raw.select(col("src").as("doc_id")).distinct()
+        .withColumn("cluster_id", col("doc_id"))), Storage.unpersistLocalCheckpoint)
     var it = 0
     // the convergence probe, over the checkpointed round
     def converged(next: DataFrame): Boolean = {
@@ -448,7 +443,7 @@ object Dedup {
             col("prev"))
       }
     }.select("doc_id", "cluster_id")
-    finally edges.unpersist(blocking = false)
+    finally Storage.uncache(edges)
   }
 
   /** Canonical-survivor selection — the decision step that turns a

@@ -97,14 +97,14 @@ object Dsir {
       .select(col("bucket"),
         coalesce(col("rc"), lit(0L)).as("rc"),
         coalesce(col("tc"), lit(0L)).as("tc"))
-      .localCheckpoint(true)
+      .transform(Storage.pin)
   }
 
   /** Zero-count initial state for an incremental fit. */
   def emptyStats(spark: SparkSession, nBuckets: Int): DataFrame =
     spark.range(nBuckets)
       .select(col("id").as("bucket"), lit(0L).as("rc"), lit(0L).as("tc"))
-      .localCheckpoint(true)
+      .transform(Storage.pin)
 
   /** Fold one micro-batch into dense stats: element-wise count
     * addition over the nBuckets-row state — the entire incremental
@@ -116,7 +116,7 @@ object Dsir {
       nBuckets: Int): DataFrame = {
     Storage.releasing(denseStats(batch, targetPred, nBuckets)
         .select(col("bucket"), col("rc").as("drc"), col("tc").as("dtc")))(
-      statsFoldPlan(state, _).localCheckpoint(true))
+      statsFoldPlan(state, _).transform(Storage.pin))
   }
 
   /** Pure fold plan for one [[updateStats]] step — factored out so

@@ -20,10 +20,11 @@ import org.apache.spark.sql.functions._
   * state size — see [[broadcastStateRows]].
   *
   * Storage: the edge list — often an expensive join upstream — is
-  * cached ONCE, growing round state runs in [[Storage.rounds]] (or
-  * chains lazily where a round references it exactly once), and every
-  * base relation is released before returning — the result frame is
-  * itself materialized, so nothing dangles. Without this, Spark's
+  * cached ONCE ([[Storage.cache]]), growing round state runs in
+  * [[Storage.rounds]] (or chains lazily where a round references it
+  * exactly once), and every base relation is released before
+  * returning, or when anything throws — the result frame is itself
+  * materialized, so nothing dangles. Without this, Spark's
   * no-plan-sharing rule re-evaluates the edge subplan several times
   * per iteration.
   */
@@ -75,26 +76,35 @@ object Graph {
     if (broadcastState) broadcast(df) else df
 
   /** The layout prelude of the rank walks, labelPropagation and
-    * [[Dedup.connectedComponents]]: picks the regime from the measured
-    * `stateRows`, hash-partitions the raw (src, dst) cache on the key
-    * that regime's rounds cluster on (dst: broadcast rounds aggregate
-    * there; src: shuffle rounds join there), and PERSISTS it — not
-    * checkpointed: under AQE a `localCheckpoint`'s LogicalRDD reports
-    * unknown partitioning, so every round would re-shuffle |E| rows,
-    * while `InMemoryRelation` keeps the child plan's layout. Persist
-    * is safe here because the edge set is FIXED. The partitioned
-    * relation is materialized and `raw` released, so only ONE copy of
-    * the edge set stays resident. Returns (broadcastState, edges). */
-  private[graft] def regimeEdges(
-      raw: DataFrame, stateRows: Long): (Boolean, DataFrame) = {
-    val broadcastState = stateRows <= broadcastStateRows(raw)
-    val e = raw
-      .repartition(col(if (broadcastState) "dst" else "src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    raw.unpersist(blocking = false)
-    (broadcastState, e)
-  }
+    * [[Dedup.connectedComponents]]. The upstream edge build — often an
+    * expensive join — lands ONCE in a raw (src, dst) cache. `state`
+    * derives the round-0 state from it, materialized, with its row
+    * count (|V|), which picks the regime. The edge cache is then
+    * hash-partitioned on the key that regime's rounds cluster on (dst:
+    * broadcast rounds aggregate there; src: shuffle rounds join
+    * there) and CACHED, not pinned: under AQE a pin's LogicalRDD
+    * reports unknown partitioning, so every round would re-shuffle
+    * |E| rows, while `InMemoryRelation` keeps the child plan's layout
+    * (safe because the edge set is FIXED). `raw` is released once the
+    * edge cache exists, so only ONE copy of the edge set stays
+    * resident; on a throw, everything taken so far is released
+    * (`releaseState` drops the state). Returns (broadcastState, edge
+    * cache, state, state rows); the caller owns both frames. */
+  private[graft] def regimeEdges(edges: DataFrame)(
+      state: DataFrame => (DataFrame, Long),
+      releaseState: DataFrame => Unit): (Boolean, DataFrame, DataFrame, Long) =
+    Storage.caching(edges.select(col("src"), col("dst"))) { raw =>
+      val (s, stateRows) = state(raw)
+      try {
+        val broadcastState = stateRows <= broadcastStateRows(raw)
+        val e = Storage.cache(raw.repartition(col(if (broadcastState) "dst" else "src")))
+        (broadcastState, e, s, stateRows)
+      } catch {
+        case t: Throwable =>
+          releaseState(s)
+          throw t
+      }
+    }
 
   /** `edges(src, dst)` is a directed multigraph — parallel edges act
     * as weight. Returns (node_id, pr) with pr scaled by 1e12.
@@ -130,24 +140,16 @@ object Graph {
     * stop propagating — their mass is dropped, the usual
     * simplification for sink-heavy graphs. */
   private def rankWalk(edges: DataFrame, isSrc: Column, iters: Int): DataFrame = {
-    // the upstream edge build — often an expensive join — is computed
-    // exactly once into an unpartitioned raw cache; the regime (and
-    // with it the round-plan partition key) is only known after |V|
-    // is measured, so the partitioned relation derives from the cache
-    val raw = edges.select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one pass over raw: every edge contributes (src, 1) + (dst, 0)
-    val nodeInfo = raw
-      .select(explode(array(
-        struct(col("src").as("node_id"), lit(1L).as("o")),
-        struct(col("dst").as("node_id"), lit(0L).as("o")))).as("x"))
-      .groupBy(col("x.node_id").as("node_id"))
-      .agg(sum(col("x.o")).as("outdeg"))
-      .withColumn("is_src", isSrc)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one eager job warms BOTH caches (nodeInfo reads raw) AND
-    // measures |V| — nodeInfo is one row per node
-    val (broadcastState, e) = regimeEdges(raw, nodeInfo.count())
+    // one pass over the raw edges: every edge contributes (src, 1) +
+    // (dst, 0); one row per node, so its cache job measures |V|
+    val (broadcastState, e, nodeInfo, _) = regimeEdges(edges)(raw =>
+      Storage.cacheCounted(raw
+        .select(explode(array(
+          struct(col("src").as("node_id"), lit(1L).as("o")),
+          struct(col("dst").as("node_id"), lit(0L).as("o")))).as("x"))
+        .groupBy(col("x.node_id").as("node_id"))
+        .agg(sum(col("x.o")).as("outdeg"))
+        .withColumn("is_src", isSrc)), Storage.uncache)
     // round 0 derives from the cached nodeInfo (and through it from
     // the caller's edges), so the shuffle loop borrows it
     val base = nodeInfo.withColumn("pr", col("is_src") * lit(SCALE))
@@ -164,16 +166,16 @@ object Graph {
           // checkpointed form the spec pins. (No rounds: materialize
           // the base ranks, which read the nodeInfo blocks released
           // below.)
-          (1 to iters).foldLeft(base)((pr, _) =>
-            pprRound(e, nodeInfo, pr, broadcastState)).localCheckpoint(true)
+          Storage.pin((1 to iters).foldLeft(base)((pr, _) =>
+            pprRound(e, nodeInfo, pr, broadcastState)))
         else Storage.rounds(base, iters, ownsInit = false)(
           pprRound(e, nodeInfo, _, broadcastState))
       pr.select(col("node_id"), col("pr"))
     } finally {
       // the returned ranks are materialized — the base relations are
       // never read again, success or failure
-      e.unpersist(blocking = false)
-      nodeInfo.unpersist(blocking = false)
+      Storage.uncache(e)
+      Storage.uncache(nodeInfo)
     }
   }
 
@@ -293,21 +295,18 @@ object Graph {
           filter(col("ins"), e => struct(size(col("ins")), col("v")) <
             struct(e.getField("du"), e.getField("u"))),
           e => e.getField("u"))).as("nbrs"))
-      // the oriented adjacency is read twice (edge stream + closure
-      // build side) — persisted, not checkpointed: the groupBy leaves
-      // it hash(v)-partitioned, InMemoryRelation keeps that layout
-      // under AQE (a checkpoint's LogicalRDD loses it), so the stream
-      // branch re-reads it with no exchange.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      adj.count() // one eager job; both closure consumers hit memory
+    // the oriented adjacency is read twice (edge stream + closure
+    // build side) — cached, not pinned: the groupBy leaves it
+    // hash(v)-partitioned, InMemoryRelation keeps that layout under
+    // AQE (a pin's LogicalRDD loses it), so the stream branch re-reads
+    // it with no exchange.
+    Storage.caching(adj)(
       // output contract is (bigint node_id, bigint n_triangles)
       // regardless of the internal packing (no-op cast when unpacked)
-      trianglePlan(adj)
+      trianglePlan(_)
         .select(col("node_id").cast("long").as("node_id"),
           col("n_triangles"))
-        .localCheckpoint(true)
-    } finally adj.unpersist(blocking = false)
+        .transform(Storage.pin))
   }
 
   /** The edge-iterator closure over the materialized oriented
@@ -395,27 +394,15 @@ object Graph {
     // in an unpartitioned raw cache; both partitioned twins then fill
     // from it (previously each twin's cache fill re-evaluated the
     // upstream join), and raw is released as soon as both exist
-    val raw = edges.select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val eSrc = raw
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val eDst = raw
-      .repartition(col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // the node set is fixed — materialized once (this job also warms
-    // the raw + eSrc caches), read by round 1 and the final merge
-    val nodes = eSrc.select(col("src").as("node_id"))
-      .union(eSrc.select(col("dst").as("node_id")))
-      .distinct()
-      .localCheckpoint(true)
-    eDst.count()
-    raw.unpersist(blocking = false)
-    // |V| regime probe on the materialized checkpoint (trivial job)
-    val broadcastState = nodes.count() <= broadcastStateRows(edges)
-    var hubState = nodes.select(col("node_id"), lit(SCALE).as("hub"))
-    var aNorm: DataFrame = null
-    var hNorm: DataFrame = null
+    val (eSrc, eDst) = Storage.caching(edges.select(col("src"), col("dst"))) { raw =>
+      val eSrc = Storage.cache(raw.repartition(col("src")))
+      try (eSrc, Storage.cache(raw.repartition(col("dst"))))
+      catch {
+        case t: Throwable =>
+          Storage.uncache(eSrc)
+          throw t
+      }
+    }
     // HITS keeps its own loop: a round is TWO checkpoints (the raw
     // sums of both half-steps), and the last round's authorities are
     // read again by the final merge, so [[Storage.rounds]]' one live
@@ -427,57 +414,67 @@ object Graph {
       live = Nil
     }
     try {
-      if (broadcastState) for (i <- 1 to iters) {
-        // broadcast regime: the window-form normalizer references its
-        // half-step exactly once, so the whole trajectory chains
-        // LAZILY — the only checkpoints are the LAST iteration's two
-        // normalized states (each has a second consumer: the final
-        // merge, and for auth the last hub half-step). 2 jobs replace
-        // 2·iters; same expressions, bit-identical trajectory (the
-        // regime spec pins it).
-        aNorm = hitsMaxNormBc(hitsRawAuth(eDst, hubState, broadcastState), "ra", "auth")
-        if (i == iters) {
-          aNorm = aNorm.localCheckpoint(true)
-          live :+= aNorm
+      // the node set is fixed — pinned once, read by round 1 and the
+      // final merge; the pin's own count is the |V| regime probe
+      val (nodes, nV) = Storage.pinCounted(eSrc.select(col("src").as("node_id"))
+        .union(eSrc.select(col("dst").as("node_id")))
+        .distinct())
+      Storage.releasing(nodes) { nodes =>
+        val broadcastState = nV <= broadcastStateRows(edges)
+        var hubState = nodes.select(col("node_id"), lit(SCALE).as("hub"))
+        var aNorm: DataFrame = null
+        var hNorm: DataFrame = null
+        if (broadcastState) for (i <- 1 to iters) {
+          // broadcast regime: the window-form normalizer references its
+          // half-step exactly once, so the whole trajectory chains
+          // LAZILY — the only checkpoints are the LAST iteration's two
+          // normalized states (each has a second consumer: the final
+          // merge, and for auth the last hub half-step). 2 jobs replace
+          // 2·iters; same expressions, bit-identical trajectory (the
+          // regime spec pins it).
+          aNorm = hitsMaxNormBc(hitsRawAuth(eDst, hubState, broadcastState), "ra", "auth")
+          if (i == iters) {
+            aNorm = aNorm.transform(Storage.pin)
+            live :+= aNorm
+          }
+          hNorm = hitsMaxNormBc(hitsRawHub(eSrc, aNorm, broadcastState), "rh", "hub")
+          if (i == iters) {
+            hNorm = hNorm.transform(Storage.pin)
+            live :+= hNorm
+          }
+          hubState = hNorm
+        } else for (_ <- 1 to iters) {
+          // authority half-step: raw in-neighbor hub sums, materialized
+          // once — the heavy O(|E|) join+agg job of this half-step
+          val rawA = hitsRawAuth(eSrc, hubState, broadcastState).transform(Storage.pin)
+          // the previous round's raw relations fed this job (via the
+          // lazy normalizers); safe to release only now
+          releaseLive()
+          live = Seq(rawA)
+          aNorm = hitsMaxNorm(rawA, "ra", "auth")
+          // hub half-step over the NEW authorities
+          val rawH = hitsRawHub(eDst, aNorm, broadcastState).transform(Storage.pin)
+          live :+= rawH
+          hNorm = hitsMaxNorm(rawH, "rh", "hub")
+          hubState = hNorm
         }
-        hNorm = hitsMaxNormBc(hitsRawHub(eSrc, aNorm, broadcastState), "rh", "hub")
-        if (i == iters) {
-          hNorm = hNorm.localCheckpoint(true)
-          live :+= hNorm
-        }
-        hubState = hNorm
-      } else for (_ <- 1 to iters) {
-        // authority half-step: raw in-neighbor hub sums, materialized
-        // once — the heavy O(|E|) join+agg job of this half-step
-        val rawA = hitsRawAuth(eSrc, hubState, broadcastState).localCheckpoint(true)
-        // the previous round's raw relations fed this job (via the
-        // lazy normalizers); safe to release only now
-        releaseLive()
-        live = Seq(rawA)
-        aNorm = hitsMaxNorm(rawA, "ra", "auth")
-        // hub half-step over the NEW authorities
-        val rawH = hitsRawHub(eDst, aNorm, broadcastState).localCheckpoint(true)
-        live :+= rawH
-        hNorm = hitsMaxNorm(rawH, "rh", "hub")
-        hubState = hNorm
+        if (iters <= 0) // no rounds ran (hNorm/aNorm never assigned)
+          nodes.select(col("node_id"),
+            lit(SCALE).as("hub"), lit(SCALE).as("auth"))
+            .transform(Storage.pin)
+        else
+          nodes
+            .join(reattachSide(hNorm, broadcastState), Seq("node_id"), "left")
+            .join(reattachSide(aNorm, broadcastState), Seq("node_id"), "left")
+            .select(col("node_id"),
+              coalesce(col("hub"), lit(0L)).as("hub"),
+              coalesce(col("auth"), lit(0L)).as("auth"))
+            .transform(Storage.pin)
       }
-      if (iters <= 0) // no rounds ran (hNorm/aNorm never assigned)
-        nodes.select(col("node_id"),
-          lit(SCALE).as("hub"), lit(SCALE).as("auth"))
-          .localCheckpoint(true)
-      else
-        nodes
-          .join(reattachSide(hNorm, broadcastState), Seq("node_id"), "left")
-          .join(reattachSide(aNorm, broadcastState), Seq("node_id"), "left")
-          .select(col("node_id"),
-            coalesce(col("hub"), lit(0L)).as("hub"),
-            coalesce(col("auth"), lit(0L)).as("auth"))
-          .localCheckpoint(true)
     } finally {
       releaseLive()
-      Storage.unpersistLocalCheckpoint(nodes)
-      eSrc.unpersist(blocking = false)
-      eDst.unpersist(blocking = false)
+      Storage.uncache(eSrc)
+      Storage.uncache(eDst)
     }
   }
 
@@ -586,11 +583,8 @@ object Graph {
       .agg(array_sort(collect_list(
         col("u") * lit(PACK) + col("du"))).as("packed"))
       .select(col("v").as("node"), col("packed"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      adj.count() // one eager job; both consumers below hit memory
-      linkPredScorePlan(adj).localCheckpoint(true)
-    } finally adj.unpersist(blocking = false)
+    // read by both sides of the closure join, from the cache
+    Storage.caching(adj)(linkPredScorePlan(_).transform(Storage.pin))
   }
 
   /** The edge-stream + intersect + in-row reduce stage of
@@ -655,19 +649,21 @@ object Graph {
     * driver-side but the one-count convergence probe per round over
     * an already-materialized relation (pinned in PlanShapeSpec). */
   def kCore(und: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val adjacency = und
+    // read (and validated) before the adjacency is cached, so a
+    // malformed conf leaves nothing behind
+    val stateRowsCap = broadcastStateRows(und)
+    val (adjacency, edgeRows) = Storage.cacheCounted(und
       .select(explode(array(
         struct(col("a").as("node"), col("b").as("nbr")),
         struct(col("b").as("node"), col("a").as("nbr")))).as("e"))
       .groupBy(col("e.node").as("src"))
       .agg(collect_set(col("e.nbr")).as("nbrs"))
-      .select(col("src"), explode(col("nbrs")).as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var n = adjacency.count()
+      .select(col("src"), explode(col("nbrs")).as("dst")))
+    var n = edgeRows
     // regime probe: |E| bounds the O(|V|) alive relation the
     // broadcast round ships, so the edge count (already measured for
     // the convergence test) is a safe conservative guard
-    val smallGraph = n <= broadcastStateRows(und)
+    val smallGraph = n <= stateRowsCap
     var done = n == 0
     // kCore keeps its own loop: the shuffle regime PERSISTS its rounds
     // (see above), which [[Storage.rounds]]' checkpoint loop cannot do.
@@ -679,15 +675,13 @@ object Graph {
     // included, is released once its successor is materialized
     def release(state: DataFrame): Unit =
       if (smallGraph && (state ne adjacency)) Storage.unpersistLocalCheckpoint(state)
-      else state.unpersist(blocking = false)
+      else Storage.uncache(state)
     var edges = adjacency
     try {
       for (_ <- 1 to rounds if !done) {
-        val next =
-          if (smallGraph) kCoreRoundBc(edges, k).localCheckpoint(true)
-          else kCoreRound(edges, k)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val m = next.count()
+        val (next, m) =
+          if (smallGraph) Storage.pinCounted(kCoreRoundBc(edges, k))
+          else Storage.cacheCounted(kCoreRound(edges, k))
         release(edges)
         edges = next
         done = m == n || m == 0
@@ -698,7 +692,7 @@ object Graph {
       edges
         .groupBy(col("src").as("node_id"))
         .agg(count(lit(1)).as("deg_in_core"))
-        .localCheckpoint(true)
+        .transform(Storage.pin)
     } finally release(edges)
   }
 
@@ -785,27 +779,21 @@ object Graph {
     * sort; label ids must stay below 10¹¹ (guarded — headroom for
     * the repo-wide 10¹⁰ synthetic-node-id offset convention). */
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
-    // the upstream edge build lands once in an unpartitioned raw
-    // cache; |V| is probed off the label-state checkpoint
-    val raw = edges.select(col("src"), col("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // the label state IS the node set (one row per node), so no
     // separate nodes relation exists: round N's reattach left-joins
-    // votes back onto the state itself. The init checkpoint doubles
-    // as the job that warms the raw edge cache.
-    val lbl = raw.select(col("src").as("node_id"))
-      .union(raw.select(col("dst").as("node_id")))
-      .distinct()
-      .select(col("node_id"),
-        when(col("node_id").between(0L, 99999999999L), col("node_id"))
-          .otherwise(raise_error(concat(lit("labelPropagation: node id "),
-            col("node_id").cast("string"),
-            lit(" outside [0, 1e11) — composite vote order would overflow"))))
-          .as("community"))
-      .localCheckpoint(true)
-    val (broadcastState, e) = regimeEdges(raw, lbl.count())
+    // votes back onto the state itself. Its pin counts |V|.
+    val (broadcastState, e, lbl, _) = regimeEdges(edges)(raw =>
+      Storage.pinCounted(raw.select(col("src").as("node_id"))
+        .union(raw.select(col("dst").as("node_id")))
+        .distinct()
+        .select(col("node_id"),
+          when(col("node_id").between(0L, 99999999999L), col("node_id"))
+            .otherwise(raise_error(concat(lit("labelPropagation: node id "),
+              col("node_id").cast("string"),
+              lit(" outside [0, 1e11) — composite vote order would overflow"))))
+            .as("community"))), Storage.unpersistLocalCheckpoint)
     try Storage.rounds(lbl, rounds)(labelPropRound(e, _, broadcastState))
-    finally e.unpersist(blocking = false)
+    finally Storage.uncache(e)
   }
 
   /** Multi-source BFS: minimum hop count from any node in `sources`
@@ -864,18 +852,17 @@ object Graph {
     // CANDIDATE relation's broadcast (one hub in the frontier can
     // expand past any state-derived threshold). The shuffle plan
     // below is already the 100 TB shape.
-    val e = edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     import spark.implicits._
-    // round-0 state = the sources at distance 0; also the warm-up job
-    val state = sources.toSet.toSeq.sorted.toDF("node_id")
-      .select(col("node_id").cast("long").as("node_id"),
-        lit(0L).as("dist"), lit(true).as("improved"))
-      .localCheckpoint(true)
-    try Storage.releasing(Storage.rounds(state, rounds)(ssspRound(e, _)))(
-      _.select(col("node_id"), col("dist")).localCheckpoint(true))
-    finally e.unpersist(blocking = false)
+    Storage.caching(edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
+        .repartition(col("src"))) { e =>
+      // round-0 state = the sources at distance 0
+      val state = sources.toSet.toSeq.sorted.toDF("node_id")
+        .select(col("node_id").cast("long").as("node_id"),
+          lit(0L).as("dist"), lit(true).as("improved"))
+        .transform(Storage.pin)
+      Storage.releasing(Storage.rounds(state, rounds)(ssspRound(e, _)))(
+        _.select(col("node_id"), col("dist")).transform(Storage.pin))
+    }
   }
 
   /** PER-SOURCE bounded BFS: [[bfs]] keyed by (src_id, node_id) —
@@ -891,18 +878,16 @@ object Graph {
     val spark = edges.sparkSession
     // NOT ported to the broadcast recipe — see [[boundedSssp]]'s note
     // (measured regression; the candidate broadcast is unboundable).
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     import spark.implicits._
-    val state = sources.toSet.toSeq.sorted.toDF("src_id")
-      .select(col("src_id").cast("long").as("src_id"),
-        col("src_id").cast("long").as("node_id"),
-        lit(0L).as("hops"), lit(true).as("improved"))
-      .localCheckpoint(true)
-    try Storage.releasing(Storage.rounds(state, maxHops)(bfsPerSourceRound(e, _)))(
-      _.select(col("src_id"), col("node_id"), col("hops")).localCheckpoint(true))
-    finally e.unpersist(blocking = false)
+    Storage.caching(edges.select(col("src"), col("dst")).repartition(col("src"))) { e =>
+      val state = sources.toSet.toSeq.sorted.toDF("src_id")
+        .select(col("src_id").cast("long").as("src_id"),
+          col("src_id").cast("long").as("node_id"),
+          lit(0L).as("hops"), lit(true).as("improved"))
+        .transform(Storage.pin)
+      Storage.releasing(Storage.rounds(state, maxHops)(bfsPerSourceRound(e, _)))(
+        _.select(col("src_id"), col("node_id"), col("hops")).transform(Storage.pin))
+    }
   }
 
   /** One composite-keyed BFS superstep — [[ssspRound]] keyed by

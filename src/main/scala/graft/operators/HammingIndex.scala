@@ -136,8 +136,8 @@ object HammingIndex extends SegmentedIndex {
         "pigeonhole (exhaustive blocking needs maxHamming + 1 <= chunks)")
     require(maxBucket >= 2,
       s"probePairs: maxBucket $maxBucket can admit no pairs at all")
-    Storage.releasing(sigCols(newSignatures).localCheckpoint(eager = true))(
-      probePairsPlan(spark, path, _, maxHamming, maxBucket).localCheckpoint(eager = true))
+    Storage.pinning(sigCols(newSignatures))(
+      probePairsPlan(spark, path, _, maxHamming, maxBucket).transform(Storage.pin))
   }
 
   /** The pure probe plan over ALREADY-MATERIALIZED shard signatures —

@@ -122,9 +122,8 @@ object IvfIndex extends SegmentedIndex {
   def probeSemantic(
       spark: SparkSession, path: String, newVectors: DataFrame,
       threshold: Double = 0.95, maxList: Int = 4096): DataFrame = {
-    Storage.releasing(Similarity.ivfAssign(newVectors, centroids(spark, path))
-        .localCheckpoint(eager = true))(
-      probeSemanticPlan(spark, path, _, threshold, maxList).localCheckpoint(eager = true))
+    Storage.pinning(Similarity.ivfAssign(newVectors, centroids(spark, path)))(
+      probeSemanticPlan(spark, path, _, threshold, maxList).transform(Storage.pin))
   }
 
   /** Pure plan builder of [[probeSemantic]] over an already-assigned,

@@ -242,10 +242,9 @@ object IvfPqIndex extends SegmentedIndex {
       vectorSource: DataFrame, threshold: Double = 0.95,
       shortlist: Int = 8, maxList: Int = 4096): DataFrame = {
     val centroids = LsmSegments.readArtifacts(spark, Seq(s"$path/centroids"))
-    Storage.releasing(Similarity.ivfAssign(newVectors, centroids)
-        .localCheckpoint(eager = true))(
+    Storage.pinning(Similarity.ivfAssign(newVectors, centroids))(
       probeSemanticPlan(spark, path, _, vectorSource, threshold, shortlist, maxList)
-        .localCheckpoint(eager = true))
+        .transform(Storage.pin))
   }
 
   /** Pure plan builder of [[probeSemantic]] over an already-assigned,

@@ -150,9 +150,8 @@ object MinHashIndex extends SegmentedIndex {
       spark: SparkSession, path: String, newDocuments: DataFrame,
       threshold: Double = 0.5): DataFrame = {
     val (shingleN, numHashes, bands) = readMeta(spark, path)
-    Storage.releasing(fingerprints(newDocuments, shingleN, numHashes, bands)
-        .localCheckpoint(eager = true))(
-      probePairsPlan(spark, path, _, threshold).localCheckpoint(eager = true))
+    Storage.pinning(fingerprints(newDocuments, shingleN, numHashes, bands))(
+      probePairsPlan(spark, path, _, threshold).transform(Storage.pin))
   }
 
   /** The pure probe plan over ALREADY-MATERIALIZED shard fingerprints

@@ -79,15 +79,14 @@ object RecordAdmission {
       maxDist: Int, maxPairsPerBlock: Long = 100000000L): DataFrame = {
     // one scan of the shard source, pinned: three consumers below
     // (register probe, in-shard pair law, survivor projections)
-    Storage.releasing(shard.select("id", "name", "block")
-        .localCheckpoint(eager = true)) { pinned =>
+    Storage.pinning(shard.select("id", "name", "block")) { pinned =>
       // stage 1: the o(index) fuzzy screen vs the register
       val screened = Storage.releasing(RecordIndex.probeShard(
           spark, store(path, "register"), pinned, maxDist, maxPairsPerBlock)) { matches =>
         pinned
           .join(broadcast(matches.select(col("shard_id").as("id")).distinct()),
             Seq("id"), "left_anti")
-          .localCheckpoint(eager = true)
+          .transform(Storage.pin)
       }
       // stage 2: smaller-id dominance among screen survivors — any
       // a < b pair drops b (a rejected survivor still dominates)
@@ -97,7 +96,7 @@ object RecordAdmission {
         screened
           .join(broadcast(pairs.select(col("b_id").as("id")).distinct()),
             Seq("id"), "left_anti")
-          .localCheckpoint(eager = true)
+          .transform(Storage.pin)
       }
     }
   }

@@ -61,9 +61,9 @@ object RecordIndex extends SegmentedIndex {
     // action can never re-read segment files a concurrent compact/gc
     // retired mid-batch — the per-batch screening guarantee
     // StreamingOps.foreachBatch documents
-    Storage.releasing(shard.select("id", "name", "block").localCheckpoint(eager = true))(
+    Storage.pinning(shard.select("id", "name", "block"))(
       probeShardOver(readAll(spark, path), _, maxDist, maxPairsPerBlock)
-        .localCheckpoint(eager = true))
+        .transform(Storage.pin))
   }
 
   /** [[probeShard]] against an explicit snapshot (the as-of serves
@@ -125,11 +125,10 @@ object RecordIndex extends SegmentedIndex {
       fields: Seq[EntityResolution.FieldScore], minScore: Int,
       maxPairsPerBlock: Long = 100000000L): DataFrame = {
     require(fields.nonEmpty, "probeShardMulti: no fields to score")
-    Storage.releasing(shard
-        .select((Seq("id", "block") ++ fields.map(_.field)).map(col): _*)
-        .localCheckpoint(eager = true))(
+    Storage.pinning(shard
+        .select((Seq("id", "block") ++ fields.map(_.field)).map(col): _*))(
       probeShardMultiOver(readAll(spark, path), _, fields,
-        minScore, maxPairsPerBlock).localCheckpoint(eager = true))
+        minScore, maxPairsPerBlock).transform(Storage.pin))
   }
 
   /** [[probeShardMulti]] against an explicit snapshot. */

@@ -387,7 +387,7 @@ object Similarity {
       posexplode(array((0 until subspaces).map(m =>
         slice(guarded, m * subDim + 1, subDim)): _*)))
       .toDF("vec_id", "m", "sv")
-      .localCheckpoint(true)
+      .transform(Storage.pin)
     Storage.releasing(sliced) { _ =>
       // round state: one row per subspace holding the cw_k-ascending
       // centroid list — the exact form the broadcast assignment
@@ -396,7 +396,7 @@ object Similarity {
         .select(col("m"), col("vec_id").cast("int").as("cw_k"), col("sv").as("cw"))
         .groupBy("m")
         .agg(array_sort(collect_list(struct(col("cw_k"), col("cw")))).as("cents"))
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       val trained = Storage.rounds(seed, iters) { cents =>
         val assigned = sliced.join(broadcast(cents), "m")
           .select(col("m"), col("sv"),
@@ -460,7 +460,7 @@ object Similarity {
         // materialize the (queries × k)-row answer before both scopes
         // release the sliced corpus and the trained codebooks
         saltedTopK(scored, score = "adc_dist", ascending = true,
-          k = k, salts = salts).localCheckpoint(true)
+          k = k, salts = salts).transform(Storage.pin)
       }
     }
   }
@@ -883,13 +883,13 @@ object Similarity {
         .otherwise(raise_error(concat(
           lit(s"kmeans: embedding dimension must be $dims, got "),
           size(col("embedding")).cast("string")))).as("embedding"))
-      .localCheckpoint(true)
+      .transform(Storage.pin)
     val trained = Storage.releasing(emb) { _ =>
       val seed = emb
         .where(col("vec_id") < k)
         .agg(array_sort(collect_list(
           struct(col("vec_id").as("c_id"), col("embedding").as("c_vec")))).as("cents"))
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       Storage.rounds(seed, iters) { centsRow =>
         // assignment is IN-ROW: the (tiny) centroid table folds into ONE
         // broadcast row sorted by c_id, and each vector scans it with an
@@ -1081,8 +1081,8 @@ object Similarity {
     val e = embeddings.select(col("vec_id"), col("embedding"), col("label"))
     val centroids = e.where(col("vec_id") < nCentroids)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-    Storage.releasing(filteredIvfAssign(e, centroids).localCheckpoint(true)) { assigned =>
-      Storage.releasing(filteredBruteKnn(e, nQueries, k).localCheckpoint(true)) { truth =>
+    Storage.pinning(filteredIvfAssign(e, centroids)) { assigned =>
+      Storage.pinning(filteredBruteKnn(e, nQueries, k)) { truth =>
         val queries = e.where(col("vec_id") < nQueries)
           .select(col("vec_id").as("query_id"), col("embedding").as("q"),
             col("label").as("qlabel"))
@@ -1119,7 +1119,7 @@ object Similarity {
               col("qualifying_rows").cast("long").as("qualifying_rows"),
               (col("scanned_rows").cast("double") /
                 (col("nq") * col("n_total"))).as("scan_frac"))
-        }.reduce(_.unionByName(_)).localCheckpoint(true)
+        }.reduce(_.unionByName(_)).transform(Storage.pin)
       }
     }
   }
@@ -1166,7 +1166,7 @@ object Similarity {
     val cand = shortlist
       .join(embeddings.select(col("vec_id"), col("embedding")), "vec_id")
       .select(col("query_id"), col("vec_id"), col("rel"), col("embedding"))
-      .localCheckpoint(eager = true)
+      .transform(Storage.pin)
     Storage.releasing(cand) { _ =>
       val w1 = Window.partitionBy("query_id")
         .orderBy(col("mmr_score").desc, col("vec_id").asc)
@@ -1177,7 +1177,7 @@ object Similarity {
         .where(col("rn") === 1)
         .select(col("query_id"), col("vec_id"), lit(1).as("mmr_rank"),
           col("mmr_score"))
-        .localCheckpoint(eager = true)
+        .transform(Storage.pin)
       // round i picks the i-th item; the caller owns the last round
       var i = 1
       Storage.rounds(top1, k - 1) { selected =>
@@ -1274,8 +1274,8 @@ object Similarity {
     val e = embeddings.select(col("vec_id"), col("embedding"))
     val centroids = e.where(col("vec_id") < nCentroids)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-    Storage.releasing(ivfAssign(e, centroids).localCheckpoint(true)) { assigned =>
-      Storage.releasing(bruteForceKnn(e, nQueries, k).localCheckpoint(true)) { truth =>
+    Storage.pinning(ivfAssign(e, centroids)) { assigned =>
+      Storage.pinning(bruteForceKnn(e, nQueries, k)) { truth =>
         val queries = e.where(col("vec_id") < nQueries)
           .select(col("vec_id").as("query_id"), col("embedding").as("q"))
         val wProbe = Window.partitionBy("query_id")
@@ -1302,7 +1302,7 @@ object Similarity {
               col("scanned_rows").cast("long").as("scanned_rows"),
               (col("scanned_rows").cast("double") /
                 (col("nq") * col("n_total"))).as("scan_frac"))
-        }.reduce(_.unionByName(_)).localCheckpoint(true)
+        }.reduce(_.unionByName(_)).transform(Storage.pin)
       }
     }
   }
@@ -1329,13 +1329,13 @@ object Similarity {
       embeddings: DataFrame, nQueries: Int = 8, k: Int = 5,
       salts: Int = 32): DataFrame = {
     val e = embeddings.select(col("vec_id"), col("embedding"))
-    val truth = bruteForceKnn(e, nQueries, k, salts).localCheckpoint(true)
+    val truth = bruteForceKnn(e, nQueries, k, salts).transform(Storage.pin)
     Storage.releasing(truth) { _ =>
       // one row, materialized ONCE: four tier rows consume it, and an
       // unpinned aggregate would re-scan the embedding column per tier
       val stats = e.agg(count(lit(1)).as("n_total"),
         max(size(col("embedding"))).cast("long").as("dims"))
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       Storage.releasing(stats) { _ =>
         val tiers: Seq[(String, DataFrame, org.apache.spark.sql.Column)] = Seq(
           ("float32_brute", truth, col("dims") * 4),
@@ -1352,7 +1352,7 @@ object Similarity {
               col("hits").cast("long").as("n_hits"),
               bytes.cast("long").as("bytes_per_vec"),
               ((col("n_total") - 1) * bytes).cast("long").as("scanned_bytes"))
-        }.reduce(_.unionByName(_)).localCheckpoint(true)
+        }.reduce(_.unionByName(_)).transform(Storage.pin)
       }
     }
   }
@@ -1376,9 +1376,9 @@ object Similarity {
     val e = embeddings.select(col("vec_id"), col("embedding"))
     val cand = ivfPqKnn(e, nQueries, shortlists.max, nCentroids,
       nProbe, subspaces, subDim, codebookSize, salts)
-      .localCheckpoint(true)
+      .transform(Storage.pin)
     Storage.releasing(cand) { _ =>
-      Storage.releasing(bruteForceKnn(e, nQueries, k).localCheckpoint(true)) { truth =>
+      Storage.pinning(bruteForceKnn(e, nQueries, k)) { truth =>
         val queries = e.where(col("vec_id") < nQueries)
           .select(col("vec_id").as("query_id"), col("embedding").as("q"))
         shortlists.map { s =>
@@ -1403,7 +1403,7 @@ object Similarity {
               (col("hits").cast("double") / (col("nq") * k)).as(s"recall_at_$k"),
               col("hits").cast("long").as("n_hits"),
               col("rescored_rows").cast("long").as("rescored_rows"))
-        }.reduce(_.unionByName(_)).localCheckpoint(true)
+        }.reduce(_.unionByName(_)).transform(Storage.pin)
       }
     }
   }
@@ -1578,9 +1578,9 @@ object Similarity {
         kmeans(emb, nCentroids, coarseIters, dims = subspaces * subDim)) { centroids =>
       // the residual relation feeds training AND encode — materialize
       // once (plan branches share no work), release before return
-      Storage.releasing(ivfPqResiduals(emb, centroids).localCheckpoint(true)) { residuals =>
+      Storage.pinning(ivfPqResiduals(emb, centroids)) { residuals =>
         val sliced = ivfPqSliceResiduals(residuals, subspaces, subDim)
-          .localCheckpoint(true)
+          .transform(Storage.pin)
         Storage.releasing(sliced) { _ =>
           Storage.releasing(
               trainResidualCodebook(sliced, subDim, codebookSize, pqIters)) { cbDense =>
@@ -1591,7 +1591,7 @@ object Similarity {
               queries, centroids, cbDense, subspaces, subDim, nProbe)
             saltedTopK(ivfPqAdcScore(codes, luts, subspaces),
               score = "adc_dist", ascending = true, k = k, salts = salts)
-              .localCheckpoint(true)
+              .transform(Storage.pin)
           }
         }
       }
@@ -1617,7 +1617,7 @@ object Similarity {
     // was one full corpus write+read for nothing
     val sliced = ivfPqSliceResiduals(
       ivfPqResiduals(emb, centroids), subspaces, subDim)
-      .localCheckpoint(true)
+      .transform(Storage.pin)
     Storage.releasing(sliced)(
       sliced => (centroids, trainResidualCodebook(sliced, subDim, codebookSize, pqIters)))
   }
@@ -1719,7 +1719,7 @@ object Similarity {
       .select(col("m"), col("vec_id").cast("int").as("cw_k"), col("sv").as("cw"))
       .groupBy("m")
       .agg(array_sort(collect_list(struct(col("cw_k"), col("cw")))).as("cents"))
-      .localCheckpoint(true)
+      .transform(Storage.pin)
     val trained = Storage.rounds(seed, iters) { cents =>
       val assigned = sliced.join(broadcast(cents), "m")
         .select(col("m"), col("sv"),
@@ -1750,7 +1750,7 @@ object Similarity {
           (row_number().over(Window.partitionBy("m").orderBy(col("c.cw_k"))) - 1)
             .cast("int").as("cw_k"),
           col("c.cw").as("cw"))
-        .localCheckpoint(true))
+        .transform(Storage.pin))
   }
 
   /** Semantic deduplication (SemDeDup-style): k-means-cluster the
@@ -1792,7 +1792,7 @@ object Similarity {
             struct(col("cos"), -col("vec_id"))).as("keep"))
         .select(col("c_id"), col("keep.vec_id").as("keep_vec_id"),
           col("n_members"), round(col("keep.cos"), 6).as("keep_cos"))
-        .localCheckpoint(true)
+        .transform(Storage.pin)
     }
   }
 
@@ -1832,7 +1832,7 @@ object Similarity {
       val plain = ils(
         bruteForceKnn(emb, nQueries, k).select("query_id", "vec_id"), "ils_topk")
       val diverse = ils(mmrRes.select("query_id", "vec_id"), "ils_mmr")
-      plain.join(diverse, "query_id").localCheckpoint(true)
+      plain.join(diverse, "query_id").transform(Storage.pin)
     }
   }
 
@@ -1874,7 +1874,7 @@ object Similarity {
         .withColumn("n", count(lit(1)).over(Window.partitionBy("c_id")))
         .where(col("hard_rank") * 2 <= col("n") + 1)
         .select(col("c_id"), col("vec_id"), col("hard_rank"), col("cos"))
-        .localCheckpoint(true)
+        .transform(Storage.pin)
     }
   }
 
@@ -1930,12 +1930,10 @@ object Similarity {
         cosine(col("qv"), col("embedding")).as("cos"),
         (inter.cast("double") /
           (size(col("qt")) + size(col("toks")) - inter)).as("jac"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // warm the cache eagerly (pageRank's nodeInfo.count() pattern):
-    // the dense and lexical branches otherwise race to fill it on
-    // first execution and the corpus join+cosine pass can run twice
-    scored.count()
-    try {
+    // the cache is filled by its own job: the dense and lexical
+    // branches otherwise race to fill it on first execution and the
+    // corpus join+cosine pass can run twice
+    Storage.caching(scored) { scored =>
       val dense = saltedTopK(scored, "cos", ascending = false, k = m, salts = salts)
         .select(col("query_id"), col("vec_id"), col("rank").as("dense_rank"))
       val lex = saltedTopK(scored, "jac", ascending = false, k = m, salts = salts)
@@ -1956,9 +1954,9 @@ object Similarity {
           coalesce(col("dense_rank"), lit(0)).as("dense_rank"),
           coalesce(col("lex_rank"), lit(0)).as("lex_rank"),
           round(col("rrf"), 6).as("rrf"), col("rank"))
-        // materialize before the finally releases the scored cache
-        .localCheckpoint(true)
-    } finally scored.unpersist(blocking = false)
+        // materialize before the scope releases the scored cache
+        .transform(Storage.pin)
+    }
   }
 
   /** Token-Jaccard top-`m` per query — [[hybridRrf]]'s lexical signal

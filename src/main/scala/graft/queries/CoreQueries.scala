@@ -664,7 +664,7 @@ object CoreQueries {
         pr
           .orderBy(col("pr").desc, col("node_id").asc)
           .limit(20)
-          .localCheckpoint(true)
+          .transform(Storage.pin)
       }
     }),
 
@@ -691,7 +691,7 @@ object CoreQueries {
         tc
           .orderBy(col("n_triangles").desc, col("node_id").asc)
           .limit(20)
-          .localCheckpoint(true)
+          .transform(Storage.pin)
       }
     }),
 
@@ -717,7 +717,7 @@ object CoreQueries {
       val out = st.snapshot
         .orderBy(col("n_triangles").desc, col("node_id").asc)
         .limit(20)
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       st.release()
       out
     }),
@@ -736,7 +736,7 @@ object CoreQueries {
         h
           .orderBy(col("auth").desc, col("node_id").asc)
           .limit(20)
-          .localCheckpoint(true)
+          .transform(Storage.pin)
       }
     }),
 
@@ -756,7 +756,7 @@ object CoreQueries {
         lp
           .orderBy(col("ra").desc, col("cn").desc, col("a").asc, col("b").asc)
           .limit(100)
-          .localCheckpoint(true)
+          .transform(Storage.pin)
       }
     }),
 
@@ -778,7 +778,7 @@ object CoreQueries {
         pr
           .orderBy(col("pr").desc, col("node_id").asc)
           .limit(20)
-          .localCheckpoint(true)
+          .transform(Storage.pin)
       }
     }),
 
@@ -805,7 +805,7 @@ object CoreQueries {
         kc
           .orderBy(col("deg_in_core").desc, col("node_id").asc)
           .limit(100)
-          .localCheckpoint(true)
+          .transform(Storage.pin)
       }
     }),
 
@@ -824,7 +824,7 @@ object CoreQueries {
           struct(col("sp").as("src"), col("c").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst"))
       Storage.releasing(graft.operators.Graph.labelPropagation(edges, rounds = 3)) { lp =>
-        lp.orderBy(col("node_id").asc).localCheckpoint(true)
+        lp.orderBy(col("node_id").asc).transform(Storage.pin)
       }
     }),
 
@@ -884,7 +884,7 @@ object CoreQueries {
             b => struct(a.as("a"), b.as("b")))))).as("e"))
         .select(col("e.a").as("a"), col("e.b").as("b"))
         .distinct()
-        .localCheckpoint(true) // two consumers below — never rebuilt
+        .transform(Storage.pin) // two consumers below — never rebuilt
       Storage.releasing(und) { _ =>
         Storage.releasing(graft.operators.Graph.triangleCounts(und)) { tc =>
           val deg = und
@@ -901,7 +901,7 @@ object CoreQueries {
             .limit(20)
             .select(col("node_id"), col("n_triangles"), col("degree"),
               round(col("c"), 6).as("coeff"))
-            .localCheckpoint(true)
+            .transform(Storage.pin)
         }
       }
     }),
@@ -1091,7 +1091,7 @@ object CoreQueries {
               lit(2) * (col("i_seg") === col("s_seg")).cast("int") +
               lit(1) * (abs(col("i_bal") - col("s_bal")) <= 100.0).cast("int"))
               .cast("int").as("score"))
-          .localCheckpoint(true)
+          .transform(Storage.pin)
       }
     }),
 
@@ -1161,7 +1161,7 @@ object CoreQueries {
             col("n_caught"),
             round(col("n_caught").cast("double") /
               col("n_shard").cast("double"), 6).as("recall"))
-          .localCheckpoint(true)
+          .transform(Storage.pin)
       }
     }),
 

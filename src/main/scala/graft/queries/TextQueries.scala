@@ -219,7 +219,7 @@ object TextQueries {
       val base = docs.join(sigs, "doc_id")
         .select(col("doc_id"), col("text"),
           col("c0"), col("c1"), col("c2"), col("c3"))
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       val path = graft.operators.Storage.tempIndexDir("graft_adm_mm_")
       graft.operators.Admission.init(s, path, perceptual = true)
       val sigCols = Seq(col("c0"), col("c1"), col("c2"), col("c3"))
@@ -268,7 +268,7 @@ object TextQueries {
       val base = docs.join(sigs, "doc_id")
         .select(col("doc_id"), col("text"),
           col("c0"), col("c1"), col("c2"), col("c3"))
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       val path = graft.operators.Storage.tempIndexDir("graft_adm_vid_")
       graft.operators.Admission.init(s, path, perceptual = true)
       val sigCols = Seq(col("c0"), col("c1"), col("c2"), col("c3"))

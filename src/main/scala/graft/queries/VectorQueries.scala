@@ -698,7 +698,7 @@ object VectorQueries {
       // centroid block — the trainer's output is consumed, not kept
       Storage.releasing(Similarity.kmeans(e, k = 16, iters = 3))(
         Similarity.ivfKnnWith(e, _, nQueries = 8, k = 5, nProbe = 4)
-          .localCheckpoint(true))
+          .transform(Storage.pin))
     }),
 
     // threshold 0.35 sits below the max pairwise cosine of the random
@@ -1016,7 +1016,7 @@ object VectorQueries {
       val sigs = Multimodal.imageAHash(
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       Storage.releasing(sigs) { _ =>
         val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_mmham_delta_",
           lastThird(sigs, col("doc_id")), compact = true)(
@@ -1039,7 +1039,7 @@ object VectorQueries {
       val sigs = Multimodal.imageAHash(
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       Storage.releasing(sigs) { _ =>
         val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_mmham_probe_",
           lastThird(sigs, col("doc_id")))(
@@ -1090,7 +1090,7 @@ object VectorQueries {
       val sigs = Multimodal.audioFingerprint(
         s, Multimodal.audioAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       Storage.releasing(sigs) { _ =>
         val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_audham_",
           lastThird(sigs, col("doc_id")), compact = true)(
@@ -1133,7 +1133,7 @@ object VectorQueries {
       val sigs = Multimodal.videoFingerprint(
         s, Multimodal.videoAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       Storage.releasing(sigs) { _ =>
         val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_vidham_",
           lastThird(sigs, col("doc_id")), compact = true)(
@@ -1247,7 +1247,7 @@ object VectorQueries {
       val sigs = Multimodal.imageAHash(
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       Storage.releasing(sigs)(cappedEvalOver)
     }),
 
@@ -1260,7 +1260,7 @@ object VectorQueries {
       val sigs = Multimodal.videoFingerprint(
         s, Multimodal.videoAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       Storage.releasing(sigs)(cappedEvalOver)
     }),
 
@@ -1268,7 +1268,7 @@ object VectorQueries {
       val sigs = Multimodal.audioFingerprint(
         s, Multimodal.audioAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       Storage.releasing(sigs)(cappedEvalOver)
     }),
 
@@ -1285,7 +1285,7 @@ object VectorQueries {
       val sigs = Multimodal.imageAHash(
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       Storage.releasing(sigs) { _ =>
         val path = IndexScenario.build(s, graft.operators.HammingIndex, "graft_mmham_ccdur_",
           lastThird(sigs, col("doc_id")), compact = true)(
@@ -1317,7 +1317,7 @@ object VectorQueries {
       val sigs = Multimodal.imageAHash(
         s, Multimodal.imageAssets(s, Tables.documents(s, d))).toDF()
         .withColumnRenamed("asset_id", "doc_id")
-        .localCheckpoint(true) // two halves + the fold branch it
+        .transform(Storage.pin) // two halves + the fold branch it
       Storage.releasing(sigs) { _ =>
         val st = graft.streaming.StreamingOps.emptyHammingClusterState(
           s, maxHamming = 3, maxBucket = 32)
@@ -1329,7 +1329,7 @@ object VectorQueries {
           st.snapshot
             .select(col("doc_id").as("asset_id"), col("cluster_id"),
               (col("doc_id") === col("cluster_id")).as("is_survivor"))
-            .localCheckpoint(true)
+            .transform(Storage.pin)
         } finally st.release()
       }
     }))
@@ -1356,7 +1356,7 @@ object VectorQueries {
         col("n_saturated_buckets"),
         round(col("n_pairs_capped").cast("double") /
           col("n_pairs_exhaustive"), 6).as("pair_recall"))
-      .localCheckpoint(true)
+      .transform(Storage.pin)
   }
 
   // dot(a,b) with strict left-to-right double accumulation, 1-based idx

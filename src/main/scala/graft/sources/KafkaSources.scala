@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
 /** The reference's source/sink surface (SURVEY.md §2.1 O1, O14, O15)
@@ -59,10 +59,6 @@ object KafkaSources {
       .option("kafka.bootstrap.servers", bootstrapServers)
       .option("topic", topic)
       .option("checkpointLocation", checkpointLocation)
-
-  /** Start a memory-sink query (the test-facing sink). */
-  def toMemory(df: DataFrame, name: String): StreamingQuery =
-    df.writeStream.format("memory").queryName(name).outputMode("append").start()
 
   /** foreachBatch sink: the operational idiom for multi-sink or upsert
     * writes — each micro-batch arrives as a reusable batch DataFrame

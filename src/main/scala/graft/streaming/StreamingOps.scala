@@ -33,17 +33,6 @@ object StreamingOps {
         col("window.start").as("window_start"),
         col("event_type"), col("n"), col("total_value"))
 
-  /** Sliding-window per-user activity. */
-  def slidingUserActivity(
-      events: DataFrame,
-      windowLen: String = "1 hour",
-      slide: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), windowLen, slide), col("user_id"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("user_id"), col("n"))
-
   /** Event dedup on (event_id) bounded by the watermark — the
     * streaming form of exact dedup. */
   def dedupWithinWatermark(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
@@ -905,9 +894,9 @@ object StreamingOps {
   def emptyTriangleState(spark: SparkSession): TriangleState = {
     import spark.implicits._
     new TriangleState(
-      Seq.empty[(Long, Seq[Long])].toDF("node", "nbrs").localCheckpoint(true),
+      Seq.empty[(Long, Seq[Long])].toDF("node", "nbrs").transform(Storage.pin),
       Seq.empty[(Long, Long)].toDF("node_id", "n_triangles")
-        .localCheckpoint(true))
+        .transform(Storage.pin))
   }
 
   /** One incremental maintenance step: ingest a micro-batch of edges
@@ -949,27 +938,25 @@ object StreamingOps {
         greatest(col("src"), col("dst")).cast("long").as("b"))
       .distinct()
     val adjA = state.adj.select(col("node").as("a_"), col("nbrs").as("na"))
-    Storage.releasing(cand
+    Storage.pinning(cand
       .join(adjA, col("a") === col("a_"), "left")
       .where(col("na").isNull || !array_contains(col("na"), col("b")))
-      .select(col("a"), col("b"))
-      .localCheckpoint(true)) { fresh =>
+      .select(col("a"), col("b"))) { fresh =>
       // the Δ adjacency serves BOTH the 2-new wedge expansion and the
       // 3-new oriented closure — checkpointed once (tiny: |Δ| nodes)
       // so neither branch regroups it (plan branches share nothing)
-      val newCounts = Storage.releasing(fresh
+      val newCounts = Storage.pinning(fresh
         .select(explode(array(
           struct(col("a").as("node"), col("b").as("nbr")),
           struct(col("b").as("node"), col("a").as("nbr")))).as("e"))
         .groupBy(col("e.node").as("c"))
-        .agg(sort_array(collect_list(col("e.nbr"))).as("dn"))
-        .localCheckpoint(true)) { dAdj =>
+        .agg(sort_array(collect_list(col("e.nbr"))).as("dn"))) { dAdj =>
         state.counts
           .join(triangleDeltaPlan(fresh, state.adj, dAdj), Seq("node_id"), "full")
           .select(col("node_id"),
             (coalesce(col("n_triangles"), lit(0L)) +
               coalesce(col("dc"), lit(0L))).as("n_triangles"))
-          .localCheckpoint(true)
+          .transform(Storage.pin)
       }
       // adjacency upsert: regroup only the touched nodes
       val touched = fresh.select(col("a").as("node"))
@@ -986,7 +973,7 @@ object StreamingOps {
       val newAdj = state.adj
         .join(touched, Seq("node"), "anti")
         .unionByName(updAdj)
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       Storage.unpersistLocalCheckpoint(state.adj)
       Storage.unpersistLocalCheckpoint(state.counts)
       state.adj = newAdj
@@ -1092,7 +1079,7 @@ object StreamingOps {
     requireDurableLineage(spark, name, latest, stateDir, options)
     var state = open(latest.map(e => relation =>
       LsmSegments.readArtifacts(spark, Seq(s"$stateDir/deltas/$e/$relation"))
-        .localCheckpoint(true)))
+        .transform(Storage.pin)))
     foreachBatch(input, options) { (batch, epoch) =>
       val committed = LsmSegments.appendEpoch(spark, stateDir, epoch) { dir =>
         state = update(state, batch)
@@ -1216,7 +1203,7 @@ object StreamingOps {
     import spark.implicits._
     new CcState(
       Seq.empty[(Long, Long)].toDF("node_id", "cluster_id")
-        .localCheckpoint(true))
+        .transform(Storage.pin))
   }
 
   /** One incremental maintenance step: ingest a micro-batch of edges
@@ -1252,13 +1239,12 @@ object StreamingOps {
     val la = state.labels.select(col("node_id").as("a_"), col("cluster_id").as("ca_"))
     val lb = state.labels.select(col("node_id").as("b_"), col("cluster_id").as("cb_"))
     // Δ endpoints resolved to current labels; new nodes label themselves
-    Storage.releasing(cand
+    Storage.pinning(cand
       .join(la, col("a") === col("a_"), "left")
       .join(lb, col("b") === col("b_"), "left")
       .select(col("a"), col("b"),
         coalesce(col("ca_"), col("a")).as("ca"),
-        coalesce(col("cb_"), col("b")).as("cb"))
-      .localCheckpoint(true)) { resolved =>
+        coalesce(col("cb_"), col("b")).as("cb"))) { resolved =>
       // merge graph over labels: micro-batch-sized, driver-coordinated
       // CC is fine here (the budget covers the batch's merge diameter)
       val mergePairs = resolved
@@ -1269,7 +1255,7 @@ object StreamingOps {
         val mapping = merged
           .select(col("doc_id").as("old_label"), col("cluster_id").as("new_label"))
           .where(col("old_label") =!= col("new_label"))
-        ccRemapPlan(state.labels, mapping, resolved).localCheckpoint(true)
+        ccRemapPlan(state.labels, mapping, resolved).transform(Storage.pin)
       }
       Storage.unpersistLocalCheckpoint(state.labels)
       state.labels = newLabels
@@ -1388,10 +1374,6 @@ object StreamingOps {
     def snapshot: DataFrame =
       cc.snapshot.select(col("node_id").as("doc_id"), col("cluster_id"))
 
-    /** The maintained capped pair relation (a_id, b_id), distinct. */
-    def pairSnapshot: DataFrame =
-      admitted.select(col("a_id"), col("b_id")).distinct()
-
     def release(): Unit = {
       Storage.unpersistLocalCheckpoint(counts)
       Storage.unpersistLocalCheckpoint(members)
@@ -1412,14 +1394,14 @@ object StreamingOps {
     import spark.implicits._
     new HammingClusterState(
       Seq.empty[(Int, Long, Long)].toDF("chunk", "chunk_val", "n")
-        .localCheckpoint(true),
+        .transform(Storage.pin),
       Seq.empty[(Int, Long, Long, Long, Long, Long, Long)]
         .toDF("chunk", "chunk_val", "doc_id", "c0", "c1", "c2", "c3")
-        .localCheckpoint(true),
+        .transform(Storage.pin),
       Seq.empty[(Int, Long, Long, Long)]
         .toDF("chunk", "chunk_val", "a_id", "b_id")
-        .localCheckpoint(true),
-      Seq.empty[Long].toDF("doc_id").localCheckpoint(true),
+        .transform(Storage.pin),
+      Seq.empty[Long].toDF("doc_id").transform(Storage.pin),
       emptyCcState(spark), maxHamming, maxBucket)
   }
 
@@ -1434,13 +1416,12 @@ object StreamingOps {
       state: HammingClusterState, batch: DataFrame): HammingClusterState = {
     val bucketKey = Seq("chunk", "chunk_val")
     // genuinely-new signatures only (at-least-once delivery tolerated)
-    Storage.releasing(batch
+    Storage.pinning(batch
       .select(col("doc_id").cast("long").as("doc_id"),
         col("c0").cast("long"), col("c1").cast("long"),
         col("c2").cast("long"), col("c3").cast("long"))
       .dropDuplicates("doc_id")
-      .join(state.seen, Seq("doc_id"), "anti")
-      .localCheckpoint(true)) { fresh =>
+      .join(state.seen, Seq("doc_id"), "anti")) { fresh =>
       val chunked = fresh.select(
         col("doc_id"), col("c0"), col("c1"), col("c2"), col("c3"),
         posexplode(array(col("c0"), col("c1"), col("c2"), col("c3"))))
@@ -1448,15 +1429,14 @@ object StreamingOps {
       // bucket occupancy fold: n is monotone, so saturation is
       // permanent and "newly saturated" is exactly the n_old <= cap <
       // n frontier of this batch
-      Storage.releasing(state.counts.withColumnRenamed("n", "n_old")
+      Storage.pinning(state.counts.withColumnRenamed("n", "n_old")
         .join(chunked.groupBy(bucketKey.map(col): _*)
           .agg(count(lit(1)).as("dn")), bucketKey, "full")
         .select(col("chunk"), col("chunk_val"),
           (coalesce(col("n_old"), lit(0L)) +
             coalesce(col("dn"), lit(0L))).as("n"),
           coalesce(col("n_old"), lit(0L)).as("n_old"),
-          col("dn").isNotNull.as("touched"))
-        .localCheckpoint(true)) { merged =>
+          col("dn").isNotNull.as("touched"))) { merged =>
         val newlySat = merged
           .where(col("n") > state.maxBucket && col("n_old") <= state.maxBucket)
           .select(col("chunk"), col("chunk_val"))
@@ -1475,7 +1455,7 @@ object StreamingOps {
         val sorted = array_sort(collect_list(struct(
           col("doc_id"), col("c0"), col("c1"), col("c2"), col("c3"),
           col("is_new"))))
-        Storage.releasing(pooled
+        Storage.pinning(pooled
           .groupBy(bucketKey.map(col): _*)
           .agg(sorted.as("ids"))
           .select(col("chunk"), col("chunk_val"),
@@ -1487,13 +1467,12 @@ object StreamingOps {
             bit_count(col(s"p.a.c$c").bitwiseXOR(col(s"p.b.c$c"))))
             .reduce(_ + _) <= state.maxHamming)
           .select(col("chunk"), col("chunk_val"),
-            col("p.a.doc_id").as("a_id"), col("p.b.doc_id").as("b_id"))
-          .localCheckpoint(true)) { pairDelta =>
+            col("p.a.doc_id").as("a_id"), col("p.b.doc_id").as("b_id"))) { pairDelta =>
           // state upserts (retraction = the anti-join on newlySat)
           val newAdmitted = state.admitted
             .join(newlySat, bucketKey, "anti")
             .unionByName(pairDelta)
-            .localCheckpoint(true)
+            .transform(Storage.pin)
           val newMembers = state.members
             .join(newlySat, bucketKey, "anti")
             .unionByName(chunked
@@ -1501,16 +1480,16 @@ object StreamingOps {
                 col("c0"), col("c1"), col("c2"), col("c3"))
               .join(merged.where(col("n") <= state.maxBucket)
                 .select(col("chunk"), col("chunk_val")), bucketKey, "semi"))
-            .localCheckpoint(true)
+            .transform(Storage.pin)
           val newSeen = state.seen.unionByName(fresh.select("doc_id"))
-            .localCheckpoint(true)
+            .transform(Storage.pin)
           val retracting = !newlySat.isEmpty
           Storage.unpersistLocalCheckpoint(state.counts)
           Storage.unpersistLocalCheckpoint(state.members)
           Storage.unpersistLocalCheckpoint(state.admitted)
           Storage.unpersistLocalCheckpoint(state.seen)
           state.counts = merged.select(col("chunk"), col("chunk_val"), col("n"))
-            .localCheckpoint(true)
+            .transform(Storage.pin)
           state.members = newMembers
           state.admitted = newAdmitted
           state.seen = newSeen
@@ -1522,7 +1501,7 @@ object StreamingOps {
               graft.operators.Dedup.connectedComponents(
                 newAdmitted.select(col("a_id"), col("b_id")).distinct()))(
               _.select(col("doc_id").as("node_id"), col("cluster_id"))
-                .localCheckpoint(true))
+                .transform(Storage.pin))
             Storage.unpersistLocalCheckpoint(state.cc.labels)
             state.cc.labels = labels
           } else {

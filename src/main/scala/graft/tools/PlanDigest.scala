@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import graft.operators.Storage
 
 /** Plan-drift artifact: write a NORMALIZED physical-plan digest for
   * the most expensive SparkEntry queries to a committed file
@@ -145,38 +146,38 @@ object PlanDigest {
         .map(normalize)
         .mkString("\n")
     val adj = Seq((1L, Seq(2L, 3L)), (2L, Seq(3L, 4L))).toDF("src", "nbrs")
-      .localCheckpoint(true)
-    val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst").localCheckpoint(true)
+      .transform(Storage.pin)
+    val e = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst").transform(Storage.pin)
     val nodeInfo = Seq((1L, 1L), (2L, 1L), (3L, 0L)).toDF("node_id", "outdeg")
-      .localCheckpoint(true)
+      .transform(Storage.pin)
     // pageRank: the rank walk with every node a source
     val allSrc = nodeInfo
       .withColumn("is_src", org.apache.spark.sql.functions.lit(1L))
-      .localCheckpoint(true)
+      .transform(Storage.pin)
     val pr = allSrc.withColumn("pr",
       org.apache.spark.sql.functions.col("is_src") *
         org.apache.spark.sql.functions.lit(1000000000000L))
     val assigned = Seq((0L, 1L, Seq(1.0f, 0.0f))).toDF("c_id", "vec_id", "embedding")
-      .localCheckpoint(true)
-    val cents = Seq((0L, Seq(1.0f, 0.0f))).toDF("c_id", "c_vec").localCheckpoint(true)
-    val qs = Seq((1L, Seq(0.0f, 1.0f))).toDF("query_id", "q").localCheckpoint(true)
+      .transform(Storage.pin)
+    val cents = Seq((0L, Seq(1.0f, 0.0f))).toDF("c_id", "c_vec").transform(Storage.pin)
+    val qs = Seq((1L, Seq(0.0f, 1.0f))).toDF("query_id", "q").transform(Storage.pin)
     val pprState = nodeInfo
       .withColumn("is_src", org.apache.spark.sql.functions
         .when(org.apache.spark.sql.functions.col("node_id") === 1L, 1L)
         .otherwise(0L))
-      .localCheckpoint(true)
+      .transform(Storage.pin)
     val ppr = pprState.withColumn("pr",
       org.apache.spark.sql.functions.col("is_src") *
         org.apache.spark.sql.functions.lit(1000000000000L))
     val lbl = Seq((1L, 1L), (2L, 2L), (3L, 3L)).toDF("node_id", "community")
-      .localCheckpoint(true)
+      .transform(Storage.pin)
     val hitsState = Seq((1L, 1000000000000L, 1000000000000L))
-      .toDF("node_id", "hub", "auth").localCheckpoint(true)
+      .toDF("node_id", "hub", "auth").transform(Storage.pin)
     val packedAdj = Seq((1L, Seq(2L * (1L << 20) + 1L)),
       (2L, Seq(1L * (1L << 20) + 1L))).toDF("node", "packed")
-      .localCheckpoint(true)
+      .transform(Storage.pin)
     val symEdges = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
-      .localCheckpoint(true)
+      .transform(Storage.pin)
     val builders = Seq(
       "builder: Graph.trianglePlan (closure join + intersect)" ->
         (() => graft.operators.Graph.trianglePlan(adj)),
@@ -190,11 +191,10 @@ object PlanDigest {
         (() => graft.operators.Graph.labelPropRound(e, lbl, broadcastState = false)),
       "builder: Graph.ssspRound (frontier relax + min fold + outer merge)" ->
         (() => graft.operators.Graph.ssspRound(
-          Seq((1L, 2L, 1L)).toDF("src", "dst", "w")
-            .repartition(org.apache.spark.sql.functions.col("src"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+          Storage.cache(Seq((1L, 2L, 1L)).toDF("src", "dst", "w")
+            .repartition(org.apache.spark.sql.functions.col("src"))),
           Seq((1L, 0L, true)).toDF("node_id", "dist", "improved")
-            .localCheckpoint(true))),
+            .transform(Storage.pin))),
       "builder: Graph.hitsRawAuth + hitsMaxNorm (one half-step)" ->
         (() => graft.operators.Graph.hitsMaxNorm(
           graft.operators.Graph.hitsRawAuth(e, hitsState, broadcastState = false),
@@ -229,20 +229,20 @@ object PlanDigest {
             org.apache.spark.sql.functions.col("nbrs")),
           adj.select(org.apache.spark.sql.functions.col("src").as("c"),
             org.apache.spark.sql.functions.col("nbrs").as("dn"))
-            .localCheckpoint(true))),
+            .transform(Storage.pin))),
       "builder: StreamingOps.ccRemapPlan (broadcast remap — label state never shuffles)" ->
         (() => graft.streaming.StreamingOps.ccRemapPlan(
           Seq((1L, 1L), (2L, 1L), (3L, 3L)).toDF("node_id", "cluster_id")
-            .localCheckpoint(true),
-          Seq((3L, 1L)).toDF("old_label", "new_label").localCheckpoint(true),
+            .transform(Storage.pin),
+          Seq((3L, 1L)).toDF("old_label", "new_label").transform(Storage.pin),
           Seq((1L, 3L, 1L, 3L)).toDF("a", "b", "ca", "cb")
-            .localCheckpoint(true))),
+            .transform(Storage.pin))),
       "builder: Dsir.statsFoldPlan (nBuckets-row element-wise count fold)" ->
         (() => graft.operators.Dsir.statsFoldPlan(
           Seq((0L, 1L, 1L), (1L, 2L, 0L)).toDF("bucket", "rc", "tc")
-            .localCheckpoint(true),
+            .transform(Storage.pin),
           Seq((0L, 1L, 1L)).toDF("bucket", "drc", "dtc")
-            .localCheckpoint(true)))) ++ {
+            .transform(Storage.pin)))) ++ {
       // the probe plans materialize eagerly at the operator surface
       // (their query sections digest as the result scan), so the
       // index-pruning trees — the broadcast LEFT SEMI joins that make
@@ -250,17 +250,17 @@ object PlanDigest {
       // over a tiny on-disk index
       val mhDocs = Seq((1L, "aa bb cc dd ee"), (2L, "aa bb cc dd ff"))
         .toDF("doc_id", "text")
-      val mhPath = graft.operators.Storage.tempIndexDir("graft_digest_mh")
+      val mhPath = Storage.tempIndexDir("graft_digest_mh")
       graft.operators.MinHashIndex.write(mhDocs, mhPath)
       val mhFp = graft.operators.MinHashIndex.fingerprints(
         Seq((10L, "aa bb cc dd ee gg")).toDF("doc_id", "text"), 3, 16, 8)
-        .localCheckpoint(true)
-      val chPath = graft.operators.Storage.tempIndexDir("graft_digest_ch")
+        .transform(Storage.pin)
+      val chPath = Storage.tempIndexDir("graft_digest_ch")
       graft.operators.ContentHashIndex.write(mhDocs, chPath)
       val chFp = graft.operators.ContentHashIndex.fingerprints(
         Seq((10L, "aa bb cc dd ee")).toDF("doc_id", "text"))
-        .localCheckpoint(true)
-      val ivfPath = graft.operators.Storage.tempIndexDir("graft_digest_ivf")
+        .transform(Storage.pin)
+      val ivfPath = Storage.tempIndexDir("graft_digest_ivf")
       val vecs = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)))
         .toDF("vec_id", "embedding")
       val ivfCents = Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 1.0f)))
@@ -269,7 +269,7 @@ object PlanDigest {
       val semShard = graft.operators.Similarity.ivfAssign(
           Seq((10L, Seq(1.0f, 0.1f))).toDF("vec_id", "embedding"),
           graft.operators.IvfIndex.centroids(spark, ivfPath))
-        .localCheckpoint(true)
+        .transform(Storage.pin)
       Seq(
         "builder: MinHashIndex.probePairsPlan (broadcast-semi-join index pruning)" ->
           (() => graft.operators.MinHashIndex.probePairsPlan(

@@ -30,7 +30,7 @@ class CatalogJobsSpec extends AnyFunSuite {
     "q_window_range_frame" -> 2,
     "sketch_quantiles" -> 2,
     "text_stats" -> 2,
-    "graph_pagerank" -> 19,
+    "graph_pagerank" -> 15,
     "knn_sq8_compact" -> 12)
 
   /** The queries that write, append to, compact or probe a durable
@@ -73,7 +73,7 @@ class CatalogJobsSpec extends AnyFunSuite {
     "mm_audio_neardup" -> 12,
     "mm_video_neardup" -> 12,
     "mm_hot_buckets" -> 4,
-    "mm_neardup_clusters_durable" -> 45)
+    "mm_neardup_clusters_durable" -> 41)
 
   /** The graph and clustering queries: each graph iterative (and the
     * connected components behind the two clustering queries) measures
@@ -81,28 +81,28 @@ class CatalogJobsSpec extends AnyFunSuite {
     * change to that prelude or to a round's materialization shows up
     * here. `graph_pagerank` is pinned above. */
   private val graphPinned = Seq(
-    "graph_ppr" -> 19,
-    "graph_hits" -> 32,
-    "graph_label_prop" -> 24,
-    "graph_kcore" -> 19,
+    "graph_ppr" -> 15,
+    "graph_hits" -> 27,
+    "graph_label_prop" -> 19,
+    "graph_kcore" -> 13,
     "graph_bfs" -> 21,
     "graph_sssp" -> 18,
     "graph_closeness" -> 23,
-    "dedup_clusters" -> 21,
-    "mm_neardup_clusters" -> 41,
-    "graph_triangles" -> 12,
-    "graph_link_pred" -> 10,
-    "graph_clustering" -> 16,
-    "dedup_keep_best" -> 24,
-    "er_resolve" -> 29,
-    "er_resolve_multi" -> 33,
-    "er_rollup" -> 35,
-    "mm_video_clusters" -> 41,
-    "mm_audio_clusters" -> 37,
-    "mm_neardup_clusters_capped" -> 41,
-    "mm_video_clusters_capped" -> 37,
-    "mm_audio_clusters_capped" -> 37,
-    "mm_clusters_capped_incremental" -> 116)
+    "dedup_clusters" -> 17,
+    "mm_neardup_clusters" -> 37,
+    "graph_triangles" -> 10,
+    "graph_link_pred" -> 8,
+    "graph_clustering" -> 14,
+    "dedup_keep_best" -> 20,
+    "er_resolve" -> 25,
+    "er_resolve_multi" -> 29,
+    "er_rollup" -> 31,
+    "mm_video_clusters" -> 37,
+    "mm_audio_clusters" -> 33,
+    "mm_neardup_clusters_capped" -> 37,
+    "mm_video_clusters_capped" -> 33,
+    "mm_audio_clusters_capped" -> 33,
+    "mm_clusters_capped_incremental" -> 108)
 
   /** The pin of a query whose job count is not checked. */
   private val Unpinned = -1
@@ -140,7 +140,7 @@ class CatalogJobsSpec extends AnyFunSuite {
   /** Queries whose count varies by one between runs of the same code:
     * dedup_admission_semantic ran 164 or 165 jobs in repeated runs
     * within one JVM (the moving job is an AQE query-stage job that some
-    * runs launch and others do not), er_rollup 35 or 36. Their pin is
+    * runs launch and others do not), er_rollup 31 or 32. Their pin is
     * the lower count, and one more also passes. */
   private val racy = Set("dedup_admission_semantic", "er_rollup")
 

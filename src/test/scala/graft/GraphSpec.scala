@@ -57,6 +57,29 @@ class GraphSpec extends AnyFunSuite {
     }
   }
 
+  test("a graph iterative whose edge build throws in the prelude leaves nothing cached") {
+    // the third edge fails the upstream build when it runs (a range,
+    // not a local relation the optimizer would fold at planning), so
+    // the prelude's first job throws: neither the raw edge cache nor
+    // the node-info cache or label pin built from it may stay
+    // registered
+    val edges = spark.range(1, 4).select($"id".as("src"),
+      when($"id" < 3, $"id" + 1)
+        .otherwise(raise_error(lit("edge build failed"))).as("dst"))
+    val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (() => Graph.pageRank(edges, iters = 3)),
+      "labelPropagation" -> (() => Graph.labelPropagation(edges, rounds = 3)))
+    for ((name, run) <- ops) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val e = intercept[Exception](run())
+      assert(exceptionChain(e).exists(_.contains("edge build failed")), name)
+      val left = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+      assert(left.isEmpty, s"$name left ${left.size} persistent RDDs")
+      assert(edges.select($"src", $"dst").storageLevel ==
+        org.apache.spark.storage.StorageLevel.NONE, s"$name left its raw edges cached")
+    }
+  }
+
   test("SortedIntersect is bit-parity with array_intersect on sorted inputs") {
     // the triangle closure's precondition: both sides sorted ascending,
     // distinct — then the merge kernel must equal array_intersect

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Storage
 
-/** The two ownership scopes of [[Storage]]: the release scope and the
-  * round loop, on the paths that return and the paths that throw. */
+/** [[Storage]]'s pins and caches, their scopes and the round loop, on
+  * the paths that return and the paths that throw. */
 class StorageSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -24,6 +24,64 @@ class StorageSpec extends AnyFunSuite {
     df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
 
   private def pin(n: Long): DataFrame = spark.range(n).toDF("x").localCheckpoint(true)
+
+  /** `n` rows whose evaluation throws at the last one. */
+  private def failing(n: Long, msg: String): DataFrame =
+    spark.range(n).toDF("x")
+      .select(when($"x" < n - 1, $"x").otherwise(raise_error(lit(msg))).as("x"))
+
+  private def failedWith(e: Throwable, msg: String): Boolean =
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(msg))
+
+  test("a pin counts its rows in its own job and releases its RDD when that job fails") {
+    val before = persisted
+    val df = spark.range(9).toDF("x").where($"x" % 2 === 0)
+    var pinned: (DataFrame, Long) = null
+    assert(JobCount(spark) { pinned = Storage.pinCounted(df) } == 1)
+    val (p, rows) = pinned
+    assert(rows == df.count() && rows == 5L)
+    assert(rddIds(p).size == 1 && rddIds(p).subsetOf(persisted))
+    assert(p.as[Long].collect().sorted.toSeq == Seq(0L, 2L, 4L, 6L, 8L))
+    Storage.unpersistLocalCheckpoint(p)
+    assert(added(before).isEmpty)
+
+    val e = intercept[Exception](Storage.pin(failing(4, "pin failed")))
+    assert(failedWith(e, "pin failed"))
+    assert(added(before).isEmpty)
+    val u = intercept[Exception](Storage.pinning(failing(4, "pin failed"))(_.count()))
+    assert(failedWith(u, "pin failed"))
+    assert(added(before).isEmpty)
+  }
+
+  test("a cache counts its rows in its own job and is dropped when that job fails") {
+    import org.apache.spark.storage.StorageLevel
+    val before = persisted
+    val df = spark.range(9).toDF("x").repartition(3, $"x")
+    val (c, rows) = Storage.cacheCounted(df)
+    assert(rows == 9L && rows == df.count())
+    assert(c.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    // filled: a later read finds every partition in memory, and the
+    // relation keeps its hash(x) layout
+    assert(c.as[Long].collect().sorted.toSeq == (0L until 9L))
+    Storage.uncache(c)
+    assert(df.storageLevel == StorageLevel.NONE)
+    assert(added(before).isEmpty)
+
+    val bad = failing(4, "cache failed")
+    val e = intercept[Exception](Storage.cache(bad))
+    assert(failedWith(e, "cache failed"))
+    assert(bad.storageLevel == StorageLevel.NONE)
+    assert(added(before).isEmpty)
+
+    // the scope drops the cache when its use returns and when it throws
+    val n = Storage.caching(df)(d => d.where($"x" > 4).count())
+    assert(n == 4L && df.storageLevel == StorageLevel.NONE)
+    intercept[IllegalStateException](
+      Storage.caching(df)(_ => throw new IllegalStateException("use failed")))
+    assert(df.storageLevel == StorageLevel.NONE)
+    assert(added(before).isEmpty)
+  }
 
   /** One round: every value plus one. */
   private def inc(df: DataFrame): DataFrame = df.select(($"x" + 1).as("x"))

@@ -84,6 +84,17 @@ if grep -rn "unpersistLocalCheckpoint" src/main/scala/graft/queries/; then
   exit 1
 fi
 
+echo "== gate: one materialization path =="
+# every pin and cache goes through operators/Storage.scala, which
+# materializes with one counting job and releases what it took when
+# that job throws; a direct localCheckpoint, persist or cache elsewhere
+# is how the leak on the failure path and the re-count come back
+if grep -rnE 'localCheckpoint\(|\.persist\(|\.cache\(\)' src/main --include='*.scala' \
+    | grep -v '^src/main/scala/graft/operators/Storage\.scala:'; then
+  echo "DIRECT PIN OR CACHE IN src/main (use Storage.pin, Storage.cache and their scopes)"
+  exit 1
+fi
+
 echo "== gate: carried schemas =="
 # index segments, trained state and durable state are read through
 # LsmSegments.readArtifacts under the schema their writer recorded; a
