@@ -82,19 +82,23 @@ object HammingIndex extends SegmentedIndex {
   /** Observability: ONE row per LIVE segment — (segment, n_rows),
     * `segment` ∈ {"base", "delta_<epoch>"} — the view an operator
     * sizes compaction from (how many unfolded deltas a serve unions,
-    * how big each). Read-only: per segment one map-side-combinable
-    * global count over the already-resolved snapshot, no shuffle of
-    * anything wider than a count; output is O(#segments). */
+    * how big each). Read-only: ONE scan of the live snapshot, counted
+    * per segment directory (the `<base|deltas>/<n>` tail of each row's
+    * hidden `_metadata.file_path`) in one map-side-combinable
+    * aggregate; a committed segment with no rows reports 0. Output is
+    * O(#segments). */
   def segmentStats(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
     val (basePath, deltaPaths) = LsmSegments.liveSegments(spark, path)
-    (("base", basePath) +: deltaPaths.map(p =>
-        (s"delta_${p.substring(p.lastIndexOf('/') + 1)}", p)))
-      .map { case (tag, p) =>
-        LsmSegments.readArtifacts(spark, Seq(p))
-          .agg(count(lit(1)).as("n_rows"))
-          .select(lit(tag).as("segment"), col("n_rows"))
-      }
-      .reduce(_ unionByName _)
+    val tail = (p: String) => p.split('/').takeRight(2).mkString("/")
+    val segments = (("base", tail(basePath)) +:
+      deltaPaths.map(p => (s"delta_${p.substring(p.lastIndexOf('/') + 1)}", tail(p))))
+      .toDF("segment", "dir")
+    val counts = LsmSegments.readArtifacts(spark, basePath +: deltaPaths)
+      .groupBy(regexp_extract(col("_metadata.file_path"), "([^/]+/[^/]+)/[^/]+$", 1).as("dir"))
+      .agg(count(lit(1)).as("n_rows"))
+    segments.join(broadcast(counts), Seq("dir"), "left")
+      .select(col("segment"), coalesce(col("n_rows"), lit(0L)).as("n_rows"))
   }
 
   /** Skew diagnostic: the (chunk, chunk_val, n_members) buckets of

@@ -259,6 +259,40 @@ object Similarity {
           lit(0.0)).as("mrr"),
         sum("hit").cast("long").as("n_hits"))
 
+  /** A frontier's settings as a one-column local relation, broadcast
+    * into the sweep's one plan. Each setting is a group key there, so
+    * an empty, repeated or non-positive list fails here, naming `arg`. */
+  private def sweepSettings(
+      embeddings: DataFrame, arg: String, settings: Seq[Int], column: String): DataFrame = {
+    val spark = embeddings.sparkSession
+    import spark.implicits._
+    require(settings.nonEmpty, s"$arg: no settings to sweep")
+    require(settings.forall(_ > 0),
+      s"$arg: every setting must be positive, got ${settings.mkString(", ")}")
+    require(settings.distinct.size == settings.size,
+      s"$arg: a repeated setting would be counted twice, got ${settings.mkString(", ")}")
+    broadcast(settings.toDF(column))
+  }
+
+  /** [[retrievalEval]]'s hits for every setting of a sweep as one
+    * aggregate grouped by `key`: `ranked` carries (key, query_id,
+    * vec_id, rank ≤ k) for all settings at once. Driven from truth ×
+    * `settings` as retrievalEval is from truth, so every setting gets
+    * a row, even with 0 hits, and `nq` is the truth's query count.
+    * Returns (key, recall_at_k, n_hits, nq). */
+  private def sweepEval(
+      ranked: DataFrame, truth: DataFrame, settings: DataFrame,
+      key: String, k: Int): DataFrame =
+    truth.select(col("query_id"), col("vec_id"))
+      .crossJoin(settings)
+      .join(broadcast(ranked.select(col(key), col("query_id"), col("vec_id"), col("rank"))),
+        Seq(key, "query_id", "vec_id"), "left")
+      .groupBy(key)
+      .agg(count(col("rank")).as("n_hits"), countDistinct(col("query_id")).as("nq"))
+      .select(col(key),
+        (col("n_hits").cast("double") / (col("nq") * k)).as(s"recall_at_$k"),
+        col("n_hits"), col("nq"))
+
   /** Product-quantization (PQ) kNN with ADC scoring — the classic
     * memory-bound ANN path: each vector compresses to `subspaces`
     * small codes (argmin codeword per subspace, 4 bytes/vector here vs
@@ -1011,8 +1045,8 @@ object Similarity {
       .where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("q"),
         col("label").as("qlabel"))
-    filteredIvfServe(
-      filteredIvfAssign(embeddings, centroids), centroids, queries, k, nProbe)
+    ivfServe(filteredIvfAssign(embeddings, centroids), centroids, queries, k, nProbe,
+      filtered = true)
   }
 
   /** [[ivfAssign]] with the metadata column riding IN the list entry
@@ -1029,33 +1063,6 @@ object Similarity {
         first(col("label")).as("label"),
         max_by(col("c_id"), struct(col("c_cos"), (-col("c_id")).cast("double"))).as("c_id"))
 
-  /** [[ivfServe]] under the per-query label predicate: `assigned`
-    * carries `label` in the list entry, `queries` carry `qlabel`, and
-    * the equality applies to the probed-list scan before scoring. */
-  private[graft] def filteredIvfServe(
-      assigned: DataFrame, centroids: DataFrame, queries: DataFrame,
-      k: Int, nProbe: Int): DataFrame = {
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("p_cos").desc, col("c_id").asc)
-    val probes = queries
-      .join(broadcast(centroids))
-      .select(col("query_id"), col("q"), col("qlabel"), col("c_id"),
-        cosine(col("q"), col("c_vec")).as("p_cos"))
-      .withColumn("pr", row_number().over(wProbe))
-      .where(col("pr") <= nProbe)
-      .select("query_id", "q", "qlabel", "c_id")
-    val scored = assigned
-      .join(broadcast(probes), "c_id")
-      .where(col("vec_id") =!= col("query_id") &&
-        col("label") === col("qlabel"))
-      .select(col("query_id"), col("vec_id"),
-        cosine(col("q"), col("embedding")).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("query_id", "vec_id", "rank", "cos")
-  }
-
   /** The FILTERED recall–cost frontier — [[ivfFrontier]] under the
     * per-query label predicate, the table a deployment running
     * metadata-filtered retrieval actually tunes from. Filtered recall
@@ -1070,59 +1077,12 @@ object Similarity {
     * or move to label-partitioned indexes. All numbers exact (integer
     * sums + single divisions) → full DuckDB replay.
     *
-    * Scale shape: assignment and filtered truth computed ONCE
-    * (materialized, shared across configs); per config one
-    * probe-pruned candidate join + output-sized eval; both cost
-    * columns are map-side-combinable aggregates over (c_id[, label])
-    * count tables. */
+    * Scale shape: [[ivfFrontier]]'s one plan, the label predicate in
+    * its candidate scan and both cost columns in its cost aggregate. */
   def filteredIvfFrontier(
       embeddings: DataFrame, nQueries: Int = 8, k: Int = 5,
-      nCentroids: Int = 16, probes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
-    val e = embeddings.select(col("vec_id"), col("embedding"), col("label"))
-    val centroids = e.where(col("vec_id") < nCentroids)
-      .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-    Storage.pinning(filteredIvfAssign(e, centroids)) { assigned =>
-      Storage.pinning(filteredBruteKnn(e, nQueries, k)) { truth =>
-        val queries = e.where(col("vec_id") < nQueries)
-          .select(col("vec_id").as("query_id"), col("embedding").as("q"),
-            col("label").as("qlabel"))
-        val wProbe = Window.partitionBy("query_id")
-          .orderBy(col("p_cos").desc, col("c_id").asc)
-        val probeRanks = queries
-          .join(broadcast(centroids))
-          .select(col("query_id"), col("qlabel"), col("c_id"),
-            cosine(col("q"), col("c_vec")).as("p_cos"))
-          .withColumn("pr", row_number().over(wProbe))
-        val listCounts = assigned.groupBy("c_id").agg(count(lit(1)).as("cnt"))
-        val listLabelCounts = assigned.groupBy("c_id", "label")
-          .agg(count(lit(1)).as("lcnt"))
-        val total = e.agg(count(lit(1)).as("n_total"))
-        probes.map { p =>
-          val hits = retrievalEval(
-            filteredIvfServe(assigned, centroids, queries, k, p), truth, k)
-            .agg(sum(col("n_hits")).as("hits"), count(lit(1)).as("nq"))
-          val scanned = probeRanks.where(col("pr") <= p)
-            .join(broadcast(listCounts), Seq("c_id"))
-            .agg(sum(col("cnt")).as("scanned_rows"))
-          val qualifying = probeRanks.where(col("pr") <= p)
-            .select(col("c_id"), col("qlabel"))
-            .join(broadcast(listLabelCounts.withColumnRenamed("label", "qlabel")),
-              Seq("c_id", "qlabel"))
-            .agg(coalesce(sum(col("lcnt")), lit(0L)).as("qualifying_rows"))
-          hits.crossJoin(broadcast(scanned)).crossJoin(broadcast(qualifying))
-            .crossJoin(broadcast(total))
-            .select(
-              lit(p).as("n_probe"),
-              (col("hits").cast("double") / (col("nq") * k)).as(s"recall_at_$k"),
-              col("hits").cast("long").as("n_hits"),
-              col("scanned_rows").cast("long").as("scanned_rows"),
-              col("qualifying_rows").cast("long").as("qualifying_rows"),
-              (col("scanned_rows").cast("double") /
-                (col("nq") * col("n_total"))).as("scan_frac"))
-        }.reduce(_.unionByName(_)).transform(Storage.pin)
-      }
-    }
-  }
+      nCentroids: Int = 16, probes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame =
+    ivfSweep(embeddings, nQueries, k, nCentroids, probes, filtered = true)
 
   /** MMR (Maximal Marginal Relevance, Carbonell & Goldstein 1998)
     * diversified re-ranking — the standard redundancy-control stage a
@@ -1182,12 +1142,12 @@ object Similarity {
       var i = 1
       Storage.rounds(top1, k - 1) { selected =>
         i += 1
-        val selEmb = selected
-          .join(cand, Seq("query_id", "vec_id"))
+        // at most k rows per query: broadcast, so no join's build side
+        // is left to a runtime re-plan
+        val picked = broadcast(selected.select("query_id", "vec_id"))
+        val selEmb = cand.join(picked, Seq("query_id", "vec_id"))
           .select(col("query_id"), col("embedding").as("s_emb"))
-        val remaining = cand.join(
-          selected.select("query_id", "vec_id"),
-          Seq("query_id", "vec_id"), "left_anti")
+        val remaining = cand.join(picked, Seq("query_id", "vec_id"), "left_anti")
         val pick = remaining
           .join(broadcast(selEmb), "query_id")
           .select(col("query_id"), col("vec_id"), col("rel"),
@@ -1224,29 +1184,47 @@ object Similarity {
     * reassignment, which is how a production pipeline queries an index
     * it built earlier ([[IvfIndex.serveAll]] binds this to one persisted
     * on disk; when `assigned` is a partitioned parquet scan, the
-    * broadcast probe join prunes to only the probed lists). */
+    * broadcast probe join prunes to only the probed lists). `filtered`
+    * serves under the per-query label predicate ([[filteredIvfKnn]]). */
   private[graft] def ivfServe(
       assigned: DataFrame, centroids: DataFrame, queries: DataFrame,
-      k: Int, nProbe: Int): DataFrame = {
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("p_cos").desc, col("c_id").asc)
-    val probes = queries
-      .join(broadcast(centroids))
-      .select(col("query_id"), col("q"), col("c_id"),
-        cosine(col("q"), col("c_vec")).as("p_cos"))
-      .withColumn("pr", row_number().over(wProbe))
-      .where(col("pr") <= nProbe)
-      .select("query_id", "q", "c_id")
-    val scored = assigned
-      .join(broadcast(probes), "c_id")
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        cosine(col("q"), col("embedding")).as("cos"))
+      k: Int, nProbe: Int, filtered: Boolean = false): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(w))
+    ivfScored(assigned, ivfProbes(queries, centroids, nProbe, filtered), filtered)
+      .drop("pr")
+      .withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select("query_id", "vec_id", "rank", "cos")
   }
+
+  /** Each query's `nProbe` nearest lists by centroid cosine, ties to
+    * the lower c_id, with the list rank `pr`: (query_id, q, [qlabel,]
+    * c_id, pr). `filtered` carries the query's `qlabel`. */
+  private def ivfProbes(
+      queries: DataFrame, centroids: DataFrame, nProbe: Int, filtered: Boolean): DataFrame = {
+    val wProbe = Window.partitionBy("query_id")
+      .orderBy(col("p_cos").desc, col("c_id").asc)
+    val carried = Seq(col("query_id"), col("q")) ++
+      (if (filtered) Seq(col("qlabel")) else Nil) :+ col("c_id")
+    queries
+      .join(broadcast(centroids))
+      .select(carried :+ cosine(col("q"), col("c_vec")).as("p_cos"): _*)
+      .withColumn("pr", row_number().over(wProbe))
+      .where(col("pr") <= nProbe)
+      .select(carried :+ col("pr"): _*)
+  }
+
+  /** Every member of the probed lists but the query itself, scored by
+    * exact cosine: (query_id, vec_id, pr, cos). `filtered` scores only
+    * the list entries whose `label` is the query's `qlabel` — the
+    * predicate applies to the probed-list scan, before scoring. */
+  private def ivfScored(assigned: DataFrame, probes: DataFrame, filtered: Boolean): DataFrame =
+    assigned
+      .join(broadcast(probes), "c_id")
+      .where(col("vec_id") =!= col("query_id") &&
+        (if (filtered) col("label") === col("qlabel") else lit(true)))
+      .select(col("query_id"), col("vec_id"), col("pr"),
+        cosine(col("q"), col("embedding")).as("cos"))
 
   /** The recall–cost FRONTIER a deployment actually tunes from: one
     * row per candidate `nProbe` of the seed-IVF tier — (n_probe,
@@ -1263,46 +1241,65 @@ object Similarity {
     * scan READS).
     *
     * Scale shape: the assignment and the truth are computed ONCE
-    * (materialized — they feed every config); each config adds only a
-    * probe-pruned candidate join and an output-sized eval; list
-    * counts are one map-side-combinable aggregate. Nothing about the
-    * sweep multiplies corpus passes by |probes| except the candidate
-    * joins themselves, which are exactly the scans being measured. */
+    * (materialized). The sweep is one plan over the largest setting,
+    * with the setting as a column: each candidate of the largest
+    * setting's lists is scanned and scored once, the settings join as
+    * a broadcast local relation on list rank `pr ≤ n_probe`, and the
+    * ranking, the hits ([[sweepEval]]) and the cost are each grouped
+    * by `n_probe`. */
   def ivfFrontier(
       embeddings: DataFrame, nQueries: Int = 8, k: Int = 5,
-      nCentroids: Int = 16, probes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
-    val e = embeddings.select(col("vec_id"), col("embedding"))
+      nCentroids: Int = 16, probes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame =
+    ivfSweep(embeddings, nQueries, k, nCentroids, probes, filtered = false)
+
+  /** The one plan behind [[ivfFrontier]] and [[filteredIvfFrontier]].
+    * `filtered` carries the label in the list entry and the query,
+    * scores only same-label candidates against the filtered truth, and
+    * adds the `qualifying_rows` column. */
+  private def ivfSweep(
+      embeddings: DataFrame, nQueries: Int, k: Int, nCentroids: Int,
+      probes: Seq[Int], filtered: Boolean): DataFrame = {
+    val settings = sweepSettings(embeddings, "probes", probes, "n_probe")
+    val label = if (filtered) Seq(col("label")) else Nil
+    val e = embeddings.select(Seq(col("vec_id"), col("embedding")) ++ label: _*)
     val centroids = e.where(col("vec_id") < nCentroids)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-    Storage.pinning(ivfAssign(e, centroids)) { assigned =>
-      Storage.pinning(bruteForceKnn(e, nQueries, k)) { truth =>
+    val (assign, exact) =
+      if (filtered) (filteredIvfAssign(e, centroids), filteredBruteKnn(e, nQueries, k))
+      else (ivfAssign(e, centroids), bruteForceKnn(e, nQueries, k))
+    Storage.pinning(assign) { assigned =>
+      Storage.pinning(exact) { truth =>
         val queries = e.where(col("vec_id") < nQueries)
-          .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-        val wProbe = Window.partitionBy("query_id")
-          .orderBy(col("p_cos").desc, col("c_id").asc)
-        val probeRanks = queries
-          .join(broadcast(centroids))
-          .select(col("query_id"), col("c_id"),
-            cosine(col("q"), col("c_vec")).as("p_cos"))
-          .withColumn("pr", row_number().over(wProbe))
-        val listCounts = assigned.groupBy("c_id").agg(count(lit(1)).as("cnt"))
+          .select(Seq(col("vec_id").as("query_id"), col("embedding").as("q")) ++
+            label.map(_.as("qlabel")): _*)
+        val probed = ivfProbes(queries, centroids, probes.max, filtered)
+        val wRank = Window.partitionBy("n_probe", "query_id")
+          .orderBy(col("cos").desc, col("vec_id").asc)
+        val ranked = ivfScored(assigned, probed, filtered)
+          .join(settings, col("pr") <= col("n_probe"))
+          .withColumn("rank", row_number().over(wRank))
+          .where(col("rank") <= k)
+        // a probed list is scanned whole; its members of the query's
+        // label are the ones the filtered scorer scores
+        val lists = assigned.groupBy(col("c_id") +: label: _*)
+          .agg(count(lit(1)).as("cnt"))
+        val cost = probed
+          .join(settings, col("pr") <= col("n_probe"))
+          .join(broadcast(lists), "c_id")
+          .groupBy("n_probe")
+          .agg(sum(col("cnt")).as("scanned_rows"), label.map(l =>
+            coalesce(sum(when(l === col("qlabel"), col("cnt"))), lit(0L))
+              .as("qualifying_rows")): _*)
         val total = e.agg(count(lit(1)).as("n_total"))
-        probes.map { p =>
-          val hits = retrievalEval(
-            ivfServe(assigned, centroids, queries, k, p), truth, k)
-            .agg(sum(col("n_hits")).as("hits"), count(lit(1)).as("nq"))
-          val scanned = probeRanks.where(col("pr") <= p)
-            .join(broadcast(listCounts), Seq("c_id"))
-            .agg(sum(col("cnt")).as("scanned_rows"))
-          hits.crossJoin(broadcast(scanned)).crossJoin(broadcast(total))
-            .select(
-              lit(p).as("n_probe"),
-              (col("hits").cast("double") / (col("nq") * k)).as(s"recall_at_$k"),
-              col("hits").cast("long").as("n_hits"),
-              col("scanned_rows").cast("long").as("scanned_rows"),
-              (col("scanned_rows").cast("double") /
-                (col("nq") * col("n_total"))).as("scan_frac"))
-        }.reduce(_.unionByName(_)).transform(Storage.pin)
+        sweepEval(ranked, truth, settings, "n_probe", k)
+          .join(cost, Seq("n_probe"), "left")
+          .crossJoin(broadcast(total))
+          .select(Seq(col("n_probe"), col(s"recall_at_$k"), col("n_hits"),
+            col("scanned_rows")) ++
+            (if (filtered) Seq(col("qualifying_rows")) else Nil) :+
+            (col("scanned_rows").cast("double") /
+              (col("nq") * col("n_total"))).as("scan_frac"): _*)
+          .transform(Storage.pin)
       }
     }
   }
@@ -1323,37 +1320,34 @@ object Similarity {
     * composed oracle replays the whole table bit-for-bit).
     *
     * Scale shape: each tier is the already-bounded full-scan ranker
-    * (queries broadcast, corpus never shuffled, salted top-k); the
-    * frontier adds only output-sized aggregation on top. */
+    * (queries broadcast, corpus never shuffled, salted top-k). The
+    * four rankers stay four plans; their tier-tagged union is
+    * evaluated as one aggregate grouped by tier ([[sweepEval]]), and
+    * the corpus size and width are read once, on the driver, to write
+    * each tier's byte accounting into the local tier relation. */
   def scalarFrontier(
       embeddings: DataFrame, nQueries: Int = 8, k: Int = 5,
       salts: Int = 32): DataFrame = {
+    val spark = embeddings.sparkSession
+    import spark.implicits._
     val e = embeddings.select(col("vec_id"), col("embedding"))
-    val truth = bruteForceKnn(e, nQueries, k, salts).transform(Storage.pin)
-    Storage.releasing(truth) { _ =>
-      // one row, materialized ONCE: four tier rows consume it, and an
-      // unpinned aggregate would re-scan the embedding column per tier
-      val stats = e.agg(count(lit(1)).as("n_total"),
-        max(size(col("embedding"))).cast("long").as("dims"))
+    val stats = e.agg(count(lit(1)), max(size(col("embedding"))).cast("long")).head()
+    val (nTotal, dims) = (stats.getLong(0), stats.getLong(1))
+    val tiers = Seq("float32_brute" -> dims * 4, "sq8" -> (dims + 8),
+      "binary" -> (dims + 63) / 64 * 8, "pq" -> 4L)
+      .map { case (tier, bytes) => (tier, bytes, (nTotal - 1) * bytes) }
+      .toDF("tier", "bytes_per_vec", "scanned_bytes")
+    Storage.pinning(bruteForceKnn(e, nQueries, k, salts)) { truth =>
+      def tagged(tier: String, ranked: DataFrame): DataFrame =
+        ranked.select(lit(tier).as("tier"), col("query_id"), col("vec_id"), col("rank"))
+      val ranked = tagged("float32_brute", truth)
+        .unionByName(tagged("sq8", sq8Knn(e, nQueries, k, salts)))
+        .unionByName(tagged("binary", binaryKnn(e, nQueries, k, salts)))
+        .unionByName(tagged("pq", pqKnn(e, nQueries, k, salts = salts)))
+      sweepEval(ranked, truth, broadcast(tiers.select("tier")), "tier", k)
+        .join(broadcast(tiers), "tier")
+        .select("tier", s"recall_at_$k", "n_hits", "bytes_per_vec", "scanned_bytes")
         .transform(Storage.pin)
-      Storage.releasing(stats) { _ =>
-        val tiers: Seq[(String, DataFrame, org.apache.spark.sql.Column)] = Seq(
-          ("float32_brute", truth, col("dims") * 4),
-          ("sq8", sq8Knn(e, nQueries, k, salts), col("dims") + 8),
-          ("binary", binaryKnn(e, nQueries, k, salts),
-            expr("((dims + 63) div 64) * 8")),
-          ("pq", pqKnn(e, nQueries, k, salts = salts), lit(4L)))
-        tiers.map { case (name, res, bytes) =>
-          val hits = retrievalEval(res, truth, k)
-            .agg(sum(col("n_hits")).as("hits"), count(lit(1)).as("nq"))
-          hits.crossJoin(broadcast(stats))
-            .select(lit(name).as("tier"),
-              (col("hits").cast("double") / (col("nq") * k)).as(s"recall_at_$k"),
-              col("hits").cast("long").as("n_hits"),
-              bytes.cast("long").as("bytes_per_vec"),
-              ((col("n_total") - 1) * bytes).cast("long").as("scanned_bytes"))
-        }.reduce(_.unionByName(_)).transform(Storage.pin)
-      }
     }
   }
 
@@ -1363,47 +1357,49 @@ object Similarity {
     * buying recall? One row per candidate `shortlist` — (shortlist,
     * recall@k of the rescored top-k vs brute truth, raw hits,
     * rescored candidate rows = the exact stage's actual work). The
-    * ADC ranking and the truth are computed ONCE (materialized) and
-    * every config slices the same ranking — exactly how a real sweep
-    * is run. All numbers exact (integer sums + single divisions), so
-    * the oracle composes the IVFADC chain, the per-shortlist rescore,
-    * and the brute truth bit-for-bit. */
+    * ADC ranking and the truth are computed ONCE (materialized). All
+    * numbers exact (integer sums + single divisions), so the oracle
+    * composes the IVFADC chain, the per-shortlist rescore, and the
+    * brute truth bit-for-bit.
+    *
+    * Scale shape: one plan over the largest shortlist, with the
+    * shortlist as a column: its candidates are rescored exactly once,
+    * the settings join as a broadcast local relation on
+    * `adc_rank ≤ shortlist`, and the re-rank, the hits ([[sweepEval]])
+    * and the rescored rows are each grouped by `shortlist`. */
   def ivfPqRescoreFrontier(
       embeddings: DataFrame, nQueries: Int = 8, k: Int = 5,
       shortlists: Seq[Int] = Seq(10, 25, 50), nCentroids: Int = 16,
       nProbe: Int = 4, subspaces: Int = 4, subDim: Int = 16,
       codebookSize: Int = 16, salts: Int = 32): DataFrame = {
+    val settings = sweepSettings(embeddings, "shortlists", shortlists, "shortlist")
     val e = embeddings.select(col("vec_id"), col("embedding"))
     val cand = ivfPqKnn(e, nQueries, shortlists.max, nCentroids,
       nProbe, subspaces, subDim, codebookSize, salts)
+      .select(col("query_id"), col("vec_id"), col("rank").as("adc_rank"))
       .transform(Storage.pin)
     Storage.releasing(cand) { _ =>
       Storage.pinning(bruteForceKnn(e, nQueries, k)) { truth =>
         val queries = e.where(col("vec_id") < nQueries)
           .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-        shortlists.map { s =>
-          val sl = cand.where(col("rank") <= s)
-            .select(col("query_id"), col("vec_id"))
-          val w = Window.partitionBy("query_id")
-            .orderBy(col("cos").desc, col("vec_id").asc)
-          val topk = e
-            .join(broadcast(sl), "vec_id")
-            .join(broadcast(queries), "query_id")
-            .select(col("query_id"), col("vec_id"),
-              cosine(col("q"), col("embedding")).as("cos"))
-            .withColumn("rank", row_number().over(w))
-            .where(col("rank") <= k)
-            .select("query_id", "vec_id", "rank")
-          val hits = retrievalEval(topk, truth, k)
-            .agg(sum(col("n_hits")).as("hits"), count(lit(1)).as("nq"))
-          val cost = sl.agg(count(lit(1)).as("rescored_rows"))
-          hits.crossJoin(broadcast(cost))
-            .select(
-              lit(s).as("shortlist"),
-              (col("hits").cast("double") / (col("nq") * k)).as(s"recall_at_$k"),
-              col("hits").cast("long").as("n_hits"),
-              col("rescored_rows").cast("long").as("rescored_rows"))
-        }.reduce(_.unionByName(_)).transform(Storage.pin)
+        val wRank = Window.partitionBy("shortlist", "query_id")
+          .orderBy(col("cos").desc, col("vec_id").asc)
+        val ranked = e
+          .join(broadcast(cand), "vec_id")
+          .join(broadcast(queries), "query_id")
+          .select(col("query_id"), col("vec_id"), col("adc_rank"),
+            cosine(col("q"), col("embedding")).as("cos"))
+          .join(settings, col("adc_rank") <= col("shortlist"))
+          .withColumn("rank", row_number().over(wRank))
+          .where(col("rank") <= k)
+        val cost = cand.join(settings, col("adc_rank") <= col("shortlist"))
+          .groupBy("shortlist")
+          .agg(count(lit(1)).as("rescored_rows"))
+        sweepEval(ranked, truth, settings, "shortlist", k)
+          .join(cost, Seq("shortlist"), "left")
+          .select(col("shortlist"), col(s"recall_at_$k"), col("n_hits"),
+            coalesce(col("rescored_rows"), lit(0L)).as("rescored_rows"))
+          .transform(Storage.pin)
       }
     }
   }

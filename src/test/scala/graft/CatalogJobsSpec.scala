@@ -63,7 +63,7 @@ class CatalogJobsSpec extends AnyFunSuite {
     "dedup_admission_semantic" -> 164,
     "dedup_admission_multimodal" -> 129,
     "dedup_admission_video" -> 129,
-    "dedup_index_stats" -> 10,
+    "dedup_index_stats" -> 9,
     "knn_hybrid_rrf_persisted" -> 29,
     "knn_eval_hybrid_persisted" -> 36,
     "knn_ivfpq_trained_delta" -> 64,
@@ -109,13 +109,11 @@ class CatalogJobsSpec extends AnyFunSuite {
 
   /** The queries behind the other round loops and checkpoint pins:
     * BPE's vocab rounds, the k-means and PQ Lloyd trainers, the
-    * frontier sweeps' shared truth pins and the capped-eval signature
-    * pins. Two kinds are only swept for leaks: MMR's greedy rounds,
-    * whose job counts move between runs of the same code (knn_mmr
-    * 38–40, knn_mmr_hybrid 52–55, knn_mmr_ivf 41–44, knn_eval_mmr 47–49
-    * jobs over 14 runs), and text_bpe_encode, which learns its merge
-    * table only on a session's first call (36 jobs, then 4), so its
-    * count depends on which suites ran before. */
+    * frontier sweeps' shared truth pins, MMR's greedy rounds and the
+    * capped-eval signature pins. text_bpe_encode is only swept for
+    * leaks: it learns its merge table only on a session's first call
+    * (36 jobs, then 4), so its count depends on which suites ran
+    * before. */
   private val trainerPinned = Seq(
     "mm_capped_eval" -> 13,
     "mm_capped_eval_video" -> 13,
@@ -128,14 +126,14 @@ class CatalogJobsSpec extends AnyFunSuite {
     "knn_ivfpq_trained" -> 44,
     "dedup_semantic" -> 22,
     "emb_prune_hard" -> 22,
-    "knn_eval_frontier" -> 57,
-    "knn_eval_frontier_rescore" -> 46,
-    "knn_eval_frontier_scalar" -> 41,
-    "knn_filtered_frontier" -> 72,
-    "knn_mmr" -> Unpinned,
-    "knn_mmr_hybrid" -> Unpinned,
-    "knn_mmr_ivf" -> Unpinned,
-    "knn_eval_mmr" -> Unpinned)
+    "knn_eval_frontier" -> 31,
+    "knn_eval_frontier_rescore" -> 33,
+    "knn_eval_frontier_scalar" -> 32,
+    "knn_filtered_frontier" -> 31,
+    "knn_mmr" -> 30,
+    "knn_mmr_hybrid" -> 42,
+    "knn_mmr_ivf" -> 33,
+    "knn_eval_mmr" -> 39)
 
   /** Queries whose count varies by one between runs of the same code:
     * dedup_admission_semantic ran 164 or 165 jobs in repeated runs

@@ -154,10 +154,13 @@ class HammingIndexSpec extends AnyFunSuite {
     HammingIndex.write(third(0), p)
     HammingIndex.appendEpoch(spark, p, 0L, third(1))
     HammingIndex.appendEpoch(spark, p, 1L, third(2))
+    // a committed epoch with no rows is still a live segment
+    HammingIndex.appendEpoch(spark, p, 2L, sg.where($"doc_id" < 0))
     val got = HammingIndex.segmentStats(spark, p)
       .as[(String, Long)].collect().toMap
     val n = (m: Int) => third(m).count()
-    assert(got == Map("base" -> n(0), "delta_0" -> n(1), "delta_1" -> n(2)))
+    assert(got == Map("base" -> n(0), "delta_0" -> n(1), "delta_1" -> n(2),
+      "delta_2" -> 0L))
     HammingIndex.compact(spark, p)
     HammingIndex.gc(spark, p)
     val after = HammingIndex.segmentStats(spark, p)

@@ -1002,6 +1002,83 @@ class SimilaritySpec extends AnyFunSuite {
     assert(rows.last._2 == 1.0, s"full probe must reach filtered-exact recall: $rows")
   }
 
+  test("a frontier sweep equals its settings evaluated one at a time") {
+    val e = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
+    val (nq, k) = (4, 5)
+    val n = e.count()
+    val centroids = e.where($"vec_id" < 16).select($"vec_id".as("c_id"), $"embedding".as("c_vec"))
+    val queries = e.where($"vec_id" < nq)
+      .select($"vec_id".as("query_id"), $"embedding".as("q"), $"label".as("qlabel"))
+    def hits(ranked: org.apache.spark.sql.DataFrame, truth: org.apache.spark.sql.DataFrame): Long =
+      Similarity.retrievalEval(ranked, truth, k).agg(sum($"n_hits")).as[Long].head()
+    // a query's own vector sits in its nearest list, so a probed scan
+    // reads every member a k = ∞ serve returns plus the query itself
+    def served(assigned: org.apache.spark.sql.DataFrame, p: Int, filtered: Boolean) =
+      Similarity.ivfServe(assigned, centroids, queries, Int.MaxValue, p, filtered).count() + nq
+    val assigned = Similarity.ivfAssign(e, centroids)
+    val fAssigned = Similarity.filteredIvfAssign(e, centroids)
+    val truth = Similarity.bruteForceKnn(e, nq, k)
+    val fTruth = Similarity.filteredBruteKnn(e, nq, k)
+    val probes = Seq(3, 1, 16)
+    val ivf = Similarity.ivfFrontier(e, nq, k, probes = probes)
+      .as[(Int, Double, Long, Long, Double)].collect().map(r => r._1 -> r).toMap
+    val filtered = Similarity.filteredIvfFrontier(e, nq, k, probes = probes)
+      .as[(Int, Double, Long, Long, Long, Double)].collect().map(r => r._1 -> r).toMap
+    assert(ivf.keySet == probes.toSet && filtered.keySet == probes.toSet)
+    probes.foreach { p =>
+      val h = hits(Similarity.ivfServe(assigned, centroids, queries, k, p), truth)
+      val scanned = served(assigned, p, filtered = false)
+      assert(ivf(p) == ((p, h.toDouble / (nq * k), h, scanned, scanned.toDouble / (nq * n))),
+        s"ivfFrontier n_probe = $p")
+      val fh = hits(Similarity.ivfServe(fAssigned, centroids, queries, k, p, filtered = true), fTruth)
+      assert(filtered(p) == ((p, fh.toDouble / (nq * k), fh, scanned,
+        served(fAssigned, p, filtered = true), scanned.toDouble / (nq * n))),
+        s"filteredIvfFrontier n_probe = $p")
+    }
+    val shortlists = Seq(40, 10)
+    val rescore = Similarity.ivfPqRescoreFrontier(e, nq, k, shortlists = shortlists)
+      .as[(Int, Double, Long, Long)].collect().map(r => r._1 -> r).toMap
+    assert(rescore.keySet == shortlists.toSet)
+    shortlists.foreach { s =>
+      val h = hits(Similarity.ivfPqKnnRescore(e, nq, k, shortlist = s), truth)
+      assert(rescore(s) == ((s, h.toDouble / (nq * k), h,
+        Similarity.ivfPqKnn(e, nq, s).count())), s"ivfPqRescoreFrontier shortlist = $s")
+    }
+  }
+
+  test("a frontier sweep launches the same jobs for one setting as for four") {
+    val e = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
+    val jobs = (probes: Seq[Int]) => JobCount(spark)(
+      Similarity.ivfFrontier(e, nQueries = 4, k = 5, probes = probes))
+    assert(jobs(Seq(1)) == jobs(Seq(1, 2, 4, 8)))
+  }
+
+  test("a frontier rejects empty sweep settings, naming the argument") {
+    val e = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
+    assert(intercept[IllegalArgumentException](
+      Similarity.ivfFrontier(e, probes = Nil)).getMessage.contains("probes"))
+    assert(intercept[IllegalArgumentException](
+      Similarity.ivfPqRescoreFrontier(e, shortlists = Nil)).getMessage.contains("shortlists"))
+  }
+
+  test("a frontier rejects a repeated sweep setting, naming the argument") {
+    val e = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
+    assert(intercept[IllegalArgumentException](
+      Similarity.filteredIvfFrontier(e, probes = Seq(1, 4, 1))).getMessage.contains("probes"))
+    assert(intercept[IllegalArgumentException](
+      Similarity.ivfPqRescoreFrontier(e, shortlists = Seq(10, 10)))
+      .getMessage.contains("shortlists"))
+  }
+
+  test("a frontier rejects a non-positive sweep setting, naming the argument") {
+    val e = spark.read.parquet(s"${TestSpark.sfDir}/embeddings.parquet")
+    assert(intercept[IllegalArgumentException](
+      Similarity.ivfFrontier(e, probes = Seq(0, 2))).getMessage.contains("probes"))
+    assert(intercept[IllegalArgumentException](
+      Similarity.ivfPqRescoreFrontier(e, shortlists = Seq(10, -5)))
+      .getMessage.contains("shortlists"))
+  }
+
   test("sq8 dequantized dot stays within the per-dim half-step error bound") {
     // max-abs symmetric SQ8 rounds each coordinate by at most half a
     // quantization step (scale/2 = mx/254), so the de-quantized dot

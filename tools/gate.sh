@@ -95,6 +95,18 @@ if grep -rnE 'localCheckpoint\(|\.persist\(|\.cache\(\)' src/main --include='*.s
   exit 1
 fi
 
+echo "== gate: a sweep is one plan =="
+# an operator that sweeps settings or segments takes them as a
+# column of one plan; a union-reduce of N copies of one subplan is how
+# the per-setting sweeps come back. The one union-reduce kept is
+# LsmSegments.readArtifacts' perPath form: a multi-root read of
+# partitioned dirs fails Spark's conflicting-directory check
+if grep -rnE 'reduce\(_\.unionByName\(_\)\)|reduce\(_ unionByName _\)' src/main/scala/graft/operators/ \
+    | grep -v '^src/main/scala/graft/operators/LsmSegments\.scala:.*perPath'; then
+  echo "UNION-REDUCE IN operators/ (take the setting as a column of one plan)"
+  exit 1
+fi
+
 echo "== gate: carried schemas =="
 # index segments, trained state and durable state are read through
 # LsmSegments.readArtifacts under the schema their writer recorded; a
